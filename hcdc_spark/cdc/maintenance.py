@@ -9,13 +9,23 @@ an append-only parquet log, so maintenance is batch rewrites:
 - ``compact_state_log`` — fold the log to latest-per-inode (the same
   window ``latest_state`` applies at read time), optionally dropping
   Deleted rows and aged per-tx deltas. Run OFFLINE (no concurrent
-  streaming writer): the implementation stages the compacted log and
-  swaps directories. On a real deployment this is a Delta/Iceberg
+  streaming writer). On a real deployment this is a Delta/Iceberg
   rewrite/expire operation; the parquet-directory swap is the
   dependency-free equivalent.
 - ``gc_change_data`` — drop superseded pointer rows and delete staging
   batch directories no pointer references (the byte-level analogue of
   deleting replaced block files).
+
+Both rewrite their table through fsutil.swap_dir — the same commit the
+IVF-PQ index rebuild and compaction use — so readers see the old or the
+new log, never a missing one. recover_state_dirs finishes a swap a
+crash interrupted; it runs at the start of both jobs and of every
+query that writes or reads the state log (run_reconciler,
+run_cdc_pipeline, latest_state) — once per query start, never per
+micro-batch. Without it, a crash between the swap's two renames would
+leave ``file_state_log`` missing, the next stream would append a fresh
+log beside the stranded stage, and latest_state would silently lose
+every inode not touched since.
 
 Storage-scheme-safe (round-13 verdict #1, applied to the T27 legs the
 index takedown inherited its discipline from): all existence/list/
@@ -34,6 +44,17 @@ from pyspark.sql import functions as F
 from hcdc_spark import fsutil
 
 
+def recover_state_dirs(
+    out_dir: str | None = None, staging_dir: str | None = None
+) -> None:
+    """Finish an interrupted compact_state_log / gc_change_data swap
+    (fsutil.recover_swap) under ``out_dir`` and ``staging_dir``."""
+    if out_dir is not None:
+        fsutil.recover_swap(fsutil.join(out_dir, "file_state_log"))
+    if staging_dir is not None:
+        fsutil.recover_swap(fsutil.join(staging_dir, "change_data"))
+
+
 def compact_state_log(
     spark: SparkSession,
     out_dir: str,
@@ -48,6 +69,7 @@ def compact_state_log(
     """
     log_path = fsutil.join(out_dir, "file_state_log")
     fsutil.require_atomic_rename(log_path, "compact_state_log")
+    recover_state_dirs(out_dir=out_dir)
     log = spark.read.parquet(log_path)
     # The streaming reconciler stamps batch_id; batch outputs written by
     # the CLI's bootstrap/reconcile commands don't carry it — compaction
@@ -77,21 +99,22 @@ def compact_state_log(
                 ),
             ),
         )
-    tmp = log_path + ".compact"
-    latest.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    old = log_path + ".old"
-    fsutil.rename(log_path, old)
-    fsutil.rename(tmp, log_path)
-    fsutil.delete(old)
-    return n
+    fsutil.swap_dir(
+        log_path,
+        lambda stage: latest.write.mode("overwrite").parquet(stage),
+        "compact_state_log",
+    )
+    return spark.read.parquet(log_path).count()
 
 
 def gc_change_data(spark: SparkSession, staging_dir: str) -> int:
     """Drop superseded pointers; delete unreferenced batch dirs.
-    Returns the number of live pointer rows."""
+    Returns the number of live pointer rows. The pointer table is
+    swapped first and the batch dirs deleted after, so a crash in
+    between leaves only unreferenced garbage for the next run."""
     ptr_path = fsutil.join(staging_dir, "change_data")
     fsutil.require_atomic_rename(ptr_path, "gc_change_data")
+    recover_state_dirs(staging_dir=staging_dir)
     ptr = spark.read.parquet(ptr_path)
     # batch_tag desc as tie-breaker: re-materializations of the same
     # file carry the same last_tx_id, and the kept pointer must be the
@@ -104,14 +127,17 @@ def gc_change_data(spark: SparkSession, staging_dir: str) -> int:
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
-    tmp = ptr_path + ".compact"
-    live.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
+    fsutil.swap_dir(
+        ptr_path,
+        lambda stage: live.write.mode("overwrite").parquet(stage),
+        "gc_change_data",
+    )
+    kept = spark.read.parquet(ptr_path)
+    n = kept.count()
 
     live_batches = {
         (r["domain"], r["entity"], r["batch_tag"])
-        for r in spark.read.parquet(tmp)
-        .select("domain", "entity", "batch_tag")
+        for r in kept.select("domain", "entity", "batch_tag")
         .distinct()
         .collect()
     }
@@ -127,9 +153,4 @@ def gc_change_data(spark: SparkSession, staging_dir: str) -> int:
                     tag = batch.split("=", 1)[1]
                     if (domain, entity, tag) not in live_batches:
                         fsutil.delete(fsutil.join(epath, batch))
-
-    old = ptr_path + ".old"
-    fsutil.rename(ptr_path, old)
-    fsutil.rename(tmp, ptr_path)
-    fsutil.delete(old)
     return n

@@ -1,8 +1,8 @@
 """Storage-scheme-safe driver-side file operations for the index
 lifecycle (round-13 verdict, What's wrong #1).
 
-The index maintenance layer — tombstone discovery, the IVF-PQ
-stage-and-rename swaps, staleness fingerprints — needs a handful of
+The index and state-log maintenance layer — tombstone discovery, the
+directory swap, staleness fingerprints — needs a handful of
 driver-side metadata operations (exists / list / rename / delete) on
 paths that are LOCAL in tests but ``hdfs://`` or ``s3a://`` in the
 deployment posture the 100 TB brief targets. ``os.path`` silently
@@ -27,11 +27,11 @@ Two hard rules encoded here:
 - **Rename is not a commit primitive on object stores.** HDFS and
   local renames are atomic; S3/GCS/ABFS "renames" are copy+delete.
   ``require_atomic_rename`` fences every rename-as-swap call site:
-  the IVF-PQ directory swap refuses object-store paths with an
-  actionable message (use the catalog-based stage-and-swap the band
-  indexes use, or a table format whose commit IS atomic). Existence
-  checks, listing, tombstone discovery and recursive deletes have no
-  such constraint and work on every scheme.
+  swap_dir refuses object-store paths with an actionable message
+  (use the catalog-based stage-and-swap the band indexes use, or a
+  table format whose commit IS atomic). Existence checks, listing,
+  tombstone discovery and recursive deletes have no such constraint
+  and work on every scheme.
 
 Driver-side only: these are O(1)-per-call metadata operations (a
 probe's tombstone check, a swap's two renames), never per-row work.
@@ -176,15 +176,6 @@ def list_names(path: str, spark: SparkSession | None = None) -> list[str]:
     return [st.getPath().getName() for st in jfs.listStatus(jpath)]
 
 
-def has_data(path: str, spark: SparkSession | None = None) -> bool:
-    """True iff the directory exists and holds at least one
-    NON-underscore/dot entry — 'does this table dir contain data
-    files' (marker dirs like _tombstones/_SUCCESS don't count)."""
-    return any(
-        not n.startswith(("_", ".")) for n in list_names(path, spark)
-    )
-
-
 def delete(path: str, spark: SparkSession | None = None) -> None:
     """Recursive delete, silent if the path is already absent (the
     shutil.rmtree(..., ignore_errors=True) cleanup contract) — but
@@ -215,17 +206,75 @@ def rename(src: str, dst: str, spark: SparkSession | None = None) -> None:
         )
 
 
-def replace_file(
-    src: str, dst: str, spark: SparkSession | None = None
+def copy(src: str, dst: str, spark: SparkSession | None = None) -> None:
+    """Recursive copy src → dst (FileUtil.copy: works across every
+    resolvable scheme); raises RuntimeError if the copy fails."""
+    jfs, jsrc = _jfs(src, spark, "fsutil.copy")
+    dfs, jdst = _jfs(dst, spark, "fsutil.copy")
+    spark = spark or SparkSession.getActiveSession()
+    ok = spark._jvm.org.apache.hadoop.fs.FileUtil.copy(
+        jfs, jsrc, dfs, jdst, False,
+        spark.sparkContext._jsc.hadoopConfiguration(),
+    )
+    if not ok:
+        raise RuntimeError(f"fsutil.copy: {src!r} -> {dst!r} failed")
+
+
+def _swap_names(path: str) -> tuple[str, str]:
+    path = path.rstrip("/")
+    return path + ".stage", path + ".old"
+
+
+def swap_dir(
+    path: str, write_stage, op: str, spark: SparkSession | None = None
 ) -> None:
-    """os.replace for the FS API: move a single file over dst,
-    clobbering it (the tombstone-merge case in the codes-swap
-    recovery; parquet part names are UUID-unique so collisions only
-    happen for marker files, where last-writer-wins is the intent)."""
-    jfs, jdst = _jfs(dst, spark, "fsutil.replace_file")
-    if jfs.exists(jdst):
-        jfs.delete(jdst, False)
-    rename(src, dst, spark)
+    """Replace the directory ``path`` by a complete new generation —
+    the one commit every rewrite-in-place job uses (the IVF-PQ index
+    rebuild and compaction, compact_state_log, gc_change_data).
+
+    ``write_stage(stage)`` writes the whole replacement to
+    ``path.stage`` next to the live directory; then ``path`` is renamed
+    to ``path.old``, the stage to ``path``, and the old generation is
+    deleted. Readers of ``path`` see the old or the new generation,
+    never a mix. A failed second rename rolls the first back. A crash
+    (no rollback runs) leaves one of three states, all repaired by
+    recover_swap: a partial stage beside the live path (deleted by the
+    next swap), the live path missing with the complete stage and
+    ``path.old`` beside it (rolled forward), or a stale ``path.old``
+    (deleted by the next swap).
+
+    Rename-as-commit, so fenced to atomic-rename filesystems."""
+    require_atomic_rename(path, op)
+    if not is_dir(path, spark):
+        raise RuntimeError(f"{op}: no directory at {path!r} to replace")
+    stage, old = _swap_names(path)
+    delete(stage, spark)
+    delete(old, spark)
+    write_stage(stage)
+    rename(path, old, spark)
+    try:
+        rename(stage, path, spark)
+    except RuntimeError:
+        rename(old, path, spark)  # roll back: the live generation survives
+        raise
+    delete(old, spark)
+
+
+def recover_swap(path: str, spark: SparkSession | None = None) -> None:
+    """Finish a swap_dir interrupted between its two renames: with the
+    live path missing, the complete stage is renamed into place (or,
+    with no stage, the old generation is restored). A no-op while the
+    live path exists. Call it once at the start of every entry point
+    that reads or writes ``path``, so nothing ever recreates the live
+    directory beside a stranded generation."""
+    if is_dir(path, spark):
+        return
+    stage, old = _swap_names(path)
+    for src in (stage, old):
+        if is_dir(src, spark):
+            require_atomic_rename(path, "recover_swap")
+            rename(src, path, spark)
+            return
 
 
 def list_files(

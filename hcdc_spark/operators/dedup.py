@@ -1059,10 +1059,7 @@ def append_doc_band_index(
             f"append_doc_band_index: batch_id must be >= 0, got "
             f"{batch_id} (-1 is the build-generation sentinel)"
         )
-    # validates metadata presence up front (a pre-metadata table would
-    # otherwise half-complete: the positional select drops gen, the
-    # insert lands, then the stats read raises) and pins the table to
-    # the one geometry this module bands with
+    # pins the table to the one geometry this module bands with
     meta = _checked_band_geometry(
         spark, table, Q73_BANDS, Q73_HASHES // Q73_BANDS, "minhash-md5",
         "append_doc_band_index",
@@ -1088,8 +1085,7 @@ def append_doc_band_index(
     _set_band_index_props(spark, table, props)
 
     _cluster_for_band_write(
-        exploded.select(*spark.table(table).columns), meta["n_buckets"],
-        layout=meta["layout"],
+        exploded.select(*spark.table(table).columns), meta["n_buckets"]
     ).write.insertInto(table, overwrite=False)
 
 
@@ -1163,16 +1159,10 @@ def incremental_doc_neardup(
     # bucket key alone (exchange-free on the index side), with
     # bucket-file pruning when the batch's keys are sparse enough to
     # bite (similarity._band_candidates) — the per-cycle read is
-    # O(|batch| x occupancy x n_bands) for micro-batches. A
-    # pre-metadata table (this probe historically accepted them) reads
-    # as the legacy flat layout: correct, full-scan cost.
-    try:
-        meta = read_band_index_meta(spark, index_table)
-    except KeyError:
-        meta = {"layout": "flat", "id_col": "doc_id"}
-    meta = {**meta, "id_col": "doc_id"}
+    # O(|batch| x occupancy x n_bands) for micro-batches
     cand = _band_candidates(
-        spark, index_table, nbx, meta, "doc_new", "doc_old"
+        spark, index_table, nbx, read_band_index_meta(spark, index_table),
+        "doc_new", "doc_old",
     )
     a = new_t.select(F.col("doc_id").alias("doc_new"),
                      F.col("ws").alias("ws_a"))

@@ -43,8 +43,10 @@ def run_cdc_pipeline(
     """Wire the whole pipeline; returns the StreamingQuery.
 
     ``staging_dir=None`` runs state-tracking only (the reference's
-    SourceChangeDeltaProcessor without FileDeltaProcessor).
+    SourceChangeDeltaProcessor without FileDeltaProcessor). Maintenance
+    swaps a crash interrupted are finished before the query starts.
     """
+    from hcdc_spark.cdc.maintenance import recover_state_dirs
     from hcdc_spark.cdc.materialize import materialize
     from hcdc_spark.streaming.reconciler import (
         reconcile_stream,
@@ -52,6 +54,7 @@ def run_cdc_pipeline(
     )
     from hcdc_spark.streaming.source import read_event_stream
 
+    recover_state_dirs(out_dir=out_dir, staging_dir=staging_dir)
     events = read_event_stream(spark, source_dir, max_files_per_trigger)
     # registry rules compile into the plan (T7); refreshing rules means
     # restarting the query with new rules — same cadence as the
@@ -110,7 +113,10 @@ def run_cdc_pipeline_cascading(
     deployment start both queries concurrently — the fold tails the
     segment directory the rewriter appends to.
     """
+    from hcdc_spark.cdc.maintenance import recover_state_dirs
     from hcdc_spark.streaming.rewrite import run_rewriter
+
+    recover_state_dirs(out_dir=out_dir, staging_dir=staging_dir)
 
     rewritten = os.path.join(out_dir, "rewritten")
     rw = run_rewriter(

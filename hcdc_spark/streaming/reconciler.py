@@ -35,12 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from hcdc_spark.cdc.model import (
-    DELTA_STRUCT,
-    ERROR_SCHEMA,
-    FILE_STATE_SCHEMA,
-    STATE_BLOCK_STRUCT,
-)
+from hcdc_spark.cdc.model import ERROR_SCHEMA, FILE_STATE_SCHEMA
 from hcdc_spark.cdc.reconcile import _clean
 from hcdc_spark.cdc.statemachine import fold_events
 
@@ -49,7 +44,8 @@ class _JsonStateCodec:
     """State store value: the state-machine dict as one JSON string.
     A string survives schema evolution of the dict (new keys) without
     state-store migration, and the store-side UnsafeRow is a single
-    variable-length field."""
+    variable-length field. (A typed FILE_STATE_SCHEMA struct codec was
+    measured against it in round 11 and never won — COVERAGE.md.)"""
 
     schema = T.StructType([T.StructField("state_json", T.StringType())])
 
@@ -61,107 +57,6 @@ class _JsonStateCodec:
     def dump(state: dict[str, Any]) -> tuple:
         return (json.dumps(state),)
 
-
-_STATE_FIELDS = tuple(f.name for f in FILE_STATE_SCHEMA.fields)
-_BLOCK_FIELDS = tuple(f.name for f in STATE_BLOCK_STRUCT.fields)
-_DELTA_FIELDS = tuple(f.name for f in DELTA_STRUCT.fields)
-_DELTAS_IDX = _BLOCK_FIELDS.index("deltas")
-_BLOCKS_IDX = _STATE_FIELDS.index("blocks")
-
-
-class _TypedStateCodec:
-    """State store value: the state-machine dict as the TYPED
-    FILE_STATE_SCHEMA struct (blocks and deltas as nested arrays of
-    structs) — per-key state never round-trips through json.loads/
-    dumps; the Python side converts dict ⇄ positional tuple/Row and
-    the store keeps a columnar UnsafeRow.
-
-    MEASURED against the JSON codec before choosing the default
-    (round-11 verdict 'next' #5; scripts/bench_stream_scale.py takes
-    the codec as an argument). The state value crosses the
-    Python⇄JVM boundary as a PICKLED Row either way
-    (ApplyInPandasWithStateSerializer ships the value in the binary
-    'object' column, not through Arrow), so the codecs trade
-    Python-side json.dumps/loads against nested tuple/Row
-    construction plus a deeper JVM-side UnsafeRow conversion — and
-    the json leg wins slightly at BOTH scale points (min-of-2,
-    40-file-log shape scaled up, 8 micro-batches): 2,500 inodes /
-    10,888 ops: json 12.81 s (850 ops/s) vs typed 13.17 s; 10,000
-    inodes / 43,622 ops: json 16.14 s (2,702 ops/s) vs typed
-    16.32 s. Within the ±3% co-tenant band, but typed never wins —
-    the hypothesis that json codec work dominated per-key cost is
-    FALSE (the pickle hop and the per-group Arrow return dominate;
-    see ms_per_touched_inode_batch). JSON therefore stays the
-    default; it additionally survives state-dict evolution without
-    store migration. This codec stays as the measured alternative
-    and the store-schema-typed deployment option (external tools can
-    read the state store's value columns directly)."""
-
-    schema = FILE_STATE_SCHEMA
-
-    @staticmethod
-    def load(value: tuple) -> dict[str, Any]:
-        d = dict(zip(_STATE_FIELDS, value))
-        blocks = d["blocks"]
-        if blocks is not None:
-            out = []
-            for b in blocks:
-                bd = dict(zip(_BLOCK_FIELDS, b))
-                deltas = bd["deltas"]
-                if deltas is not None:
-                    bd["deltas"] = [
-                        dict(zip(_DELTA_FIELDS, dl)) for dl in deltas
-                    ]
-                out.append(bd)
-            d["blocks"] = out
-        return d
-
-    @staticmethod
-    def dump(state: dict[str, Any]) -> tuple:
-        if set(state) != set(_STATE_FIELDS):
-            # compare the KEY SETS, not the length: a renamed key keeps
-            # the length and used to die later with a bare KeyError; a
-            # simultaneous lose-one/gain-one drift reported only the
-            # extra key (round-12 advice)
-            extra = set(state) - set(_STATE_FIELDS)
-            missing = set(_STATE_FIELDS) - set(state)
-            raise ValueError(
-                "typed state codec: state dict drifted from "
-                f"FILE_STATE_SCHEMA (extra keys: {sorted(extra)}, "
-                f"missing keys: {sorted(missing)}) — evolve the "
-                "schema (or fall back to the JSON codec) instead of "
-                "silently dropping them"
-            )
-        row = [state[k] for k in _STATE_FIELDS]
-        blocks = row[_BLOCKS_IDX]
-        if blocks is not None:
-            row[_BLOCKS_IDX] = [
-                tuple(
-                    [
-                        tuple(dl[k] for k in _DELTA_FIELDS)
-                        for dl in (b["deltas"] or [])
-                    ]
-                    if i == _DELTAS_IDX
-                    else b[f]
-                    for i, f in enumerate(_BLOCK_FIELDS)
-                )
-                for b in blocks
-            ]
-        return tuple(row)
-
-
-#: The fold's state-store codecs; selection is per-query
-#: (reconcile_stream(state_codec=...), default from HCDC_STATE_CODEC,
-#: falling back to "json"). Both produce the same golden c04/c08
-#: results and are replay-compatible with their OWN checkpoints — but
-#: a checkpoint written under one codec cannot be resumed under the
-#: other (the store schema differs). See _TypedStateCodec for the
-#: measurement behind the default.
-STATE_CODECS = {"json": _JsonStateCodec, "typed": _TypedStateCodec}
-
-
-def _state_codec(name: str | None = None):
-    return STATE_CODECS[name or os.environ.get("HCDC_STATE_CODEC", "json")]
 
 OUTPUT_SCHEMA = T.StructType(
     list(FILE_STATE_SCHEMA.fields)
@@ -210,11 +105,9 @@ def _events_from_pandas(pdfs: Iterable[pd.DataFrame]) -> list[dict[str, Any]]:
 DEFAULT_DELETED_TTL_MS = 10 * 60 * 1000
 
 
-def _make_fold(deleted_ttl_ms: int | None, codec=_JsonStateCodec):
-    """Build the stateful fold with the Deleted-tombstone TTL and the
-    state codec bound in (the applyInPandasWithState callback takes no
-    user arguments; the codec CLASS pickles by reference, so executors
-    resolve it directly — never through their own env).
+def _make_fold(deleted_ttl_ms: int | None):
+    """Build the stateful fold with the Deleted-tombstone TTL bound in
+    (the applyInPandasWithState callback takes no user arguments).
     ``deleted_ttl_ms=None`` = no eviction (NoTimeout fold — timeout
     APIs untouched, which the runtime enforces: setTimeoutDuration
     raises under NoTimeout)."""
@@ -237,7 +130,7 @@ def _make_fold(deleted_ttl_ms: int | None, codec=_JsonStateCodec):
             # re-times-out deterministically.
             state.remove()
             return
-        prev = codec.load(state.get) if state.exists else None
+        prev = _JsonStateCodec.load(state.get) if state.exists else None
         events = _events_from_pandas(pdfs)
         new_state, errors = fold_events(prev, events)
         if new_state is None:
@@ -247,7 +140,7 @@ def _make_fold(deleted_ttl_ms: int | None, codec=_JsonStateCodec):
             row["inode_id"] = key[0]
             row["state"] = "Unknown"
         else:
-            state.update(codec.dump(new_state))
+            state.update(_JsonStateCodec.dump(new_state))
             if (
                 deleted_ttl_ms is not None
                 and new_state["state"] == "Deleted"
@@ -272,7 +165,6 @@ def _make_fold(deleted_ttl_ms: int | None, codec=_JsonStateCodec):
 def reconcile_stream(
     events: DataFrame,
     deleted_ttl_ms: int | None = None,
-    state_codec: str | None = None,
 ) -> DataFrame:
     """events (streaming DF, CHANGE_EVENT_SCHEMA) → updated file_state
     rows per micro-batch (update output mode). ``deleted_ttl_ms``
@@ -280,17 +172,14 @@ def reconcile_stream(
     streaming TTL leg — pass it in continuous deployments; ``None``
     keeps the NoTimeout fold for availableNow drains, whose GC leg is
     compact_state_log. See DEFAULT_DELETED_TTL_MS for the drain-mode
-    spin measurement behind the split). ``state_codec`` picks the
-    state-store value codec ('json'/'typed', see STATE_CODECS); pick
-    it per CHECKPOINT — the store schema differs between codecs."""
-    codec = _state_codec(state_codec)
+    spin measurement behind the split)."""
     return (
         events.where(F.col("inode_id").isNotNull())
         .groupBy("inode_id")
         .applyInPandasWithState(
-            _make_fold(deleted_ttl_ms, codec),
+            _make_fold(deleted_ttl_ms),
             outputStructType=OUTPUT_SCHEMA,
-            stateStructType=codec.schema,
+            stateStructType=_JsonStateCodec.schema,
             outputMode="update",
             timeoutConf=(
                 GroupStateTimeout.NoTimeout
@@ -335,7 +224,6 @@ def run_reconciler(
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
     deleted_ttl_ms: int | None = None,
-    state_codec: str | None = None,
 ):
     """Wire source → stateful fold → state-log/error sinks.
 
@@ -359,13 +247,17 @@ def run_reconciler(
     ProcessingTimeTimeout does not self-terminate in this Spark (it
     keeps committing no-data batches indefinitely — the measured
     caveat at DEFAULT_DELETED_TTL_MS); drains keep the NoTimeout fold
-    and let compact_state_log (c24) reclaim Deleted rows offline."""
+    and let compact_state_log (c24) reclaim Deleted rows offline.
+
+    A compact_state_log swap a crash interrupted is finished first
+    (maintenance.recover_state_dirs), so the sink never appends a fresh
+    log beside a stranded compacted one."""
+    from hcdc_spark.cdc.maintenance import recover_state_dirs
     from hcdc_spark.streaming.source import read_event_stream
 
+    recover_state_dirs(out_dir=out_dir)
     events = read_event_stream(spark, source_dir, max_files_per_trigger)
-    updates = reconcile_stream(
-        events, deleted_ttl_ms=deleted_ttl_ms, state_codec=state_codec
-    )
+    updates = reconcile_stream(events, deleted_ttl_ms=deleted_ttl_ms)
 
     sink = state_log_sink(
         os.path.join(out_dir, "file_state_log"),
@@ -382,9 +274,13 @@ def run_reconciler(
 
 
 def latest_state(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Current file_state: last update per inode from the state log."""
+    """Current file_state: last update per inode from the state log
+    (after finishing an interrupted compact_state_log swap)."""
     from pyspark.sql import Window
 
+    from hcdc_spark.cdc.maintenance import recover_state_dirs
+
+    recover_state_dirs(out_dir=out_dir)
     log = spark.read.parquet(os.path.join(out_dir, "file_state_log"))
     w = Window.partitionBy("inode_id").orderBy(
         F.col("batch_id").desc(), F.col("last_tx_id").desc()

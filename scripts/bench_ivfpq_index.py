@@ -146,7 +146,7 @@ def main() -> None:
                 # cell partition pruning (plan-gated) and pays only a
                 # broadcast anti-join, and compaction drops the dead
                 # rows physically, clearing the tombstones with the
-                # codes swap.
+                # index swap.
                 del_ids = emb.where(
                     F.col("vec_id") % 20 == 14
                 ).select("vec_id")

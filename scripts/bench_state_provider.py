@@ -112,7 +112,13 @@ def _drain(spark, src: str, work: str, shape: str, provider: str) -> dict:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(1800)
+    if not q.awaitTermination(1800):
+        # a timed-out drain is still running: its wall time would
+        # measure a truncated drain and the next pass would race it
+        q.stop()
+        raise RuntimeError(
+            f"{shape}/{provider}: drain did not finish within 1800 s"
+        )
     el = time.perf_counter() - t0
     state_rows = 0
     lp = q.lastProgress
@@ -132,7 +138,7 @@ def main() -> None:
     src = os.path.join(work, "src")
     try:
         _gen_source(spark, src, rows)
-        out: dict[str, dict[str, dict]] = {}
+        out: dict[str, object] = {}
         for shape in ("dedup", "winagg"):
             best: dict[str, dict] = {}
             for p in range(passes):

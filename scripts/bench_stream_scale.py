@@ -20,13 +20,7 @@ and checkpoint/replay, so keys cannot be coalesced into carry-buffer
 mega-groups without re-implementing versioned state outside the store
 (see COVERAGE.md round-8 notes for the measured verdict). Usage::
 
-    python scripts/bench_stream_scale.py [passes=2] [files=2500,10000] \
-        [codecs=json,typed]
-
-The optional third argument A/Bs the state-store value codec
-(reconciler.STATE_CODECS): 'json' folds the state dict through
-json.dumps/loads into a 1-string UnsafeRow; 'typed' keeps the
-FILE_STATE_SCHEMA struct end-to-end (no JSON, deeper Row conversion).
+    python scripts/bench_stream_scale.py [passes=2] [files=2500,10000]
 
 Prints one JSON line per scale point; the diagnostic across points is
 wall-time slope vs the inode-count ratio (<= ratio means at-or-below-
@@ -49,7 +43,7 @@ sys.path.insert(0, str(ROOT))
 SEGS = 8  # micro-batches per drain (maxFilesPerTrigger=1)
 
 
-def _run_once(spark, events, work: str, codec: str = "json") -> dict[str, float]:
+def _run_once(spark, events, work: str) -> dict[str, float]:
     """Write SEGS segments, drain the reconciler, return timings."""
     from hcdc_spark.streaming.reconciler import run_reconciler
     from hcdc_spark.streaming.source import write_event_segment
@@ -71,8 +65,7 @@ def _run_once(spark, events, work: str, codec: str = "json") -> dict[str, float]
         write_event_segment(spark, chunk, src, f"edits_{i:07d}")
     t0 = time.perf_counter()
     q = run_reconciler(
-        spark, src, out, ckpt, max_files_per_trigger=1, available_now=True,
-        state_codec=codec,
+        spark, src, out, ckpt, max_files_per_trigger=1, available_now=True
     )
     q.awaitTermination(1200)
     el = time.perf_counter() - t0
@@ -103,25 +96,22 @@ def main() -> None:
     finally:
         shutil.rmtree(wdir, ignore_errors=True)
 
-    codecs = sys.argv[3].split(",") if len(sys.argv) > 3 else ["json"]
     out: dict[str, dict[str, float]] = {}
     for n_files in points:
-      events = generate_events(
-          n_files=n_files, seed=11, with_dir_ops=False
-      )
-      for codec in codecs:
+        events = generate_events(
+            n_files=n_files, seed=11, with_dir_ops=False
+        )
         best: dict[str, float] | None = None
         for _ in range(passes):
             work = tempfile.mkdtemp(prefix="hcdc_sbench_")
             try:
-                r = _run_once(spark, events, work, codec)
+                r = _run_once(spark, events, work)
             finally:
                 shutil.rmtree(work, ignore_errors=True)
             if best is None or r["s"] < best["s"]:
                 best = r
         row = {
             "files": n_files,
-            "codec": codec,
             "ops": len(events),
             "batches": SEGS,
             "s": round(best["s"], 2),
@@ -132,9 +122,8 @@ def main() -> None:
                 best["s"] * 1e3 / best["touched"], 2
             ),
         }
-        key = f"files{n_files}" + ("" if codec == "json" else f"_{codec}")
-        out[key] = row
-        print(f"# {key}: {row}", file=sys.stderr)
+        out[f"files{n_files}"] = row
+        print(f"# files{n_files}: {row}", file=sys.stderr)
     print(json.dumps(out))
 
 

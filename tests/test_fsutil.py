@@ -85,13 +85,18 @@ def test_hadoop_ops_accept_bare_and_uri_paths(spark, tmp_path):
     for p in (str(d), "file:" + str(d)):
         assert fsutil.exists(p) and fsutil.is_dir(p)
         assert fsutil.list_names(p) == ["sub"]
-        assert fsutil.has_data(fsutil.join(p, "sub"))
+        assert sorted(fsutil.list_names(fsutil.join(p, "sub"))) == [
+            "_marker", "a.parquet"]
     assert not fsutil.exists(str(d / "nope"))
-    assert not fsutil.has_data(str(d / "nope"))
+    assert fsutil.list_names(str(d / "nope")) == []
     # recursive listing excludes underscore entries, reports sizes
     files = fsutil.list_files("file:" + str(d))
     assert [(n, s) for n, s, _ in files] == [("sub/a.parquet", 7)]
     assert fsutil.list_files(str(d / "nope")) is None
+    fsutil.copy("file:" + str(d / "sub"), str(d / "copy"))
+    assert sorted(fsutil.list_names(str(d / "copy"))) == [
+        "_marker", "a.parquet"]
+    fsutil.delete(str(d / "copy"))
     fsutil.rename(str(d / "sub"), str(d / "sub2"))
     assert fsutil.is_dir(str(d / "sub2"))
     with pytest.raises(RuntimeError, match="rename"):

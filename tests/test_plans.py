@@ -7,7 +7,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from hcdc_spark import fsutil
 from hcdc_spark.operators import analytics, analytics_ext, cdc_queries
 from hcdc_spark.plans import inspect as I
 
@@ -1062,190 +1061,6 @@ def test_chunk_index_rewrite_join_is_bucket_aligned(spark, sf_dir,
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def _write_flat_band_index(spark, corpus, table: str, path: str,
-                           n_buckets: int = 32) -> None:
-    """Reproduce the PRE-round-11 flat layout byte-for-byte: one
-    bucketBy(band, bucket) table, gen column, hcdc.* props WITHOUT
-    ``layout`` or ``max_group_rows`` (exactly what a round-10 build
-    left on disk) — the artifact migrate_band_index exists for."""
-    from hcdc_spark.operators import similarity as S
-
-    exploded = S._band_explode(corpus).withColumn(
-        "gen", F.lit(-1).cast("long")
-    )
-    (
-        exploded.repartition(
-            F.expr(f"pmod(hash(band, bucket), {n_buckets})")
-        )
-        .write.bucketBy(n_buckets, "band", "bucket")
-        .sortBy("band", "bucket")
-        .option("path", path)
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-    n_rows = spark.table(table).select("vec_id").distinct().count()
-    spark.sql(
-        f"ALTER TABLE {table} SET TBLPROPERTIES ("
-        f"'hcdc.n_rows'='{n_rows}', 'hcdc.n_bands'='6', "
-        "'hcdc.bits'='4', 'hcdc.geometry'='sign', "
-        "'hcdc.target_bucket_rows'='16', 'hcdc.id_col'='vec_id', "
-        f"'hcdc.n_buckets'='{n_buckets}')"
-    )
-
-
-def test_migrate_band_index_retires_flat_full_scans(
-    spark, sf_dir, tmp_path
-):
-    """A pre-round-11 FLAT band index probes at full-scan cost forever
-    — nothing on the probe path rewrites it (round-11 verdict 'next'
-    #2). One migrate_band_index call must leave the SAME name probing
-    with band-dir PartitionFilters + bucket-file pruning
-    (SelectedBucketsCount < total), candidates unchanged, and the
-    poison gate must hold on the migrated table: an unprobed band dir
-    is never opened."""
-    import glob
-    import os
-    import warnings as _warnings
-
-    import pytest as _pytest
-
-    from hcdc_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    corpus = emb.where(F.col("vec_id") % 10 != 7)
-    batch = emb.where(F.col("vec_id") % 10 == 7).limit(2)
-    table = "hcdc_band_migrate_gate"
-    bcast = "spark.sql.autoBroadcastJoinThreshold"
-    abs_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev, prev_abs = spark.conf.get(bcast), spark.conf.get(abs_key)
-    try:
-        spark.conf.set(bcast, "-1")
-        _write_flat_band_index(
-            spark, corpus, table, str(tmp_path / "flat_bi")
-        )
-        meta = S.read_band_index_meta(spark, table)
-        assert meta["layout"] == "flat"
-        assert meta["max_group_rows"] == -1
-        nbx = S._band_explode(batch).select(
-            F.col("vec_id").alias("vec_new"), "band", "bucket"
-        )
-        # flat probe: correct, warns loudly, and scans unpruned
-        with _pytest.warns(UserWarning, match="legacy flat layout"):
-            cand_flat = S._band_candidates(
-                spark, table, nbx, meta, "vec_new", "vec_old"
-            )
-        flat_pairs = sorted(tuple(r) for r in cand_flat.collect())
-        assert not I.partition_filters(cand_flat)
-
-        # ONE maintenance call
-        meta2 = S.migrate_band_index(spark, table)
-        assert meta2["layout"] == "band_partitioned"
-        assert meta2["max_group_rows"] >= 1
-        assert meta2["n_rows"] == meta["n_rows"]
-        # idempotent: second call is a catalog no-op
-        assert S.migrate_band_index(spark, table) == meta2
-
-        with _warnings.catch_warnings():
-            _warnings.simplefilter("error")  # no flat warning now
-            cand = S._band_candidates(
-                spark, table, nbx, meta2, "vec_new", "vec_old"
-            )
-        assert sorted(tuple(r) for r in cand.collect()) == flat_pairs
-        pf = I.partition_filters(cand)
-        assert any("band" in f for f in pf), I.simple_plan(cand)
-        assert any("In(bucket" in f for f in I.pushed_filters(cand))
-        spark.conf.set(abs_key, "false")
-        sel = I.selected_buckets(cand)
-        assert sel and all(k < n for k, n in sel), sel
-
-        # poison gate on the migrated table: a band dir no probed
-        # band touches is never opened
-        # _table_location is a URI since round 14; the poison writes
-        # below need an OS path
-        path2 = fsutil.local_path(S._table_location(spark, table))
-        probed_bands = {r["band"] for r in
-                        nbx.select("band").distinct().collect()}
-        victims = [b for b in range(6) if b not in probed_bands]
-        if not victims:  # batch touched all 6 bands: restrict to one
-            keep = sorted(probed_bands)[0]
-            nbx = nbx.where(F.col("band") == keep)
-            victims = [b for b in range(6) if b != keep]
-        for b in victims:
-            for f in glob.glob(os.path.join(path2, f"band={b}",
-                                            "*.parquet")):
-                with open(f, "wb") as fh:
-                    fh.write(b"GARBAGE NOT PARQUET")
-        cand_p = S._band_candidates(
-            spark, table, nbx, meta2, "vec_new", "vec_old"
-        )
-        assert cand_p.count() >= 0  # executes clean over the poison
-        with _pytest.raises(Exception, match="[Pp]arquet|magic|corrupt"):
-            spark.table(table).count()
-    finally:
-        spark.conf.set(bcast, prev)
-        if prev_abs is None:
-            spark.conf.unset(abs_key)
-        else:
-            spark.conf.set(abs_key, prev_abs)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_rebuild_policy_retires_flat_layout(spark, sf_dir, tmp_path):
-    """Round-12 verdict 'next' #4: a legacy FLAT table entering the
-    ingest maintenance loop must exit band-partitioned with NO
-    operator reading a UserWarning — band_index_needs_rebuild flags
-    the layout (any geometry) and rebuild_band_index routes the
-    non-resizable geometries to the migration, so the c28-style
-    policy loop (`if needs_rebuild: rebuild`) is the whole fix.
-    Candidates identical across the rewrite."""
-    import warnings as _warnings
-
-    import pytest as _pytest
-
-    from hcdc_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    corpus = emb.where(F.col("vec_id") % 10 != 7)
-    batch = emb.where(F.col("vec_id") % 10 == 7).limit(2)
-    table = "hcdc_band_policy_flat_gate"
-    try:
-        _write_flat_band_index(
-            spark, corpus, table, str(tmp_path / "flat_policy_bi")
-        )
-        assert S.band_index_needs_rebuild(spark, table), (
-            "flat layout must fire the rebuild policy"
-        )
-        nbx = S._band_explode(batch).select(
-            F.col("vec_id").alias("vec_new"), "band", "bucket"
-        )
-        meta = S.read_band_index_meta(spark, table)
-        with _pytest.warns(UserWarning, match="legacy flat layout"):
-            flat_pairs = sorted(
-                tuple(r)
-                for r in S._band_candidates(
-                    spark, table, nbx, meta, "vec_new", "vec_old"
-                ).collect()
-            )
-        # THE POLICY LOOP — exactly c28's two lines
-        if S.band_index_needs_rebuild(spark, table):
-            S.rebuild_band_index(spark, corpus, table)
-        meta2 = S.read_band_index_meta(spark, table)
-        assert meta2["layout"] == "band_partitioned"
-        assert meta2["max_group_rows"] >= 1
-        assert not S.band_index_needs_rebuild(spark, table), (
-            "policy still firing after the migration"
-        )
-        with _warnings.catch_warnings():
-            _warnings.simplefilter("error")  # probe no longer warns
-            cand = S._band_candidates(
-                spark, table, nbx, meta2, "vec_new", "vec_old"
-            )
-            assert sorted(tuple(r) for r in cand.collect()) == flat_pairs
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 def test_md5_doc_index_rekeys_on_hot_duplication_cluster(
     spark, sf_dir, tmp_path
 ):
@@ -1301,97 +1116,6 @@ def test_md5_doc_index_rekeys_on_hot_duplication_cluster(
         assert sorted(tuple(r) for r in cand_hot.collect()) == before
     finally:
         spark.conf.set(bcast, prev)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_append_to_flat_table_clusters_on_writer_routing(
-    spark, sf_dir, tmp_path
-):
-    """Flat-layout appends must cluster by the flat writer's OWN
-    routing key hash(band, bucket) — clustering by the partitioned
-    layout's bucket-only id scatters every output file across tasks
-    and silently reintroduces the small-files multiplier (round-11
-    advice). Gate: an append to a flat table adds at most one file
-    per bucket id."""
-    import glob
-    import os
-    import re
-    import warnings as _warnings
-
-    from hcdc_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    corpus = emb.where(F.col("vec_id") % 10 != 7)
-    batch = emb.where(F.col("vec_id") % 10 == 7)
-    table = "hcdc_flat_append_gate"
-    path = str(tmp_path / "flat_append")
-    try:
-        _write_flat_band_index(spark, corpus, table, path)
-        pre = set(glob.glob(os.path.join(path, "*.parquet")))
-        with _warnings.catch_warnings():
-            _warnings.simplefilter("ignore")
-            S.append_band_index(spark, batch, table, batch_id=1)
-        added = set(glob.glob(os.path.join(path, "*.parquet"))) - pre
-        ids = []
-        for f in added:
-            m = re.search(r"_(\d{5})\.", os.path.basename(f))
-            assert m, f"no bucket suffix in {f}"
-            ids.append(m.group(1))
-        assert ids and len(ids) == len(set(ids)), sorted(ids)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_migrate_refreshes_stat_on_partitioned_prestat_table(
-    spark, sf_dir, tmp_path
-):
-    """The OTHER legacy shape migrate_band_index must fix: a round-11
-    table already band-PARTITIONED but written before the
-    max_group_rows statistic existed (stat reads -1 → the md5 SMJ
-    guard stays off). One migrate call recomputes the exact statistic;
-    the layout and the candidate set are unchanged."""
-    from hcdc_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    corpus = emb.where(F.col("vec_id") % 10 != 7)
-    batch = emb.where(F.col("vec_id") % 10 == 7).limit(2)
-    table = "hcdc_band_prestat_gate"
-    try:
-        S.write_band_index(
-            spark, corpus, table, str(tmp_path / "bi_prestat")
-        )
-        stat = S.read_band_index_meta(spark, table)["max_group_rows"]
-        assert stat >= 1
-        # simulate the round-11 artifact: the layout is current, the
-        # statistic has never been written
-        spark.sql(
-            f"ALTER TABLE {table} UNSET TBLPROPERTIES "
-            "('hcdc.max_group_rows')"
-        )
-        meta = S.read_band_index_meta(spark, table)
-        assert meta["layout"] == "band_partitioned"
-        assert meta["max_group_rows"] == -1
-        nbx = S._band_explode(batch).select(
-            F.col("vec_id").alias("vec_new"), "band", "bucket"
-        )
-        before = sorted(
-            tuple(r)
-            for r in S._band_candidates(
-                spark, table, nbx, meta, "vec_new", "vec_old"
-            ).collect()
-        )
-        meta2 = S.migrate_band_index(spark, table)
-        assert meta2["layout"] == "band_partitioned"
-        assert meta2["max_group_rows"] == stat  # exact recompute
-        after = sorted(
-            tuple(r)
-            for r in S._band_candidates(
-                spark, table, nbx, meta2, "vec_new", "vec_old"
-            ).collect()
-        )
-        assert after == before
-        assert S.migrate_band_index(spark, table) == meta2  # no-op now
-    finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
@@ -1515,63 +1239,6 @@ def test_ivfpq_tombstone_keeps_partition_pruning(spark, sf_dir, tmp_path):
     assert victim not in {r["vec_id"] for r in out.collect()}
 
 
-def test_flat_layout_probe_applies_tombstones(spark, sf_dir, tmp_path):
-    """The legacy FLAT probe path must honor pending tombstones too —
-    a pre-migration table is still a live index, and a takedown
-    against it must take effect immediately (the flat branch of
-    _band_candidates carries its own tombstone wiring; this pins it)."""
-    import pytest as _pytest
-
-    from hcdc_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    corpus = emb.where(F.col("vec_id") % 10 != 7)
-    batch = emb.where(F.col("vec_id") % 10 == 7).limit(4)
-    table = "hcdc_band_flat_tomb_gate"
-    try:
-        _write_flat_band_index(
-            spark, corpus, table, str(tmp_path / "flat_tomb_bi")
-        )
-        meta = S.read_band_index_meta(spark, table)
-        assert meta["layout"] == "flat"
-        nbx = S._band_explode(batch).select(
-            F.col("vec_id").alias("vec_new"), "band", "bucket"
-        )
-
-        def pairs():
-            with _pytest.warns(UserWarning, match="legacy flat layout"):
-                return {
-                    (r["vec_new"], r["vec_old"])
-                    for r in S._band_candidates(
-                        spark, table, nbx, meta, "vec_new", "vec_old"
-                    ).collect()
-                }
-
-        before = pairs()
-        assert before, "no candidates — gate is vacuous"
-        victims = sorted({o for _, o in before})[:2]
-        S.delete_from_band_index(spark, table, victims, batch_id=1)
-        after = pairs()
-        assert after == {
-            (n, o) for n, o in before if o not in victims
-        }, "flat probe ignored pending tombstones"
-        # and the migration (a compaction) physically drops them,
-        # clearing the tombstones with the swap
-        meta2 = S.migrate_band_index(spark, table)
-        assert meta2["layout"] == "band_partitioned"
-        left = {
-            r["vec_id"]
-            for r in spark.table(table).select("vec_id")
-            .distinct().collect()
-        }
-        assert not (left & set(victims))
-        assert not fsutil.is_dir(
-            fsutil.join(S._table_location(spark, table), "_tombstones")
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 def test_ids_df_is_local_table_scan_not_python_rdd(spark):
     """The takedown id frame must never be Python-RDD-backed
     (round-14 profiling: a pickled-rows frame makes EVERY tombstone
@@ -1686,10 +1353,12 @@ def test_probe_vector_lookup_pushes_filter(spark, sf_dir):
     """The shared ANN probe-vector point lookup (probe_vector; r15,
     VERDICT item 6) must plan as a pushed scan predicate — PushedFilters
     carries the vec_id equality so row-group min/max stats skip
-    non-matching blocks — never as a post-scan corpus filter."""
+    non-matching blocks — never as a post-scan corpus filter. The frame
+    comes from probe_vector_frame, the expression the helper collects."""
     from hcdc_spark.catalog import load_tables
+    from hcdc_spark.operators import similarity as S
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    probe = emb.where(F.col("vec_id") == 0).select("embedding")
+    probe = S.probe_vector_frame(emb, 0)
     pushed = I.pushed_filters(probe)
     assert any("vec_id" in f and "EqualTo" in f for f in pushed), pushed

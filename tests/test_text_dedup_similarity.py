@@ -1104,11 +1104,10 @@ def test_compact_ivfpq_index_refuses_unorderable_batches(spark, sf_dir,
 
 def test_compact_ivfpq_index_recovers_interrupted_swap(spark, sf_dir,
                                                        tmp_path):
-    """A crash between the two swap renames leaves the live codes path
+    """A crash between the two swap renames leaves the live index path
     missing with the fully-written compacted generation staged at
-    codes.compact — the next compact() call must finish that swap
-    (round-9 ADVICE: the docstring's crash-safety claim now has the
-    recovery guard to back it)."""
+    ``<idx>.stage`` — the next compact() call must finish that swap
+    (round-9 ADVICE; every crash step: tests/test_swap_crash.py)."""
     import os
     import shutil
 
@@ -1128,12 +1127,12 @@ def test_compact_ivfpq_index_recovers_interrupted_swap(spark, sf_dir,
     n = similarity.compact_ivfpq_index(spark, idx)
     # simulate the mid-swap crash: compacted generation staged, live
     # path gone (rename 1 done, rename 2 not)
-    os.rename(f"{idx}/codes", f"{idx}/codes.compact")
-    os.makedirs(f"{idx}/codes.old")
+    shutil.copytree(idx, f"{idx}.stage")
+    os.rename(idx, f"{idx}.old")
     n2 = similarity.compact_ivfpq_index(spark, idx)
     assert n2 == n
-    assert not os.path.isdir(f"{idx}/codes.old")
-    assert not os.path.isdir(f"{idx}/codes.compact")
+    assert not os.path.isdir(f"{idx}.old")
+    assert not os.path.isdir(f"{idx}.stage")
     got = [
         tuple(r)
         for r in similarity.ivfpq_index_search(
@@ -1621,11 +1620,11 @@ def test_ivfpq_rebuild_recovers_interrupted_swap(spark, sf_dir, tmp_path):
         for r in similarity.ivfpq_index_search(spark, idx, qv,
                                                exclude_id=0).collect()
     ]
-    os.rename(idx, idx + ".rebuild")  # simulate the mid-swap crash
+    os.rename(idx, idx + ".stage")  # simulate the mid-swap crash
     os.makedirs(idx + ".old")
     meta2 = similarity.rebuild_ivfpq_index(spark, corpus, idx)
     assert meta2 == meta
-    assert not os.path.isdir(idx + ".rebuild")
+    assert not os.path.isdir(idx + ".stage")
     assert not os.path.isdir(idx + ".old")
     got = [
         tuple(r)
@@ -1822,18 +1821,18 @@ def test_ivfpq_serve_paths_self_heal_interrupted_rebuild(
     ]
 
     # crash window: live path renamed away, staged generation present
-    os.rename(idx, idx + ".rebuild")
+    os.rename(idx, idx + ".stage")
     got = [
         (r["vec_id"], r["adc_sim"])
         for r in similarity.ivfpq_index_search(spark, idx, qv, k=5).collect()
     ]
     assert got == want and os.path.isdir(idx)
 
-    os.rename(idx, idx + ".rebuild")
+    os.rename(idx, idx + ".stage")
     n = similarity.compact_ivfpq_index(spark, idx)
     assert n == corpus.count() and os.path.isdir(idx)
 
-    os.rename(idx, idx + ".rebuild")
+    os.rename(idx, idx + ".stage")
     delta = emb.where(F.col("vec_id") >= 350).limit(8)
     similarity.append_ivfpq_delta(spark, delta, idx, batch_id=1)
     assert os.path.isdir(idx)
@@ -2160,15 +2159,12 @@ def test_rebuild_never_resurrects_or_invents_takedowns(
 def test_ivfpq_delete_during_interrupted_compact_swap(
     spark, sf_dir, tmp_path
 ):
-    """Round-13 review (high): a tombstone or delta append that lands
-    DURING compact_ivfpq_index's crash window (between its two renames
-    the live codes dir is missing, the compacted generation staged at
-    codes.compact) used to resurrect codes/ as an underscore-only
-    shell — the next compaction's `not isdir(codes)` recovery check
-    then missed, and its stale-stage cleanup deleted BOTH surviving
-    generations: permanent index loss. Every entry point now finishes
-    the codes swap first (preserving post-crash tombstones), so the
-    sequence delete-in-window → compact → search serves the compacted
+    """Round-13 review (high): a tombstone append that lands DURING
+    compact_ivfpq_index's crash window (between its two renames the
+    live index path is missing, the compacted generation staged at
+    ``<idx>.stage``) must never recreate the path beside the stage.
+    Every entry point finishes the swap first, so the sequence
+    delete-in-window → compact → search serves the compacted
     generation minus the deleted id."""
     import os
 
@@ -2189,11 +2185,11 @@ def test_ivfpq_delete_during_interrupted_compact_swap(
 
     # simulate the exact crash window: the stage is fully written,
     # the live dir renamed away, the stage not yet renamed in
-    codes = os.path.join(idx, "codes")
-    os.rename(codes, codes + ".old")
     import shutil as _sh
 
-    _sh.copytree(codes + ".old", codes + ".compact")
+    os.rename(idx, idx + ".old")
+    _sh.copytree(idx + ".old", idx + ".stage")
+    codes = os.path.join(idx, "codes")
 
     # the takedown arrives IN the window
     S.delete_from_ivfpq_index(spark, idx, [victim], batch_id=1)
