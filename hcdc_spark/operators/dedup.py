@@ -1044,87 +1044,24 @@ def append_doc_band_index(
     (insertInto keeps the bucket spec — the next cycle's probe joins
     stay exchange-free on the corpus side). ``batch_id`` (>= 0) is the
     keep-latest generation: a RE-crawled doc_id's superseded band rows
-    stay probing until compact_doc_band_index drops them. Re-appending
-    the same batch duplicates index ROWS but never answers: probes
-    dedup candidates before the Jaccard verify; a replayed admit costs
-    storage only, reclaimed by compaction. Updates the hcdc.n_rows
-    statistic the rebuild policy reads."""
-    from hcdc_spark.operators.similarity import (
-        _checked_band_geometry,
-        _set_band_index_props,
-    )
+    stay probing until similarity.compact_band_index drops them.
+    Re-appending the same batch duplicates index ROWS but never
+    answers: probes dedup candidates before the Jaccard verify; a
+    replayed admit costs storage only, reclaimed by compaction. Updates
+    the hcdc.n_rows statistic the rebuild policy reads, and the
+    max_group_rows bound the md5 SMJ guard reads (a boilerplate-heavy
+    crawl admitting thousands of identical-signature docs is exactly
+    the duplication-cluster regime that spills the bucket-only join;
+    round-11 advice). The append core (checks, statistics, clustered
+    insert) is similarity._append_band_rows; this module only bands."""
+    from hcdc_spark.operators.similarity import _append_band_rows
 
-    if batch_id < 0:
-        raise ValueError(
-            f"append_doc_band_index: batch_id must be >= 0, got "
-            f"{batch_id} (-1 is the build-generation sentinel)"
-        )
     # pins the table to the one geometry this module bands with
-    meta = _checked_band_geometry(
-        spark, table, Q73_BANDS, Q73_HASHES // Q73_BANDS, "minhash-md5",
+    _append_band_rows(
+        spark, table, new_t, _doc_band_explode(new_t),
+        (Q73_BANDS, Q73_HASHES // Q73_BANDS, "minhash-md5"), batch_id,
         "append_doc_band_index",
     )
-    exploded = _doc_band_explode(new_t).withColumn(
-        "gen", F.lit(int(batch_id)).cast("long")
-    )
-    # stats first, rows second: a crash inside the append over-counts
-    # (conservative — rebuilds fire earlier, never later; round-10
-    # advice), matching append_band_index's crash direction. The
-    # max_group_rows bump feeds the md5 SMJ guard: a boilerplate-heavy
-    # crawl admitting thousands of identical-signature docs is exactly
-    # the duplication-cluster regime that spills the bucket-only join
-    # with no formula signal (round-11 advice).
-    from hcdc_spark.operators.similarity import (
-        _bumped_group_stat,
-        _cluster_for_band_write,
-    )
-
-    n_new = new_t.select("doc_id").distinct().count()
-    props = {"n_rows": meta["n_rows"] + n_new}
-    props.update(_bumped_group_stat(exploded, meta))
-    _set_band_index_props(spark, table, props)
-
-    _cluster_for_band_write(
-        exploded.select(*spark.table(table).columns), meta["n_buckets"]
-    ).write.insertInto(table, overwrite=False)
-
-
-def compact_doc_band_index(spark: SparkSession, table: str) -> int:
-    """Keep-latest compaction for the MinHash doc index — the text
-    twin of similarity.compact_band_index (one shared implementation:
-    the id column comes from the table's persisted metadata)."""
-    from hcdc_spark.operators.similarity import compact_band_index
-
-    return compact_band_index(spark, table)
-
-
-def delete_from_doc_band_index(
-    spark: SparkSession, table: str, ids, batch_id: int = 0
-) -> None:
-    """First-class DELETE for the MinHash doc index — the takedown
-    verb (crawl retraction, right-to-be-forgotten) the admission loop
-    needs between cycles: an O(|ids|) tombstone append; probes stop
-    producing candidates for the deleted doc_ids immediately, and the
-    next compact_doc_band_index physically drops their rows. Same
-    generation discipline as append_doc_band_index: the tombstone
-    kills generations <= ``batch_id``, so a RE-crawl of the same
-    doc_id admitted at a later batch serves again. One shared
-    implementation with the embedding index
-    (similarity.delete_from_band_index; the id column comes from the
-    table's metadata).
-
-    SCOPE (deliberate): the takedown removes the doc from the NEAR-DUP
-    index — new near-identical content can admit again (c31's planted
-    evidence) — but its kept chunks' md5 digests stay in the CHUNK
-    reference on purpose. The chunk index stores 16-byte hashes only
-    (no content, not attributable to a doc, shared across docs), so
-    removing them would require per-hash refcounts for no retention
-    win, while KEEPING them means verbatim re-ingestion of retracted
-    text still gets its chunks dropped — the conservative direction
-    for a training-data pipeline."""
-    from hcdc_spark.operators.similarity import delete_from_band_index
-
-    delete_from_band_index(spark, table, ids, batch_id=batch_id)
 
 
 def incremental_doc_neardup(

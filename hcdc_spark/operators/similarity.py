@@ -2477,7 +2477,13 @@ def read_band_index_meta(spark: SparkSession, table: str) -> dict:
     (n_bands/bits/geometry/target_bucket_rows), the live corpus size
     (n_rows — maintained by every append), the id column, bucket
     count, layout and the largest (band, bucket) group — all stamped
-    by write_band_index_rows."""
+    by write_band_index_rows.
+
+    Every band-index entry point reads this first, so this is where an
+    interrupted stage-and-swap self-heals (a crash between the swap's
+    DROP and RENAME leaves the live name missing; the recovery check is
+    two catalog lookups, no scan)."""
+    _finish_interrupted_band_swap(spark, table)
     rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
     props = {r["key"]: r["value"] for r in rows}
     return {
@@ -2546,12 +2552,11 @@ def probe_band_scan(
     Batches banding into more keys than the cap keep only the
     band-dir pruning.
 
-    This is the SCAN utility (diagnostics, band-restricted reads, the
-    poison gates); it returns RAW index rows — including rows whose id
-    carries a pending tombstone (delete_from_band_index). The
-    production probes go through ``_band_candidates``, which applies
-    the tombstones and additionally keeps the candidate JOIN
-    exchange-free on the index side."""
+    It returns RAW index rows — including rows whose id carries a
+    pending tombstone (delete_from_band_index). The production probes
+    go through ``_band_candidates``, which reads through here, applies
+    the tombstones on top and keeps the candidate JOIN exchange-free on
+    the index side."""
     full = spark.table(table)
     keys = (
         nbx.select("band", "bucket")
@@ -2569,12 +2574,13 @@ def probe_band_scan(
     bands = sorted({r["band"] for r in keys})
     buckets = sorted({r["bucket"] for r in keys})
     out = full.where(F.col("band").isin(bands))
-    n_buckets = meta["n_buckets"]
-    # sparsity margin (mirrors _band_candidates): a near-saturating
-    # IN-list (e.g. 31 values over 32 files) selects almost every
-    # file and pays the parquet predicate for no pruning — engage
-    # only while at most half the bucket files can be selected
-    if len(buckets) * 2 <= n_buckets:
+    # engage file pruning only while the IN-list can select at most
+    # half the bucket files — past that it selects (nearly) every file
+    # and prunes nothing while still paying the parquet predicate
+    # (measured at sf16: 200-value lists over 32 files read everything
+    # and paid the predicate; a bare len < n_buckets margin still let
+    # 31-value lists over 32 files through — round-11 advice)
+    if len(buckets) * 2 <= meta["n_buckets"]:
         out = out.where(F.col("bucket").isin(buckets))
     return out
 
@@ -2591,22 +2597,15 @@ def _band_candidates(
     ((new_col, band, bucket) rows) and a persisted band index — the
     probe core shared by the embedding and MinHash-doc dedup gates.
 
-    This is ONE pruned scan and ONE join. The scan: ``band IN (bands
-    the batch populates)`` prunes band DIRECTORIES, and when the batch's GLOBAL distinct bucket
-    values number fewer than the bucket files (past that an IN-list
-    selects nearly every file and prunes nothing, measured at sf16:
-    200-key lists over 32 files read everything)
-    the bucket IN-list is pushed too: Spark's bucket pruning opens
-    only the files those values hash to (``SelectedBucketsCount``;
-    poison-gated) and parquet skips row groups via sortBy(bucket)
-    stats. The join: keyed on ``bucket`` ALONE — the table's
-    bucketing column, so the index side reads bucket-aligned with NO
-    exchange (``Bucketed: true``) — with band equality expressed as
-    the residual ``n.band <= i.band AND n.band >= i.band`` ON
-    PURPOSE: written as ``==`` Catalyst would lift band into the
-    join keys and the (band, bucket)-keyed exchange would re-shuffle
-    the index side; as two inequalities it stays an SMJ residual
-    filter and the plan gate pins it (test_plans).
+    This is ONE pruned scan (probe_band_scan, with the pending
+    tombstones applied on top) and ONE join. The join: keyed on
+    ``bucket`` ALONE — the table's bucketing column, so the index side
+    reads bucket-aligned with NO exchange (``Bucketed: true``) — with
+    band equality expressed as the residual ``n.band <= i.band AND
+    n.band >= i.band`` ON PURPOSE: written as ``==`` Catalyst would
+    lift band into the join keys and the (band, bucket)-keyed exchange
+    would re-shuffle the index side; as two inequalities it stays an
+    SMJ residual filter and the plan gate pins it (test_plans).
 
     WHY one scan and not one leg per band (the first cut of this
     layout): n_bands separate scan+join legs cost O(n_bands) in
@@ -2619,41 +2618,11 @@ def _band_candidates(
     read, still ~1e-5 of a 100 TB index, and the residual band
     filter drops the cross-band rows before they leave the join."""
     id_col = meta["id_col"]
-    keys = (
-        nbx.select("band", "bucket")
-        .distinct()
-        .limit(BAND_PROBE_KEY_CAP + 1)
-        .collect()
-    )
-    overflow = len(keys) > BAND_PROBE_KEY_CAP
-    if not overflow and not keys:
-        return (
-            nbx.select(new_col)
-            .withColumn(old_col, F.col(new_col))
-            .where(F.lit(False))
-        )
-    if overflow:
-        bands = [
-            r["band"] for r in nbx.select("band").distinct().collect()
-        ]
-        buckets: list[str] | None = None
-    else:
-        bands = sorted({r["band"] for r in keys})
-        buckets = sorted({r["bucket"] for r in keys})
     idx = _apply_tombstones(
-        spark.table(table).where(F.col("band").isin(bands)),
+        probe_band_scan(spark, table, nbx, meta),
         _read_tombstones(spark, _table_location(spark, table), id_col),
         id_col, F.col("gen"),
     )
-    n_buckets = meta["n_buckets"]
-    # engage file pruning only while the IN-list can select at most
-    # half the bucket files — past that it selects (nearly) every file
-    # and prunes nothing while still paying the parquet predicate
-    # (measured at sf16: 200-value lists over 32 files read everything
-    # and paid the predicate; a bare len < n_buckets margin still let
-    # 31-value lists over 32 files through — round-11 advice)
-    if buckets is not None and len(buckets) * 2 <= n_buckets:
-        idx = idx.where(F.col("bucket").isin(buckets))
     # SMJ group-size guard (see BAND_SMJ_GROUP_CAP): a degraded/stale
     # occupancy makes the bucket-only key's groups spill — re-key on
     # the (band, bucket) pair (exchange, small groups) until a rebuild
@@ -3303,18 +3272,37 @@ def append_band_index(
     the batch into buckets no probe at the live geometry ever reads,
     silently un-indexing every admitted vector — so it is validated
     up front and refused loudly."""
+    _append_band_rows(
+        spark, table, new_batch,
+        _band_explode(new_batch, n_bands=n_bands, bits=bits,
+                      geometry=geometry),
+        (n_bands, bits, geometry), batch_id, "append_band_index",
+    )
+
+
+def _append_band_rows(
+    spark: SparkSession,
+    table: str,
+    new_batch: DataFrame,
+    exploded: DataFrame,
+    shape: tuple[int, int, str],
+    batch_id: int,
+    caller: str,
+) -> None:
+    """Core band-index append shared by append_band_index and
+    dedup.append_doc_band_index: ``exploded`` is the batch's (id, band,
+    bucket) rows banded at ``shape`` = (n_bands, bits, geometry),
+    which is validated against the index metadata. Stamps gen =
+    ``batch_id``, bumps the n_rows/max_group_rows statistics BEFORE the
+    rows land (see append_band_index's crash-direction note) and
+    inserts clustered by (band, bucket file) into the bucketed table."""
     if batch_id < 0:
         raise ValueError(
-            f"append_band_index: batch_id must be >= 0, got {batch_id} "
+            f"{caller}: batch_id must be >= 0, got {batch_id} "
             "(-1 is the build-generation sentinel)"
         )
-    meta = _checked_band_geometry(
-        spark, table, n_bands, bits, geometry, "append_band_index"
-    )
-    exploded = _band_explode(
-        new_batch, n_bands=n_bands, bits=bits, geometry=geometry
-    ).withColumn("gen", F.lit(int(batch_id)).cast("long"))
-    # stats first, rows second: see the docstring's crash-direction note
+    meta = _checked_band_geometry(spark, table, *shape, caller)
+    exploded = exploded.withColumn("gen", F.lit(int(batch_id)).cast("long"))
     n_new = new_batch.select(meta["id_col"]).distinct().count()
     props = {"n_rows": meta["n_rows"] + n_new}
     props.update(_bumped_group_stat(exploded, meta))
@@ -3360,14 +3348,7 @@ def _checked_band_geometry(
     persisted metadata (the round-10 review seam: every admit/probe
     takes geometry parameters, and a stale value — typically the
     pre-rebuild bits — silently writes or reads buckets the live
-    geometry never touches). Raises with both geometries named.
-
-    Every probe/append runs through here, so this is also where an
-    interrupted stage-and-swap self-heals (round-10 advice: a crash
-    between the swap's DROP and RENAME used to block the probe/admit
-    path with a raw table-not-found until a maintenance entry point
-    ran) — the recovery check is two catalog lookups, no scan."""
-    _finish_interrupted_band_swap(spark, table)
+    geometry never touches). Raises with both geometries named."""
     meta = read_band_index_meta(spark, table)
     want = (meta["n_bands"], meta["bits"], meta["geometry"])
     got = (n_bands, bits, geometry)
@@ -3420,9 +3401,8 @@ def rebuild_band_index(
     index is STAGED as its own bucketed table and swapped into the
     live name via the catalog (stage → drop → rename → remove old
     files), so a crash mid-rebuild leaves the live index serving; an
-    interrupted swap is finished by the guard on the next
-    compact/rebuild call. Returns the new meta dict."""
-    _finish_interrupted_band_swap(spark, table)
+    interrupted swap is finished by read_band_index_meta on the next
+    call of any band-index entry point. Returns the new meta dict."""
     meta = read_band_index_meta(spark, table)
     if meta["geometry"] != "hyperplane":
         raise ValueError(
@@ -3547,7 +3527,6 @@ def compact_band_index(spark: SparkSession, table: str) -> int:
     paid-in-shuffles — (band, bucket) re-key of every probe; running
     compaction on the normal maintenance cadence clears the
     accumulated slack (round-12 verdict nit)."""
-    _finish_interrupted_band_swap(spark, table)
     meta = read_band_index_meta(spark, table)
     id_col = meta["id_col"]
     rows = spark.table(table)
@@ -3749,11 +3728,16 @@ def delete_from_band_index(
     Scheme-safe end to end (round-13 verdict #1): the append and the
     probe-side discovery are Hadoop-FS-routed, so on
     ``hdfs://``/``s3a://`` locations the verb either works or raises —
-    never reports success while deleted ids keep serving."""
-    _finish_interrupted_band_swap(spark, table)
+    never reports success while deleted ids keep serving.
+
+    SCOPE (deliberate): a doc-index takedown removes the doc from the
+    NEAR-DUP index, but its kept chunks' md5 digests stay in the chunk
+    reference (see takedown's scope contract)."""
+    # the metadata read finishes an interrupted swap, so it must come
+    # before the location lookup of the live name
+    id_col = read_band_index_meta(spark, table)["id_col"]
     _append_tombstones(
-        spark, _table_location(spark, table), ids,
-        read_band_index_meta(spark, table)["id_col"], batch_id,
+        spark, _table_location(spark, table), ids, id_col, batch_id,
         "delete_from_band_index",
     )
 
@@ -3780,7 +3764,7 @@ def takedown(
     generations <= ``batch_id``; a later re-admission serves again) —
     no scan, no rewrite; the next compaction reclaims.
 
-    SCOPE CONTRACT (delete_from_doc_band_index's documented policy):
+    SCOPE CONTRACT:
     the takedown removes ids from the NEAR-DUP and ANN indexes — new
     near-identical content can admit again, deleted vectors stop
     being returned — but CHUNK-REFERENCE digests deliberately survive

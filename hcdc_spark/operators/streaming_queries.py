@@ -228,6 +228,8 @@ def _await_drained(q, label: str, timeout: int = 300) -> None:
 
 
 def _drain(df, name: str, ckpt: str, mode: str = "append"):
+    """Drain the stream ``df`` to its end (availableNow) into the
+    memory table ``name`` and return that table."""
     q = (
         df.writeStream.outputMode(mode)
         .format("memory")
@@ -238,6 +240,38 @@ def _drain(df, name: str, ckpt: str, mode: str = "append"):
     )
     _await_drained(q, name)
     return df.sparkSession.table(name)
+
+
+def _drain_batches(
+    spark: SparkSession, schema, src: str, fn, ckpt: str, name: str
+) -> None:
+    """The foreachBatch twin of _drain: stream the parquet files under
+    ``src`` one file per micro-batch (oldest first, so batch_id i is
+    file i of an mtime-ordered directory) through ``fn(batch_df,
+    batch_id)`` until the input is drained."""
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .writeStream.foreachBatch(fn)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await_drained(q, name)
+
+
+def _land(df: DataFrame, batch, path: str) -> None:
+    """Write ``df`` as partition ``batch=<batch>`` under ``path`` by
+    dynamic partition overwrite, so a replayed micro-batch re-lands its
+    own partition instead of appending a second copy."""
+    (
+        df.withColumn("batch", F.lit(str(batch)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch")
+        .parquet(path)
+    )
 
 
 @REG.add(
@@ -435,20 +469,10 @@ def c05_stream_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_value_dec"),
         )
     )
-    name = "c05_win_agg"
     ckpt = tempfile.mkdtemp(prefix="hcdc_c05_ckpt_")
     try:
         with _small_shuffle(spark):
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_drained(q, name)
-            out = spark.table(name).select(
+            out = _drain(agg, "c05_win_agg", ckpt, mode="complete").select(
                 F.unix_millis(F.col("win.start")).alias("win_start_ms"),
                 "event_type",
                 "n_events",
@@ -591,20 +615,10 @@ def c13_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("event_id").alias("min_event_id"),
         )
     )
-    name = "c13_sessions"
     ckpt = tempfile.mkdtemp(prefix="hcdc_c13_ckpt_")
     try:
         with _small_shuffle(spark):
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_drained(q, name)
-            out = spark.table(name).select(
+            out = _drain(agg, "c13_sessions", ckpt, mode="complete").select(
                 "user_id",
                 F.unix_millis(F.col("sess.start")).alias("session_start_ms"),
                 "n_events",
@@ -641,21 +655,11 @@ def c14_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = "c14_dedup"
     ckpt = tempfile.mkdtemp(prefix="hcdc_c14_ckpt_")
     try:
         with _small_shuffle(spark):
-            q = (
-                deduped.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_drained(q, name)
             out = (
-                spark.table(name)
+                _drain(deduped, "c14_dedup", ckpt)
                 .groupBy("event_type")
                 .agg(F.count(F.lit(1)).alias("n_users"))
             )
@@ -699,21 +703,11 @@ def c19_stream_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("lang", F.md5("text").alias("h"))
         .dropDuplicates(["lang", "h"])
     )
-    name = "c19_doc_dedup"
     ckpt = tempfile.mkdtemp(prefix="hcdc_c19_ckpt_")
     try:
         with _small_shuffle(spark):
-            q = (
-                deduped.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_drained(q, name)
             out = (
-                spark.table(name)
+                _drain(deduped, "c19_doc_dedup", ckpt)
                 .groupBy("lang")
                 .agg(F.count(F.lit(1)).alias("n_unique_docs"))
             )
@@ -790,19 +784,10 @@ def c17_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.window("ts", "10 minutes").alias("win"))
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
-        name = "c17_late_drop"
-        ckpt = os.path.join(work, "ckpt")
         with _small_shuffle(spark):
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_drained(q, name)
-            out = spark.table(name).select(
+            out = _drain(
+                agg, "c17_late_drop", os.path.join(work, "ckpt")
+            ).select(
                 ((F.unix_timestamp(F.col("win.start")) - base) / 60)
                 .cast("bigint")
                 .alias("win_start_min"),
@@ -849,25 +834,14 @@ def c20_stream_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         S.write_ivfpq_index(spark, base, idx)
         delta_dir = os.path.join(work, "delta")
         delta.repartition(3).write.parquet(delta_dir)
-        stream = (
-            spark.readStream.schema(delta.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(delta_dir)
-        )
         with _small_shuffle(spark):
-            q = (
-                stream.writeStream.foreachBatch(
-                    lambda b, bid: S.append_ivfpq_delta(
-                        spark, b, idx, batch_id=bid
-                    )
-                )
-                .option(
-                    "checkpointLocation", os.path.join(work, "ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
+            _drain_batches(
+                spark, delta.schema, delta_dir,
+                lambda b, bid: S.append_ivfpq_delta(
+                    spark, b, idx, batch_id=bid
+                ),
+                os.path.join(work, "ckpt"), "c20_stream_index_upsert",
             )
-            _await_drained(q, "c20_stream_index_upsert")
         qv = (
             emb.where(F.col("vec_id") == 0)
             .select("embedding")
@@ -953,29 +927,17 @@ def c21_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select(F.col("vec_new").alias("vec_id"))
                 .distinct()
             )
-            (
+            _land(
                 batch_df.join(hits, "vec_id", "left_anti")
-                .select("vec_id", "label", "embedding")
-                .withColumn("batch", F.lit(str(batch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch")
-                .parquet(clean_dir)
+                .select("vec_id", "label", "embedding"),
+                batch_id, clean_dir,
             )
 
         with _small_shuffle(spark):
-            q = (
-                spark.readStream.schema(delta.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(delta_dir)
-                .writeStream.foreachBatch(gate)
-                .option(
-                    "checkpointLocation", os.path.join(work, "ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
+            _drain_batches(
+                spark, delta.schema, delta_dir, gate,
+                os.path.join(work, "ckpt"), "c21_stream_ingest_dedup",
             )
-            _await_drained(q, "c21_stream_ingest_dedup")
         survivors = spark.read.parquet(clean_dir)
         # close the cycle: admit the accepted vectors to the index so
         # the NEXT ingest dedups against the grown corpus
@@ -1051,7 +1013,7 @@ def _c22_oracle() -> str:
     "excluded on both sides (q73's convention — no dedup evidence). "
     "Per-cycle cost O(|batch|) probe + O(|survivors|) append, never "
     "O(corpus). A re-crawled (updated) doc's stale band rows are "
-    "resolved by compact_doc_band_index (keep-latest, ghost-removal "
+    "resolved by similarity.compact_band_index (keep-latest, ghost-removal "
     "gated in tests); the growth policy is c21's.",
     tags=("streaming", "dedup", "lsh", "index", "pipeline", "text"),
 )
@@ -1086,28 +1048,16 @@ def c22_stream_doc_ingest_dedup(
                 .select(F.col("doc_new").alias("doc_id"))
                 .distinct()
             )
-            (
-                batch_df.join(hits, "doc_id", "left_anti")
-                .withColumn("batch", F.lit(str(batch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch")
-                .parquet(clean_dir)
+            _land(
+                batch_df.join(hits, "doc_id", "left_anti"), batch_id,
+                clean_dir,
             )
 
         with _small_shuffle(spark):
-            q = (
-                spark.readStream.schema(delta_t.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(delta_dir)
-                .writeStream.foreachBatch(gate)
-                .option(
-                    "checkpointLocation", os.path.join(work, "ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
+            _drain_batches(
+                spark, delta_t.schema, delta_dir, gate,
+                os.path.join(work, "ckpt"), "c22_stream_doc_ingest_dedup",
             )
-            _await_drained(q, "c22_stream_doc_ingest_dedup")
         survivors = spark.read.parquet(clean_dir)
         # close the cycle: the accepted docs join the corpus index
         D.append_doc_band_index(
@@ -1305,28 +1255,16 @@ def c26_crawl_ingest_pipeline(
                 (word_count("text") >= 5)
                 & (count_in_set("text", STOPWORDS) >= 1)
             )
-            (
-                chunk_dedup_rewrite_vs(surv, ref, carry=("lang",))
-                .withColumn("batch", F.lit(str(batch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch")
-                .parquet(clean_dir)
+            _land(
+                chunk_dedup_rewrite_vs(surv, ref, carry=("lang",)),
+                batch_id, clean_dir,
             )
 
         with _small_shuffle(spark):
-            q = (
-                spark.readStream.schema(delta_t.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(delta_dir)
-                .writeStream.foreachBatch(gate)
-                .option(
-                    "checkpointLocation", os.path.join(work, "ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
+            _drain_batches(
+                spark, delta_t.schema, delta_dir, gate,
+                os.path.join(work, "ckpt"), "c26_crawl_ingest_pipeline",
             )
-            _await_drained(q, "c26_crawl_ingest_pipeline")
         landed = spark.read.parquet(clean_dir)
         # close the loop on BOTH corpus artifacts: the ingested docs
         # join the band index (next cycle's near-dup gate sees them)
@@ -1431,45 +1369,47 @@ def _c30_plants(docs: DataFrame) -> DataFrame:
     return exact.unionByName(share)
 
 
-def _c30_setup(spark: SparkSession, sf_dir: str, work: str,
-               table: str, chunk_table: str, self_plants: bool = False):
-    """Build c30's corpus artifacts (doc band index + chunk index) and
-    the THREE ordered delta files. Returns (docs, t, corpus_t,
-    delta_dir). Shared by the driver row and the mid-drain-kill chaos
-    test (tests/test_streaming.py). With ``self_plants`` (c32), batch
-    1 additionally carries exact copies of its OWN docs at
-    parent + _C32_SELF — the same-batch pair only the self_dedup arm
-    can catch."""
-    import glob
+#: the crawl delta files' schema (one row per crawled document)
+_DOC_SCHEMA = "doc_id long, lang string, text string"
 
-    from hcdc_spark.catalog import table_path
-    from hcdc_spark.functions.text import distinct_words
-    from hcdc_spark.operators import dedup as D
-    from hcdc_spark.operators.text import write_chunk_index
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
-    raw = docs.select("doc_id", "lang", "text").unionByName(
-        _c30_plants(docs)
+def _c32_self_plants(docs: DataFrame) -> DataFrame:
+    """c32's SAME-batch plants: exact copies of batch-1 docs riding IN
+    batch 1 (parent + _C32_SELF keeps % 10 == 3) — the pair only the
+    pre-probe keep-first step can catch."""
+    return docs.where(F.col("doc_id") % 30 == 13).select(
+        (F.col("doc_id") + F.lit(_C32_SELF)).alias("doc_id"),
+        "lang", "text",
     )
-    if self_plants:
-        raw = raw.unionByName(
-            docs.where(F.col("doc_id") % 30 == 13).select(
-                (F.col("doc_id") + F.lit(_C32_SELF)).alias("doc_id"),
-                "lang", "text",
-            )
-        )
-    t = raw.select(
+
+
+def _crawl_words(raw: DataFrame) -> DataFrame:
+    """(doc_id, lang, text, ws) rows with a non-empty word set."""
+    from hcdc_spark.functions.text import distinct_words
+
+    return raw.select(
         "doc_id", "lang", "text", distinct_words("text").alias("ws")
     ).where(F.size("ws") > 0)
-    corpus_t = t.where(F.col("doc_id") % 10 != 3)
+
+
+def _write_c30_deltas(work: str, t: DataFrame) -> str:
+    """Split the crawl into c30's THREE ordered batches and write them
+    as ordered delta files under ``<work>/delta``; returns that dir.
+    Batch 0 is doc_id % 30 == 3, batch 1 % 30 == 13 plus any same-batch
+    self plants (>= _C32_SELF), batch 2 % 30 == 23 plus the copy/share
+    plants. One flat parquet file per batch, mtimes ascending —
+    FileStreamSource processes oldest-first, so with
+    maxFilesPerTrigger=1 batch_id i IS delta file i."""
+    import glob
+
     batches = [
         t.where((F.col("doc_id") % 30 == 3) & (F.col("doc_id") < _C30_COPY)),
         # the < _C30_COPY bound matters: exact-copy plants are
         # parent + 1e6 and 1e6 % 30 == 10, so plant ids ≡ 13 (mod 30)
         # — without the bound they would ride in BOTH this delta and
         # delta 2, while the oracle's bat CTE assigns them to batch 2
-        # only (round-12 advice). Self plants (>= _C32_SELF, c32 only)
-        # ride WITH their parents in this delta by design.
+        # only (round-12 advice). Self plants (>= _C32_SELF) ride WITH
+        # their parents in this delta by design.
         t.where(
             ((F.col("doc_id") % 30 == 13) & (F.col("doc_id") < _C30_COPY))
             | (F.col("doc_id") >= _C32_SELF)
@@ -1482,17 +1422,6 @@ def _c30_setup(spark: SparkSession, sf_dir: str, work: str,
             )
         ),
     ]
-    D.write_doc_band_index(
-        spark, corpus_t.select("doc_id", "ws"), table,
-        os.path.join(work, "doc_index"),
-    )
-    write_chunk_index(
-        spark, docs.where(F.col("doc_id") % 10 != 3), chunk_table,
-        os.path.join(work, "chunk_index"),
-    )
-    # ordered delta files: one flat parquet file per batch, mtimes
-    # ascending — FileStreamSource processes oldest-first, so with
-    # maxFilesPerTrigger=1 batch_id i IS delta file i
     delta_dir = os.path.join(work, "delta")
     os.makedirs(delta_dir)
     now = int(os.stat(work).st_mtime)
@@ -1503,7 +1432,148 @@ def _c30_setup(spark: SparkSession, sf_dir: str, work: str,
         dst = os.path.join(delta_dir, f"d{i}.parquet")
         os.rename(part, dst)
         os.utime(dst, (now - 300 + i * 100, now - 300 + i * 100))
-    return docs, t, corpus_t, delta_dir
+    return delta_dir
+
+
+def _c30_setup(spark: SparkSession, sf_dir: str, work: str,
+               table: str, chunk_table: str, self_plants: bool = False):
+    """Build c30's corpus artifacts (doc band index + chunk index) and
+    the THREE ordered delta files. Returns (docs, t, corpus_t,
+    delta_dir). Shared by the driver row and the mid-drain-kill chaos
+    test (tests/test_streaming.py). With ``self_plants`` (c32), batch
+    1 additionally carries exact copies of its OWN docs at
+    parent + _C32_SELF — the same-batch pair only the self_dedup arm
+    can catch."""
+    from hcdc_spark.catalog import table_path
+    from hcdc_spark.operators import dedup as D
+    from hcdc_spark.operators.text import write_chunk_index
+
+    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    raw = docs.select("doc_id", "lang", "text").unionByName(
+        _c30_plants(docs)
+    )
+    if self_plants:
+        raw = raw.unionByName(_c32_self_plants(docs))
+    t = _crawl_words(raw)
+    corpus_t = t.where(F.col("doc_id") % 10 != 3)
+    D.write_doc_band_index(
+        spark, corpus_t.select("doc_id", "ws"), table,
+        os.path.join(work, "doc_index"),
+    )
+    write_chunk_index(
+        spark, docs.where(F.col("doc_id") % 10 != 3), chunk_table,
+        os.path.join(work, "chunk_index"),
+    )
+    return docs, t, corpus_t, _write_c30_deltas(work, t)
+
+
+def _crawl_probe(
+    spark: SparkSession, batch_df: DataFrame, batch_id: int, table: str,
+    corpus_t: DataFrame, admitted_dir: str, rejected_dir: str,
+    self_dedup: bool,
+) -> tuple[DataFrame, DataFrame]:
+    """The probe half of the crawl admission gate: word-set the batch,
+    optionally self-dedup it, probe the doc band index against corpus ∪
+    admitted, log the rejections (doc_new, doc_old, batch) to
+    ``rejected_dir`` and return (t_b, survivors) — t_b the (doc_id,
+    lang, text, ws) batch the probe saw, survivors its rows with no
+    near-dup.
+
+    Replay safety: THIS batch's own PRIOR ADMISSIONS are excluded from
+    the probe's old side. Admitted/coupling rows carry a batch stamp
+    (``b``), and hits whose doc_old was admitted under the CURRENT
+    batch id — possible only on a replay — are dropped (left_anti).
+    Without the exclusion every replayed doc would self-match its own
+    admitted band rows at Jaccard 1.0, be rejected, and the partition
+    overwrite would rewrite the batch WITHOUT it. The stamp keeps the
+    exclusion EXACT: a doc_id recurring across batches (a re-crawled
+    page) still gates against its own earlier admission on a first run
+    — anti-joining ALL batch ids would silently skip that gate and
+    admit near-dups of re-crawled docs (round-13 review).
+
+    SCOPE: the probe rejects vs corpus ∪ admitted — two near-dup copies
+    arriving in the SAME batch both pass (the second is caught only
+    next cycle, once the first is indexed) UNLESS ``self_dedup`` is
+    set: then dedup.batch_self_neardup_keep_first runs on ``t_b``
+    BEFORE the probe (q105's monotone keep-first rule — batch-sized,
+    deterministic on batch content, so replay-safe by construction)
+    and the pair never co-admits."""
+    from pyspark.errors import AnalysisException
+
+    from hcdc_spark.operators import dedup as D
+
+    t_b = _crawl_words(batch_df)
+    if self_dedup:
+        # the within-batch step FIRST: a doc is dropped iff its exact
+        # Jaccard to ANY lower-id doc in the same batch reaches the
+        # threshold — the docs the corpus probe below structurally
+        # cannot see (q105; batch-sized, O(|batch|))
+        t_b = D.batch_self_neardup_keep_first(t_b, threshold=0.9)
+    corpus_cur = corpus_t.select("doc_id", "ws")
+    own_prior = None
+    try:
+        admitted = spark.read.parquet(admitted_dir)
+        corpus_cur = corpus_cur.unionByName(admitted.select("doc_id", "ws"))
+        # rows THIS batch id already admitted — non-empty only on a
+        # replay (the batch stamp makes the exclusion exact)
+        own_prior = (
+            admitted.where(F.col("b") == batch_id)
+            .select(F.col("doc_id").alias("doc_old"))
+            .distinct()
+        )
+    except AnalysisException:
+        pass  # nothing admitted yet (batch 0)
+    hits = D.incremental_doc_neardup(
+        spark, t_b.select("doc_id", "ws"), table, corpus_cur,
+        threshold=0.9,
+    )
+    if own_prior is not None:
+        hits = hits.join(own_prior, "doc_old", "left_anti")
+    (
+        hits.select("doc_new", "doc_old", F.lit(batch_id).alias("batch"))
+        .distinct()
+        .write.mode("append").parquet(rejected_dir)
+    )
+    rejected = hits.select(F.col("doc_new").alias("doc_id")).distinct()
+    return t_b, t_b.join(rejected, "doc_id", "left_anti")
+
+
+def _crawl_admit(
+    spark: SparkSession, t_b: DataFrame, batch_id: int, landed_dir: str,
+    table: str, admitted_dir: str, fault=None,
+) -> DataFrame:
+    """The admit half of the crawl admission gate: re-read batch
+    ``batch_id``'s landed partition, write its docs' (doc_id, ws, b)
+    coupling frame to ``admitted_dir``, append them to the doc band
+    index and refresh it. Returns the landed partition.
+
+    The landed rows are re-read from the sink, NOT taken from the lazy
+    landing plan (whose tree may still scan an index table the caller
+    appends to next). The coupling frame is written BEFORE the
+    band-index append, so the index can never hold a doc the
+    verify-join corpus lacks (the ordering that used to make a kill
+    between the two a permanent raise_error crash loop on restart);
+    its batch stamp ``b`` is _crawl_probe's replay-exclusion key.
+    Duplicate admitted/index rows from a replay cost storage only,
+    never decisions (probes .distinct() candidates, the verify join
+    tolerates duplicate corpus rows). ``fault`` is _c30_gate's test
+    seam, called between the two writes."""
+    from hcdc_spark.operators import dedup as D
+
+    landed = spark.read.parquet(landed_dir).where(
+        F.col("batch") == str(batch_id)
+    )
+    adm = t_b.join(landed.select("doc_id"), "doc_id", "left_semi").select(
+        "doc_id", "ws"
+    )
+    adm.withColumn("b", F.lit(batch_id)).write.mode("append").parquet(
+        admitted_dir
+    )
+    if fault:
+        fault("post_admit_write", batch_id)
+    D.append_doc_band_index(spark, adm, table, batch_id=batch_id)
+    spark.catalog.refreshTable(table)
+    return landed
 
 
 def _c30_gate(spark: SparkSession, table: str, chunk_table: str,
@@ -1514,24 +1584,10 @@ def _c30_gate(spark: SparkSession, table: str, chunk_table: str,
     inside the batch. Replay-idempotent by construction — a restart
     replays a batch whose admission side effects landed as ANY prefix
     of the gate, and the recompute is byte-identical (round-12 advice;
-    certified by the mid-drain-kill test):
+    certified by the mid-drain-kill test). The probe and admit halves
+    (_crawl_probe, _crawl_admit) carry their own replay rules; this
+    gate adds the chunk leg's:
 
-    - THIS batch's own PRIOR ADMISSIONS are excluded from the probe's
-      old side: admitted/coupling rows carry a batch stamp (`b`), and
-      hits whose doc_old was admitted under the CURRENT batch id —
-      possible only on a replay — are dropped (left_anti). Without
-      the exclusion every replayed doc would self-match its own
-      admitted band rows at Jaccard 1.0, be rejected, and the
-      partition overwrite would rewrite the batch WITHOUT it. The
-      stamp keeps the exclusion EXACT: a doc_id recurring across
-      batches (a re-crawled page) still gates against its own earlier
-      admission on a first run — anti-joining ALL batch ids would
-      silently skip that gate and admit near-dups of re-crawled docs
-      (round-13 review).
-    - the admitted/coupling frame is written BEFORE the band-index
-      append, so the index can never hold a doc the verify-join
-      corpus lacks (the ordering that used to make a kill between the
-      two a permanent raise_error crash loop on restart).
     - the chunk-rewrite reference subtracts the batch's OWN
       previously-landed kept chunks (re-chunked from its clean_dir
       partition — exact, since clean_text re-chunks to the kept
@@ -1540,9 +1596,7 @@ def _c30_gate(spark: SparkSession, table: str, chunk_table: str,
       First runs and pre-append replays subtract nothing (kept chunks
       are by definition absent from the pre-batch reference).
     - the landing is a dynamic partition overwrite; a replayed chunk
-      append anti-joins to nothing; duplicate admitted/index rows
-      cost storage only, never decisions (probes .distinct()
-      candidates, the verify join tolerates duplicate corpus rows).
+      append anti-joins to nothing.
 
     ``fault`` is a test seam: called as fault(point, batch_id) after
     each admission side effect ('post_land', 'post_admit_write',
@@ -1551,25 +1605,13 @@ def _c30_gate(spark: SparkSession, table: str, chunk_table: str,
     replay contract covers, instead of wherever q.stop() happens to
     land. Production callers pass nothing.
 
-    SCOPE: the probe rejects vs corpus ∪ admitted — two near-dup
-    copies arriving in the SAME batch both pass (the second is caught
-    only next cycle, once the first is indexed) UNLESS ``self_dedup``
-    is set: then dedup.batch_self_neardup_keep_first runs on ``t_b``
-    BEFORE the probe (q105's monotone keep-first rule — batch-sized,
-    deterministic on batch content, so replay-safe by construction)
-    and the pair never co-admits. c30's oracle models the gate WITHOUT
-    that step (self_dedup=False — its registry contract); c32 drives
-    the arm with planted same-batch copies and the q105-rule-extended
+    c30's oracle models the gate WITHOUT the within-batch step
+    (self_dedup=False — its registry contract); c32 drives the arm
+    with planted same-batch copies and the q105-rule-extended
     oracle."""
     from pyspark.errors import AnalysisException
 
-    from hcdc_spark.functions.text import (
-        STOPWORDS,
-        count_in_set,
-        distinct_words,
-        word_count,
-    )
-    from hcdc_spark.operators import dedup as D
+    from hcdc_spark.functions.text import STOPWORDS, count_in_set, word_count
     from hcdc_spark.operators.text import (
         append_chunk_index,
         chunk_dedup_rewrite_vs,
@@ -1577,62 +1619,16 @@ def _c30_gate(spark: SparkSession, table: str, chunk_table: str,
     )
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        t_b = batch_df.select(
-            "doc_id", "lang", "text",
-            distinct_words("text").alias("ws"),
-        ).where(F.size("ws") > 0)
-        if self_dedup:
-            # the within-batch step FIRST: a doc is dropped iff its
-            # exact Jaccard to ANY lower-id doc in the same batch
-            # reaches the threshold — the docs the corpus probe below
-            # structurally cannot see (q105; batch-sized, O(|batch|))
-            t_b = D.batch_self_neardup_keep_first(t_b, threshold=0.9)
-        corpus_cur = corpus_t.select("doc_id", "ws")
-        own_prior = None
-        try:
-            admitted = spark.read.parquet(admitted_dir)
-            corpus_cur = corpus_cur.unionByName(
-                admitted.select("doc_id", "ws")
-            )
-            # rows THIS batch id already admitted — non-empty only on
-            # a replay (the batch stamp makes the exclusion exact; see
-            # docstring)
-            own_prior = (
-                admitted.where(F.col("b") == batch_id)
-                .select(F.col("doc_id").alias("doc_old"))
-                .distinct()
-            )
-        except AnalysisException:
-            pass  # nothing admitted yet (batch 0)
-        hits = D.incremental_doc_neardup(
-            spark, t_b.select("doc_id", "ws"), table, corpus_cur,
-            threshold=0.9,
+        t_b, surv = _crawl_probe(
+            spark, batch_df, batch_id, table, corpus_t, admitted_dir,
+            rejected_dir, self_dedup,
         )
-        # replay safety: drop hits whose OLD side is one of THIS
-        # batch's own prior admissions (present in the index only on
-        # a replay; see docstring)
-        if own_prior is not None:
-            hits = hits.join(own_prior, "doc_old", "left_anti")
-        (
-            hits.select(
-                F.col("doc_new"), F.col("doc_old"),
-                F.lit(batch_id).alias("batch"),
-            )
-            .distinct()
-            .write.mode("append").parquet(rejected_dir)
-        )
-        rejected = hits.select(
-            F.col("doc_new").alias("doc_id")
-        ).distinct()
-        surv = t_b.join(rejected, "doc_id", "left_anti").where(
+        surv = surv.where(
             (word_count("text") >= 5)
             & (count_in_set("text", STOPWORDS) >= 1)
         )
         # replay safety: subtract the batch's OWN previously-landed
-        # kept chunks from the rewrite reference (exact — clean_text
-        # re-chunks to the kept chunks, and kept chunks are by
-        # definition absent from the pre-batch reference, so the
-        # anti-join restores it; a first run subtracts nothing)
+        # kept chunks from the rewrite reference (see docstring)
         ref = spark.table(chunk_table)
         try:
             prev_own = spark.read.parquet(clean_dir).where(
@@ -1647,52 +1643,30 @@ def _c30_gate(spark: SparkSession, table: str, chunk_table: str,
             )
         except AnalysisException:
             pass  # no landings yet (first run of batch 0)
-        landed = chunk_dedup_rewrite_vs(
-            surv.select("doc_id", "lang", "text"),
-            ref,
-            carry=("lang",),
-        )
-        (
-            landed.withColumn("batch", F.lit(str(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(clean_dir)
+        _land(
+            chunk_dedup_rewrite_vs(
+                surv.select("doc_id", "lang", "text"), ref, carry=("lang",)
+            ),
+            batch_id, clean_dir,
         )
         if fault:
             fault("post_land", batch_id)
         # ADMIT before the next batch fires — the whole point: band
         # index, chunk index, and the verify-join coupling frame all
-        # grow inside the cycle. Re-read the landed batch from the
-        # sink (NOT the lazy `landed` plan, whose tree still scans
-        # chunk_table — feeding it back into append_chunk_index would
-        # insert into a table its own plan reads).
-        landed_batch = spark.read.parquet(clean_dir).where(
-            F.col("batch") == str(batch_id)
+        # grow inside the cycle
+        landed = _crawl_admit(
+            spark, t_b, batch_id, clean_dir, table, admitted_dir, fault
         )
-        adm = t_b.join(
-            landed_batch.select("doc_id"), "doc_id", "left_semi"
-        ).select("doc_id", "ws")
-        # coupling frame FIRST, index second: the index must never
-        # hold a doc the verify-join corpus lacks (see docstring);
-        # the batch stamp `b` is the replay-exclusion key
-        adm.withColumn("b", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(admitted_dir)
-        if fault:
-            fault("post_admit_write", batch_id)
-        D.append_doc_band_index(spark, adm, table, batch_id=batch_id)
         if fault:
             fault("post_index_append", batch_id)
         append_chunk_index(
             spark,
-            landed_batch.where(F.col("clean_text") != "").select(
+            landed.where(F.col("clean_text") != "").select(
                 F.col("clean_text").alias("text")
             ),
             chunk_table,
         )
         spark.catalog.refreshTable(chunk_table)
-        spark.catalog.refreshTable(table)
         if fault:
             fault("post_chunk_append", batch_id)
 
@@ -1908,18 +1882,10 @@ def c30_crawl_batch_admission(
             clean_dir, admitted_dir, rejected_dir,
         )
         with _small_shuffle(spark):
-            q = (
-                spark.readStream.schema("doc_id long, lang string, text string")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(delta_dir)
-                .writeStream.foreachBatch(gate)
-                .option(
-                    "checkpointLocation", os.path.join(work, "ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
+            _drain_batches(
+                spark, _DOC_SCHEMA, delta_dir, gate,
+                os.path.join(work, "ckpt"), "c30_crawl_batch_admission",
             )
-            _await_drained(q, "c30_crawl_batch_admission")
 
         # teeth: the planted evidence that admission happened PER
         # BATCH, not post-drain. A miss raises → the driver row reds.
@@ -2033,19 +1999,10 @@ def c32_crawl_self_dedup_gate(
             clean_dir, admitted_dir, rejected_dir, self_dedup=True,
         )
         with _small_shuffle(spark):
-            q = (
-                spark.readStream
-                .schema("doc_id long, lang string, text string")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(delta_dir)
-                .writeStream.foreachBatch(gate)
-                .option(
-                    "checkpointLocation", os.path.join(work, "ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
+            _drain_batches(
+                spark, _DOC_SCHEMA, delta_dir, gate,
+                os.path.join(work, "ckpt"), "c32_crawl_self_dedup_gate",
             )
-            _await_drained(q, "c32_crawl_self_dedup_gate")
 
         landed_all = spark.read.parquet(clean_dir)
         # teeth: the same-batch pair NEVER co-admits — no self plant
@@ -2100,7 +2057,7 @@ def _c31_oracle(self_dedup: bool = False) -> str:
     between iterations: iteration 0's old side is the corpus, and
     every later iteration's old side is (corpus ∪ admissions so far)
     EXCEPT the takedown set — the relational mirror of
-    delete_from_doc_band_index firing at the top of cycle 2 (batch 1).
+    delete_from_band_index firing at the top of cycle 2 (batch 1).
     No chunk leg (c31 isolates the index-lifecycle verb; c30 carries
     the chunk story). With ``self_dedup`` (c33 — the COMPOSITION row
     the round-13 verdict mandated, 'next' #4) batch 1 additionally
@@ -2221,11 +2178,11 @@ def _c31_oracle(self_dedup: bool = False) -> str:
     "lifecycle verb the round-12 verdict mandated (#2; reference "
     "analog: the delete-state leg of T27, CDCChangeDeltaProcessor."
     "java:122-138 / FileStateHelper.markDeleted): three document "
-    "batches stream through a c30-style admission gate (probe the "
+    "batches stream through c30's admission gate halves (probe the "
     "MinHash band index vs corpus ∪ previously admitted, reject "
     "Jaccard >= 0.9, land, admit), and AT THE TOP OF CYCLE 2 a "
     "takedown set (every doc_id % 60 == 3 — half of batch 0's "
-    "admissions) is DELETED via delete_from_doc_band_index: an "
+    "admissions) is DELETED via delete_from_band_index: an "
     "O(|ids|) tombstone append, no index rewrite, probes anti-join "
     "it broadcast with the index side still bucket-aligned "
     "(plan-gated in tests/test_plans.py). Batch 2 carries planted "
@@ -2255,19 +2212,14 @@ def _c31_run(
     spark: SparkSession, sf_dir: str, self_dedup: bool
 ) -> DataFrame:
     """Shared engine for c31 (takedown alone) and c33 (takedown
-    COMPOSED with the self-dedup arm): the c30-style admission loop
-    with delete_from_doc_band_index firing at the top of cycle 2 —
+    COMPOSED with the self-dedup arm): c30's admission loop
+    with delete_from_band_index firing at the top of cycle 2 —
     and, when ``self_dedup``, batch 1 carrying exact SAME-batch copies
     of its own docs (parent + _C32_SELF) that only the pre-probe
     keep-first step can catch. Both verbs therefore act in the SAME
     cycle, which is the composition c31/c32 each proved only half of
     (round-13 verdict 'next' #4)."""
-    import glob
-
-    from pyspark.errors import AnalysisException
-
     from hcdc_spark.catalog import table_path
-    from hcdc_spark.functions.text import distinct_words
     from hcdc_spark.operators import dedup as D
     from hcdc_spark.operators import similarity as S
 
@@ -2276,65 +2228,20 @@ def _c31_run(
     work = tempfile.mkdtemp(prefix=f"hcdc_{tag}_")
     try:
         docs = spark.read.parquet(table_path(sf_dir, "documents"))
-        parents = docs.where(
-            (F.col("doc_id") % 30 == 3)
-            & (F.size(distinct_words("text")) > 0)
-        )
+        # c31's plants: byte-identical batch-2 copies of every batch-0
+        # doc (c30's exact-copy plants, without the chunk-share ones)
         raw = docs.select("doc_id", "lang", "text").unionByName(
-            parents.select(
-                (F.col("doc_id") + F.lit(_C30_COPY)).alias("doc_id"),
-                "lang", "text",
-            )
+            _c30_plants(docs).where(F.col("doc_id") < _C30_SHARE)
         )
         if self_dedup:
-            # c32's same-batch plants: exact copies of batch-1 docs
-            # riding IN batch 1 (parent + _C32_SELF keeps % 10 == 3)
-            raw = raw.unionByName(
-                docs.where(F.col("doc_id") % 30 == 13).select(
-                    (F.col("doc_id") + F.lit(_C32_SELF)).alias("doc_id"),
-                    "lang", "text",
-                )
-            )
-        t = raw.select(
-            "doc_id", "lang", "text", distinct_words("text").alias("ws")
-        ).where(F.size("ws") > 0)
+            raw = raw.unionByName(_c32_self_plants(docs))
+        t = _crawl_words(raw)
         corpus_t = t.where(F.col("doc_id") % 10 != 3)
-        # the _C32_SELF bounds are no-ops when self_dedup is off (no
-        # row reaches the offset) — one batch split for both arms,
-        # mirroring _c30_setup's assignment exactly
-        batches = [
-            t.where(
-                (F.col("doc_id") % 30 == 3) & (F.col("doc_id") < _C30_COPY)
-            ),
-            t.where(
-                ((F.col("doc_id") % 30 == 13)
-                 & (F.col("doc_id") < _C30_COPY))
-                | (F.col("doc_id") >= _C32_SELF)
-            ),
-            t.where(
-                ((F.col("doc_id") % 30 == 23) & (F.col("doc_id") < _C30_COPY))
-                | (
-                    (F.col("doc_id") >= _C30_COPY)
-                    & (F.col("doc_id") < _C32_SELF)
-                )
-            ),
-        ]
         D.write_doc_band_index(
             spark, corpus_t.select("doc_id", "ws"), table,
             os.path.join(work, "doc_index"),
         )
-        delta_dir = os.path.join(work, "delta")
-        os.makedirs(delta_dir)
-        now = int(os.stat(work).st_mtime)
-        for i, b in enumerate(batches):
-            stage = os.path.join(work, f"stage_{i}")
-            b.select("doc_id", "lang", "text").coalesce(1).write.parquet(
-                stage
-            )
-            (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-            dst = os.path.join(delta_dir, f"d{i}.parquet")
-            os.rename(part, dst)
-            os.utime(dst, (now - 300 + i * 100, now - 300 + i * 100))
+        delta_dir = _write_c30_deltas(work, t)
         del_ids = sorted(
             r["doc_id"]
             for r in t.where(
@@ -2346,96 +2253,31 @@ def _c31_run(
         rejected_dir = os.path.join(work, "rejected")
 
         def gate(batch_df: DataFrame, batch_id: int) -> None:
-            # KEEP IN SYNC WITH _c30_gate: this is its probe/admit
-            # core minus the chunk leg and quality filter, plus the
-            # takedown hook — any change to the replay contract there
-            # (own-prior exclusion, admit-before-index ordering) must
-            # land here too.
-            # The takedown arrives WITH cycle 2 — before its probe, so
-            # this cycle's and every later cycle's gates see it.
-            # Replayed deletes append duplicate tombstone rows: same
-            # max-generation, same decisions.
+            # c30's probe and admit halves minus the chunk leg and the
+            # quality filter, plus the takedown. The takedown arrives
+            # WITH cycle 2 — before its probe, so this cycle's and
+            # every later cycle's gates see it. Replayed deletes append
+            # duplicate tombstone rows: same max-generation, same
+            # decisions.
             if batch_id == 1:
-                D.delete_from_doc_band_index(
-                    spark, table, del_ids, batch_id=1
-                )
-            t_b = batch_df.select(
-                "doc_id", "lang", distinct_words("text").alias("ws")
-            ).where(F.size("ws") > 0)
-            if self_dedup:
-                # the within-batch keep-first step FIRST (q105's
-                # monotone rule, batch-sized, replay-safe) — exactly
-                # c32's arm, here composed with the takedown firing
-                # in the same cycle
-                t_b = D.batch_self_neardup_keep_first(t_b, threshold=0.9)
-            corpus_cur = corpus_t.select("doc_id", "ws")
-            own_prior = None
-            try:
-                admitted = spark.read.parquet(admitted_dir)
-                corpus_cur = corpus_cur.unionByName(
-                    admitted.select("doc_id", "ws")
-                )
-                own_prior = (
-                    admitted.where(F.col("b") == batch_id)
-                    .select(F.col("doc_id").alias("doc_old"))
-                    .distinct()
-                )
-            except AnalysisException:
-                pass  # nothing admitted yet (batch 0)
-            hits = D.incremental_doc_neardup(
-                spark, t_b.select("doc_id", "ws"), table, corpus_cur,
-                threshold=0.9,
+                S.delete_from_band_index(spark, table, del_ids, batch_id=1)
+            t_b, surv = _crawl_probe(
+                spark, batch_df, batch_id, table, corpus_t, admitted_dir,
+                rejected_dir, self_dedup,
             )
-            # replay safety: c30's batch-stamped own-admission
-            # exclusion (exact — a re-crawled doc_id still gates
-            # against its own earlier-batch admission on a first run)
-            if own_prior is not None:
-                hits = hits.join(own_prior, "doc_old", "left_anti")
-            (
-                hits.select(
-                    "doc_new", "doc_old", F.lit(batch_id).alias("batch")
-                )
-                .distinct()
-                .write.mode("append").parquet(rejected_dir)
+            _land(
+                surv.select("doc_id", "lang", F.size("ws").alias("n_words")),
+                batch_id, landed_dir,
             )
-            surv = t_b.join(
-                hits.select(F.col("doc_new").alias("doc_id")).distinct(),
-                "doc_id", "left_anti",
+            _crawl_admit(
+                spark, t_b, batch_id, landed_dir, table, admitted_dir
             )
-            (
-                surv.select("doc_id", "lang", F.size("ws").alias("n_words"))
-                .withColumn("batch", F.lit(str(batch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch")
-                .parquet(landed_dir)
-            )
-            landed_b = spark.read.parquet(landed_dir).where(
-                F.col("batch") == str(batch_id)
-            )
-            adm = t_b.join(
-                landed_b.select("doc_id"), "doc_id", "left_semi"
-            ).select("doc_id", "ws")
-            adm.withColumn("b", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(admitted_dir)
-            D.append_doc_band_index(spark, adm, table, batch_id=batch_id)
-            spark.catalog.refreshTable(table)
 
         with _small_shuffle(spark):
-            q = (
-                spark.readStream
-                .schema("doc_id long, lang string, text string")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(delta_dir)
-                .writeStream.foreachBatch(gate)
-                .option(
-                    "checkpointLocation", os.path.join(work, "ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
+            _drain_batches(
+                spark, _DOC_SCHEMA, delta_dir, gate,
+                os.path.join(work, "ckpt"), f"{tag}_index_takedown",
             )
-            _await_drained(q, f"{tag}_index_takedown")
 
         # teeth 1: no rejection anywhere cites a deleted doc_old
         rej = spark.read.parquet(rejected_dir)
@@ -2551,7 +2393,7 @@ def _c31_run(
     "the self-dedup arm WITHOUT a takedown — this row runs BOTH in "
     "the same cycle. Batch 1 carries exact SAME-batch copies of its "
     "own docs (parent + 3e6 — the pair the corpus probe structurally "
-    "cannot catch) while delete_from_doc_band_index fires at the top "
+    "cannot catch) while delete_from_band_index fires at the top "
     "of that very cycle (tombstoning half of batch 0's admissions), "
     "and batch 2 carries byte-identical copies of every batch-0 doc. "
     "All the individual teeth hold simultaneously: no rejection "
@@ -2697,31 +2539,21 @@ def c28_stream_rebuild_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .select(F.col("vec_new").alias("vec_id"))
                         .distinct()
                     )
-                    (
+                    _land(
                         batch_df.join(hits, "vec_id", "left_anti")
-                        .select("vec_id", "label", "embedding")
-                        .withColumn("cycle", F.lit(_cy))
-                        .write.mode("overwrite")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .partitionBy("cycle")
-                        .parquet(clean_dir)
+                        .select("vec_id", "label", "embedding"),
+                        _cy, clean_dir,
                     )
 
-                q = (
-                    spark.readStream.schema(delta.schema)
-                    .parquet(os.path.join(delta_dir, f"cycle_{cycle}"))
-                    .writeStream.foreachBatch(gate)
-                    .option(
-                        "checkpointLocation",
-                        os.path.join(work, f"ckpt_{cycle}"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+                _drain_batches(
+                    spark, delta.schema,
+                    os.path.join(delta_dir, f"cycle_{cycle}"), gate,
+                    os.path.join(work, f"ckpt_{cycle}"),
+                    "c28_stream_rebuild_cycle",
                 )
-                _await_drained(q, "c28_stream_rebuild_cycle")
 
                 survivors = spark.read.parquet(clean_dir).where(
-                    F.col("cycle") == cycle
+                    F.col("batch") == cycle
                 ).select("vec_id", "label", "embedding")
                 S.append_band_index(
                     spark, survivors, table,
@@ -2752,7 +2584,7 @@ def c28_stream_rebuild_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         out = (
             spark.read.parquet(clean_dir)
-            .select(F.col("cycle").cast("int").alias("cycle"), "vec_id")
+            .select(F.col("batch").cast("int").alias("cycle"), "vec_id")
             .orderBy("vec_id")
         )
         return spark.createDataFrame(out.collect(), out.schema)

@@ -98,24 +98,27 @@ def compact_path_log(spark: SparkSession, paths_dir: str) -> None:
     """Fold the append-only path log to its live rows (T27 analogue).
 
     Run OFFLINE like compact_state_log — the rewriter stream must not
-    be appending concurrently (the final step rewrites the directory).
-    Scheme-safe: both rewrites are Spark overwrites (no rename-as-
-    commit — works on object storage), and the stage cleanup routes
-    through the Hadoop FS API so remote deployments don't silently
-    accumulate .compact directories (round-13 verdict #1 class).
+    be appending concurrently. The folded log is committed with
+    fsutil.swap_dir, so a crash at any step leaves the old or the new
+    log for live_paths (an in-place overwrite would delete the log
+    before its write job ran, and a crash in between would make every
+    later directory cascade silently miss all earlier batches).
+    Rename-as-commit, so fenced to atomic-rename filesystems.
     """
     from hcdc_spark import fsutil
 
+    fsutil.recover_swap(paths_dir, spark)
     cur = live_paths(spark, paths_dir)
     if cur is None:
         return
     snap = cur.withColumn("last_tx", F.lit(-1)).withColumn(
         "batch_id", F.lit(-1)
     ).select(*_PATH_LOG_COLS)
-    tmp = paths_dir.rstrip("/") + ".compact"
-    snap.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(paths_dir)
-    fsutil.delete(tmp, spark)
+    fsutil.swap_dir(
+        paths_dir,
+        lambda stage: snap.write.mode("overwrite").parquet(stage),
+        "compact_path_log", spark,
+    )
 
 
 def run_rewriter(
@@ -142,8 +145,12 @@ def run_rewriter(
     (idempotent by batch_id) and re-appends identical path rows (the
     latest-wins read collapses them).
     """
+    from hcdc_spark import fsutil
     from hcdc_spark.streaming.source import read_event_stream
 
+    # finish an interrupted compact_path_log once per query start, so
+    # no batch appends a fresh log beside a stranded generation
+    fsutil.recover_swap(paths_dir, spark)
     events = read_event_stream(spark, source_dir, max_files_per_trigger)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:

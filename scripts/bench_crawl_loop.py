@@ -1,8 +1,10 @@
 """Per-cycle cost of the crawl loop WITH per-batch admission (c30's
 shape): each cycle probes the doc band index, quality-gates,
 chunk-rewrites vs the chunk index, lands, and ADMITS — growing both
-corpus artifacts before the next cycle. The scale claim is the one the
-c30 docstring makes: per-cycle cost is O(|batch|) — probe reads are
+corpus artifacts before the next cycle. The probe and admit halves are
+the production gate's own (streaming_queries._crawl_probe and
+_crawl_admit), so the bench times what c30/c31 run. The scale claim
+is the one the c30 docstring makes: per-cycle cost is O(|batch|) — probe reads are
 band-dir-pruned, the rewrite join is bucket-aligned on the corpus
 side, and the admissions are bucketed appends — so a FIXED-SIZE cycle
 must cost roughly the same against a 40x bigger corpus.
@@ -23,8 +25,8 @@ Usage: python scripts/bench_crawl_loop.py [passes=2] [sf_label=sf4]
 
 With ``takedown=1`` (round-14: the c33 composition's scale evidence)
 cycle 2 additionally DELETES half of cycle-1's admissions via
-delete_from_doc_band_index before its probe — the c31/c33 shape. The
-claim measured: the delete is O(|ids|) (batch-sized wall, flat
+similarity.delete_from_band_index before its probe — the c31/c33
+shape. The claim measured: the delete is O(|ids|) (batch-sized wall, flat
 across scale points) and the later cycles' gate walls stay in the
 same family with tombstones pending (the probe's anti-join is a
 broadcast against O(|ids|) rows). Off by default so the gate/admit
@@ -64,6 +66,12 @@ def main() -> None:
         word_count,
     )
     from hcdc_spark.operators import dedup as D
+    from hcdc_spark.operators.similarity import delete_from_band_index
+    from hcdc_spark.operators.streaming_queries import (
+        _crawl_admit,
+        _crawl_probe,
+        _land,
+    )
     from hcdc_spark.operators.text import (
         append_chunk_index,
         chunk_dedup_rewrite_vs,
@@ -108,6 +116,8 @@ def main() -> None:
                 b = time.time() - t0
                 build = b if build is None else min(build, b)
                 admitted_dir = os.path.join(work, "admitted")
+                rejected_dir = os.path.join(work, "rejected")
+                clean_dir = os.path.join(work, "clean")
                 cycles = []
                 for i, t_b in enumerate(cycles_src):
                     # round-13: the self_dedup arm (c32's composed
@@ -140,42 +150,35 @@ def main() -> None:
                         ]
                         n_del = len(del_ids)
                         t0 = time.time()
-                        D.delete_from_doc_band_index(
+                        delete_from_band_index(
                             spark, table, del_ids, batch_id=i
                         )
                         del_s = time.time() - t0
+                    # the production gate's halves (c30/c31): probe,
+                    # then this bench's quality + chunk-rewrite landing,
+                    # then admit
                     t0 = time.time()
-                    corpus_cur = corpus_t.select("doc_id", "ws")
-                    if os.path.exists(admitted_dir):
-                        corpus_cur = corpus_cur.unionByName(
-                            spark.read.parquet(admitted_dir)
-                        )
-                    hits = D.incremental_doc_neardup(
-                        spark, t_b.select("doc_id", "ws"), table,
-                        corpus_cur, threshold=0.9,
+                    t_p, surv = _crawl_probe(
+                        spark, t_b.select("doc_id", "lang", "text"), i,
+                        table, corpus_t, admitted_dir, rejected_dir,
+                        self_dedup=False,
                     )
-                    rejected = hits.select(
-                        F.col("doc_new").alias("doc_id")
-                    ).distinct()
-                    n_rej = rejected.count()
-                    surv = t_b.join(rejected, "doc_id", "left_anti").where(
+                    surv = surv.where(
                         (word_count("text") >= 5)
                         & (count_in_set("text", STOPWORDS) >= 1)
                     )
-                    landed = chunk_dedup_rewrite_vs(
-                        surv.select("doc_id", "lang", "text"),
-                        spark.table(chunk_table), carry=("lang",),
+                    _land(
+                        chunk_dedup_rewrite_vs(
+                            surv.select("doc_id", "lang", "text"),
+                            spark.table(chunk_table), carry=("lang",),
+                        ),
+                        i, clean_dir,
                     )
-                    clean = os.path.join(work, f"clean_{i}")
-                    landed.write.parquet(clean)
                     gate_s = time.time() - t0
                     t0 = time.time()
-                    landed_b = spark.read.parquet(clean)
-                    adm = t_b.join(
-                        landed_b.select("doc_id"), "doc_id", "left_semi"
-                    ).select("doc_id", "ws")
-                    D.append_doc_band_index(spark, adm, table, batch_id=i)
-                    adm.write.mode("append").parquet(admitted_dir)
+                    landed_b = _crawl_admit(
+                        spark, t_p, i, clean_dir, table, admitted_dir
+                    )
                     append_chunk_index(
                         spark,
                         landed_b.where(F.col("clean_text") != "").select(
@@ -184,8 +187,12 @@ def main() -> None:
                         chunk_table,
                     )
                     spark.catalog.refreshTable(chunk_table)
-                    spark.catalog.refreshTable(table)
                     admit_s = time.time() - t0
+                    n_rej = (
+                        spark.read.parquet(rejected_dir)
+                        .where(F.col("batch") == i)
+                        .select("doc_new").distinct().count()
+                    )
                     row = {
                         "gate": round(gate_s, 3),
                         "admit": round(admit_s, 3),

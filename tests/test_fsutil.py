@@ -161,7 +161,7 @@ def test_band_index_lifecycle_at_file_uri(spark, sf_dir, tmp_path):
 
         assert set(parent_ids) <= old_ids(), "planted pairs missing"
         deleted = parent_ids[:2]
-        dedup.delete_from_doc_band_index(spark, tbl, deleted, batch_id=1)
+        S.delete_from_band_index(spark, tbl, deleted, batch_id=1)
         # the tombstones landed UNDER the file: URI...
         assert fsutil.is_dir(fsutil.join(loc, "_tombstones"))
         # ...and the probe's discovery actually sees them

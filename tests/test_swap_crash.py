@@ -1,5 +1,6 @@
 """Crash-point gate for every fsutil.swap_dir commit: the IVF-PQ index
-rebuild and compaction, compact_state_log and gc_change_data.
+rebuild and compaction, compact_state_log, gc_change_data and
+compact_path_log.
 
 A crash is simulated by letting the first k fsutil.rename/delete calls
 of the operation through and raising a BaseException subclass at the
@@ -23,6 +24,11 @@ from hcdc_spark.cdc import maintenance as MNT
 from hcdc_spark.cdc.registry import DomainFilter
 from hcdc_spark.operators import similarity as S
 from hcdc_spark.streaming.reconciler import latest_state
+from hcdc_spark.streaming.rewrite import (
+    compact_path_log,
+    live_paths,
+    run_rewriter,
+)
 
 #: rename/delete calls of one swap_dir: delete stage, delete old,
 #: rename live → old, rename stage → live, delete old
@@ -54,7 +60,7 @@ def _rows(df) -> list[tuple]:
     return sorted(tuple(r) for r in df.collect())
 
 
-# ------------------------------------------------ the four swap cases
+# ------------------------------------------------ the five swap cases
 
 
 class _Ivfpq:
@@ -233,11 +239,56 @@ class ChangeDataGc:
         return {"gc": gc, "stream": stream}
 
 
+class PathLogCompact:
+    """A two-batch rewriter path log: one renamed, one deleted and one
+    untouched inode."""
+
+    def __init__(self, spark, sf_dir):
+        self.spark = spark
+
+    def setup(self, root: str) -> None:
+        self.spark.sql(
+            "SELECT * FROM VALUES "
+            "(1L, '/a', 'ns', 10L, 0L), (1L, '/a2', 'ns', 20L, 1L),"
+            "(2L, '/b', 'ns', 11L, 0L),"
+            "(2L, CAST(NULL AS STRING), 'ns', 21L, 1L),"
+            "(3L, '/c', 'ns', 12L, 0L) "
+            "AS t(inode_id, path, namespace, last_tx, batch_id)"
+        ).write.parquet(os.path.join(root, "paths"))
+
+    def op(self, root: str) -> None:
+        compact_path_log(self.spark, os.path.join(root, "paths"))
+
+    def entries(self):
+        spark = self.spark
+
+        def read(root):
+            return _rows(live_paths(spark, os.path.join(root, "paths")))
+
+        def compact(root):
+            compact_path_log(spark, os.path.join(root, "paths"))
+            return read(root)
+
+        def stream(root):
+            # a rewriter start over no new segments: its first batch
+            # must not seed cascades from a missing path log
+            os.makedirs(os.path.join(root, "src"), exist_ok=True)
+            q = run_rewriter(
+                spark, os.path.join(root, "src"), os.path.join(root, "rw"),
+                os.path.join(root, "ckpt"), os.path.join(root, "paths"),
+            )
+            assert q.awaitTermination(120)
+            return read(root)
+
+        return {"compact": compact, "stream": stream}
+
+
 CASES = {
     "ivfpq_rebuild": IvfpqRebuild,
     "ivfpq_compact": IvfpqCompact,
     "compact_state_log": StateLogCompact,
     "gc_change_data": ChangeDataGc,
+    "path_log": PathLogCompact,
 }
 
 

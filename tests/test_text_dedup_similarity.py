@@ -1339,7 +1339,7 @@ def test_band_index_keep_latest_ghost_removal(spark, sf_dir, tmp_path):
 def test_doc_band_index_keep_latest_ghost_removal(spark, sf_dir, tmp_path):
     """TEXT twin of the ghost-removal test: a re-crawled doc_id with a
     changed word set leaves stale MinHash band rows matching text that
-    no longer exists; compact_doc_band_index drops them."""
+    no longer exists; compact_band_index drops them."""
     from hcdc_spark.functions.text import distinct_words
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1380,7 +1380,7 @@ def test_doc_band_index_keep_latest_ghost_removal(spark, sf_dir, tmp_path):
         before = pairs(live_tbl)
         assert before >= want
         assert before - want, "no doc ghosts planted — test is vacuous"
-        dedup.compact_doc_band_index(spark, live_tbl)
+        similarity.compact_band_index(spark, live_tbl)
         assert pairs(live_tbl) == want, "doc ghosts survived compaction"
     finally:
         for tbl in (live_tbl, fresh_tbl):
@@ -1763,9 +1763,10 @@ def test_band_probe_and_append_self_heal_interrupted_swap(
 ):
     """Round-10 ADVICE: a crash between the band swap's DROP and
     RENAME used to block the PROBE/ADMIT path (raw table-not-found)
-    until a maintenance entry point ran — now _checked_band_geometry
-    finishes the swap, so incremental_neardup_pairs and
-    append_band_index self-heal too."""
+    until a maintenance entry point ran — now read_band_index_meta
+    finishes the swap, so incremental_neardup_pairs,
+    append_band_index, band_index_needs_rebuild and the doc index's
+    incremental_doc_neardup self-heal too."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     corpus = emb.where(F.col("vec_id") % 10 == 0)
     batch = emb.where(F.col("vec_id") % 10 == 7)
@@ -1795,9 +1796,45 @@ def test_band_probe_and_append_self_heal_interrupted_swap(
         assert not spark.catalog.tableExists(f"{tbl}__stage")
         meta = similarity.read_band_index_meta(spark, tbl)
         assert meta["n_rows"] == corpus.count() + batch.count()
+        # the rebuild policy check
+        spark.sql(f"ALTER TABLE {tbl} RENAME TO {tbl}__stage")
+        assert not similarity.band_index_needs_rebuild(spark, tbl)
+        assert spark.catalog.tableExists(tbl)
     finally:
         for t in (tbl, f"{tbl}__stage"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+    # the doc index's probe and policy check
+    from hcdc_spark.functions.text import distinct_words
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    t = docs.select("doc_id", distinct_words("text").alias("ws")).where(
+        F.size("ws") > 0
+    )
+    dcorpus = t.where(F.col("doc_id") % 10 != 3)
+    dbatch = t.where(F.col("doc_id") % 10 == 3)
+    dtbl = "hcdc_dbi_probeheal"
+    try:
+        dedup.write_doc_band_index(spark, dcorpus, dtbl,
+                                   str(tmp_path / "dbi"))
+
+        def doc_pairs():
+            return {
+                (r["doc_new"], r["doc_old"])
+                for r in dedup.incremental_doc_neardup(
+                    spark, dbatch, dtbl, dcorpus, threshold=0.0
+                ).collect()
+            }
+
+        want = doc_pairs()
+        spark.sql(f"ALTER TABLE {dtbl} RENAME TO {dtbl}__stage")
+        assert doc_pairs() == want and spark.catalog.tableExists(dtbl)
+        spark.sql(f"ALTER TABLE {dtbl} RENAME TO {dtbl}__stage")
+        assert not similarity.band_index_needs_rebuild(spark, dtbl)
+        assert spark.catalog.tableExists(dtbl)
+    finally:
+        for name in (dtbl, f"{dtbl}__stage"):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_ivfpq_serve_paths_self_heal_interrupted_rebuild(
@@ -2001,7 +2038,7 @@ def test_delete_from_doc_band_index_lifecycle(spark, sf_dir, tmp_path):
 
         deleted = parent_ids[: len(parent_ids) // 2]
         kept = parent_ids[len(parent_ids) // 2:]
-        dedup.delete_from_doc_band_index(spark, tbl, deleted, batch_id=1)
+        similarity.delete_from_band_index(spark, tbl, deleted, batch_id=1)
         after = hits()
         assert not any(o in deleted for _, o in after), (
             "tombstoned doc still produced candidates"
@@ -2040,7 +2077,7 @@ def test_delete_from_doc_band_index_lifecycle(spark, sf_dir, tmp_path):
             )
         # and a delete BELOW the re-admission generation must not kill
         # it (gen discipline: tombstone kills gen <= batch_id only)
-        dedup.delete_from_doc_band_index(
+        similarity.delete_from_band_index(
             spark, tbl, deleted[:1], batch_id=1
         )
         assert (deleted[0] + 1_000_000, deleted[0]) in hits(), (
@@ -2232,8 +2269,8 @@ def test_delete_empty_ids_is_a_true_noop(spark, sf_dir, tmp_path):
             spark, t.where(F.col("doc_id") % 10 != 3), tbl,
             str(tmp_path / "bi"),
         )
-        dedup.delete_from_doc_band_index(spark, tbl, [], batch_id=1)
-        dedup.delete_from_doc_band_index(
+        similarity.delete_from_band_index(spark, tbl, [], batch_id=1)
+        similarity.delete_from_band_index(
             spark, tbl, t.select("doc_id").where(F.lit(False)),
             batch_id=1,
         )
