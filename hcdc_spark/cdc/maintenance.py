@@ -6,26 +6,18 @@ cleanFileState, pipeline/CDCChangeDeltaProcessor.java:122-138;
 FileStateHelper.compact, FileStateHelper.java:250-274). Here state is
 an append-only parquet log, so maintenance is batch rewrites:
 
-- ``compact_state_log`` — fold the log to latest-per-inode (the same
-  window ``latest_state`` applies at read time), optionally dropping
-  Deleted rows and aged per-tx deltas. Run OFFLINE (no concurrent
-  streaming writer). On a real deployment this is a Delta/Iceberg
+- ``compact_state_log`` — fold the log to its latest view (the one
+  ``latest_state`` reads), optionally dropping Deleted rows and aged
+  per-tx deltas. On a real deployment this is a Delta/Iceberg
   rewrite/expire operation; the parquet-directory swap is the
   dependency-free equivalent.
 - ``gc_change_data`` — drop superseded pointer rows and delete staging
   batch directories no pointer references (the byte-level analogue of
   deleting replaced block files).
 
-Both rewrite their table through fsutil.swap_dir — the same commit the
-IVF-PQ index rebuild and compaction use — so readers see the old or the
-new log, never a missing one. recover_state_dirs finishes a swap a
-crash interrupted; it runs at the start of both jobs and of every
-query that writes or reads the state log (run_reconciler,
-run_cdc_pipeline, latest_state) — once per query start, never per
-micro-batch. Without it, a crash between the swap's two renames would
-leave ``file_state_log`` missing, the next stream would append a fresh
-log beside the stranded stage, and latest_state would silently lose
-every inode not touched since.
+Both are ``logs.compact`` calls: recovery of an interrupted swap, the
+latest view and the fsutil.swap_dir commit live there, shared with the
+rewriter's path log. Run them OFFLINE (no concurrent streaming writer).
 
 Storage-scheme-safe (round-13 verdict #1, applied to the T27 legs the
 index takedown inherited its discipline from): all existence/list/
@@ -38,21 +30,11 @@ instead of half-running a copy+delete "rename".
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hcdc_spark import fsutil
-
-
-def recover_state_dirs(
-    out_dir: str | None = None, staging_dir: str | None = None
-) -> None:
-    """Finish an interrupted compact_state_log / gc_change_data swap
-    (fsutil.recover_swap) under ``out_dir`` and ``staging_dir``."""
-    if out_dir is not None:
-        fsutil.recover_swap(fsutil.join(out_dir, "file_state_log"))
-    if staging_dir is not None:
-        fsutil.recover_swap(fsutil.join(staging_dir, "change_data"))
+from hcdc_spark.cdc import logs
 
 
 def compact_state_log(
@@ -67,44 +49,29 @@ def compact_state_log(
     (the reference's age-based compaction, keyed by tx instead of
     wall-clock so it is deterministic and replay-safe).
     """
-    log_path = fsutil.join(out_dir, "file_state_log")
-    fsutil.require_atomic_rename(log_path, "compact_state_log")
-    recover_state_dirs(out_dir=out_dir)
-    log = spark.read.parquet(log_path)
-    # The streaming reconciler stamps batch_id; batch outputs written by
-    # the CLI's bootstrap/reconcile commands don't carry it — compaction
-    # must work on both (review r4: compact after reconcile crashed).
-    if "batch_id" not in log.columns:
-        log = log.withColumn("batch_id", F.lit(0).cast("long"))
-    w = Window.partitionBy("inode_id").orderBy(
-        F.col("batch_id").desc(), F.col("last_tx_id").desc()
-    )
-    latest = (
-        log.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    if drop_deleted:
-        latest = latest.where(F.col("state") != "Deleted")
-    if delta_min_tx is not None:
-        latest = latest.withColumn(
-            "blocks",
-            F.transform(
+
+    def prune(latest: DataFrame) -> DataFrame:
+        if drop_deleted:
+            latest = latest.where(F.col("state") != "Deleted")
+        if delta_min_tx is not None:
+            latest = latest.withColumn(
                 "blocks",
-                lambda b: b.withField(
-                    "deltas",
-                    F.filter(
-                        b["deltas"], lambda d: d["tx_id"] > F.lit(delta_min_tx)
+                F.transform(
+                    "blocks",
+                    lambda b: b.withField(
+                        "deltas",
+                        F.filter(
+                            b["deltas"],
+                            lambda d: d["tx_id"] > F.lit(delta_min_tx),
+                        ),
                     ),
                 ),
-            ),
-        )
-    fsutil.swap_dir(
-        log_path,
-        lambda stage: latest.write.mode("overwrite").parquet(stage),
-        "compact_state_log",
-    )
-    return spark.read.parquet(log_path).count()
+            )
+        return latest
+
+    return logs.compact(
+        spark, logs.STATE, logs.STATE.at(out_dir), "compact_state_log", prune
+    ).count()
 
 
 def gc_change_data(spark: SparkSession, staging_dir: str) -> int:
@@ -112,27 +79,9 @@ def gc_change_data(spark: SparkSession, staging_dir: str) -> int:
     Returns the number of live pointer rows. The pointer table is
     swapped first and the batch dirs deleted after, so a crash in
     between leaves only unreferenced garbage for the next run."""
-    ptr_path = fsutil.join(staging_dir, "change_data")
-    fsutil.require_atomic_rename(ptr_path, "gc_change_data")
-    recover_state_dirs(staging_dir=staging_dir)
-    ptr = spark.read.parquet(ptr_path)
-    # batch_tag desc as tie-breaker: re-materializations of the same
-    # file carry the same last_tx_id, and the kept pointer must be the
-    # one read_entity serves (same ordering, materialize.read_entity).
-    w = Window.partitionBy("src_path").orderBy(
-        F.col("last_tx_id").desc(), F.col("batch_tag").desc()
+    kept = logs.compact(
+        spark, logs.POINTERS, logs.POINTERS.at(staging_dir), "gc_change_data"
     )
-    live = (
-        ptr.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    fsutil.swap_dir(
-        ptr_path,
-        lambda stage: live.write.mode("overwrite").parquet(stage),
-        "gc_change_data",
-    )
-    kept = spark.read.parquet(ptr_path)
     n = kept.count()
 
     live_batches = {

@@ -40,9 +40,10 @@ import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hcdc_spark.cdc import logs
 from hcdc_spark.functions.localframe import local_df
 
 #: file_type → Spark batch reader format (EFileType,
@@ -252,14 +253,15 @@ def materialize(
     pdf = local_df(spark, pointers, _POINTER_SCHEMA)
     if pointers:
         pdf.coalesce(1).write.mode("append").parquet(
-            os.path.join(staging_dir, "change_data")
+            logs.POINTERS.at(staging_dir)
         )
     return MaterializeResult(pointers=pdf, n_groups=len(groups))
 
 
 def change_data(spark: SparkSession, staging_dir: str) -> DataFrame:
-    """The pointer table (DFSChangeData analogue)."""
-    return spark.read.parquet(os.path.join(staging_dir, "change_data"))
+    """The pointer table (DFSChangeData analogue), after finishing an
+    interrupted gc_change_data swap."""
+    return logs.read(spark, logs.POINTERS.at(staging_dir))
 
 
 #: Replica block struct with cumulative byte offsets — the
@@ -307,20 +309,14 @@ def write_replica_state(
             F.lit(batch_tag).alias("batch_tag"),
         )
         .write.mode("append")
-        .parquet(os.path.join(staging_dir, "replica_state"))
+        .parquet(logs.REPLICAS.at(staging_dir))
     )
 
 
 def replica_state(spark: SparkSession, staging_dir: str) -> DataFrame:
     """Current replica ledger: latest batch row per inode."""
-    log = spark.read.parquet(os.path.join(staging_dir, "replica_state"))
-    w = Window.partitionBy("inode_id").orderBy(
-        F.col("last_tx_id").desc(), F.col("batch_tag").desc()
-    )
-    return (
-        log.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
+    return logs.latest(
+        logs.REPLICAS, logs.read(spark, logs.REPLICAS.at(staging_dir))
     )
 
 
@@ -355,25 +351,12 @@ def read_entity(
     *latest* materialization. The pointer table is file-count scale →
     the semi-join broadcasts; stale batches prune at the scan via the
     `_src_path` filter, never get re-read wholesale."""
-    from pyspark.sql import Window
-
     ptr = change_data(spark, staging_dir).where(
         (F.col("domain") == domain) & (F.col("entity") == entity)
     )
-    # batch_tag desc as tie-breaker: re-materializations of an unchanged
-    # file carry the same last_tx_id, so last_tx_id alone picks an
-    # arbitrary batch per query (review r4); replica_state and
-    # gc_change_data order the same way.
-    w = Window.partitionBy("src_path").orderBy(
-        F.col("last_tx_id").desc(), F.col("batch_tag").desc()
-    )
-    latest = (
-        ptr.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(
-            F.col("src_path").alias("_ptr_src"),
-            F.col("batch_tag").alias("_ptr_batch"),
-        )
+    latest = logs.latest(logs.POINTERS, ptr).select(
+        F.col("src_path").alias("_ptr_src"),
+        F.col("batch_tag").alias("_ptr_batch"),
     )
     data = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(
@@ -405,24 +388,21 @@ def register_schema(
 ) -> None:
     """Versioned per-entity schema registry (T19; versioning per entity
     instead of the reference's one .avsc per inode). Appends a new
-    version row only when the schema JSON actually changed."""
+    version row only when the schema JSON changed; only a registry with
+    no version yet is a first version. Per materialized group: a top-1
+    read (no shuffle), no recovery (nothing swaps this log)."""
     sj = schema.json()
-    os.makedirs(registry_dir, exist_ok=True)
-    path = os.path.join(registry_dir, "schemas")
-    prev_version = 0
-    try:
-        prev = (
-            spark.read.parquet(path)
-            .where((F.col("domain") == domain) & (F.col("entity") == entity))
-            .orderBy(F.col("version").desc())
-            .limit(1)
-            .collect()
-        )
-        if prev and prev[0]["schema_json"] == sj:
-            return
-        prev_version = prev[0]["version"] if prev else 0
-    except Exception:
-        pass  # first write
+    path = logs.SCHEMAS.at(registry_dir)
+    log = logs.read(spark, path, missing_ok=True, recover_first=False)
+    prev = [] if log is None else (
+        log.where((F.col("domain") == domain) & (F.col("entity") == entity))
+        .orderBy(*logs.SCHEMAS.winner_first())
+        .limit(1)
+        .collect()
+    )
+    if prev and prev[0]["schema_json"] == sj:
+        return
+    prev_version = prev[0]["version"] if prev else 0
     local_df(
         spark, [(domain, entity, prev_version + 1, sj)],
         "domain string, entity string, version int, schema_json string",
@@ -430,16 +410,8 @@ def register_schema(
 
 
 def latest_schemas(spark: SparkSession, registry_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    df = spark.read.parquet(os.path.join(registry_dir, "schemas"))
-    w = Window.partitionBy("domain", "entity").orderBy(
-        F.col("version").desc()
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
+    return logs.latest(
+        logs.SCHEMAS, logs.read(spark, logs.SCHEMAS.at(registry_dir))
     )
 
 

@@ -13,13 +13,23 @@ SourceChangeDeltaProcessor.java:81-82).
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: Reference global ignore regex (DomainManager.java:38).
 IGNORE_REGEX = r"(.*)\.(_*)COPYING(_*)|/tmp/(.*)|(.*)\.hive-staging(.*)"
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh work directory for entity-matched demo files: under the
+    gitignored ``.scratch/`` of the checkout this package runs from,
+    never under /tmp, whose paths IGNORE_REGEX excludes from matching."""
+    root = Path(__file__).resolve().parents[2] / ".scratch"
+    return str(root / f"{prefix}_{uuid.uuid4().hex[:8]}")
 
 
 @dataclass(frozen=True)

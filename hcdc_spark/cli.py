@@ -33,33 +33,39 @@ def _spark(app: str):
     return s
 
 
+def _write_base_log(state, out: str) -> None:
+    """Write a batch fold as the state log's base generation
+    (batch_id -1, the stream's shape): latest_state reads it, and any
+    stream batch (>= 0) appended later wins over it."""
+    from pyspark.sql import functions as F
+
+    from hcdc_spark.streaming.reconciler import write_state_log
+
+    state = state.withColumn("batch_id", F.lit(-1)).persist()
+    try:  # the fold feeds both the log and the dead-letter check
+        write_state_log(state, out, mode="overwrite")
+    finally:
+        state.unpersist()
+
+
 def cmd_bootstrap(args) -> int:
+    from hcdc_spark.cdc import logs
     from hcdc_spark.cdc.reconcile import reconcile_batch
     from hcdc_spark.cdc.snapshot import bootstrap_from_listing
 
     spark = _spark("hcdc-bootstrap")
     ev = bootstrap_from_listing(spark, args.source, base_tx=args.base_tx)
-    state = reconcile_batch(ev, expand_dirs=False).drop("errors")
-    state.write.mode("overwrite").parquet(
-        os.path.join(args.out, "file_state_log")
-    )
-    n = spark.read.parquet(os.path.join(args.out, "file_state_log")).count()
+    _write_base_log(reconcile_batch(ev, expand_dirs=False), args.out)
+    n = spark.read.parquet(logs.STATE.at(args.out)).count()
     print(f"bootstrapped {n} files from {args.source}")
     return 0
 
 
 def cmd_reconcile(args) -> int:
-    from hcdc_spark.cdc.reconcile import reconcile_batch, reconcile_errors
+    from hcdc_spark.cdc.reconcile import reconcile_batch
 
     spark = _spark("hcdc-reconcile")
-    events = spark.read.parquet(args.events)
-    state = reconcile_batch(events)
-    state.drop("errors").write.mode("overwrite").parquet(
-        os.path.join(args.out, "file_state_log")
-    )
-    errs = reconcile_errors(state)
-    if not errs.isEmpty():
-        errs.write.mode("overwrite").parquet(os.path.join(args.out, "errors"))
+    _write_base_log(reconcile_batch(spark.read.parquet(args.events)), args.out)
     print(f"reconciled -> {args.out}")
     return 0
 

@@ -44,7 +44,8 @@ REG = Registry()
 )
 def c04_stream_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hcdc_spark.cdc.generator import generate_events
-    from hcdc_spark.streaming.reconciler import latest_state, run_reconciler
+    from hcdc_spark.streaming.pipeline import run_cdc_pipeline
+    from hcdc_spark.streaming.reconciler import latest_state
     from hcdc_spark.streaming.source import write_event_segment
 
     events = generate_events(n_files=40, seed=7, with_dir_ops=False)
@@ -57,7 +58,7 @@ def c04_stream_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
             half = len(events) // 2
             write_event_segment(spark, events[:half], src, "edits_0000001")
             write_event_segment(spark, events[half:], src, "edits_0000002")
-            q = run_reconciler(
+            q = run_cdc_pipeline(
                 spark, src, out, ckpt, max_files_per_trigger=1,
                 available_now=True,
             )
@@ -106,7 +107,8 @@ def c29_continuous_ttl_reconcile(
 
     from hcdc_spark.cdc.generator import events_df, generate_events
     from hcdc_spark.cdc.reconcile import reconcile_batch
-    from hcdc_spark.streaming.reconciler import latest_state, run_reconciler
+    from hcdc_spark.streaming.pipeline import run_cdc_pipeline
+    from hcdc_spark.streaming.reconciler import latest_state
     from hcdc_spark.streaming.source import write_event_segment
 
     events = generate_events(n_files=40, seed=7, with_dir_ops=False)
@@ -160,7 +162,7 @@ def c29_continuous_ttl_reconcile(
                     "delete so eviction is observable mid-run"
                 )
             write_event_segment(spark, events[:half], src, "edits_0000001")
-            q = run_reconciler(
+            q = run_cdc_pipeline(
                 spark, src, out, ckpt, max_files_per_trigger=1,
                 available_now=False, deleted_ttl_ms=1500,
             )
@@ -383,17 +385,13 @@ def c10_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("cdc", "streaming", "materialize"),
 )
 def c08_cdc_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from hcdc_spark.cdc.materialize import read_entity
     from hcdc_spark.cdc.model import empty_event
-    from hcdc_spark.cdc.registry import DomainFilter
+    from hcdc_spark.cdc.registry import DomainFilter, scratch_dir
     from hcdc_spark.streaming.pipeline import run_cdc_pipeline
     from hcdc_spark.streaming.source import write_event_segment
 
-    # NOT under /tmp — the reference-faithful global ignore regex
-    # excludes /tmp paths from entity matching.
-    work = f"/root/repo/.scratch/c08_{uuid.uuid4().hex[:8]}"
+    work = scratch_dir("c08")
     try:
         with _small_shuffle(spark):
             df = spark.range(50).select(

@@ -14,7 +14,9 @@ the same dataflow is ONE Structured Streaming query:
                 parquet + change_data pointers (T14-T17)
 
 Crash recovery is the checkpoint; replay idempotence is the T4 guard +
-latest-pointer staging reads. Per-batch work is bounded by
+latest-wins reads of every appended log (hcdc_spark.cdc.logs). With
+``rules=None`` and no staging the same query is the bare streaming
+reconciler. Per-batch work is bounded by
 maxFilesPerTrigger exactly like the reference's batched Kafka pulls.
 """
 
@@ -32,7 +34,7 @@ def run_cdc_pipeline(
     source_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    rules: list[DomainFilter],
+    rules: list[DomainFilter] | None = None,
     staging_dir: str | None = None,
     registry_dir: str | None = None,
     target_format: str = "parquet",
@@ -42,11 +44,25 @@ def run_cdc_pipeline(
 ):
     """Wire the whole pipeline; returns the StreamingQuery.
 
-    ``staging_dir=None`` runs state-tracking only (the reference's
-    SourceChangeDeltaProcessor without FileDeltaProcessor). Maintenance
-    swaps a crash interrupted are finished before the query starts.
+    ``rules=None`` skips the registry match (events keep their own
+    domain/entity); ``staging_dir=None`` runs state-tracking only (the
+    reference's SourceChangeDeltaProcessor without FileDeltaProcessor).
+    Both unset is the bare streaming reconciler. Compaction swaps a
+    crash interrupted are finished before the query starts, once, for
+    the logs it appends to.
+
+    ``deleted_ttl_ms`` evicts Deleted tombstones from the state store
+    (T27's streaming leg; scripts/bench_ttl_reconciler.py, round 13,
+    100k inodes / 75% churn-deleted: the store stays at the LIVE set,
+    peak 91,069 entries -> 8,959, for ~25% micro-batch throughput).
+    Opt IN for long-running continuous queries; it is refused with
+    ``available_now=True``, because a drain under ProcessingTimeTimeout
+    never self-terminates in this Spark (reconciler.
+    DEFAULT_DELETED_TTL_MS). Drains keep the NoTimeout fold and let
+    compact_state_log (c24) reclaim Deleted rows offline.
     """
-    from hcdc_spark.cdc.maintenance import recover_state_dirs
+    from hcdc_spark import fsutil
+    from hcdc_spark.cdc import logs
     from hcdc_spark.cdc.materialize import materialize
     from hcdc_spark.streaming.reconciler import (
         reconcile_stream,
@@ -54,33 +70,31 @@ def run_cdc_pipeline(
     )
     from hcdc_spark.streaming.source import read_event_stream
 
-    recover_state_dirs(out_dir=out_dir, staging_dir=staging_dir)
+    if deleted_ttl_ms is not None and available_now:
+        raise ValueError(
+            "deleted_ttl_ms needs a continuous query (available_now="
+            "False): an availableNow drain under ProcessingTimeTimeout "
+            "never terminates"
+        )
+    fsutil.recover_swap(logs.STATE.at(out_dir), spark)
+    if staging_dir is not None:
+        fsutil.recover_swap(logs.POINTERS.at(staging_dir), spark)
     events = read_event_stream(spark, source_dir, max_files_per_trigger)
     # registry rules compile into the plan (T7); refreshing rules means
     # restarting the query with new rules — same cadence as the
     # reference's per-batch refresh, but checkpoint-safe.
-    events = apply_registry(events, rules)
-    # None = NoTimeout fold (drain mode; compact_state_log is the GC
-    # leg). Continuous deployments pass a TTL and get T27's streaming
-    # eviction — see reconciler.DEFAULT_DELETED_TTL_MS for the
-    # measured availableNow-spin caveat behind the opt-in.
+    if rules is not None:
+        events = apply_registry(events, rules)
     updates = reconcile_stream(events, deleted_ttl_ms=deleted_ttl_ms)
 
     def _materialize_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if staging_dir is not None:
-            materialize(
-                spark,
-                batch_df,
-                staging_dir,
-                batch_tag=f"b{batch_id:010d}",
-                target_format=target_format,
-                registry_dir=registry_dir,
-            )
+        materialize(
+            spark, batch_df, staging_dir, batch_tag=f"b{batch_id:010d}",
+            target_format=target_format, registry_dir=registry_dir,
+        )
 
     sink = state_log_sink(
-        os.path.join(out_dir, "file_state_log"),
-        os.path.join(out_dir, "errors"),
-        extra=_materialize_batch,
+        out_dir, extra=None if staging_dir is None else _materialize_batch
     )
     writer = (
         updates.writeStream.outputMode("update")
@@ -113,10 +127,8 @@ def run_cdc_pipeline_cascading(
     deployment start both queries concurrently — the fold tails the
     segment directory the rewriter appends to.
     """
-    from hcdc_spark.cdc.maintenance import recover_state_dirs
+    from hcdc_spark.cdc import logs
     from hcdc_spark.streaming.rewrite import run_rewriter
-
-    recover_state_dirs(out_dir=out_dir, staging_dir=staging_dir)
 
     rewritten = os.path.join(out_dir, "rewritten")
     rw = run_rewriter(
@@ -124,7 +136,7 @@ def run_cdc_pipeline_cascading(
         source_dir,
         rewritten,
         os.path.join(checkpoint_dir, "rewrite"),
-        os.path.join(out_dir, "paths_log"),
+        logs.PATHS.at(out_dir),
         max_files_per_trigger=max_files_per_trigger,
         available_now=True,
     )

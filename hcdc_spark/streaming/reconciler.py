@@ -19,8 +19,17 @@ need a live-path-table scan and therefore run in a separate **rewrite
 stage** upstream of this query (``hcdc_spark.streaming.rewrite``,
 chained via segment files — use ``run_cdc_pipeline_cascading``),
 mirroring the reference's split between per-message handlers and ZK
-prefix scans (SourceTransactionProcessor.java:187-296). This query fed
-directly (``run_reconciler``) assumes a dir-op-free log.
+prefix scans (SourceTransactionProcessor.java:187-296). The fold fed
+directly (``run_cdc_pipeline``) assumes a dir-op-free log; with
+``rules=None`` it is the bare reconciler: no registry match, no
+staging, events keep their own domain/entity.
+
+The sink appends each batch's updated states to a **state log**
+(``file_state_log/``) plus a dead-letter table (``errors/``, T25). The
+*current* snapshot is ``latest_state`` over the log — an append-only
+pattern that scales (no read-modify-write of a 100 TB table per
+micro-batch) and keeps history queryable, the same event-sourcing
+shape the reference gets from ZK versioned nodes (hcdc_spark.cdc.logs).
 """
 
 from __future__ import annotations
@@ -35,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from hcdc_spark.cdc import logs
 from hcdc_spark.cdc.model import ERROR_SCHEMA, FILE_STATE_SCHEMA
 from hcdc_spark.cdc.reconcile import _clean
 from hcdc_spark.cdc.statemachine import fold_events
@@ -190,24 +200,31 @@ def reconcile_stream(
     )
 
 
-def state_log_sink(state_log: str, err_path: str, extra=None):
+def write_state_log(state: DataFrame, out_dir: str, mode: str = "append"):
+    """Write one generation of the state log and its dead-letter rows
+    (T25) under ``out_dir``. ``state`` is the fold output (with its
+    ``errors`` column) already stamped with ``batch_id``; the stream
+    appends one generation per micro-batch, the CLI writes the base
+    generation (batch_id -1) that every stream batch wins over."""
+    state.drop("errors").write.mode(mode).parquet(logs.STATE.at(out_dir))
+    errs = state.select(
+        "batch_id", F.explode("errors").alias("e")
+    ).select("batch_id", "e.*")
+    if not errs.isEmpty():
+        errs.write.mode(mode).parquet(os.path.join(out_dir, "errors"))
+
+
+def state_log_sink(out_dir: str, extra=None):
     """foreachBatch sink: append the batch's updated states to the
     state log + exploded errors to the dead-letter table (T25), then
     run ``extra(batch_df, batch_id)`` for per-batch follow-on work
-    (the pipeline's materialize step). One implementation, two callers
-    — run_reconciler and run_cdc_pipeline previously duplicated this
-    line for line and had started to drift (review r4)."""
+    (the pipeline's materialize step)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.withColumn("batch_id", F.lit(batch_id))
         batch_df.persist()
         try:
-            batch_df.drop("errors").write.mode("append").parquet(state_log)
-            errs = batch_df.select(
-                "batch_id", F.explode("errors").alias("e")
-            ).select("batch_id", "e.*")
-            if not errs.isEmpty():
-                errs.write.mode("append").parquet(err_path)
+            write_state_log(batch_df, out_dir)
             if extra is not None:
                 extra(batch_df, batch_id)
         finally:
@@ -216,77 +233,8 @@ def state_log_sink(state_log: str, err_path: str, extra=None):
     return sink
 
 
-def run_reconciler(
-    spark: SparkSession,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    deleted_ttl_ms: int | None = None,
-):
-    """Wire source → stateful fold → state-log/error sinks.
-
-    The sink appends each batch's updated states to a **state log**
-    (``file_state_log/``) plus a dead-letter table (``errors/``, T25).
-    The *current* snapshot is ``latest_state`` over the log — an
-    append-only pattern that scales (no read-modify-write of a 100 TB
-    table per micro-batch) and keeps history queryable, the same
-    event-sourcing shape the reference gets from ZK versioned nodes.
-
-    ``deleted_ttl_ms`` — the price of bounded state, measured
-    (scripts/bench_ttl_reconciler.py, round 13, 100k inodes / 75%
-    churn-deleted): eviction keeps the store at the LIVE set (peak
-    91,069 entries -> 8,959 == live at drain end, evictions observed
-    mid-run), while the un-TTL'd fold retains every Deleted key
-    forever; the cost is ~25% micro-batch throughput vs the NoTimeout
-    drain (ProcessingTimeTimeout bookkeeping + re-serialization of
-    expiring groups). Opt IN for long-running continuous reconcilers
-    whose delete churn would otherwise grow state without bound;
-    and NEVER pass one with ``available_now=True``: a drain under
-    ProcessingTimeTimeout does not self-terminate in this Spark (it
-    keeps committing no-data batches indefinitely — the measured
-    caveat at DEFAULT_DELETED_TTL_MS); drains keep the NoTimeout fold
-    and let compact_state_log (c24) reclaim Deleted rows offline.
-
-    A compact_state_log swap a crash interrupted is finished first
-    (maintenance.recover_state_dirs), so the sink never appends a fresh
-    log beside a stranded compacted one."""
-    from hcdc_spark.cdc.maintenance import recover_state_dirs
-    from hcdc_spark.streaming.source import read_event_stream
-
-    recover_state_dirs(out_dir=out_dir)
-    events = read_event_stream(spark, source_dir, max_files_per_trigger)
-    updates = reconcile_stream(events, deleted_ttl_ms=deleted_ttl_ms)
-
-    sink = state_log_sink(
-        os.path.join(out_dir, "file_state_log"),
-        os.path.join(out_dir, "errors"),
-    )
-    writer = (
-        updates.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def latest_state(spark: SparkSession, out_dir: str) -> DataFrame:
     """Current file_state: last update per inode from the state log
     (after finishing an interrupted compact_state_log swap)."""
-    from pyspark.sql import Window
-
-    from hcdc_spark.cdc.maintenance import recover_state_dirs
-
-    recover_state_dirs(out_dir=out_dir)
-    log = spark.read.parquet(os.path.join(out_dir, "file_state_log"))
-    w = Window.partitionBy("inode_id").orderBy(
-        F.col("batch_id").desc(), F.col("last_tx_id").desc()
-    )
-    return (
-        log.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "batch_id")
-    )
+    log = logs.read(spark, logs.STATE.at(out_dir))
+    return logs.latest(logs.STATE, log).drop("batch_id")

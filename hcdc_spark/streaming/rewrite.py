@@ -12,10 +12,11 @@ fold through segment files — the same agent-chained-by-topic topology
 the reference runs, with Spark checkpoints replacing ZK offsets.
 
 The rewriter keeps its own compact **path log** (inode → current path,
-append-only parquet, latest-wins like the reconciler's state log): the
-prior-batch live paths seed ``expand_directory_events`` so cascades
-reach files created in earlier micro-batches. The log is
-O(live files), not O(events); `compact_path_log` folds it down.
+an append-only latest-wins log like the reconciler's state log,
+hcdc_spark.cdc.logs.PATHS): the prior-batch live paths seed
+``expand_directory_events`` so cascades reach files created in earlier
+micro-batches. The log is O(live files), not O(events);
+``compact_path_log`` folds it down through ``logs.compact``.
 """
 
 from __future__ import annotations
@@ -25,10 +26,22 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hcdc_spark import fsutil
+from hcdc_spark.cdc import logs
 from hcdc_spark.cdc.reconcile import expand_directory_events
 
 #: path-log schema: one row per (inode, update); latest wins
 _PATH_LOG_COLS = ("inode_id", "path", "namespace", "last_tx", "batch_id")
+
+
+def _live(log: DataFrame | None) -> DataFrame | None:
+    if log is None:
+        return None
+    return (
+        logs.latest(logs.PATHS, log)
+        .where(F.col("path").isNotNull())
+        .select(*_PATH_LOG_COLS[:3])
+    )
 
 
 def live_paths(spark: SparkSession, paths_dir: str) -> DataFrame | None:
@@ -38,22 +51,7 @@ def live_paths(spark: SparkSession, paths_dir: str) -> DataFrame | None:
     failure (corrupt footer, permissions, transient FS outage) must
     surface, because silently expanding with prior_paths=None drops
     directory-cascade coverage of every earlier micro-batch."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        log = spark.read.parquet(paths_dir)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc):
-            return None
-        raise
-    w = Window.partitionBy("inode_id").orderBy(
-        F.col("batch_id").desc(), F.col("last_tx").desc()
-    )
-    return (
-        log.withColumn("_rn", F.row_number().over(w))
-        .where((F.col("_rn") == 1) & F.col("path").isNotNull())
-        .select("inode_id", "path", "namespace")
-    )
+    return _live(logs.read(spark, paths_dir, missing_ok=True))
 
 
 def _path_updates(expanded: DataFrame, batch_id: int) -> DataFrame:
@@ -95,29 +93,26 @@ def _path_updates(expanded: DataFrame, batch_id: int) -> DataFrame:
 
 
 def compact_path_log(spark: SparkSession, paths_dir: str) -> None:
-    """Fold the append-only path log to its live rows (T27 analogue).
+    """Fold the append-only path log to its live rows (T27 analogue):
+    the latest view minus deleted inodes, reset to the base generation
+    (last_tx and batch_id -1) so every later batch wins over it.
 
     Run OFFLINE like compact_state_log — the rewriter stream must not
-    be appending concurrently. The folded log is committed with
+    be appending concurrently. logs.compact commits the folded log with
     fsutil.swap_dir, so a crash at any step leaves the old or the new
     log for live_paths (an in-place overwrite would delete the log
     before its write job ran, and a crash in between would make every
     later directory cascade silently miss all earlier batches).
-    Rename-as-commit, so fenced to atomic-rename filesystems.
     """
-    from hcdc_spark import fsutil
-
     fsutil.recover_swap(paths_dir, spark)
-    cur = live_paths(spark, paths_dir)
-    if cur is None:
+    if not fsutil.is_dir(paths_dir, spark):
         return
-    snap = cur.withColumn("last_tx", F.lit(-1)).withColumn(
-        "batch_id", F.lit(-1)
-    ).select(*_PATH_LOG_COLS)
-    fsutil.swap_dir(
-        paths_dir,
-        lambda stage: snap.write.mode("overwrite").parquet(stage),
-        "compact_path_log", spark,
+    logs.compact(
+        spark, logs.PATHS, paths_dir, "compact_path_log",
+        lambda latest: latest.where(F.col("path").isNotNull())
+        .withColumn("last_tx", F.lit(-1))
+        .withColumn("batch_id", F.lit(-1))
+        .select(*_PATH_LOG_COLS),
     )
 
 
@@ -145,7 +140,6 @@ def run_rewriter(
     (idempotent by batch_id) and re-appends identical path rows (the
     latest-wins read collapses them).
     """
-    from hcdc_spark import fsutil
     from hcdc_spark.streaming.source import read_event_stream
 
     # finish an interrupted compact_path_log once per query start, so
@@ -154,7 +148,9 @@ def run_rewriter(
     events = read_event_stream(spark, source_dir, max_files_per_trigger)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        prior = live_paths(spark, paths_dir)
+        prior = _live(logs.read(
+            spark, paths_dir, missing_ok=True, recover_first=False
+        ))
         expanded = expand_directory_events(batch_df, prior_paths=prior)
         expanded.persist()
         try:

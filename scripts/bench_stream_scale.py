@@ -3,9 +3,9 @@ the ``applyInPandasWithState`` fold at growing inode counts (the
 streaming analogue of scripts/bench_cdc_scale.py, which covers the
 batch ingest fold).
 
-Synthesizes generator lifecycles (dir-op-free, the contract
-``run_reconciler`` documents), writes them as SEGS segment files, and
-drains an availableNow stream with ``maxFilesPerTrigger=1`` — i.e. SEGS
+Synthesizes generator lifecycles (dir-op-free, the contract the bare
+fold of ``run_cdc_pipeline`` documents), writes them as SEGS segment
+files, and drains an availableNow stream with ``maxFilesPerTrigger=1`` — i.e. SEGS
 real micro-batches through the state store — timing the full
 source → stateful fold → state-log/error sink pipeline.
 
@@ -45,7 +45,7 @@ SEGS = 8  # micro-batches per drain (maxFilesPerTrigger=1)
 
 def _run_once(spark, events, work: str) -> dict[str, float]:
     """Write SEGS segments, drain the reconciler, return timings."""
-    from hcdc_spark.streaming.reconciler import run_reconciler
+    from hcdc_spark.streaming.pipeline import run_cdc_pipeline
     from hcdc_spark.streaming.source import write_event_segment
 
     src = os.path.join(work, "segments")
@@ -64,7 +64,7 @@ def _run_once(spark, events, work: str) -> dict[str, float]:
         )
         write_event_segment(spark, chunk, src, f"edits_{i:07d}")
     t0 = time.perf_counter()
-    q = run_reconciler(
+    q = run_cdc_pipeline(
         spark, src, out, ckpt, max_files_per_trigger=1, available_now=True
     )
     q.awaitTermination(1200)

@@ -88,12 +88,12 @@ def _write_segments(spark, events, src: str) -> None:
 def _drain_no_ttl(spark, events, work: str) -> float:
     """Baseline: un-TTL'd availableNow drain (bench_stream_scale's
     arm), returns wall seconds."""
-    from hcdc_spark.streaming.reconciler import run_reconciler
+    from hcdc_spark.streaming.pipeline import run_cdc_pipeline
 
     src = os.path.join(work, "segments")
     _write_segments(spark, events, src)
     t0 = time.perf_counter()
-    q = run_reconciler(
+    q = run_cdc_pipeline(
         spark, src, os.path.join(work, "out"), os.path.join(work, "ckpt"),
         max_files_per_trigger=1, available_now=True,
     )
@@ -109,7 +109,7 @@ def _run_ttl_continuous(
     """The production shape: default-trigger query over the same
     pre-written segments, TTL on; poll the state store until it
     converges to the live-inode count, recording the series."""
-    from hcdc_spark.streaming.reconciler import run_reconciler
+    from hcdc_spark.streaming.pipeline import run_cdc_pipeline
 
     src = os.path.join(work, "segments")
     ckpt = os.path.join(work, "ckpt")
@@ -123,7 +123,7 @@ def _run_ttl_continuous(
 
     series: list[list[float]] = []
     t0 = time.perf_counter()
-    q = run_reconciler(
+    q = run_cdc_pipeline(
         spark, src, os.path.join(work, "out"), ckpt,
         max_files_per_trigger=1, available_now=False,
         deleted_ttl_ms=ttl_ms,

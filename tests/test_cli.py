@@ -6,6 +6,7 @@ import os
 
 from hcdc_spark import cli
 from hcdc_spark.cdc.generator import events_df, generate_events
+from hcdc_spark.streaming.reconciler import latest_state
 
 
 def test_cli_bootstrap(spark, sf_dir, tmp_path, capsys):
@@ -18,6 +19,8 @@ def test_cli_bootstrap(spark, sf_dir, tmp_path, capsys):
     assert set(r["state"] for r in st.select("state").distinct().collect()) == {
         "Finalized"
     }
+    # the base generation reads like a stream-written log
+    assert latest_state(spark, out).count() == st.count()
 
 
 def test_cli_reconcile_and_compact(spark, tmp_path, capsys):
@@ -33,30 +36,30 @@ def test_cli_reconcile_and_compact(spark, tmp_path, capsys):
     assert n_before >= 20
     assert os.path.isdir(os.path.join(out, "errors"))  # anomalies landed
 
-    # compact needs a batch_id column (streaming log shape); add it
-    # (materialize via a staging dir — can't overwrite a lazy source)
-    import shutil
+    # the CLI writes the stream's log shape: latest_state reads it and
+    # compact folds it as it is
+    def current():
+        return {
+            tuple(r) for r in latest_state(spark, out)
+            .select("inode_id", "state", "last_tx_id", "path").collect()
+        }
 
-    log = os.path.join(out, "file_state_log")
-    from pyspark.sql import functions as F
-
-    aug = spark.read.parquet(log).withColumn("batch_id", F.lit(0).cast("long"))
-    aug.write.parquet(log + ".aug")
-    shutil.rmtree(log)
-    os.rename(log + ".aug", log)
+    cur = current()
+    assert len(cur) == n_before
     assert cli.main(["compact", "--out", out]) == 0
     after = spark.read.parquet(os.path.join(out, "file_state_log"))
     assert after.where(after["state"] == "Deleted").count() == 0
+    assert current() == {r for r in cur if r[1] != "Deleted"}
 
 
 def test_cli_pipeline(spark, tmp_path, capsys):
     import shutil
-    import uuid
 
     from hcdc_spark.cdc.model import empty_event
+    from hcdc_spark.cdc.registry import scratch_dir
     from hcdc_spark.streaming.source import write_event_segment
 
-    root = f"/root/repo/.scratch/cli_{uuid.uuid4().hex[:8]}"
+    root = scratch_dir("cli")
     try:
         df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
         src_file = f"{root}/data/sales/t1.parquet"

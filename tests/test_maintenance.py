@@ -10,7 +10,8 @@ from hcdc_spark.cdc import maintenance as MNT
 from hcdc_spark.cdc.generator import generate_events
 from hcdc_spark.cdc.registry import DomainFilter
 from hcdc_spark.streaming.kafka_sink import kafka_envelope
-from hcdc_spark.streaming.reconciler import latest_state, run_reconciler
+from hcdc_spark.streaming.pipeline import run_cdc_pipeline
+from hcdc_spark.streaming.reconciler import latest_state
 from hcdc_spark.streaming.source import write_event_segment
 
 
@@ -20,7 +21,7 @@ def test_compact_state_log(spark, tmp_path):
     half = len(events) // 2
     write_event_segment(spark, events[:half], src, "e1")
     write_event_segment(spark, events[half:], src, "e2")
-    q = run_reconciler(spark, src, out, ckpt, max_files_per_trigger=1,
+    q = run_cdc_pipeline(spark, src, out, ckpt, max_files_per_trigger=1,
                        available_now=True)
     q.awaitTermination(120)
 
@@ -48,7 +49,7 @@ def test_compact_drops_aged_deltas(spark, tmp_path):
     events = generate_events(n_files=10, seed=5, with_dir_ops=False)
     src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
     write_event_segment(spark, events, src, "e1")
-    run_reconciler(spark, src, out, ckpt, available_now=True).awaitTermination(120)
+    run_cdc_pipeline(spark, src, out, ckpt, available_now=True).awaitTermination(120)
 
     mid = max(e["tx_id"] for e in events) // 2
     MNT.compact_state_log(spark, out, delta_min_tx=mid)

@@ -145,6 +145,39 @@ def test_schema_registry_versioning(spark, tmp_path):
     assert M.entity_schema(spark, registry, "d", "e") == s2
 
 
+def test_schema_registry_unreadable_raises(spark, tmp_path):
+    """Only a missing registry is a first version: a corrupt one must
+    raise, not silently start the entity over at version 1."""
+    from pyspark.sql import types as T
+
+    registry = tmp_path / "registry"
+    (registry / "schemas").mkdir(parents=True)
+    junk = registry / "schemas" / "part-00000.parquet"
+    junk.write_bytes(b"not a parquet file")
+    s1 = T.StructType([T.StructField("a", T.IntegerType())])
+    with pytest.raises(Exception, match="(?i)parquet"):
+        M.register_schema(spark, str(registry), "d", "e", s1)
+    assert os.listdir(registry / "schemas") == [junk.name]
+
+
+def test_schema_registry_uncommitted_first_append_is_first_version(
+    spark, tmp_path
+):
+    """A first append that died after its committer made ``_temporary``
+    left no data file: the registry holds no version, so the replayed
+    batch registers version 1 instead of failing schema inference."""
+    from pyspark.sql import types as T
+
+    registry = tmp_path / "registry"
+    (registry / "schemas" / "_temporary" / "0").mkdir(parents=True)
+    s1 = T.StructType([T.StructField("a", T.IntegerType())])
+    M.register_schema(spark, str(registry), "d", "e", s1)
+    rows = spark.read.parquet(str(registry / "schemas")).collect()
+    assert [(r["domain"], r["entity"], r["version"]) for r in rows] == [
+        ("d", "e", 1)
+    ]
+
+
 def test_schema_drift_across_files(spark, tmp_path):
     """Two files of one entity with drifted schemas: the current view
     merges them (old rows NULL in the new column) and the registry

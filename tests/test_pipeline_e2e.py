@@ -53,9 +53,10 @@ def fake_hdfs(spark, tmp_path):
     lives in a gitignored scratch dir instead.
     """
     import shutil
-    import uuid
 
-    root = f"/root/repo/.scratch/hdfs_{uuid.uuid4().hex[:8]}"
+    from hcdc_spark.cdc.registry import scratch_dir
+
+    root = scratch_dir("hdfs")
     cust = spark.createDataFrame(
         [(1, "alice"), (2, "bob")], "id int, name string"
     )

@@ -13,7 +13,8 @@ from pyspark.sql import functions as F
 
 from hcdc_spark.cdc.generator import events_df, generate_events
 from hcdc_spark.cdc.reconcile import reconcile_batch
-from hcdc_spark.streaming.reconciler import latest_state, run_reconciler
+from hcdc_spark.streaming.pipeline import run_cdc_pipeline
+from hcdc_spark.streaming.reconciler import latest_state
 from hcdc_spark.streaming.source import write_event_segment
 from hcdc_spark.streaming import windows
 
@@ -54,7 +55,7 @@ def test_stream_matches_batch_across_restart(spark, tmp_path, event_log):
         spark, event_log[third : 2 * third], src, "edits_0000002"
     )
 
-    q = run_reconciler(
+    q = run_cdc_pipeline(
         spark, src, out, ckpt, max_files_per_trigger=1, available_now=True
     )
     q.awaitTermination(120)
@@ -65,7 +66,7 @@ def test_stream_matches_batch_across_restart(spark, tmp_path, event_log):
     )
     # replay of segment 2 events inside 3 would be deduped by T4 anyway;
     # here segment 3 is new data after a cold restart.
-    q2 = run_reconciler(
+    q2 = run_cdc_pipeline(
         spark, src, out, ckpt, max_files_per_trigger=1, available_now=True
     )
     q2.awaitTermination(120)
@@ -86,14 +87,14 @@ def test_stream_duplicate_replay_is_noop(spark, tmp_path, event_log):
     ckpt = str(tmp_path / "ckpt")
 
     write_event_segment(spark, event_log, src, "edits_0000001")
-    q = run_reconciler(spark, src, out, ckpt, available_now=True)
+    q = run_cdc_pipeline(spark, src, out, ckpt, available_now=True)
     q.awaitTermination(120)
     before = _comparable(latest_state(spark, out))
 
     # same events, new file name → source treats it as new input
     write_event_segment(spark, event_log[: len(event_log) // 2], src,
                         "edits_0000001_replay")
-    q2 = run_reconciler(spark, src, out, ckpt, available_now=True)
+    q2 = run_cdc_pipeline(spark, src, out, ckpt, available_now=True)
     q2.awaitTermination(120)
     after = _comparable(latest_state(spark, out))
     assert before == after
@@ -251,7 +252,7 @@ def test_stream_reconcile_under_rocksdb_state_store(spark, tmp_path, event_log):
     write_event_segment(spark, event_log, src, "edits_0000001")
     spark.conf.set(key, rocks)
     try:
-        q = run_reconciler(spark, src, out, ckpt, available_now=True)
+        q = run_cdc_pipeline(spark, src, out, ckpt, available_now=True)
         q.awaitTermination(120)
     finally:
         if prev is None:
@@ -432,7 +433,7 @@ def test_stream_kill_mid_drain_resumes_exactly(
     ckpt = str(tmp_path / "ckpt")
     try:
         _write_segments(spark, event_log, src, 8)
-        q = run_reconciler(
+        q = run_cdc_pipeline(
             spark, src, out, ckpt,
             max_files_per_trigger=1, available_now=True,
         )
@@ -451,7 +452,7 @@ def test_stream_kill_mid_drain_resumes_exactly(
         assert len(_commits(ckpt)) < 8, (
             "drain finished before the kill — raise the segment count"
         )
-        q2 = run_reconciler(
+        q2 = run_cdc_pipeline(
             spark, src, out, ckpt,
             max_files_per_trigger=1, available_now=True,
         )
@@ -499,7 +500,7 @@ def test_stream_lost_commit_replays_batch_idempotently(
         write_event_segment(spark, event_log[:third], src, "edits_0000001")
         write_event_segment(spark, event_log[third: 2 * third], src,
                             "edits_0000002")
-        q = run_reconciler(
+        q = run_cdc_pipeline(
             spark, src, out, ckpt,
             max_files_per_trigger=1, available_now=True,
         )
@@ -519,7 +520,7 @@ def test_stream_lost_commit_replays_batch_idempotently(
 
         write_event_segment(spark, event_log[2 * third:], src,
                             "edits_0000003")
-        q2 = run_reconciler(
+        q2 = run_cdc_pipeline(
             spark, src, out, ckpt,
             max_files_per_trigger=1, available_now=True,
         )
@@ -754,6 +755,20 @@ def test_crawl_ingest_gate_survives_mid_drain_kill(spark, tmp_path):
 # --------------------------------------------------------------------------
 
 
+def test_ttl_drain_is_refused(spark, tmp_path):
+    """A TTL'd availableNow drain never terminates, so the pipeline
+    refuses the combination before any stream starts."""
+    ckpt = tmp_path / "ckpt"
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="available_now"):
+        run_cdc_pipeline(
+            spark, str(tmp_path / "src"), str(tmp_path / "out"), str(ckpt),
+            available_now=True, deleted_ttl_ms=1000,
+        )
+    assert len(spark.streams.active) == active
+    assert not ckpt.exists()
+
+
 def _store_inodes(spark, ckpt: str) -> set[int]:
     """Live keys in the streaming state store (state data source v2)."""
     return {
@@ -810,7 +825,7 @@ def test_stream_evicts_deleted_state_after_ttl(spark, tmp_path, event_log):
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     _write_segments(spark, event_log, src, 4)
-    q = run_reconciler(
+    q = run_cdc_pipeline(
         spark, src, out, ckpt, available_now=False, deleted_ttl_ms=1500
     )
     try:
@@ -826,7 +841,7 @@ def test_stream_evicts_deleted_state_after_ttl(spark, tmp_path, event_log):
     # (b) drain default (ttl=None): NoTimeout, store retains everything
     out2 = str(tmp_path / "out2")
     ckpt2 = str(tmp_path / "ckpt2")
-    q2 = run_reconciler(spark, src, out2, ckpt2, available_now=True)
+    q2 = run_cdc_pipeline(spark, src, out2, ckpt2, available_now=True)
     q2.awaitTermination(180)
     assert _store_inodes(spark, ckpt2) == all_inodes
 
@@ -859,7 +874,7 @@ def test_stream_tombstone_absorbs_duplicates_then_evicts(spark, tmp_path):
     # phase 1: LONG ttl — the tombstone window. Duplicate prefix is
     # absorbed; the victim stays keyed the whole time.
     write_event_segment(spark, log, src, "edits_0000001")
-    q = run_reconciler(
+    q = run_cdc_pipeline(
         spark, src, out, ckpt, available_now=False,
         deleted_ttl_ms=300_000,
     )
@@ -880,7 +895,7 @@ def test_stream_tombstone_absorbs_duplicates_then_evicts(spark, tmp_path):
     # phase 2: SHORT ttl — re-deliver the DELETE (T4 no-op that re-arms
     # the timeout at the short ttl), wait out the eviction, then the
     # post-eviction resurrection + convergence.
-    q2 = run_reconciler(
+    q2 = run_cdc_pipeline(
         spark, src, out, ckpt, available_now=False, deleted_ttl_ms=1000
     )
     try:
@@ -940,7 +955,7 @@ def test_stream_evict_survives_lost_commit(spark, tmp_path, provider):
     assert deletes, "seed produced no deletes — pick another seed"
     try:
         write_event_segment(spark, log, src, "edits_0000001")
-        q = run_reconciler(
+        q = run_cdc_pipeline(
             spark, src, out, ckpt, available_now=False,
             deleted_ttl_ms=1000,
         )
@@ -959,7 +974,7 @@ def test_stream_evict_survives_lost_commit(spark, tmp_path, provider):
         if _os.path.exists(crc):
             _os.remove(crc)
 
-        q2 = run_reconciler(
+        q2 = run_cdc_pipeline(
             spark, src, out, ckpt, available_now=False,
             deleted_ttl_ms=1000,
         )

@@ -7,8 +7,9 @@ of the operation through and raising a BaseException subclass at the
 next one. ``except RuntimeError`` does not catch it, so no rollback
 runs — exactly what a killed driver leaves on disk. After every crash
 point, each entry point that meets the wreck (search, append, delete,
-compact, latest_state, a stream start) must serve exactly what it
-serves on the untouched old generation or on the completed new one.
+compact, latest_state, change_data + read_entity, a stream start) must
+serve exactly what it serves on the untouched old generation or on the
+completed new one.
 """
 
 from __future__ import annotations
@@ -20,11 +21,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from hcdc_spark import fsutil
+from hcdc_spark.cdc import logs
 from hcdc_spark.cdc import maintenance as MNT
+from hcdc_spark.cdc.materialize import change_data, read_entity
 from hcdc_spark.cdc.registry import DomainFilter
 from hcdc_spark.operators import similarity as S
 from hcdc_spark.streaming.reconciler import latest_state
 from hcdc_spark.streaming.rewrite import (
+    _live,
     compact_path_log,
     live_paths,
     run_rewriter,
@@ -174,16 +178,18 @@ class StateLogCompact:
 
         def stream(root):
             # a stream start over no new segments: it must not append
-            # a fresh log beside a stranded compacted one
+            # a fresh log beside a stranded compacted one. The raw read
+            # repairs nothing, so only the start's recovery can pass.
             os.makedirs(os.path.join(root, "src"), exist_ok=True)
-            from hcdc_spark.streaming.reconciler import run_reconciler
+            from hcdc_spark.streaming.pipeline import run_cdc_pipeline
 
-            q = run_reconciler(
+            q = run_cdc_pipeline(
                 spark, os.path.join(root, "src"), os.path.join(root, "out"),
                 os.path.join(root, "ckpt"),
             )
             assert q.awaitTermination(120)
-            return read(root)
+            return _rows(spark.read.parquet(
+                os.path.join(root, "out", "file_state_log")))
 
         return {"latest_state": read, "compact": compact, "stream": stream}
 
@@ -202,10 +208,12 @@ class ChangeDataGc:
             "('/f', 10L, 'b0', 'd', 'e'), ('/f', 20L, 'b1', 'd', 'e') "
             "AS t(src_path, last_tx_id, batch_tag, domain, entity)"
         ).write.parquet(os.path.join(staging, "change_data"))
-        for tag in ("b0", "b1"):
-            d = os.path.join(staging, "data", "d", "e", f"batch={tag}")
-            os.makedirs(d)
-            open(os.path.join(d, "part-0.parquet"), "wb").close()
+        for i, tag in enumerate(("b0", "b1")):
+            self.spark.sql(
+                f"SELECT {i} AS v, '/f' AS _src_path"
+            ).coalesce(1).write.parquet(os.path.join(
+                staging, "data", "d", "e", f"batch={tag}", "src_fmt=PARQUET"
+            ))
 
     def op(self, root: str) -> None:
         MNT.gc_change_data(self.spark, os.path.join(root, "staging"))
@@ -214,6 +222,7 @@ class ChangeDataGc:
         spark = self.spark
 
         def read(root):
+            # raw: change_data would repair the swap itself
             return _rows(spark.read.parquet(
                 os.path.join(root, "staging", "change_data")))
 
@@ -236,7 +245,14 @@ class ChangeDataGc:
             assert q.awaitTermination(120)
             return read(root)
 
-        return {"gc": gc, "stream": stream}
+        def pointers(root):
+            # the pointer readers heal too: the live pointer table is
+            # missing after a crash between the swap's two renames
+            staging = os.path.join(root, "staging")
+            return (_rows(change_data(spark, staging)),
+                    _rows(read_entity(spark, staging, "d", "e")))
+
+        return {"gc": gc, "stream": stream, "pointers": pointers}
 
 
 class PathLogCompact:
@@ -278,7 +294,12 @@ class PathLogCompact:
                 os.path.join(root, "ckpt"), os.path.join(root, "paths"),
             )
             assert q.awaitTermination(120)
-            return read(root)
+            # raw: live_paths would repair the swap itself
+            live = _live(logs.read(
+                spark, os.path.join(root, "paths"), missing_ok=True,
+                recover_first=False,
+            ))
+            return None if live is None else _rows(live)
 
         return {"compact": compact, "stream": stream}
 
