@@ -55,13 +55,6 @@ def load_rules_csv(spark: SparkSession, path: str) -> list[DomainFilter]:
     ]
 
 
-def rules_df(spark: SparkSession, rules: list[DomainFilter]) -> DataFrame:
-    return spark.createDataFrame(
-        [(r.domain, r.entity, r.path_prefix, r.regex) for r in rules],
-        "domain string, entity string, path_prefix string, regex string",
-    )
-
-
 def _suffix(path_col: Column, prefix: str) -> Column:
     return F.substring(path_col, len(prefix) + 1, 1_000_000)
 

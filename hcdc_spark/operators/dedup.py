@@ -206,20 +206,6 @@ N_BANDS = 6  # rows per band = 12 → P(candidate) = 1-(1-J^12)^6
 _PRIME = (1 << 31) - 1  # Mersenne 2^31-1: a*h stays < 2^62 (ANSI-safe)
 
 
-def _signatures_from_ws(ws_df: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
-    """(doc_id, ws array<string>) → (doc_id, sig array<long>).
-
-    h_i(w) = (a_i * (xxhash64(w) mod p) + b_i) mod p over the 31-bit
-    Mersenne prime, per-doc min. Delegates to the shuffle-free
-    projection form after hashing the words to longs.
-    """
-    hashed = ws_df.select(
-        "doc_id",
-        F.transform(F.col("ws"), lambda w: F.xxhash64(w)).alias("ws"),
-    )
-    return _signatures_from_hashed_ws(hashed, n_hashes)
-
-
 def _minhash_parts_sql(n_hashes: int = N_HASHES) -> str:
     """The 72 per-hash ``array_min(transform(hs, ...))`` SQL fragments
     over a column named ``hs`` (words already folded to ``pmod(w, p)``).
@@ -242,8 +228,9 @@ def _minhash_parts_sql(n_hashes: int = N_HASHES) -> str:
 def _signatures_from_hashed_ws(
     ws_df: DataFrame, n_hashes: int = N_HASHES, keep_size: bool = False
 ) -> DataFrame:
-    """Same signatures as :func:`_signatures_from_ws` but `ws` already
-    holds xxhash64 longs — and computed as a PURE PROJECTION:
+    """(doc_id, ws array<long> of xxhash64 word hashes) → (doc_id, sig
+    array<long>): h_i(w) = (a_i * (w mod p) + b_i) mod p over the
+    31-bit Mersenne prime, per-doc min — computed as a PURE PROJECTION:
 
         sig[i] = array_min(transform(ws, w -> (a_i*(w mod p)+b_i) mod p))
 
@@ -266,13 +253,6 @@ def _signatures_from_hashed_ws(
     if keep_size:
         cols.append(F.col("n"))
     return staged.select(*cols)
-
-
-def minhash_signatures(docs: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
-    """(doc_id, sig array<long>) — minhash over distinct words."""
-    return _signatures_from_ws(
-        docs.select("doc_id", distinct_words("text").alias("ws")), n_hashes
-    )
 
 
 def lsh_candidate_pairs(

@@ -1173,26 +1173,7 @@ def _q97_oracle() -> str:
 def q97_pq_ann_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     e = emb.select("vec_id", "label", _emb().alias("v"))
-    sub = _pq_subvectors(e)
-    cb = (
-        e.where(F.col("vec_id") % 5 == 2)
-        .orderBy("vec_id")
-        .limit(PQ_K)
-        .select(F.col("vec_id").alias("cid"), "v")
-    )
-    cbsub = _pq_subvectors(cb).select("cid", "j", F.col("sv").alias("cv"))
-    scored = sub.join(F.broadcast(cbsub), "j").select(
-        "vec_id",
-        "label",
-        "j",
-        "cid",
-        _dot(F.col("sv"), F.col("cv")).alias("s"),
-    )
-    # (s DESC, cid) argmax per subvector as a max_by aggregate (see
-    # _argmax): one candidate per (vector, j) crosses the shuffle.
-    codes = scored.groupBy("vec_id", "label", "j").agg(
-        _argmax(F.col("cid"), F.col("s"), F.col("cid")).alias("cid")
-    )
+    _cbsub, scored, codes = _ivfpq_codes(e)
     lut = scored.where(F.col("vec_id") == 0).select(
         "j", "cid", F.col("s").alias("ld")
     )
@@ -1746,74 +1727,70 @@ def _ivfpq_oracle(quantizer_extra: str = "", data_v: str | None = None) -> str:
     """
 
 
-def _ivfpq_coarse(
-    e: DataFrame, n_cells: int = 16, cents_src: DataFrame | None = None
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def _ivfpq_coarse(e: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """q93's fixed deterministic coarse quantizer over an
     (vec_id, label, v) frame: (cents(ccid, c), cscored(vec_id, ccid,
-    cs), cells(vec_id, cell)) — centroids broadcast, assignment one
-    narrow window with the (cs DESC, ccid) tiebreak. ``n_cells``
-    defaults to the q93/q101 oracle constant; the scale path sizes it
-    from the corpus (ivfpq_scaled_cells) so per-query probe reads stay
-    n_probe/n_cells of the codes as the corpus grows. ``cents_src``
-    lets a caller that already materialized the centroid sample rows
-    (write_ivfpq_index's one-pass sample) supply them instead of the
-    default TakeOrdered corpus subtree — it must hold exactly the
-    first ``n_cells`` (vec_id, label, v) rows with vec_id % 7 == 1 in
-    vec_id order."""
-    cents_in = (
-        cents_src
-        if cents_src is not None
-        else e.where(F.col("vec_id") % 7 == 1).orderBy("vec_id").limit(n_cells)
+    cs), cells(vec_id, cell)) — the first 16 vec_ids with
+    vec_id % 7 == 1 as centroids, assignment by _nearest_cells."""
+    cents = (
+        e.where(F.col("vec_id") % 7 == 1)
+        .orderBy("vec_id")
+        .limit(16)
+        .select(F.col("vec_id").alias("ccid"), F.col("v").alias("c"))
     )
-    cents = cents_in.select(
-        F.col("vec_id").alias("ccid"), F.col("v").alias("c")
-    )
+    return (cents, *_nearest_cells(e, cents))
+
+
+def _nearest_cells(
+    e: DataFrame, cents: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """Cosine of every (vec_id, v) row against the broadcast centroids
+    (ccid, c) and each row's cell: (cscored(vec_id, ccid, cs),
+    cells(vec_id, cell)). The cell is the (cs DESC, ccid) argmax as a
+    max_by aggregate — same row a row_number window picks (see
+    _argmax); the shuffle carries one pre-collapsed row per vector."""
     # sqrt-norms once per row/centroid, not per (vector, centroid)
-    # pair — computed on DERIVED frames so the returned cents keeps
-    # its persisted (ccid, c) schema (bit-identical: vn*cn multiplies
-    # the same doubles the inline form did — see q35)
+    # pair — computed on DERIVED frames so a caller's cents keeps its
+    # persisted (ccid, c) schema (bit-identical: vn*cn multiplies the
+    # same doubles the inline form did — see q35)
     cw = cents.withColumn("cn", F.sqrt(_norm2(F.col("c"))))
     ew = e.withColumn("vn", F.sqrt(_norm2(F.col("v"))))
     cs = _dot(F.col("v"), F.col("c")) / (F.col("vn") * F.col("cn"))
     cscored = ew.crossJoin(F.broadcast(cw)).select(
         "vec_id", "ccid", cs.alias("cs")
     )
-    # (cs DESC, ccid) argmax as a max_by aggregate — same row the old
-    # row_number window picked (see _argmax); the shuffle carries one
-    # pre-collapsed row per vector.
     cells = cscored.groupBy("vec_id").agg(
         _argmax(F.col("ccid"), F.col("cs"), F.col("ccid")).alias("cell")
     )
-    return cents, cscored, cells
+    return cscored, cells
 
 
-def _ivfpq_codes(
-    e: DataFrame, cb_src: DataFrame | None = None
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """q97's PQ encoder over an (vec_id, label, v) frame: (cbsub(cid,
-    j, cv) — the fixed codebook's subvectors, scored(vec_id, label, j,
-    cid, s) — every (vector, codeword) dot, codes(vec_id, label, j,
-    cid) — the argmax codeword per subvector, (s DESC, cid) tiebreak).
-    ``cb_src`` is the write_ivfpq_index one-pass-sample hook (see
-    _ivfpq_coarse's cents_src): the first PQ_K (vec_id, label, v) rows
-    with vec_id % 5 == 2 in vec_id order, pre-materialized."""
-    sub = _pq_subvectors(e)
-    cb = (
-        cb_src.select(F.col("vec_id").alias("cid"), "v")
-        if cb_src is not None
-        else (
-            e.where(F.col("vec_id") % 5 == 2)
-            .orderBy("vec_id")
-            .limit(PQ_K)
-            .select(F.col("vec_id").alias("cid"), "v")
-        )
-    )
-    cbsub = _pq_subvectors(cb).select("cid", "j", F.col("sv").alias("cv"))
-    scored = sub.join(F.broadcast(cbsub), "j").select(
-        "vec_id", "label", "j", "cid",
+def _pq_scored(e: DataFrame, cb: DataFrame) -> DataFrame:
+    """Every (vector, codeword) subvector dot: ``e``'s (vec_id, label,
+    v) rows split by _pq_subvectors against the broadcast codebook
+    (j, cid, cv, and any further codeword columns such as the index's
+    dense ``code``) — (vec_id, label, j, cid, ..., s)."""
+    cols = [c for c in cb.columns if c not in ("j", "cv")]
+    return _pq_subvectors(e).join(F.broadcast(cb), "j").select(
+        "vec_id", "label", "j", *cols,
         _dot(F.col("sv"), F.col("cv")).alias("s"),
     )
+
+
+def _ivfpq_codes(e: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """q97's PQ encoder over an (vec_id, label, v) frame: (cbsub(cid,
+    j, cv) — the fixed codebook's subvectors (the first PQ_K vec_ids
+    with vec_id % 5 == 2), scored(vec_id, label, j, cid, s) — every
+    (vector, codeword) dot, codes(vec_id, label, j, cid) — the argmax
+    codeword per subvector, (s DESC, cid) tiebreak)."""
+    cb = (
+        e.where(F.col("vec_id") % 5 == 2)
+        .orderBy("vec_id")
+        .limit(PQ_K)
+        .select(F.col("vec_id").alias("cid"), "v")
+    )
+    cbsub = _pq_subvectors(cb).select("cid", "j", F.col("sv").alias("cv"))
+    scored = _pq_scored(e, cbsub)
     # (s DESC, cid) argmax per subvector as a max_by aggregate (see
     # _argmax): the shuffle carries one candidate per (vector, j), not
     # the K scored rows.
@@ -1822,6 +1799,30 @@ def _ivfpq_codes(
     )
     return cbsub, scored, codes
 
+
+def _ivfpq_encode(e: DataFrame, cents: DataFrame, cb: DataFrame) -> DataFrame:
+    """The IVF-PQ index's one encoder: (vec_id, label, v) rows to
+    code-table rows (vec_id, label, c0..c{M-1} tinyint, cell) against
+    the centroids (ccid, c) and the dense-ordinal codebook (j, code,
+    cid, cv). The cell is _nearest_cells' argmax cosine and each
+    subvector's code the (s DESC, cid) argmax dot, the tiebreaks q101
+    uses. write_ivfpq_index calls it against the quantizer frames it
+    writes and append_ivfpq_delta against the persisted copies, so a
+    vector encodes the same whether it arrived in the build or in a
+    later delta."""
+    _cscored, cells = _nearest_cells(e, cents)
+    codes = _pq_scored(e, cb).groupBy("vec_id", "label", "j").agg(
+        _argmax(F.col("code"), F.col("s"), F.col("cid")).alias("code")
+    )
+    pivoted = codes.groupBy("vec_id", "label").agg(
+        *[
+            F.max(F.when(F.col("j") == j, F.col("code")))
+            .cast("tinyint")
+            .alias(f"c{j}")
+            for j in range(PQ_M)
+        ]
+    )
+    return pivoted.join(cells, "vec_id")
 
 
 @REG.add(
@@ -1899,19 +1900,30 @@ def ivfpq_scaled_cells(n_rows: int, min_cells: int = 16) -> int:
 
 
 def read_ivfpq_meta(spark: SparkSession, path: str) -> dict:
-    """(n_rows, n_cells) from the index's meta row."""
-    row = spark.read.parquet(f"{path}/meta").collect()[0]
-    return {"n_rows": int(row["n_rows"]), "n_cells": int(row["n_cells"])}
+    """(n_rows, n_cells) from the index's statistic rows: the build's
+    exact row plus one (delta count, NULL) row per upsert since, so
+    n_rows is their sum and n_cells the one non-null value. Summed in
+    Python: the rows are few (compaction folds them back to one) and a
+    Spark aggregate would add a shuffle job per read."""
+    rows = spark.read.parquet(f"{path}/meta").collect()
+    return {
+        "n_rows": sum(int(r["n_rows"]) for r in rows),
+        "n_cells": max(
+            int(r["n_cells"]) for r in rows if r["n_cells"] is not None
+        ),
+    }
 
 
 def _write_ivfpq_meta(
     spark: SparkSession, path: str, n_rows: int, n_cells: int
 ) -> None:
+    """REPLACE ``<path>/meta`` with one exact (n_rows, n_cells) row —
+    the statistic of build, compaction and rebuild (an upsert appends
+    its own (delta count, NULL) row, see append_ivfpq_delta)."""
     # one JVM-side row (Project over OneRowRelation), NOT
     # createDataFrame(list): a pickled-rows frame runs a Python
-    # worker stage per write — ~4 s on this path, which fires per
-    # micro-batch in the c20 upsert stream (round-14 profiling; the
-    # takedown twin is _ids_df)
+    # worker stage per write — ~4 s on this path (the takedown twin
+    # is _ids_df)
     spark.sql(
         f"SELECT CAST({int(n_rows)} AS BIGINT) AS n_rows, "
         f"CAST({int(n_cells)} AS INT) AS n_cells"
@@ -1923,22 +1935,10 @@ def ivfpq_index_needs_rebuild(spark: SparkSession, path: str) -> bool:
     built with (ivfpq_scaled_cells(n_now) > n_cells_built): per-cell
     occupancy — and so every query's pruned read — has drifted past
     the sized curve. The IVF twin of band_index_needs_rebuild; check
-    after upsert cycles, rebuild via rebuild_ivfpq_index. A one-row
-    metadata read, not a scan."""
+    after upsert cycles, rebuild via rebuild_ivfpq_index. A read of
+    the few statistic rows, not a scan."""
     meta = read_ivfpq_meta(spark, path)
     return ivfpq_scaled_cells(meta["n_rows"]) > meta["n_cells"]
-
-
-def _recover_ivfpq_swap(path: str) -> None:
-    """The IVF-PQ artifact's one crash guard, run first by every entry
-    point that reads or writes ``path``: rebuild and compaction both
-    replace the WHOLE index directory through fsutil.swap_dir, so a
-    crash between its two renames leaves ``path`` missing beside the
-    complete staged generation — finish that swap (fsutil.recover_swap)
-    before anything reads the path or recreates it. Existence checks
-    go through the Hadoop FS API, so a staged generation on
-    ``hdfs://`` is seen (round-13 verdict #1)."""
-    fsutil.recover_swap(path)
 
 
 def rebuild_ivfpq_index(
@@ -1950,7 +1950,8 @@ def rebuild_ivfpq_index(
     every stored cell assignment is stale); it writes a complete new
     index next to the live one and lands it with fsutil.swap_dir, so
     searches keep serving the old generation until the swap and a
-    crash is finished by _recover_ivfpq_swap on the next call.
+    crash is finished by fsutil.recover_swap, which every IVF-PQ
+    entry point runs first.
     Pending tombstones are applied to ``emb`` first (a rebuild never
     resurrects a takedown) and vanish with the old generation.
     Returns the new meta.
@@ -1963,13 +1964,11 @@ def rebuild_ivfpq_index(
     fsutil.require_atomic_rename(path, "rebuild_ivfpq_index")
     # then STILL rebuild: a generation a crashed call left staged
     # reflects that call's corpus, not this caller's ``emb``
-    _recover_ivfpq_swap(path)
+    fsutil.recover_swap(path)
     codes = fsutil.join(path, "codes")
     tombs = _read_tombstones(spark, codes, "vec_id")
     if tombs is not None:
-        emb = _drop_dead_ids(
-            emb, spark.read.parquet(codes), tombs, "vec_id", _ivfpq_gen()
-        )
+        emb = _drop_dead_ids(emb, spark.read.parquet(codes), tombs, "vec_id")
     n_cells = ivfpq_scaled_cells(emb.count())
     fsutil.swap_dir(
         path,
@@ -1984,52 +1983,55 @@ def write_ivfpq_index(
 ) -> None:
     """Materialize the IVF-PQ index q101 computes inline.
 
-    Three artifacts under ``path`` (the FAISS-IVFADC on-disk shape,
+    Four artifacts under ``path`` (the FAISS-IVFADC on-disk shape,
     re-expressed as Spark tables):
 
-    - ``centroids``  — 16 rows (ccid, c): the coarse quantizer.
+    - ``centroids``  — n_cells rows (ccid, c): the coarse quantizer.
     - ``codebook``   — PQ_M*PQ_K rows (j, code, cid, cv): the
       per-subvector codewords, with ``code`` the DENSE ordinal
       (row_number by cid within j, 0-based, tinyint) the code table
       stores — one BYTE per subvector, the production PQ budget.
-    - ``codes``      — parquet PARTITIONED BY (batch, cell): one row
+    - ``codes``      — parquet PARTITIONED BY (gen, cell): one row
       per vector, (vec_id, label, c0..c{M-1} tinyint). A probe filter
       ``cell IN (...)`` on this table is partition PRUNING: the scan
       plans only the probed directories and never opens the rest —
       at 100 TB the read is n_probe/16ths of the code bytes and
-      touches zero raw vectors. ``batch`` is the maintenance key:
-      the build writes batch=base, and append_ivfpq_delta OVERWRITES
-      exactly its own batch partitions (dynamic partition overwrite),
-      so an at-least-once replay of an ingest batch is a no-op
-      instead of a silent double-append — the same idempotence
-      contract the CDC state-log sink carries (T4 / the lost-commit
-      chaos test).
+      touches zero raw vectors. ``gen`` is the maintenance key, the
+      band index's generation: the build writes gen=-1,
+      append_ivfpq_delta OVERWRITES exactly its own gen=batch_id
+      partitions (dynamic partition overwrite), so an at-least-once
+      replay of an ingest batch is a no-op instead of a silent
+      double-append — the same idempotence contract the CDC state-log
+      sink carries (T4 / the lost-commit chaos test) — and
+      compact_ivfpq_index keeps each vec_id's highest gen.
+    - ``meta``       — the growth statistic (_write_ivfpq_meta): one
+      exact (n_rows, n_cells) row, written last, so a directory
+      holding meta is a complete index.
 
-    Build cost is one pass over the corpus (the same broadcast
-    score -> argmax window q101 runs inline); amortized across every
-    subsequent query by ivfpq_index_search.
+    The codes are encoded by _ivfpq_encode against the same quantizer
+    frames the centroids and codebook writes persist beside it — the
+    encoder append_ivfpq_delta runs against the written copies. Build
+    cost is one pass over the corpus for the samples plus the encode;
+    amortized across every subsequent query by ivfpq_index_search.
     """
     from pyspark.sql import Window
 
     e = emb.select("vec_id", "label", _emb().alias("v"))
-    # ONE corpus pass feeds BOTH metadata sample frames (guide §2.4;
-    # round-15): the centroid rows (first n_cells vec_ids with
-    # vec_id%7==1) and the PQ codebook rows (first PQ_K with
-    # vec_id%5==2) were two independent TakeOrdered subtrees — two
-    # full corpus scans per build at scale, re-run again by each
-    # artifact write's broadcast build. A tagged scan + per-tag top-K
-    # (rn <= max(K) fires WindowGroupLimit, so each map task forwards
-    # at most max(K) rows per tag) is one corpus pass; the <=
-    # n_cells+PQ_K surviving sample rows are checkpointed and every
-    # downstream use — centroid broadcast, codebook broadcast, both
-    # metadata writes — reads the checkpoint. Row-for-row identical to
-    # the TakeOrdered subtrees: vec_id is unique, so "first K in
+    # ONE corpus pass feeds BOTH quantizer samples: the centroid
+    # rows (first n_cells vec_ids with vec_id%7==1) and the PQ
+    # codebook rows (first PQ_K with vec_id%5==2) would otherwise be
+    # two TakeOrdered subtrees — two full corpus scans per build at
+    # scale. A tagged scan + per-tag
+    # top-K (rn <= max(K) fires WindowGroupLimit, so each map task
+    # forwards at most max(K) rows per tag) is one corpus pass; the <=
+    # n_cells+PQ_K surviving sample rows are checkpointed and both
+    # quantizer writes read the checkpoint. Row-for-row identical to
+    # q101's TakeOrdered subtrees: vec_id is unique, so "first K in
     # vec_id order" is the same set either way.
     _c7 = F.col("vec_id") % 7 == 1
     _c5 = F.col("vec_id") % 5 == 2
     tagged = e.where(_c7 | _c5).select(
         "vec_id",
-        "label",
         "v",
         F.explode(
             F.filter(
@@ -2048,76 +2050,51 @@ def write_ivfpq_index(
             ((F.col("g") == "c") & (F.col("rn") <= n_cells))
             | ((F.col("g") == "b") & (F.col("rn") <= PQ_K))
         )
-        .select("g", "vec_id", "label", "v")
+        .select("g", "vec_id", "v")
         .localCheckpoint(eager=True)
     )
-    cents_src = samp.where(F.col("g") == "c").drop("g")
-    cb_src = samp.where(F.col("g") == "b").drop("g")
-    cents, _cscored, cells = _ivfpq_coarse(
-        e, n_cells=n_cells, cents_src=cents_src
+    cents = samp.where(F.col("g") == "c").select(
+        F.col("vec_id").alias("ccid"), F.col("v").alias("c")
     )
-    cbsub, _scored, codes = _ivfpq_codes(e, cb_src=cb_src)
-    dense = cbsub.withColumn(
-        "code",
+    cb = samp.where(F.col("g") == "b").select(
+        F.col("vec_id").alias("cid"), "v"
+    )
+    codebook = _pq_subvectors(cb).select(
+        "j",
         (
             F.row_number().over(Window.partitionBy("j").orderBy("cid")) - 1
-        ).cast("tinyint"),
+        ).cast("tinyint").alias("code"),
+        "cid",
+        F.col("sv").alias("cv"),
     )
-    pivoted = (
-        codes.join(
-            F.broadcast(dense.select("j", "cid", "code")), ["j", "cid"]
-        )
-        .groupBy("vec_id", "label")
-        .agg(
-            *[
-                F.max(F.when(F.col("j") == j, F.col("code")))
-                .cast("tinyint")
-                .alias(f"c{j}")
-                for j in range(PQ_M)
-            ]
-        )
+    codes = f"{path}/codes"
+    writes = (
+        lambda: cents.coalesce(1).write.mode("overwrite").parquet(
+            f"{path}/centroids"
+        ),
+        lambda: codebook.coalesce(1).write.mode("overwrite").parquet(
+            f"{path}/codebook"
+        ),
+        lambda: _ivfpq_encode(e, cents, codebook).withColumn(
+            "gen", F.lit(-1).cast("long")
+        ).write.mode("overwrite").partitionBy("gen", "cell").parquet(codes),
     )
-
     # The three artifact writes are independent jobs on distinct
-    # directories; submitting them from a small thread pool (guide
-    # §2.6, the q74 pattern) lets the two single-task metadata writes
-    # — whose deterministic-sample subtrees are full corpus passes at
-    # scale (filter + TakeOrdered) — back-fill executors under the big
-    # codes job instead of paying three serial job latencies.
+    # directories; submitting them from a small thread pool (the q74
+    # pattern) lets the two single-task quantizer writes run beside
+    # the codes job instead of paying three serial job latencies. meta
+    # is written after the pool joins: a directory holding meta is a
+    # complete index (a failed build can leave partial artifacts;
+    # rebuild and compaction write into a fsutil.swap_dir stage, which
+    # lands only when this returns).
     from concurrent.futures import ThreadPoolExecutor
 
-    def _w_centroids() -> None:
-        cents.coalesce(1).write.mode("overwrite").parquet(
-            f"{path}/centroids"
-        )
-
-    def _w_codebook() -> None:
-        dense.select("j", "code", "cid", "cv").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/codebook")
-
-    def _w_codes() -> None:
-        pivoted.join(cells, "vec_id").withColumn(
-            "batch", F.lit("base")
-        ).write.mode("overwrite").partitionBy("batch", "cell").parquet(
-            f"{path}/codes"
-        )
-
-    # _write_ivfpq_meta below runs SEQUENTIALLY after the pool joins:
-    # a directory holding meta is a complete index. A failure in one
-    # parallel write does not stop its siblings, so a failed build can
-    # leave partial artifacts under `path` — rebuild and compaction
-    # write into a fsutil.swap_dir stage, which never lands unless
-    # this function returns. Do not move the meta write into the pool.
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [pool.submit(f) for f in (_w_codes, _w_centroids, _w_codebook)]
-        for fut in futs:
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        for fut in [pool.submit(w) for w in writes]:
             fut.result()
-    # growth-policy statistic (the band-index n_rows pattern): the
-    # corpus size and cell count the index was built for; upserts
-    # maintain n_rows, ivfpq_index_needs_rebuild compares
-    n_rows = spark.read.parquet(f"{path}/codes").count()
-    _write_ivfpq_meta(spark, path, n_rows, n_cells)
+    _write_ivfpq_meta(
+        spark, path, spark.read.parquet(codes).count(), n_cells
+    )
 
 
 def ivfpq_index_search(
@@ -2160,7 +2137,7 @@ def ivfpq_index_search(
     pruning. ivfpq_index_needs_rebuild applies this rule
     automatically only via ivfpq_scaled_cells' floor — pass
     n_cells=16 explicitly below the crossover."""
-    _recover_ivfpq_swap(path)
+    fsutil.recover_swap(path)
     q = [float(x) for x in query_vec]
     qarr = F.array(*[F.lit(x).cast("double") for x in q])
     cents = spark.read.parquet(f"{path}/centroids")
@@ -2198,8 +2175,7 @@ def ivfpq_index_search(
     # pending takedowns (delete_from_ivfpq_index): broadcast
     # anti-join AFTER the cell partition filter — pruning untouched
     codes = _apply_tombstones(
-        codes, _read_tombstones(spark, f"{path}/codes", "vec_id"),
-        "vec_id", _ivfpq_gen(),
+        codes, _read_tombstones(spark, f"{path}/codes", "vec_id"), "vec_id"
     )
     if exclude_id is not None:
         codes = codes.where(F.col("vec_id") != exclude_id)
@@ -2621,7 +2597,7 @@ def _band_candidates(
     idx = _apply_tombstones(
         probe_band_scan(spark, table, nbx, meta),
         _read_tombstones(spark, _table_location(spark, table), id_col),
-        id_col, F.col("gen"),
+        id_col,
     )
     # SMJ group-size guard (see BAND_SMJ_GROUP_CAP): a degraded/stale
     # occupancy makes the bucket-only key's groups spill — re-key on
@@ -2854,83 +2830,60 @@ def append_ivfpq_delta(
     spark: SparkSession,
     delta: DataFrame,
     path: str,
-    batch_id: int | str = "delta",
+    batch_id: int = 0,
 ) -> None:
     """Incremental index maintenance: encode ONLY the delta batch
     against the PERSISTED quantizers and upsert it into the code
-    table under its own ``batch`` partition key.
+    table as generation ``gen = batch_id``.
 
     The production upsert contract: centroids and codebook are read
     back from the index (never re-derived — quantizers don't retrain
     on ingest, so existing codes stay valid and the corpus is never
-    re-scanned). The delta's cells come from an argmax-cosine against
-    the broadcast 16-row centroids, its codes from an argmax-dot
-    against the broadcast codebook with the SAME stored dense-ordinal
-    mapping, both with the build's tiebreaks. The write is a DYNAMIC
-    PARTITION OVERWRITE of exactly the (batch=batch_id, cell=*)
-    directories the delta touches: re-running the same batch —
-    Spark's at-least-once foreachBatch replay, a retried job, a
-    crashed-then-restarted stream — replaces its own partitions
-    instead of double-appending, so the effect is exactly-once
-    (c20 drives this from a real availableNow stream; the replay
-    test re-appends a batch and pins the table byte-identical).
-    Work is O(|delta|); ivfpq_index_search over the merged table
-    serves old + new vectors with the same partition-pruned plan."""
-    _recover_ivfpq_swap(path)  # never recreate codes/ beside a stage
-    # sqrt-norms once per row/centroid, not per (vector, centroid)
-    # pair (bit-identical: vn*cn multiplies the same doubles — q35)
-    cents = spark.read.parquet(f"{path}/centroids").select(
-        "ccid", F.col("c").alias("c"),
-        F.sqrt(_norm2(F.col("c"))).alias("cn"),
-    )
-    cb = spark.read.parquet(f"{path}/codebook")  # (j, code, cid, cv)
-    e = delta.select("vec_id", "label", _emb().alias("v"))
-    ew = e.withColumn("vn", F.sqrt(_norm2(F.col("v"))))
-    cs = _dot(F.col("v"), F.col("c")) / (F.col("vn") * F.col("cn"))
-    # both argmaxes as max_by aggregates with the build's tiebreaks
-    # (see _argmax): one pre-collapsed candidate per group crosses
-    # each shuffle.
-    cells = (
-        ew.crossJoin(F.broadcast(cents))
-        .select("vec_id", "ccid", cs.alias("cs"))
-        .groupBy("vec_id")
-        .agg(_argmax(F.col("ccid"), F.col("cs"), F.col("ccid")).alias("cell"))
-    )
-    sub = _pq_subvectors(e)
-    scored = sub.join(F.broadcast(cb), "j").select(
-        "vec_id", "label", "j", "cid", "code",
-        _dot(F.col("sv"), F.col("cv")).alias("s"),
-    )
-    codes = scored.groupBy("vec_id", "label", "j").agg(
-        _argmax(F.col("code"), F.col("s"), F.col("cid")).alias("code")
-    )
-    pivoted = codes.groupBy("vec_id", "label").agg(
-        *[
-            F.max(F.when(F.col("j") == j, F.col("code")))
-            .cast("tinyint")
-            .alias(f"c{j}")
-            for j in range(PQ_M)
-        ]
-    )
-    (
-        pivoted.join(cells, "vec_id")
-        .withColumn("batch", F.lit(str(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "cell")
-        .parquet(f"{path}/codes")
-    )
-    # maintain the growth-policy statistic (conservative on re-ingest
-    # AND on at-least-once replay: over-counts until compaction
-    # recounts from the exact fold — rebuilds fire earlier, never
-    # later; the CODE table itself stays replay-idempotent via the
-    # dynamic partition overwrite)
-    meta = read_ivfpq_meta(spark, path)
-    _write_ivfpq_meta(
-        spark, path,
-        meta["n_rows"] + delta.select("vec_id").distinct().count(),
-        meta["n_cells"],
-    )
+    re-scanned) and the delta goes through _ivfpq_encode, the build's
+    own encoder. ``batch_id`` (>= 0; the build generation is the -1
+    sentinel, checked by _check_gen) is the keep-latest key
+    compact_ivfpq_index folds by. The write is a DYNAMIC PARTITION
+    OVERWRITE of exactly the (gen=batch_id, cell=*) directories the
+    delta touches: re-running the same batch — Spark's at-least-once
+    foreachBatch replay, a retried job, a crashed-then-restarted
+    stream — replaces its own partitions instead of double-appending,
+    so the effect is exactly-once (c20 drives this from a real
+    availableNow stream; the replay test re-appends a batch and pins
+    the table byte-identical). Work is O(|delta|);
+    ivfpq_index_search over the merged table serves old + new vectors
+    with the same partition-pruned plan.
+
+    BATCH-ID DISCIPLINE: a batch_id names ONE delta. A second append
+    under the same batch_id is taken for a replay of it and replaces
+    only the cells it touches, so a different delta — or the same
+    vec_id with a changed embedding that lands in another cell —
+    leaves the first one's rows beside it, and compaction keeps both
+    (they tie at the same gen). Stamp each delta with a strictly
+    increasing batch_id (c20's pattern: the stream's own micro-batch
+    id), the rule compact_band_index states for the band index.
+
+    The growth statistic is appended BEFORE the codes land, as a
+    (delta count, NULL) row, the order
+    _append_band_rows bumps ``hcdc.n_rows`` in: a crash inside the
+    append, a replay or a re-ingest of indexed ids leaves n_rows
+    over-counting — rebuilds fire earlier, never later — until
+    compaction recounts it exactly. An append-only write never
+    empties meta, and the append never reads it."""
+    _check_gen(batch_id, "append_ivfpq_delta")
+    fsutil.recover_swap(path)  # never recreate codes/ beside a stage
+    delta.agg(
+        F.countDistinct("vec_id").cast("bigint").alias("n_rows"),
+        F.lit(None).cast("int").alias("n_cells"),
+    ).coalesce(1).write.mode("append").parquet(f"{path}/meta")
+    _ivfpq_encode(
+        delta.select("vec_id", "label", _emb().alias("v")),
+        spark.read.parquet(f"{path}/centroids"),
+        spark.read.parquet(f"{path}/codebook"),
+    ).withColumn("gen", F.lit(batch_id).cast("long")).write.mode(
+        "overwrite"
+    ).option("partitionOverwriteMode", "dynamic").partitionBy(
+        "gen", "cell"
+    ).parquet(f"{path}/codes")
 
 
 @REG.add(
@@ -2972,16 +2925,6 @@ def q104_ivfpq_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def _ivfpq_gen() -> Column:
-    """Generation of an IVF-PQ code row: the build's batch='base' is
-    the oldest (-1), numeric batch ids order by value — the same total
-    order compact_ivfpq_index folds by. A function, not a module
-    constant: building a Column requires an active SparkContext."""
-    return F.when(
-        F.col("batch") == "base", F.lit(-1).cast("long")
-    ).otherwise(F.expr("try_cast(batch AS long)"))
-
-
 def delete_from_ivfpq_index(
     spark: SparkSession, path: str, ids, batch_id: int = 0
 ) -> None:
@@ -2997,7 +2940,7 @@ def delete_from_ivfpq_index(
     tombstone kills generations <= ``batch_id``, a later
     append_ivfpq_delta of the same vec_id (higher batch_id) serves
     again."""
-    _recover_ivfpq_swap(path)  # never mkdir codes/ beside a stage
+    fsutil.recover_swap(path)  # never mkdir codes/ beside a stage
     _append_tombstones(
         spark, fsutil.join(path, "codes"), ids, "vec_id", batch_id,
         "delete_from_ivfpq_index",
@@ -3005,78 +2948,42 @@ def delete_from_ivfpq_index(
 
 
 def compact_ivfpq_index(spark: SparkSession, path: str) -> int:
-    """Fold the code table's accumulated batch partitions back into a
-    single batch=base generation — the index lifecycle's fourth leg
+    """Fold the code table's accumulated generations back into the
+    single gen=-1 generation — the index lifecycle's fourth leg
     (build → serve → maintain → COMPACT), the T27 compaction pattern
     (cdc/maintenance.compact_state_log) applied to the vector index.
 
-    Streamed upserts (c20) leave one (batch, cell) directory pair per
+    Streamed upserts (c20) leave one (gen, cell) directory pair per
     micro-batch; read-side listing cost grows with batch count, and a
     RE-ingested vec_id (an embedding update) leaves both generations
     visible to the search until resolved. Compaction rewrites the
-    table keep-latest per vec_id (base is the oldest generation,
-    numeric batch ids order by value — the latest_state last-writer-
-    wins read, applied at rewrite time instead of query time so the
-    hot search path never pays a window) and drops tombstoned rows.
+    table through _fold_latest, the fold compact_band_index uses:
+    each vec_id's rows at its highest gen, tombstoned rows dropped —
+    the latest_state last-writer-wins read, applied at rewrite time
+    instead of query time so the hot search path never pays a window.
     It writes a COMPLETE index directory — the unchanged centroids and
-    codebook copied, the compacted codes, the refreshed meta — and
+    codebook copied, the compacted codes, one exact meta row — and
     lands it with fsutil.swap_dir, the same commit rebuild_ivfpq_index
     uses: readers see the old or the new generation, applied
     tombstones vanish atomically with the old one, and a crash is
-    finished by _recover_ivfpq_swap on the next call. Returns the
+    finished by fsutil.recover_swap on the next call. Returns the
     compacted row count.
 
     Append-only streams (c20's shape) never create duplicates, so for
     them compaction is purely the small-files/partition-count fold.
+    Two rows of one vec_id at the SAME gen (a batch_id reused for a
+    different delta, see append_ivfpq_delta's batch-id discipline)
+    both survive, and meta's exact n_rows counts both.
 
     Rename-as-commit, so fenced to atomic-rename filesystems
     (file:/hdfs:) up front — on object storage use the catalog-based
     stage-and-swap the band indexes use (round-13 verdict #1).
     """
-    from pyspark.sql import Window
-
     fsutil.require_atomic_rename(path, "compact_ivfpq_index")
-    _recover_ivfpq_swap(path)
+    fsutil.recover_swap(path)
     codes_path = fsutil.join(path, "codes")
-    codes = spark.read.parquet(codes_path)
-    # keep-latest needs a total order over generations: "base" is
-    # oldest (sentinel -1), numeric batch ids order by value. A
-    # NON-numeric batch id (e.g. append's ad-hoc "delta" default)
-    # would cast to NULL and silently LOSE to base for duplicated
-    # vec_ids, and a NEGATIVE id would tie with or sort under the
-    # base sentinel — refuse both loudly instead of resolving wrong.
-    bad = (
-        codes.select("batch")
-        .distinct()
-        .where(
-            (F.col("batch") != "base")
-            & (
-                F.expr("try_cast(batch AS long)").isNull()
-                | (F.expr("try_cast(batch AS long)") < 0)
-            )
-        )
-        .collect()
-    )
-    if bad:
-        names = sorted(r["batch"] for r in bad)
-        raise ValueError(
-            "compact_ivfpq_index needs orderable generations: batch ids "
-            f"must be 'base' or numeric and >= 0, got {names} — re-append "
-            "with a non-negative numeric batch_id before compacting"
-        )
-    w = Window.partitionBy("vec_id").orderBy(_ivfpq_gen().desc())
-    latest = codes.withColumn("_rn", F.row_number().over(w)).where(
-        F.col("_rn") == 1
-    )
-    # the gen-aware tombstone filter runs while the original batch
-    # column is still attached
-    latest = (
-        _apply_tombstones(
-            latest, _read_tombstones(spark, codes_path, "vec_id"),
-            "vec_id", _ivfpq_gen(),
-        )
-        .drop("_rn", "batch")
-        .withColumn("batch", F.lit("base"))
+    latest = _fold_latest(
+        spark, spark.read.parquet(codes_path), codes_path, "vec_id"
     )
     n_cells = read_ivfpq_meta(spark, path)["n_cells"]
 
@@ -3084,13 +2991,12 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> int:
         for part in ("centroids", "codebook"):
             fsutil.copy(fsutil.join(path, part), fsutil.join(stage, part))
         codes_stage = fsutil.join(stage, "codes")
-        latest.write.mode("overwrite").partitionBy("batch", "cell").parquet(
+        latest.write.mode("overwrite").partitionBy("gen", "cell").parquet(
             codes_stage
         )
-        # the growth statistic from the exact fold (corrects any
-        # re-ingest over-count the appends accumulated)
-        n = spark.read.parquet(codes_stage).count()
-        _write_ivfpq_meta(spark, stage, n, n_cells)
+        _write_ivfpq_meta(
+            spark, stage, spark.read.parquet(codes_stage).count(), n_cells
+        )
 
     fsutil.swap_dir(path, write_stage, "compact_ivfpq_index")
     return read_ivfpq_meta(spark, path)["n_rows"]
@@ -3113,7 +3019,7 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> int:
     "an updated embedding (list_reverse — deterministic, arithmetic-"
     "free, so both engines transform identically), and "
     "compact_ivfpq_index folds the three generations keep-latest into "
-    "batch=base before the partition-pruned search runs. Hash-exact "
+    "gen=-1 before the partition-pruned search runs. Hash-exact "
     "against the q101 SQL over the UPDATED corpus view (a CASE swaps "
     "in the reversed vectors) with quantizers pinned to the ORIGINAL "
     "base corpus — exactly the no-retrain-on-update contract: had "
@@ -3296,11 +3202,7 @@ def _append_band_rows(
     ``batch_id``, bumps the n_rows/max_group_rows statistics BEFORE the
     rows land (see append_band_index's crash-direction note) and
     inserts clustered by (band, bucket file) into the bucketed table."""
-    if batch_id < 0:
-        raise ValueError(
-            f"{caller}: batch_id must be >= 0, got {batch_id} "
-            "(-1 is the build-generation sentinel)"
-        )
+    _check_gen(batch_id, caller)
     meta = _checked_band_geometry(spark, table, *shape, caller)
     exploded = exploded.withColumn("gen", F.lit(int(batch_id)).cast("long"))
     n_new = new_batch.select(meta["id_col"]).distinct().count()
@@ -3416,9 +3318,7 @@ def rebuild_band_index(
     # the swap clears them with the old files
     tombs = _read_tombstones(spark, _table_location(spark, table), id_col)
     if tombs is not None:
-        corpus = _drop_dead_ids(
-            corpus, spark.table(table), tombs, id_col, F.col("gen")
-        )
+        corpus = _drop_dead_ids(corpus, spark.table(table), tombs, id_col)
     n = corpus.select(id_col).distinct().count()
     bits = neardup_scaled_bits(n, meta["target_bucket_rows"])
     n_bands = neardup_scaled_bands(bits)
@@ -3498,21 +3398,22 @@ def _swap_band_table(spark: SparkSession, table: str, write_stage) -> None:
 
 
 def compact_band_index(spark: SparkSession, table: str) -> int:
-    """Keep-latest compaction for a band index — compact_ivfpq_index's
-    T27 semantics applied to the (id, band, bucket, gen) rows: a
-    re-ingested id (embedding/document update admitted as a later
-    generation) leaves BOTH generations' band rows producing
-    candidates, so stale buckets keep matching an embedding that no
-    longer exists and the dedup gate rejects against ghosts (round-9
-    verdict missing #3). Compaction keeps only each id's latest
-    generation (same-generation replay duplicates collapse via
-    distinct), FOLDS the survivors back to the base generation
-    (gen=-1, exactly compact_ivfpq_index's batch=base reset — so
-    post-compaction any batch_id >= 0 wins keep-latest again and the
-    default-0 admission loop stays correct across cycles), rewrites
-    through the same stage-and-swap the rebuild uses (bucket spec
-    preserved — probes stay exchange-free), and refreshes the n_rows
-    statistic. Returns the compacted row count.
+    """Keep-latest compaction for a band index — the T27 semantics
+    compact_ivfpq_index applies to code rows, applied to the (id,
+    band, bucket, gen) rows: a re-ingested id (embedding/document
+    update admitted as a later generation) leaves BOTH generations'
+    band rows producing candidates, so stale buckets keep matching an
+    embedding that no longer exists and the dedup gate rejects against
+    ghosts. Both compactions share one fold, _fold_latest: each id's
+    rows at its latest generation (same-generation replay duplicates
+    collapse via distinct),
+    tombstoned rows dropped, the survivors FOLDED back to the base
+    generation gen=-1 — so post-compaction any batch_id >= 0 wins
+    keep-latest again and the default-0 admission loop stays correct
+    across cycles. The band index then rewrites through the same
+    stage-and-swap the rebuild uses (bucket spec preserved — probes
+    stay exchange-free) and refreshes the n_rows statistic. Returns
+    the compacted row count.
 
     BATCH-ID DISCIPLINE between compactions: two admissions of the
     SAME id at the SAME generation tie in keep-latest and both
@@ -3529,29 +3430,9 @@ def compact_band_index(spark: SparkSession, table: str) -> int:
     accumulated slack (round-12 verdict nit)."""
     meta = read_band_index_meta(spark, table)
     id_col = meta["id_col"]
-    rows = spark.table(table)
-    # keep-latest via a single window pass (one shuffle on the id) —
-    # the earlier groupBy+self-join resolved the same max but paid the
-    # id shuffle twice (round-10 verdict nit); offline either way, but
-    # at 100 TB the second corpus-wide exchange is real money.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col)
-    survivors = (
-        rows.withColumn("_max_gen", F.max("gen").over(w))
-        .where(F.col("gen") == F.col("_max_gen"))
-        .select(*rows.columns)
-        .distinct()
+    survivors = _fold_latest(
+        spark, spark.table(table), _table_location(spark, table), id_col
     )
-    # physically drop tombstoned rows (delete_from_band_index) — the
-    # gen-aware filter runs BEFORE the base-generation fold below, and
-    # the swap removes the applied tombstones atomically with the old
-    # files (they live under the old table location)
-    survivors = _apply_tombstones(
-        survivors,
-        _read_tombstones(spark, _table_location(spark, table), id_col),
-        id_col, F.col("gen"),
-    ).withColumn("gen", F.lit(-1).cast("long"))
 
     def write_stage(stage_table: str, stage_path: str) -> None:
         write_band_index_rows(
@@ -3600,27 +3481,51 @@ def _read_tombstones(
 
 
 def _apply_tombstones(
-    rows: DataFrame, tombs: DataFrame | None, id_col: str, gen: Column
+    rows: DataFrame, tombs: DataFrame | None, id_col: str
 ) -> DataFrame:
     """Filter DEAD index rows: a row is dead iff its id carries a
-    tombstone with generation >= the row's own generation ``gen`` (a
-    band row's ``gen`` column; _ivfpq_gen() for a code row) — so a
-    delete at batch g kills the build rows (generation -1) and every
+    tombstone with generation >= the row's own ``gen`` (band rows and
+    IVF-PQ code rows alike: -1 for the build, the batch id for an
+    admission) — so a delete at batch g kills the build rows and every
     admission up to g, while a RE-admission at a later generation
     resurrects the id (T27's keep-latest semantics extended with a
-    delete verb). A code row with a NON-numeric batch id has no
-    orderable generation; if tombstoned it is dropped — the
-    conservative direction — and compact_ivfpq_index refuses it
-    loudly anyway. The tombstone side is a broadcast (takedown sets
+    delete verb). The tombstone side is a broadcast (takedown sets
     are O(|ids|), never corpus-sized), so the index side's bucketed
     distribution and partition pruning survive."""
     if tombs is None:
         return rows
     return (
         rows.join(F.broadcast(tombs), id_col, "left")
-        .where(F.col("_tomb_gen").isNull() | (gen > F.col("_tomb_gen")))
+        .where(
+            F.col("_tomb_gen").isNull() | (F.col("gen") > F.col("_tomb_gen"))
+        )
         .drop("_tomb_gen")
     )
+
+
+def _fold_latest(
+    spark: SparkSession, rows: DataFrame, base: str, id_col: str
+) -> DataFrame:
+    """The one keep-latest compaction fold of both index families:
+    each id's rows at its max ``gen`` (one window pass, one shuffle on
+    the id), distinct (same-generation replay duplicates collapse),
+    the tombstones under ``<base>/_tombstones`` applied while the
+    generations are still attached, then folded to gen=-1.
+    compact_band_index and compact_ivfpq_index each commit the result
+    their own way (catalog swap / fsutil.swap_dir), which also drops
+    the applied tombstones with the old files."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(id_col)
+    latest = (
+        rows.withColumn("_max_gen", F.max("gen").over(w))
+        .where(F.col("gen") == F.col("_max_gen"))
+        .select(*rows.columns)
+        .distinct()
+    )
+    return _apply_tombstones(
+        latest, _read_tombstones(spark, base, id_col), id_col
+    ).withColumn("gen", F.lit(-1).cast("long"))
 
 
 def _drop_dead_ids(
@@ -3628,7 +3533,6 @@ def _drop_dead_ids(
     rows: DataFrame,
     tombs: DataFrame,
     id_col: str,
-    gen: Column,
 ) -> DataFrame:
     """``corpus`` minus the DEAD ids of an index whose rows are
     ``rows`` — the filter both rebuilds run so a rebuild can never
@@ -3639,13 +3543,28 @@ def _drop_dead_ids(
     LATER legitimate corpus entry under that id would be silently
     dropped — and the rebuild's swap would then clear the tombstone,
     erasing the evidence (round-13 review)."""
-    alive = _apply_tombstones(rows, tombs, id_col, gen).select(id_col)
+    alive = _apply_tombstones(rows, tombs, id_col).select(id_col)
     dead = (
         tombs.select(id_col)
         .join(rows.select(id_col).distinct(), id_col, "left_semi")
         .join(alive.distinct(), id_col, "left_anti")
     )
     return corpus.join(F.broadcast(dead), id_col, "left_anti")
+
+
+def _check_gen(batch_id: int, caller: str) -> None:
+    """The generation check of every index write stamped with a batch
+    id (band and doc-band appends, IVF-PQ upserts, tombstones of both
+    families): an int >= 0, because -1 is the build generation and
+    keep-latest, compaction and tombstones all order rows by ``gen`` —
+    an append at or below -1 would lose to the build rows it
+    re-ingests, and a tombstone there would kill nothing. Refused at
+    entry, before any write."""
+    if not isinstance(batch_id, int) or batch_id < 0:
+        raise ValueError(
+            f"{caller}: batch_id must be >= 0, got {batch_id!r} "
+            "(-1 is the build-generation sentinel)"
+        )
 
 
 def _append_tombstones(
@@ -3659,12 +3578,7 @@ def _append_tombstones(
     the directory costs every later probe a broadcast anti-join until
     the next compaction (round-13 review). The append is a plain
     DataFrame write, so it works on every scheme."""
-    if batch_id < 0:
-        raise ValueError(
-            f"{caller}: batch_id must be >= 0, got {batch_id} (-1 is "
-            "the build-generation sentinel; a tombstone below it would "
-            "kill nothing)"
-        )
+    _check_gen(batch_id, caller)
     if isinstance(ids, DataFrame):
         df = ids.select(F.col(id_col).cast("long").alias(id_col))
         if df.isEmpty():

@@ -805,7 +805,7 @@ def c17_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     "parquet file stream (3 files, maxFilesPerTrigger=1 -> 3 true "
     "micro-batches) and every foreachBatch runs append_ivfpq_delta "
     "with ITS OWN batch_id — a dynamic partition overwrite of "
-    "exactly that batch's (batch, cell) directories, so Spark's "
+    "exactly that batch's (gen, cell) directories, so Spark's "
     "at-least-once foreachBatch replay re-lands the same partitions "
     "instead of double-appending (the replay pytest pins the table "
     "byte-identical after a deliberate re-run; the same idempotence "

@@ -3,9 +3,9 @@
 The reference has no streaming analytics at all — its only time-based
 behavior is the 60 s edit-log poll (EditLogProcessor.java:176) and
 batch-pull timeouts. These operators are the Spark-native observability
-surface over the same stream: per-op rates, per-namespace activity,
-duplicate suppression, session detection. All are built-ins —
-watermark + window/session_window + dropDuplicates — so they run
+surface over the same stream: per-op rates, duplicate suppression,
+session detection. All are built-ins — watermark +
+window/session_window + dropDuplicates — so they run
 map-side partial aggregation and bounded state eviction, which is what
 makes them viable on an unbounded 100 TB/day stream.
 """
@@ -34,26 +34,6 @@ def op_rates(
     return ev.groupBy(win.alias("win"), "op").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.approx_count_distinct("inode_id").alias("n_files"),
-    )
-
-
-def namespace_activity(
-    events: DataFrame, window: str = "5 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Bytes-touched per namespace per window (size deltas from blocks)."""
-    ev = with_event_time(events).withWatermark("event_time", watermark)
-    return (
-        ev.select(
-            "event_time",
-            "namespace",
-            F.aggregate(
-                F.coalesce("blocks", F.array()),
-                F.lit(0).cast("long"),
-                lambda acc, b: acc + F.coalesce(b["size"], F.lit(0)),
-            ).alias("bytes"),
-        )
-        .groupBy(F.window("event_time", window).alias("win"), "namespace")
-        .agg(F.sum("bytes").alias("bytes_touched"))
     )
 
 

@@ -104,7 +104,7 @@ class _Ivfpq:
         codes = self.spark.read.parquet(f"{idx}/codes")
         return (
             top,
-            tuple(sorted(r[0] for r in codes.select("batch").distinct()
+            tuple(sorted(r[0] for r in codes.select("gen").distinct()
                          .collect())),
             S.read_ivfpq_meta(self.spark, idx)["n_rows"],
         )

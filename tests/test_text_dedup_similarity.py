@@ -859,8 +859,8 @@ def test_ivfpq_upsert_equals_full_build(spark, sf_dir, tmp_path):
     for artifact in ("centroids", "codebook", "codes"):
         fa = spark.read.parquet(f"{full_idx}/{artifact}")
         fb = spark.read.parquet(f"{ups_idx}/{artifact}")
-        if artifact == "codes":  # batch is lineage, not content
-            fa, fb = fa.drop("batch"), fb.drop("batch")
+        if artifact == "codes":  # gen is lineage, not content
+            fa, fb = fa.drop("gen"), fb.drop("gen")
         a = sorted(tuple(r) for r in fa.collect())
         b = sorted(tuple(r) for r in fb.collect())
         assert a == b, f"{artifact} diverged between build and upsert"
@@ -876,7 +876,7 @@ def test_append_ivfpq_delta_replay_is_idempotent(spark, sf_dir, tmp_path):
     (Spark replays foreachBatch after a crash between side effect and
     commit — the lost-commit chaos scenario) must leave the code
     table byte-identical, because append_ivfpq_delta dynamically
-    OVERWRITES exactly its own (batch, cell) partitions instead of
+    OVERWRITES exactly its own (gen, cell) partitions instead of
     appending blindly."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = emb.where(F.col("vec_id") % 10 != 7)
@@ -892,11 +892,11 @@ def test_append_ivfpq_delta_replay_is_idempotent(spark, sf_dir, tmp_path):
         tuple(r) for r in spark.read.parquet(f"{idx}/codes").collect()
     )
     assert twice == once, "replayed batch changed the code table"
-    assert any(r[-2] == "5" for r in once)  # the batch partition landed
+    assert any(r[-2] == 5 for r in once)  # the gen=5 partition landed
 
 
 def test_compact_ivfpq_index_folds_and_resolves(spark, sf_dir, tmp_path):
-    """Compaction must (a) fold every batch partition into batch=base,
+    """Compaction must (a) fold every gen partition into gen=-1,
     (b) resolve RE-ingested vec_ids keep-latest (an embedding update
     streamed as a later batch wins, like latest_state over the CDC
     state log), and (c) leave the search ranking identical to an
@@ -929,10 +929,10 @@ def test_compact_ivfpq_index_folds_and_resolves(spark, sf_dir, tmp_path):
         r["label"] for r in post.where(F.col("vec_id") % 10 == 7).collect()
     }
     assert labels == {1003}  # keep-latest resolved the update
-    batch_dirs = {
-        d.name for d in pathlib.Path(idx, "codes").glob("batch=*")
+    gen_dirs = {
+        d.name for d in pathlib.Path(idx, "codes").glob("gen=*")
     }
-    assert batch_dirs == {"batch=base"}
+    assert gen_dirs == {"gen=-1"}
 
     ref = str(tmp_path / "ref")
     similarity.write_ivfpq_index(spark, base, ref)
@@ -1080,26 +1080,131 @@ def test_append_doc_band_index_grows_corpus(spark, sf_dir, tmp_path):
 
 def test_compact_ivfpq_index_refuses_unorderable_batches(spark, sf_dir,
                                                          tmp_path):
-    """A non-numeric batch id (append's ad-hoc 'delta' default) has no
-    place in the keep-latest order — compaction must refuse LOUDLY
-    naming the offender instead of silently resolving updates wrong."""
+    """Keep-latest compaction needs every generation ordered after the
+    build's gen=-1, so the door refuses what it cannot order:
+    append_ivfpq_delta rejects a negative batch id (-1 would tie with
+    the build generation) and a non-numeric one before any write, and
+    the index stays exactly as built — compaction never meets either."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = emb.where(F.col("vec_id") % 10 != 7)
     delta = emb.where(F.col("vec_id") % 10 == 7)
     idx = str(tmp_path / "ivfpq")
     similarity.write_ivfpq_index(spark, base, idx)
-    similarity.append_ivfpq_delta(spark, delta, idx)  # default "delta"
-    with pytest.raises(ValueError, match="delta.*numeric batch_id"):
-        similarity.compact_ivfpq_index(spark, idx)
+    built = sorted(
+        tuple(r) for r in spark.read.parquet(f"{idx}/codes").collect()
+    )
+    meta = similarity.read_ivfpq_meta(spark, idx)
+    for bad in (-1, "delta"):
+        with pytest.raises(ValueError, match="batch_id must be >= 0"):
+            similarity.append_ivfpq_delta(spark, delta, idx, batch_id=bad)
+    assert similarity.read_ivfpq_meta(spark, idx) == meta
+    assert sorted(
+        tuple(r) for r in spark.read.parquet(f"{idx}/codes").collect()
+    ) == built
+    assert similarity.compact_ivfpq_index(spark, idx) == base.count()
 
-    # a NEGATIVE numeric id ties with (or sorts under) the base
-    # sentinel gen=-1, so keep-latest would resolve a re-ingested
-    # vec_id arbitrarily — refused just as loudly (round-9 ADVICE)
-    idx2 = str(tmp_path / "ivfpq_neg")
-    similarity.write_ivfpq_index(spark, base, idx2)
-    similarity.append_ivfpq_delta(spark, delta, idx2, batch_id=-1)
-    with pytest.raises(ValueError, match="-1.*numeric batch_id"):
-        similarity.compact_ivfpq_index(spark, idx2)
+
+def test_compact_ivfpq_index_same_gen_reappend_into_another_cell(
+    spark, sf_dir, tmp_path
+):
+    """A batch_id names one delta. Re-append vec_ids under the SAME
+    batch_id with changed embeddings and the dynamic partition
+    overwrite replaces only the cells the second append touches (the
+    first delta's other rows there go with them): a vec_id that moved
+    cells keeps both rows, compaction keeps both
+    (they tie at one gen) and meta's exact n_rows counts every row it
+    returns. The same update under a LATER batch_id folds each vec_id
+    back to one row."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    base = emb.where(F.col("vec_id") % 10 != 7)
+    delta = emb.where(F.col("vec_id") % 10 == 7)
+    upd = delta.where(F.col("vec_id") % 20 == 17).withColumn(
+        "embedding", F.reverse("embedding")
+    )
+    idx = str(tmp_path / "ivfpq")
+    similarity.write_ivfpq_index(spark, base, idx)
+    similarity.append_ivfpq_delta(spark, delta, idx, batch_id=1)
+    similarity.append_ivfpq_delta(spark, upd, idx, batch_id=1)
+
+    def rows_per_id():
+        codes = spark.read.parquet(f"{idx}/codes")
+        return {
+            r["vec_id"]: r["n"]
+            for r in codes.groupBy("vec_id").agg(F.count("*").alias("n"))
+            .collect()
+        }
+
+    moved = {i for i, n in rows_per_id().items() if n == 2}
+    assert moved, "no re-appended vec_id changed cell"
+    n = similarity.compact_ivfpq_index(spark, idx)
+    after = rows_per_id()
+    assert {i for i, c in after.items() if c == 2} == moved
+    assert n == sum(after.values())
+    assert similarity.read_ivfpq_meta(spark, idx)["n_rows"] == n
+
+    similarity.append_ivfpq_delta(spark, upd, idx, batch_id=2)
+    n = similarity.compact_ivfpq_index(spark, idx)
+    after = rows_per_id()
+    assert set(after.values()) == {1}
+    assert n == len(after)
+
+
+def test_ivfpq_failed_statistic_write_keeps_index_usable(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """append_ivfpq_delta records its growth statistic BEFORE the codes
+    land, as an appended row. Fail that one write — the job writing
+    ``<idx>/meta`` raises via raise_error — and the index must stay
+    usable: the statistic readers and compaction still work, and n_rows
+    never falls below the codes that landed. An overwrite of meta after
+    the codes would leave meta emptied by the failed job, and every
+    reader would raise UNABLE_TO_INFER_SCHEMA until a full rebuild."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    base = emb.where(F.col("vec_id") % 10 != 7)
+    delta = emb.where(F.col("vec_id") % 10 == 7)
+    idx = str(tmp_path / "ivfpq")
+    similarity.write_ivfpq_index(spark, base, idx)
+    meta_dir = f"{idx}/meta"
+
+    real_mode, real_parquet = DataFrameWriter.mode, DataFrameWriter.parquet
+
+    def mode(self, save_mode):
+        self._test_mode = save_mode
+        return real_mode(self, save_mode)
+
+    def parquet(self, path, *args, **kwargs):
+        if path != meta_dir:
+            return real_parquet(self, path, *args, **kwargs)
+        df = self._df  # the same rows, each value raising at run time
+        boom = df.select(*[
+            F.raise_error(F.lit("injected meta write failure"))
+            .cast(f.dataType).alias(f.name)
+            for f in df.schema.fields
+        ])
+        return real_parquet(
+            boom.write.mode(getattr(self, "_test_mode", None)), path,
+            *args, **kwargs
+        )
+
+    monkeypatch.setattr(DataFrameWriter, "mode", mode)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(Exception, match="injected meta write failure"):
+        similarity.append_ivfpq_delta(spark, delta, idx, batch_id=1)
+    monkeypatch.undo()
+
+    landed = spark.read.parquet(f"{idx}/codes").count()
+    meta = similarity.read_ivfpq_meta(spark, idx)
+    assert meta["n_cells"] == 16
+    assert meta["n_rows"] >= landed
+    assert similarity.ivfpq_index_needs_rebuild(spark, idx) == (
+        similarity.ivfpq_scaled_cells(meta["n_rows"]) > 16
+    )
+    assert similarity.compact_ivfpq_index(spark, idx) == landed
+    assert similarity.read_ivfpq_meta(spark, idx) == {
+        "n_rows": landed, "n_cells": 16,
+    }
 
 
 def test_compact_ivfpq_index_recovers_interrupted_swap(spark, sf_dir,
