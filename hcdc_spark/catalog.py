@@ -178,3 +178,16 @@ def register_views(
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs
+
+
+def describe_formatted(spark: SparkSession, table: str, key: str) -> str:
+    """One row of a catalog table's ``DESCRIBE FORMATTED`` output (e.g.
+    'Location', 'Num Buckets'), stripped — a catalog lookup, no scan.
+    Raises ValueError when the table reports no such row: a caller that
+    needs the value must not guess one."""
+    for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
+        if (r["col_name"] or "").strip() == key:
+            return r["data_type"].strip()
+    raise ValueError(
+        f"{table} reports no {key!r} row in DESCRIBE FORMATTED"
+    )

@@ -25,7 +25,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hcdc_spark.cdc.model import CHANGE_EVENT_SCHEMA
+from hcdc_spark.cdc.snapshot import (
+    as_events,
+    block_offsets_sql,
+    contiguous_rank,
+    file_type_of,
+)
 
 
 #: Deterministic demo image (a real `hdfs oiv -p XML` shape): root →
@@ -215,19 +220,12 @@ def bootstrap_from_fsimage(
     bs = F.coalesce(
         F.col("preferred_block_size"), F.lit(default_block_size)
     )
-    blocks_arr = F.coalesce(
-        F.col("blocks"),
-        F.lit(None).cast(
-            "array<struct<id:long,genstamp:long,numBytes:long>>"
-        ),
-    )
     length = F.coalesce(
         F.aggregate(
-            blocks_arr, F.lit(0).cast("long"), lambda acc, b: acc + b["numBytes"]
+            "blocks", F.lit(0).cast("long"), lambda acc, b: acc + b["numBytes"]
         ),
         F.lit(0).cast("long"),
     )
-    # cumulative offsets: block i starts at the byte sum of blocks < i
     blocks_ev = F.expr(
         """
         transform(coalesce(blocks, array()), (b, i) -> struct(
@@ -235,49 +233,27 @@ def bootstrap_from_fsimage(
           b.numBytes AS size,
           coalesce(preferred_block_size, {dbs}L) AS block_size,
           b.genstamp AS generation_stamp,
-          aggregate(slice(coalesce(blocks, array()), 1, i), 0L,
-                    (acc, x) -> acc + x.numBytes) AS start_offset,
-          aggregate(slice(coalesce(blocks, array()), 1, i), 0L,
-                    (acc, x) -> acc + x.numBytes) + b.numBytes - 1
-            AS end_offset,
+          {offsets},
           b.numBytes AS delta_size,
           false AS deleted
         ))
-        """.format(dbs=default_block_size)
+        """.format(dbs=default_block_size, offsets=block_offsets_sql("numBytes"))
     )
-
-    from hcdc_spark.cdc.snapshot import contiguous_rank
 
     ranked = contiguous_rank(files, "path")
-    ev = ranked.select(
-        (F.lit(base_tx) + F.col("_rank")).alias("tx_id"),
-        F.lit("CLOSE").alias("op"),
-        F.col("mtime").alias("ts"),
-        F.lit(namespace).alias("namespace"),
-        "path",
-        F.col("id").alias("inode_id"),
-        F.lit(None).cast("string").alias("dest_path"),
-        F.lit(None).cast("string").alias("rename_opts"),
-        length.alias("length"),
-        bs.alias("block_size"),
-        F.col("mtime").alias("modified_time"),
-        F.col("mtime").alias("accessed_time"),
-        F.lit(None).cast("boolean").alias("overwrite"),
-        F.lit(None).cast("boolean").alias("new_block"),
-        F.lit(None).cast("long").alias("truncate_new_length"),
-        blocks_ev.alias("blocks"),
-        F.upper(F.regexp_extract("path", r"\.(\w+)$", 1)).alias("file_type"),
-        F.lit("Snapshot").alias("mode"),
-        F.lit(None).cast("string").alias("domain"),
-        F.lit(None).cast("string").alias("entity"),
+    return as_events(
+        ranked,
+        tx_id=F.lit(base_tx) + F.col("_rank"),
+        op=F.lit("CLOSE"),
+        ts="mtime",
+        namespace=F.lit(namespace),
+        path="path",
+        inode_id="id",
+        length=length,
+        block_size=bs,
+        modified_time="mtime",
+        accessed_time="mtime",
+        blocks=blocks_ev,
+        file_type=file_type_of("path"),
+        mode=F.lit("Snapshot"),
     )
-    ev = ev.withColumn(
-        "file_type",
-        F.when(
-            F.col("file_type").isin(
-                "CSV", "JSON", "PARQUET", "AVRO", "ORC"
-            ),
-            F.col("file_type"),
-        ).otherwise("UNKNOWN"),
-    )
-    return ev.select(*[f.name for f in CHANGE_EVENT_SCHEMA.fields])

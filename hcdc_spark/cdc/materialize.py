@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hcdc_spark.cdc import logs
+from hcdc_spark.cdc.snapshot import block_offsets_sql, file_type_of
 from hcdc_spark.functions.localframe import local_df
 
 #: file_type → Spark batch reader format (EFileType,
@@ -81,8 +82,8 @@ def avro_available(spark: SparkSession) -> bool:
 
 
 def detect_format(spark: SparkSession, path_glob: str) -> DataFrame:
-    """(path, detected file_type) via magic-byte prefix; extension is
-    the fallback, UNKNOWN otherwise.
+    """(path, detected file_type) via magic-byte prefix; the extension
+    rule (``snapshot.file_type_of``) is the fallback, UNKNOWN otherwise.
 
     The listing is a metadata-only binaryFile projection; the magic
     bytes come from a seek-read of each file's FIRST 8 BYTES through
@@ -109,17 +110,8 @@ def detect_format(spark: SparkSession, path_glob: str) -> DataFrame:
         by_magic = F.when(
             head.startswith(magic), F.lit(ftype)
         ).otherwise(by_magic)
-    ext = F.regexp_extract(F.col("path"), r"\.(\w+)$", 1)
-    by_ext = (
-        F.when(F.upper(ext) == "CSV", "CSV")
-        .when(F.upper(ext).isin("JSON", "JSONL", "NDJSON"), "JSON")
-        .when(F.upper(ext) == "PARQUET", "PARQUET")
-        .when(F.upper(ext) == "AVRO", "AVRO")
-        .when(F.upper(ext) == "ORC", "ORC")
-    )
     return bin_df.select(
-        "path",
-        F.coalesce(by_magic, by_ext, F.lit("UNKNOWN")).alias("file_type"),
+        "path", F.coalesce(by_magic, file_type_of("path")).alias("file_type")
     )
 
 
@@ -269,7 +261,7 @@ def change_data(spark: SparkSession, staging_dir: str) -> DataFrame:
 #: DFSBlockReplicaState.java fields; offsets as in DFSBlockState's
 #: chain arithmetic). Built with transform/aggregate over the state
 #: block chain — JVM-side, no UDF, no shuffle.
-_REPLICA_BLOCKS = """
+_REPLICA_BLOCKS = f"""
     transform(coalesce(blocks, array()), (b, i) -> struct(
       b.block_id AS block_id,
       b.prev_block_id AS prev_block_id,
@@ -278,11 +270,7 @@ _REPLICA_BLOCKS = """
       b.last_tx_id AS last_tx_id,
       b.generation_stamp AS generation_stamp,
       b.state AS state,
-      aggregate(slice(coalesce(blocks, array()), 1, i), 0L,
-                (acc, x) -> acc + x.data_size) AS start_offset,
-      aggregate(slice(coalesce(blocks, array()), 1, i), 0L,
-                (acc, x) -> acc + x.data_size) + b.data_size - 1
-        AS end_offset
+      {block_offsets_sql("data_size")}
     ))
 """
 

@@ -129,6 +129,13 @@ ERROR_SCHEMA = T.StructType(
     ]
 )
 
+# The per-inode fold's output row, batch and stream alike: the file
+# state plus the errors its events raised (T25's source).
+FOLD_OUTPUT_SCHEMA = T.StructType(
+    list(FILE_STATE_SCHEMA.fields)
+    + [T.StructField("errors", T.ArrayType(ERROR_SCHEMA))]
+)
+
 
 def empty_event(**overrides) -> dict:
     """A fully-nulled event dict matching CHANGE_EVENT_SCHEMA."""

@@ -26,18 +26,15 @@ and state-store scans (SURVEY §2A T9-T12):
 
 from __future__ import annotations
 
+from typing import Iterable
+
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from hcdc_spark.cdc.model import ERROR_SCHEMA, FILE_STATE_SCHEMA
+from hcdc_spark.cdc.model import FOLD_OUTPUT_SCHEMA
+from hcdc_spark.cdc.snapshot import as_events
 from hcdc_spark.cdc.statemachine import fold_events
-
-_FOLD_OUTPUT_SCHEMA = T.StructType(
-    list(FILE_STATE_SCHEMA.fields)
-    + [T.StructField("errors", T.ArrayType(ERROR_SCHEMA))]
-)
 
 # File-vs-directory op classification — canonical copy lives in
 # statemachine.py, shared with the DuckDB fold and the parity tests.
@@ -194,31 +191,25 @@ def _expand_round(
         .where(F.col("path").startswith(F.concat(F.col("d_path"), F.lit("/"))))
     )
 
-    deletes = (
-        located.where(F.col("d_op") == "DELETE")
-        .where(~F.col("path").startswith("/tmp/"))
-        .select(
-            F.col("d_tx").alias("tx_id"),
-            F.lit("DELETE").alias("op"),
-            F.col("d_ts").alias("ts"),
-            F.col("d_ns").alias("namespace"),
-            "path",
-            "inode_id",
-            F.lit("Backlog").alias("mode"),
+    def child(df: DataFrame, op: str, **extra) -> DataFrame:
+        return as_events(
+            df, tx_id="d_tx", op=F.lit(op), ts="d_ts", namespace="d_ns",
+            path="path", inode_id="inode_id", mode=F.lit("Backlog"),
+            **extra,
         )
+
+    deletes = child(
+        located.where(F.col("d_op") == "DELETE")
+        .where(~F.col("path").startswith("/tmp/")),
+        "DELETE",
     )
-    renames = located.where(F.col("d_op") == "RENAME").select(
-        F.col("d_tx").alias("tx_id"),
-        F.lit("RENAME").alias("op"),
-        F.col("d_ts").alias("ts"),
-        F.col("d_ns").alias("namespace"),
-        "path",
-        "inode_id",
-        F.concat(
+    renames = child(
+        located.where(F.col("d_op") == "RENAME"),
+        "RENAME",
+        dest_path=F.concat(
             F.col("d_dest"),
             F.expr("substring(path, length(d_path) + 1)"),
-        ).alias("dest_path"),
-        F.lit("Backlog").alias("mode"),
+        ),
     )
 
     # Drop the expanded directory rows themselves (tx ids are unique per
@@ -229,13 +220,9 @@ def _expand_round(
         "left_anti",
     )
 
-    synthetic = deletes.unionByName(renames, allowMissingColumns=True)
-    for f in events.schema.fields:
-        if f.name not in synthetic.columns:
-            synthetic = synthetic.withColumn(
-                f.name, F.lit(None).cast(f.dataType)
-            )
-    return base.unionByName(synthetic.select(*events.columns))
+    return base.unionByName(
+        deletes.unionByName(renames), allowMissingColumns=True
+    )
 
 
 def _overwrite_deletes(
@@ -267,7 +254,7 @@ def _overwrite_deletes(
     ).select(F.col("path").alias("r_dest"), *claim_cols)
     claims = renames.unionByName(adds)
     w2 = Window.partitionBy("r_tx", "inode_id").orderBy(F.col("tx_id").desc())
-    return (
+    occupants = (
         _path_history(events, seed)
         .join(F.broadcast(claims), F.col("tx_id") < F.col("r_tx"))
         .where(F.col("namespace").eqNullSafe(F.col("r_ns")))
@@ -278,15 +265,11 @@ def _overwrite_deletes(
             & (F.col("path") == F.col("r_dest"))
             & (F.col("inode_id") != F.col("r_inode"))
         )
-        .select(
-            F.col("r_tx").alias("tx_id"),
-            F.lit("DELETE").alias("op"),
-            F.col("r_ts").alias("ts"),
-            F.col("r_ns").alias("namespace"),
-            "path",
-            "inode_id",
-            F.lit("Backlog").alias("mode"),
-        )
+    )
+    return as_events(
+        occupants, tx_id="r_tx", op=F.lit("DELETE"), ts="r_ts",
+        namespace="r_ns", path="path", inode_id="inode_id",
+        mode=F.lit("Backlog"),
     )
 
 
@@ -369,14 +352,10 @@ def expand_directory_events(
             "rounds — pathological dir-op chain in one log slice"
         )
 
-    ow = _overwrite_deletes(log, _file_inodes(log, known), seed)
-    synthetic = ow
-    for f in events.schema.fields:
-        if f.name not in synthetic.columns:
-            synthetic = synthetic.withColumn(
-                f.name, F.lit(None).cast(f.dataType)
-            )
-    return log.unionByName(synthetic.select(*events.columns))
+    return log.unionByName(
+        _overwrite_deletes(log, _file_inodes(log, known), seed),
+        allowMissingColumns=True,
+    )
 
 
 _INT_FIELDS = {
@@ -406,26 +385,33 @@ def _clean(key: str, v):
     return v
 
 
-_FOLD_COLS = [f.name for f in _FOLD_OUTPUT_SCHEMA.fields]
+_FOLD_COLS = FOLD_OUTPUT_SCHEMA.fieldNames()
 
 
-def _fold_one(pdf: pd.DataFrame) -> dict:
-    """Fold one inode's events into a file_state row dict."""
-    if not pdf["tx_id"].is_monotonic_increasing:  # upstream sorts; verify
-        pdf = pdf.sort_values("tx_id")
+def fold_group(
+    prev: dict | None, pdfs: Iterable[pd.DataFrame]
+) -> tuple[dict | None, dict]:
+    """Fold one inode's events (any number of Arrow frames) onto
+    ``prev`` — the one group fold of the batch and the streaming
+    reconciler. Returns the new state (None if nothing was ever
+    created) and the group's one output row (a FOLD_OUTPUT_SCHEMA
+    dict). Events are folded in tx order; when every event errors
+    before a create, the row is an Unknown stub carrying the errors."""
     events = [
         {k: _clean(k, v) for k, v in rec.items()}
+        for pdf in pdfs
         for rec in pdf.to_dict("records")
     ]
-    state, errors = fold_events(None, events)
+    events.sort(key=lambda e: e["tx_id"])
+    state, errors = fold_events(prev, events)
     if state is None:
-        # Never created (all events errored) — emit an error-only row.
-        state = {f.name: None for f in FILE_STATE_SCHEMA.fields}
-        state["inode_id"] = events[0].get("inode_id")
-        state["state"] = "Unknown"
-    state = dict(state)
-    state["errors"] = errors
-    return state
+        row = dict.fromkeys(_FOLD_COLS)
+        row["inode_id"] = events[0]["inode_id"]
+        row["state"] = "Unknown"
+    else:
+        row = dict(state)
+    row["errors"] = errors
+    return state, row
 
 
 def _fold_stream(batches) -> "pd.DataFrame":
@@ -454,19 +440,20 @@ def _fold_stream(batches) -> "pd.DataFrame":
         last = buf["inode_id"].iloc[-1]
         done = buf[buf["inode_id"] != last]
         if len(done):
-            yield pd.DataFrame(
-                [
-                    _fold_one(g)
-                    for _, g in done.groupby("inode_id", sort=False)
-                ],
-                columns=_FOLD_COLS,
-            )
+            yield _fold_groups(done)
             buf = buf[buf["inode_id"] == last].reset_index(drop=True)
     if buf is not None and len(buf):
-        yield pd.DataFrame(
-            [_fold_one(g) for _, g in buf.groupby("inode_id", sort=False)],
-            columns=_FOLD_COLS,
-        )
+        yield _fold_groups(buf)
+
+
+def _fold_groups(pdf: pd.DataFrame) -> pd.DataFrame:
+    return pd.DataFrame(
+        [
+            fold_group(None, [g])[1]
+            for _, g in pdf.groupby("inode_id", sort=False)
+        ],
+        columns=_FOLD_COLS,
+    )
 
 
 def reconcile_batch(events: DataFrame, expand_dirs: bool = True) -> DataFrame:
@@ -481,15 +468,18 @@ def reconcile_batch(events: DataFrame, expand_dirs: bool = True) -> DataFrame:
         log.where(F.col("inode_id").isNotNull())
         .repartition("inode_id")
         .sortWithinPartitions("inode_id", "tx_id")
-        .mapInPandas(_fold_stream, schema=_FOLD_OUTPUT_SCHEMA)
+        .mapInPandas(_fold_stream, schema=FOLD_OUTPUT_SCHEMA)
     )
 
 
 def reconcile_errors(state_with_errors: DataFrame) -> DataFrame:
-    """Explode the reconciler's error side-channel (T25 dead-letter)."""
+    """Explode the reconciler's error side-channel (T25 dead-letter):
+    one ERROR_SCHEMA row per error, led by the fold output's
+    ``batch_id`` when it carries one (a state-log generation)."""
+    keep = ["batch_id"] if "batch_id" in state_with_errors.columns else []
     return state_with_errors.select(
-        F.explode("errors").alias("e")
-    ).select("e.*")
+        *keep, F.explode("errors").alias("e")
+    ).select(*keep, "e.*")
 
 
 def gc_deleted(state: DataFrame) -> DataFrame:

@@ -22,24 +22,79 @@ Three batch jobs closing the CDC loop:
 All three are set-based single-pass DataFrame transforms: at 10^9 files
 the bootstrap is one distributed listing + projection, and snapshot/
 backlog generation is a scan of the state table — no driver loops.
+
+The event-shape rules every synthetic-event source shares live here,
+once:
+
+- ``as_events`` — the one synthetic-event builder: a source names only
+  the columns it sets; every other CHANGE_EVENT_SCHEMA field is a
+  typed null, in schema order. The three jobs above, the fsimage
+  bootstrap (``cdc/fsimage.py``) and the reconciler's directory-cascade
+  and overwrite DELETE/RENAME synthesis (``cdc/reconcile.py``) build
+  their events through it.
+- ``file_type_of`` — the one extension → ``file_type`` rule (both
+  bootstraps, and ``materialize.detect_format``'s fallback when no
+  magic prefix matches).
+- ``block_offsets_sql`` — the one cumulative block-offset fragment
+  (the fsimage block list and ``materialize``'s replica ledger).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hcdc_spark.cdc.model import CHANGE_EVENT_SCHEMA
 
-def _ext_type():
-    return (
-        F.when(F.col("_ext") == "csv", "CSV")
-        .when(F.col("_ext").isin("json", "jsonl", "ndjson"), "JSON")
-        .when(F.col("_ext") == "parquet", "PARQUET")
-        .when(F.col("_ext") == "avro", "AVRO")
-        .when(F.col("_ext") == "orc", "ORC")
-        .otherwise("UNKNOWN")
+#: File extension (any case) → file_type (EFileType,
+#: core/.../model/EFileType.java:5-11); anything else is UNKNOWN.
+_EXT_TYPES = {
+    "csv": "CSV",
+    "json": "JSON",
+    "jsonl": "JSON",
+    "ndjson": "JSON",
+    "parquet": "PARQUET",
+    "avro": "AVRO",
+    "orc": "ORC",
+}
+
+
+def file_type_of(path: Column | str) -> Column:
+    """The file_type a path's extension names, UNKNOWN otherwise."""
+    ext = F.lower(F.regexp_extract(path, r"\.(\w+)$", 1))
+    out = F.lit("UNKNOWN")
+    for e, ftype in _EXT_TYPES.items():
+        out = F.when(ext == e, ftype).otherwise(out)
+    return out
+
+
+def as_events(df: DataFrame, **cols: Column | str) -> DataFrame:
+    """Project ``df`` onto CHANGE_EVENT_SCHEMA: each keyword names an
+    event field and the column (or column name) that sets it; every
+    field not named is a typed null. Fields come out in schema order,
+    cast to their schema types."""
+    unknown = set(cols) - set(CHANGE_EVENT_SCHEMA.fieldNames())
+    if unknown:
+        raise ValueError(f"as_events: not event fields: {sorted(unknown)}")
+    setters = {
+        k: F.col(c) if isinstance(c, str) else c for k, c in cols.items()
+    }
+    return df.select(*[
+        setters.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name)
+        for f in CHANGE_EVENT_SCHEMA.fields
+    ])
+
+
+def block_offsets_sql(size: str) -> str:
+    """SQL struct fields ``start_offset, end_offset`` for block ``b`` at
+    index ``i`` of a ``transform(coalesce(blocks, array()), (b, i) ->
+    struct(...))`` over a block chain whose byte count is field
+    ``size``: block i starts at the byte sum of blocks < i."""
+    start = (
+        "aggregate(slice(coalesce(blocks, array()), 1, i), 0L,"
+        f" (acc, x) -> acc + x.{size})"
     )
+    return f"{start} AS start_offset, {start} + b.{size} - 1 AS end_offset"
 
 
 def contiguous_rank(df: DataFrame, order_col: str) -> DataFrame:
@@ -109,43 +164,34 @@ def bootstrap_from_listing(
         .select("path", "length", "modificationTime")
     )
     ranked = contiguous_rank(listing, "path")
-    ev = ranked.select(
-        (F.lit(base_tx) + F.col("_rank")).alias("tx_id"),
-        F.lit("CLOSE").alias("op"),
-        F.unix_millis("modificationTime").alias("ts"),
-        F.lit(namespace).alias("namespace"),
-        F.regexp_replace("path", r"^[a-zA-Z0-9]+:/+", "/").alias("path"),
-        (F.abs(F.xxhash64("path")) % F.lit(1 << 62)).alias("inode_id"),
-        F.lit(None).cast("string").alias("dest_path"),
-        F.lit(None).cast("string").alias("rename_opts"),
-        F.col("length").alias("length"),
-        F.lit(block_size).alias("block_size"),
-        F.unix_millis("modificationTime").alias("modified_time"),
-        F.unix_millis("modificationTime").alias("accessed_time"),
-        F.lit(None).cast("boolean").alias("overwrite"),
-        F.lit(None).cast("boolean").alias("new_block"),
-        F.lit(None).cast("long").alias("truncate_new_length"),
-        F.array(
+    mtime = F.unix_millis("modificationTime")
+    return as_events(
+        ranked,
+        tx_id=F.lit(base_tx) + F.col("_rank"),
+        op=F.lit("CLOSE"),
+        ts=mtime,
+        namespace=F.lit(namespace),
+        path=F.regexp_replace("path", r"^[a-zA-Z0-9]+:/+", "/"),
+        inode_id=F.abs(F.xxhash64("path")) % F.lit(1 << 62),
+        length="length",
+        block_size=F.lit(block_size),
+        modified_time=mtime,
+        accessed_time=mtime,
+        blocks=F.array(
             F.struct(
                 (F.abs(F.xxhash64("path", F.lit(1))) % F.lit(1 << 62)).alias("block_id"),
                 F.col("length").alias("size"),
-                F.lit(block_size).cast("long").alias("block_size"),
-                F.lit(1).cast("long").alias("generation_stamp"),
-                F.lit(0).cast("long").alias("start_offset"),
+                F.lit(block_size).alias("block_size"),
+                F.lit(1).alias("generation_stamp"),
+                F.lit(0).alias("start_offset"),
                 (F.col("length") - 1).alias("end_offset"),
                 F.col("length").alias("delta_size"),
                 F.lit(False).alias("deleted"),
             )
-        ).alias("blocks"),
-        F.upper(F.regexp_extract("path", r"\.(\w+)$", 1)).alias("_ext"),
-        F.lit("Snapshot").alias("mode"),
-        F.lit(None).cast("string").alias("domain"),
-        F.lit(None).cast("string").alias("entity"),
+        ),
+        file_type=file_type_of("path"),
+        mode=F.lit("Snapshot"),
     )
-    ev = ev.withColumn("_ext", F.lower("_ext")).withColumn(
-        "file_type", _ext_type()
-    ).drop("_ext")
-    return ev.select(*[f.name for f in CHANGE_EVENT_SCHEMA.fields])
 
 
 def generate_snapshot(
@@ -161,41 +207,20 @@ def generate_snapshot(
     silently skip the snapshot-seeded rows.
     """
     live = file_state.where(F.col("state") != "Deleted")
-    ev = live.select(
-        F.col("last_tx_id").alias("tx_id"),
-        F.lit("CLOSE").alias("op"),
-        F.col("updated_time").alias("ts"),
-        F.lit(namespace).alias("namespace"),
-        "path",
-        "inode_id",
-        F.lit(None).cast("string").alias("dest_path"),
-        F.lit(None).cast("string").alias("rename_opts"),
-        F.col("data_size").alias("length"),
-        "block_size",
-        F.col("updated_time").alias("modified_time"),
-        F.col("updated_time").alias("accessed_time"),
-        F.lit(None).cast("boolean").alias("overwrite"),
-        F.lit(None).cast("boolean").alias("new_block"),
-        F.lit(None).cast("long").alias("truncate_new_length"),
-        F.transform(
-            F.filter("blocks", lambda b: b["state"] != F.lit("Deleted")),
-            lambda b: F.struct(
-                b["block_id"].alias("block_id"),
-                b["data_size"].alias("size"),
-                b["block_size"].alias("block_size"),
-                b["generation_stamp"].alias("generation_stamp"),
-                F.lit(0).cast("long").alias("start_offset"),
-                (b["data_size"] - 1).alias("end_offset"),
-                b["data_size"].alias("delta_size"),
-                F.lit(False).alias("deleted"),
-            ),
-        ).alias("blocks"),
-        "file_type",
-        F.lit("Snapshot").alias("mode"),
-        "domain",
-        "entity",
+    blocks = F.transform(
+        F.filter("blocks", lambda b: b["state"] != F.lit("Deleted")),
+        lambda b: F.struct(
+            b["block_id"].alias("block_id"),
+            b["data_size"].alias("size"),
+            b["block_size"].alias("block_size"),
+            b["generation_stamp"].alias("generation_stamp"),
+            F.lit(0).alias("start_offset"),
+            (b["data_size"] - 1).alias("end_offset"),
+            b["data_size"].alias("delta_size"),
+            F.lit(False).alias("deleted"),
+        ),
     )
-    return ev.select(*[f.name for f in CHANGE_EVENT_SCHEMA.fields])
+    return _state_closes(live, namespace, "Snapshot", blocks)
 
 
 def backlog_events(
@@ -212,63 +237,56 @@ def backlog_events(
         (F.col("state") != "Deleted") & (F.col("last_tx_id") > snapshot_tx)
     )
 
-    def _delta_agg(b, fn, field):
-        rel = F.filter(
-            b["deltas"], lambda d: d["tx_id"] > F.lit(snapshot_tx)
-        )
-        return fn(F.transform(rel, lambda d: d[field]))
+    def recent(b):
+        return F.filter(b["deltas"], lambda d: d["tx_id"] > F.lit(snapshot_tx))
 
-    ev = behind.select(
-        F.col("last_tx_id").alias("tx_id"),
-        F.lit("CLOSE").alias("op"),
-        F.col("updated_time").alias("ts"),
-        F.lit(namespace).alias("namespace"),
-        "path",
-        "inode_id",
-        F.lit(None).cast("string").alias("dest_path"),
-        F.lit(None).cast("string").alias("rename_opts"),
-        F.col("data_size").alias("length"),
-        "block_size",
-        F.col("updated_time").alias("modified_time"),
-        F.col("updated_time").alias("accessed_time"),
-        F.lit(None).cast("boolean").alias("overwrite"),
-        F.lit(None).cast("boolean").alias("new_block"),
-        F.lit(None).cast("long").alias("truncate_new_length"),
-        F.transform(
-            F.filter(
-                "blocks",
-                lambda b: (b["state"] != F.lit("Deleted"))
-                & (F.size(F.filter(
-                    b["deltas"], lambda d: d["tx_id"] > F.lit(snapshot_tx)
-                )) > 0),
-            ),
-            lambda b: F.struct(
-                b["block_id"].alias("block_id"),
-                b["data_size"].alias("size"),
-                b["block_size"].alias("block_size"),
-                b["generation_stamp"].alias("generation_stamp"),
-                _delta_agg(b, F.array_min, "start_offset").alias("start_offset"),
-                _delta_agg(b, F.array_max, "end_offset").alias("end_offset"),
-                (
-                    _delta_agg(b, F.array_max, "end_offset")
-                    - _delta_agg(b, F.array_min, "start_offset")
-                    + 1
-                ).alias("delta_size"),
-                F.array_contains(
-                    F.transform(
-                        F.filter(
-                            b["deltas"],
-                            lambda d: d["tx_id"] > F.lit(snapshot_tx),
-                        ),
-                        lambda d: d["deleted"],
-                    ),
-                    True,
-                ).alias("deleted"),
-            ),
-        ).alias("blocks"),
-        "file_type",
-        F.lit("Backlog").alias("mode"),
-        "domain",
-        "entity",
+    def struct(b):
+        start = F.array_min(F.transform(recent(b), lambda d: d["start_offset"]))
+        end = F.array_max(F.transform(recent(b), lambda d: d["end_offset"]))
+        return F.struct(
+            b["block_id"].alias("block_id"),
+            b["data_size"].alias("size"),
+            b["block_size"].alias("block_size"),
+            b["generation_stamp"].alias("generation_stamp"),
+            start.alias("start_offset"),
+            end.alias("end_offset"),
+            (end - start + 1).alias("delta_size"),
+            F.array_contains(
+                F.transform(recent(b), lambda d: d["deleted"]), True
+            ).alias("deleted"),
+        )
+
+    blocks = F.transform(
+        F.filter(
+            "blocks",
+            lambda b: (b["state"] != F.lit("Deleted"))
+            & (F.size(recent(b)) > 0),
+        ),
+        struct,
     )
-    return ev.select(*[f.name for f in CHANGE_EVENT_SCHEMA.fields])
+    return _state_closes(behind, namespace, "Backlog", blocks)
+
+
+def _state_closes(
+    file_state: DataFrame, namespace: str, mode: str, blocks: Column
+) -> DataFrame:
+    """file_state rows → CLOSE events carrying each row's own identity,
+    size, times and entity match, with the given block list (T22/T23)."""
+    return as_events(
+        file_state,
+        tx_id="last_tx_id",
+        op=F.lit("CLOSE"),
+        ts="updated_time",
+        namespace=F.lit(namespace),
+        path="path",
+        inode_id="inode_id",
+        length="data_size",
+        block_size="block_size",
+        modified_time="updated_time",
+        accessed_time="updated_time",
+        blocks=blocks,
+        file_type="file_type",
+        mode=F.lit(mode),
+        domain="domain",
+        entity="entity",
+    )

@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hcdc_spark import fsutil
-from hcdc_spark.catalog import load_tables
+from hcdc_spark.catalog import describe_formatted, load_tables
 from hcdc_spark.registry import Registry
 
 REG = Registry()
@@ -3348,10 +3348,7 @@ def _table_location(spark: SparkSession, table: str) -> str:
     fsutil / DataFrame I/O, both of which take URIs, so the scheme
     stays attached and every local test exercises the same code path
     a remote deployment runs."""
-    for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
-        if (r["col_name"] or "").strip() == "Location":
-            return r["data_type"].strip()
-    raise ValueError(f"no Location for table {table}")
+    return describe_formatted(spark, table, "Location")
 
 
 def _finish_interrupted_band_swap(spark: SparkSession, table: str) -> None:

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hcdc_spark.catalog import load_tables
+from hcdc_spark.catalog import describe_formatted, load_tables
 from hcdc_spark.functions.text import (
     LANG_MARKERS,
     STOPWORDS,
@@ -1013,6 +1013,14 @@ def chunk_dedup_rewrite(
     enc = F.col("doc_id") * CHUNK_ENC + F.col("idx")
     first = F.min(enc).over(Window.partitionBy(F.md5("txt")))
     flagged = chunks.withColumn("keep", enc == first)
+    return _regroup_kept(flagged, carry)
+
+
+def _regroup_kept(flagged: DataFrame, carry: tuple[str, ...]) -> DataFrame:
+    """Chunk rows flagged ``keep`` → one row per document: (doc_id,
+    *carry, n_chunks, n_kept, clean_text), the kept chunks rejoined in
+    idx order (collect_list ignores the NULLs of dropped chunks;
+    array_sort on (idx, txt) restores order deterministically)."""
     kept_struct = F.when(F.col("keep"), F.struct("idx", "txt"))
     return flagged.groupBy("doc_id", *carry).agg(
         F.count(F.lit(1)).alias("n_chunks"),
@@ -1100,15 +1108,9 @@ def _table_num_buckets(spark: SparkSession, table: str) -> int:
     row (an unbucketed table, or a future DESCRIBE format change) is
     a bug, not a default: silently assuming 32 would cluster appends
     by a wrong bucket id and quietly reintroduce the small-files
-    multiplier the clustering exists to kill (round-11 advice)."""
-    for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
-        if (r["col_name"] or "").strip() == "Num Buckets":
-            return int(r["data_type"].strip())
-    raise ValueError(
-        f"_table_num_buckets: {table} reports no 'Num Buckets' — the "
-        "table is not bucketed (or DESCRIBE FORMATTED changed shape); "
-        "appends must not guess a bucket count"
-    )
+    multiplier the clustering exists to kill (round-11 advice) —
+    ``describe_formatted`` raises, so appends never guess."""
+    return int(describe_formatted(spark, table, "Num Buckets"))
 
 
 def append_chunk_index(
@@ -1172,18 +1174,7 @@ def chunk_dedup_rewrite_vs(
     flagged = chunks.join(hit, "h", "left").withColumn(
         "keep", F.col("__in_ref").isNull() & first_in_doc
     )
-    kept_struct = F.when(F.col("keep"), F.struct("idx", "txt"))
-    return flagged.groupBy("doc_id", *carry).agg(
-        F.count(F.lit(1)).alias("n_chunks"),
-        F.sum(F.col("keep").cast("int")).cast("long").alias("n_kept"),
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(F.collect_list(kept_struct)),
-                lambda s: s["txt"],
-            ),
-        ).alias("clean_text"),
-    )
+    return _regroup_kept(flagged, carry)
 
 
 #: Learned-vocabulary size for q95 — deliberately SMALLER than this

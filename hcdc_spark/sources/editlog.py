@@ -638,13 +638,11 @@ def ops_to_change_events(
     the reconciler's no-op channel, same as the reference's ignore-tx
     emission (T24).
     """
-    from hcdc_spark.cdc.model import CHANGE_EVENT_SCHEMA
+    from hcdc_spark.cdc.model import empty_event
 
-    base_keys = [f.name for f in CHANGE_EVENT_SCHEMA.fields]
     out: list[dict] = []
     for rec in ops:
-        ev = dict.fromkeys(base_keys)
-        ev.update(tx_id=rec["txid"], namespace=namespace, op="IGNORE")
+        ev = empty_event(tx_id=rec["txid"], namespace=namespace, op="IGNORE")
         code = rec["opcode"]
         if code == OP_ADD:
             ev.update(

@@ -45,9 +45,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from hcdc_spark.cdc import logs
-from hcdc_spark.cdc.model import ERROR_SCHEMA, FILE_STATE_SCHEMA
-from hcdc_spark.cdc.reconcile import _clean
-from hcdc_spark.cdc.statemachine import fold_events
+from hcdc_spark.cdc.model import FOLD_OUTPUT_SCHEMA
+from hcdc_spark.cdc.reconcile import fold_group, reconcile_errors
 
 
 class _JsonStateCodec:
@@ -66,23 +65,6 @@ class _JsonStateCodec:
     @staticmethod
     def dump(state: dict[str, Any]) -> tuple:
         return (json.dumps(state),)
-
-
-OUTPUT_SCHEMA = T.StructType(
-    list(FILE_STATE_SCHEMA.fields)
-    + [T.StructField("errors", T.ArrayType(ERROR_SCHEMA))]
-)
-
-
-def _events_from_pandas(pdfs: Iterable[pd.DataFrame]) -> list[dict[str, Any]]:
-    events: list[dict[str, Any]] = []
-    for pdf in pdfs:
-        events.extend(
-            {k: _clean(k, v) for k, v in rec.items()}
-            for rec in pdf.to_dict("records")
-        )
-    events.sort(key=lambda e: e["tx_id"])
-    return events
 
 
 #: Suggested Deleted-tombstone TTL for CONTINUOUS deployments (T27's
@@ -141,15 +123,10 @@ def _make_fold(deleted_ttl_ms: int | None):
             state.remove()
             return
         prev = _JsonStateCodec.load(state.get) if state.exists else None
-        events = _events_from_pandas(pdfs)
-        new_state, errors = fold_events(prev, events)
-        if new_state is None:
-            # All events errored before a create — surface errors,
-            # keep no state.
-            row = {f.name: None for f in FILE_STATE_SCHEMA.fields}
-            row["inode_id"] = key[0]
-            row["state"] = "Unknown"
-        else:
+        new_state, row = fold_group(prev, pdfs)
+        # all events errored before a create: the row surfaces the
+        # errors, no state is kept
+        if new_state is not None:
             state.update(_JsonStateCodec.dump(new_state))
             if (
                 deleted_ttl_ms is not None
@@ -165,9 +142,7 @@ def _make_fold(deleted_ttl_ms: int | None):
                 # call); a re-created inode takes the live branch and
                 # never re-arms, so it never times out.
                 state.setTimeoutDuration(deleted_ttl_ms)
-            row = dict(new_state)
-        row["errors"] = errors
-        yield pd.DataFrame([row])
+        yield pd.DataFrame([row], columns=FOLD_OUTPUT_SCHEMA.fieldNames())
 
     return _fold_with_state
 
@@ -188,7 +163,7 @@ def reconcile_stream(
         .groupBy("inode_id")
         .applyInPandasWithState(
             _make_fold(deleted_ttl_ms),
-            outputStructType=OUTPUT_SCHEMA,
+            outputStructType=FOLD_OUTPUT_SCHEMA,
             stateStructType=_JsonStateCodec.schema,
             outputMode="update",
             timeoutConf=(
@@ -207,9 +182,7 @@ def write_state_log(state: DataFrame, out_dir: str, mode: str = "append"):
     appends one generation per micro-batch, the CLI writes the base
     generation (batch_id -1) that every stream batch wins over."""
     state.drop("errors").write.mode(mode).parquet(logs.STATE.at(out_dir))
-    errs = state.select(
-        "batch_id", F.explode("errors").alias("e")
-    ).select("batch_id", "e.*")
+    errs = reconcile_errors(state)
     if not errs.isEmpty():
         errs.write.mode(mode).parquet(os.path.join(out_dir, "errors"))
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from hcdc_spark import fsutil
 from hcdc_spark.cdc import logs
-from hcdc_spark.cdc.reconcile import expand_directory_events
+from hcdc_spark.cdc.reconcile import _path_history, expand_directory_events
 
 #: path-log schema: one row per (inode, update); latest wins
 _PATH_LOG_COLS = ("inode_id", "path", "namespace", "last_tx", "batch_id")
@@ -55,34 +55,19 @@ def live_paths(spark: SparkSession, paths_dir: str) -> DataFrame | None:
 
 
 def _path_updates(expanded: DataFrame, batch_id: int) -> DataFrame:
-    """Last path-setting event per inode in this batch → path-log rows.
-
-    Path-setting ops match cdc/reconcile._PATH_SETTING_OPS: ADD_FILE
-    creates, CLOSE re-asserts — including Snapshot/Backlog bootstrap
+    """Latest entry per inode of this batch's path history → path-log
+    rows (path NULL ⇒ deleted). The history is the reconciler's own
+    ``_path_history``, so the path log and the cascade expansion agree
+    on which ops set a path: ADD_FILE creates, RENAME moves, DELETE
+    ends, CLOSE re-asserts — including Snapshot/Backlog bootstrap
     CLOSEs, which create files with NO ADD_FILE; without them a
     bootstrapped file never entered the path log and later directory
     cascades (and even its own file DELETE's classification) missed it.
     """
-    from hcdc_spark.cdc.reconcile import _PATH_SETTING_OPS
-
-    sets = expanded.where(
-        F.col("op").isin(*_PATH_SETTING_OPS)
-        & F.col("path").isNotNull()
-        & F.col("inode_id").isNotNull()
-    ).select("inode_id", "tx_id", "path", "namespace")
-    renames = expanded.where(
-        (F.col("op") == "RENAME") & F.col("inode_id").isNotNull()
-    ).select(
-        "inode_id", "tx_id", F.col("dest_path").alias("path"), "namespace"
-    )
-    deletes = expanded.where(F.col("op") == "DELETE").select(
-        "inode_id", "tx_id", F.lit(None).cast("string").alias("path"),
-        "namespace",
-    )
     w = Window.partitionBy("inode_id").orderBy(F.col("tx_id").desc())
     return (
-        sets.unionByName(renames)
-        .unionByName(deletes)
+        _path_history(expanded)
+        .where(F.col("inode_id").isNotNull())
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .select(

@@ -42,17 +42,33 @@ def event_log():
     )
 
 
-def test_stream_matches_batch_across_restart(spark, tmp_path, event_log):
+@pytest.fixture(scope="module")
+def error_log():
+    """The event_log shape plus the reconciler's error cases: a ghost
+    APPEND and an IGNORE-only inode (Unknown stubs, with and without an
+    error row), a duplicate ADD_FILE, ERROR/CONCAT_DELETE on live and
+    deleted files."""
+    return generate_events(
+        n_files=40, seed=7, with_dir_ops=False, with_duplicates=True,
+        with_anomalies=True, with_recreates=True,
+    )
+
+
+def test_stream_matches_batch_across_restart(spark, tmp_path, error_log):
+    """State, dead-letter rows and Unknown stubs of the stream (two
+    queries over one checkpoint) equal the batch fold's."""
+    from hcdc_spark.cdc.reconcile import reconcile_errors
+
     src = str(tmp_path / "segments")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
 
-    third = len(event_log) // 3
+    third = len(error_log) // 3
     write_event_segment(
-        spark, event_log[:third], src, "edits_0000001"
+        spark, error_log[:third], src, "edits_0000001"
     )
     write_event_segment(
-        spark, event_log[third : 2 * third], src, "edits_0000002"
+        spark, error_log[third : 2 * third], src, "edits_0000002"
     )
 
     q = run_cdc_pipeline(
@@ -62,7 +78,7 @@ def test_stream_matches_batch_across_restart(spark, tmp_path, event_log):
 
     # restart with more segments arriving — checkpoint must resume state
     write_event_segment(
-        spark, event_log[2 * third :], src, "edits_0000003"
+        spark, error_log[2 * third :], src, "edits_0000003"
     )
     # replay of segment 2 events inside 3 would be deduped by T4 anyway;
     # here segment 3 is new data after a cold restart.
@@ -71,12 +87,25 @@ def test_stream_matches_batch_across_restart(spark, tmp_path, event_log):
     )
     q2.awaitTermination(120)
 
-    batch_state = reconcile_batch(
-        events_df(spark, event_log), expand_dirs=False
-    ).drop("errors")
+    batch_fold = reconcile_batch(
+        events_df(spark, error_log), expand_dirs=False
+    )
     stream_state = latest_state(spark, out)
 
-    assert _comparable(stream_state) == _comparable(batch_state)
+    assert _comparable(stream_state) == _comparable(batch_fold.drop("errors"))
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    batch_errors = rows(reconcile_errors(batch_fold))
+    assert batch_errors  # the log plants errors
+    stream_errors = spark.read.parquet(f"{out}/errors")
+    assert rows(stream_errors.drop("batch_id")) == batch_errors
+
+    def stubs(df):
+        return rows(df.where(F.col("state") == "Unknown").select("inode_id"))
+
+    assert stubs(batch_fold) and stubs(stream_state) == stubs(batch_fold)
 
 
 def test_stream_duplicate_replay_is_noop(spark, tmp_path, event_log):
