@@ -37,8 +37,8 @@ side).
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from hcdc_spark.cdc import logs
 from hcdc_spark.cdc.snapshot import block_offsets_sql, file_type_of
 from hcdc_spark.functions.localframe import local_df
+from hcdc_spark.session import run_concurrently
 
 #: file_type → Spark batch reader format (EFileType,
 #: core/.../model/EFileType.java:5-11; ORC is declared there without a
@@ -68,17 +69,27 @@ _MAGIC = [
 ]
 
 
+#: Probe result per application id (a new session re-probes).
+_AVRO_AVAILABLE: dict = {}
+
+
 def avro_available(spark: SparkSession) -> bool:
-    """spark-avro is a separate jar in OSS Spark; probe once."""
-    try:
-        spark.read.format("avro").schema("x int").load(
-            "/nonexistent_hcdc_avro_probe"
-        ).schema
-        return True
-    except Exception as e:  # AnalysisException: FAILED_FIND_AVRO_SOURCE
-        return "FIND_AVRO" not in str(e) and "path does not exist" in str(
-            e
-        ).lower()
+    """spark-avro is a separate jar in OSS Spark; probe once per
+    application (the probe is a failing read analysis)."""
+    app = spark.sparkContext.applicationId
+    if app not in _AVRO_AVAILABLE:
+        try:
+            spark.read.format("avro").schema("x int").load(
+                "/nonexistent_hcdc_avro_probe"
+            ).schema
+            ok = True
+        except Exception as e:  # AnalysisException: FAILED_FIND_AVRO_SOURCE
+            msg = str(e)
+            ok = "FIND_AVRO" not in msg and "path does not exist" in (
+                msg.lower()
+            )
+        _AVRO_AVAILABLE[app] = ok
+    return _AVRO_AVAILABLE[app]
 
 
 def detect_format(spark: SparkSession, path_glob: str) -> DataFrame:
@@ -119,6 +130,9 @@ def detect_format(spark: SparkSession, path_glob: str) -> DataFrame:
 class MaterializeResult:
     pointers: DataFrame  # change_data rows written this call
     n_groups: int
+    #: ERROR_SCHEMA tuples, one per Finalized, entity-matched file with
+    #: no reader for its file_type (the caller's dead letter)
+    skipped: tuple = ()
 
 
 _POINTER_SCHEMA = (
@@ -172,7 +186,9 @@ def materialize(
     registry_dir: str | None = None,
     bucket_map: dict[str, str] | None = None,
 ) -> MaterializeResult:
-    """Replicate every Finalized, entity-matched file to staging.
+    """Replicate every Finalized, entity-matched file to staging. A
+    file whose ``file_type`` has no reader (READ_FORMATS; UNKNOWN
+    included) is not staged: it comes back on ``skipped``.
 
     One distributed read+write per (domain, entity, file_type) group.
     The group list (not the data) is collected to the driver — it is
@@ -192,8 +208,13 @@ def materialize(
         .collect()
     )
     groups: dict[tuple[str, str, str], list] = {}
+    skipped = []
     for r in todo:
         if r["file_type"] not in READ_FORMATS:
+            skipped.append((
+                r["last_tx_id"], r["inode_id"], r["path"], None,
+                f"materialize: no reader for file_type {r['file_type']}",
+            ))
             continue
         groups.setdefault(
             (r["domain"], r["entity"], r["file_type"]), []
@@ -223,10 +244,9 @@ def materialize(
     # driver loop. Results come back in deterministic (sorted) order.
     items = sorted(groups.items())
     if len(items) > 1:
-        with ThreadPoolExecutor(
-            max_workers=min(16, len(items))
-        ) as pool:
-            results = list(pool.map(one_group, items))
+        results = run_concurrently(
+            spark, [partial(one_group, i) for i in items], min(16, len(items))
+        )
     else:
         results = [one_group(i) for i in items]
 
@@ -247,7 +267,9 @@ def materialize(
         pdf.coalesce(1).write.mode("append").parquet(
             logs.POINTERS.at(staging_dir)
         )
-    return MaterializeResult(pointers=pdf, n_groups=len(groups))
+    return MaterializeResult(
+        pointers=pdf, n_groups=len(groups), skipped=tuple(skipped)
+    )
 
 
 def change_data(spark: SparkSession, staging_dir: str) -> DataFrame:

@@ -934,43 +934,21 @@ def _md5_band_sql(n_bands: int, rows_per_band: int) -> str:
     tags=("dedup", "lsh"),
 )
 def q73_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rows_per_band = Q73_HASHES // Q73_BANDS
+    from hcdc_spark.operators.similarity import _bucket_pairs
+
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     t = docs.select(
         "doc_id", F.array_sort(distinct_words("text")).alias("ws")
     ).where(F.size("ws") > 0)
 
     def md5_candidates(reps: DataFrame) -> DataFrame:
-        # signatures + banding over representatives (pure projections);
         # no size-ratio prefilter here — the md5 string pipeline is the
-        # oracle twin, and the prefilter is result-invariant anyway
-        sig = reps.select(
-            "doc_id", F.expr(_md5_signature_sql(Q73_HASHES)).alias("sig")
-        )
-        # Materialized once: left lazy, the a/b aliases below would each
-        # re-derive the md5 signature projection (the q29 lesson — see
-        # lsh_candidate_pairs(materialize_banded=...)). Deterministic
-        # expressions, so the oracle hash is unchanged.
-        banded = (
-            sig.select(
-                "doc_id",
-                F.expr(
-                    f"explode({_md5_band_sql(Q73_BANDS, rows_per_band)})"
-                ).alias("bb"),
-            )
-            .select("doc_id", "bb.band", "bb.bucket")
-            .localCheckpoint(eager=True)
-        )
-        return (
-            banded.alias("a")
-            .join(banded.alias("b"), ["band", "bucket"])
-            .where(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .distinct()
-        )
+        # oracle twin, and the prefilter is result-invariant anyway.
+        # Eager checkpoint: left lazy, both self-join sides re-derive the
+        # signature projection (the q29 lesson — see
+        # lsh_candidate_pairs(materialize_banded=...)).
+        banded = _doc_band_explode(reps).localCheckpoint(eager=True)
+        return _bucket_pairs(banded, "doc_id", "doc_a", "doc_b")
 
     return _collapse_verify_expand(t, md5_candidates)
 
@@ -980,11 +958,12 @@ def q73_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _doc_band_explode(docs_t: DataFrame) -> DataFrame:
     """(doc_id, band, bucket) rows under q73's md5-MinHash geometry
-    over a (doc_id, ws) frame — one implementation for the index
-    builder, the admit path and the ingest-batch prober, so the two
-    sides can never band differently. Empty word-sets are excluded
-    (q73's convention: their Jaccard is undefined, so they carry no
-    dedup evidence and are admitted without probing)."""
+    over a (doc_id, ws) frame — one implementation for q73's
+    representatives, the index builder, the admit path and the
+    ingest-batch prober, so no two sides can band differently. Empty
+    word-sets are excluded (q73's convention: their Jaccard is
+    undefined, so they carry no dedup evidence and are admitted
+    without probing)."""
     rows_per_band = Q73_HASHES // Q73_BANDS
     sig = docs_t.where(F.size("ws") > 0).select(
         "doc_id", F.expr(_md5_signature_sql(Q73_HASHES)).alias("sig")

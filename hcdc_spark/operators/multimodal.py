@@ -337,7 +337,7 @@ def _q43_oracle() -> str:
     tags=("multimodal", "similarity"),
 )
 def q43_media_embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hcdc_spark.operators.similarity import _dot, _norm2
+    from hcdc_spark.operators.similarity import _cosine_to
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     # localCheckpoint, not .cache(): the frame is reused within the
@@ -349,14 +349,11 @@ def q43_media_embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=True
     )
     q = emb.where(F.col("media_id") == 0).collect()[0]["embedding"]
-    qlit = F.array(*[F.lit(float(x)) for x in q])
-    qn = math.sqrt(sum(float(x) ** 2 for x in q))
-    e = F.col("embedding")
     return (
         emb.where(F.col("media_id") != 0)
         .select(
             "media_id",
-            (_dot(e, qlit) / (F.sqrt(_norm2(e)) * F.lit(qn))).alias("cos_sim"),
+            _cosine_to(F.col("embedding"), q).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), "media_id")
         .limit(5)

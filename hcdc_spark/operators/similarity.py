@@ -9,7 +9,10 @@
   the driver's bucket key). At 100 TB the bucket join replaces the full
   scan; planes are deterministic literals compiled into the plan.
 - embedding near-dup: all pairs above a cosine threshold via the same
-  exact arithmetic (bucketed in the LSH variant).
+  exact arithmetic (bucketed in the LSH variant). Every LSH near-dup
+  path is one pipeline: _band_explode (banding) → _bucket_pairs or the
+  band-index probe (candidates) → _cosine_verify (exact cosine); every
+  top-k re-rank is _cosine_to.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ from pyspark.sql import functions as F
 from hcdc_spark import fsutil
 from hcdc_spark.catalog import describe_formatted, load_tables
 from hcdc_spark.registry import Registry
+from hcdc_spark.session import run_concurrently
 
 REG = Registry()
 
@@ -72,8 +76,27 @@ def _argmax(payload: Column, score: Column, tie_id: Column) -> Column:
     return F.max_by(payload, F.struct(score, -tie_id))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (F.sqrt(_norm2(a)) * F.sqrt(_norm2(b)))
+def _cosine_to(v: Column, qv: list[float]) -> Column:
+    """Exact cosine of each row's vector ``v`` to one probe vector
+    ``qv`` — the re-rank of every top-k query. q34's oracle-proven
+    arithmetic (bit-identical to DuckDB's list_dot_product form): the
+    probe is a double-literal array and its norm sqrt(sum(x*x)) one
+    driver-side literal."""
+    qlit = F.array(*[F.lit(float(x)).cast("double") for x in qv])
+    qnorm = math.sqrt(sum(float(x) * float(x) for x in qv))
+    return _dot(v, qlit) / (F.sqrt(_norm2(v)) * F.lit(qnorm))
+
+
+def _normed(
+    df: DataFrame, id_as: str, v_as: str, n_as: str, *keep: Column
+) -> DataFrame:
+    """One side of a pair cosine: (id, ``keep``..., vector, sqrt-norm)
+    with the norm computed ONCE per row, never per pair — bit-identical
+    to the per-pair form, since na*nb multiplies the same doubles."""
+    return df.select(
+        F.col("vec_id").alias(id_as), *keep, _emb().alias(v_as),
+        F.sqrt(_norm2(_emb())).alias(n_as),
+    )
 
 
 def probe_vector(emb: DataFrame, vec_id: int = 0) -> list[float]:
@@ -137,18 +160,9 @@ QUAD_TWIN_VEC_ID_CAP = 100_000
 def q34_knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     qv = probe_vector(emb)  # pushed-filter point lookup, see the helper
-    qlit = F.array(*[F.lit(float(x)).cast("double") for x in qv])
-    qnorm = math.sqrt(sum(float(x) * float(x) for x in qv))
     return (
         emb.where(F.col("vec_id") != 0)
-        .select(
-            "vec_id",
-            "label",
-            (
-                _dot(_emb(), qlit)
-                / (F.sqrt(_norm2(_emb())) * F.lit(qnorm))
-            ).alias("cos_sim"),
-        )
+        .select("vec_id", "label", _cosine_to(_emb(), qv).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(10)
     )
@@ -179,21 +193,11 @@ def q34_knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q35_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     emb = emb.where(F.col("vec_id") < QUAD_TWIN_VEC_ID_CAP)  # shared twin cap
-    # Each side's sqrt-norm is computed ONCE per row before the pair
-    # join instead of once per PAIR: sqrt(norm2(x)) is deterministic,
-    # and na*nb multiplies the exact same doubles the inline form
-    # multiplied, so every cos_sim bit is unchanged — but the O(n²)
-    # pair stage now evaluates one O(d) aggregate (the dot) per pair
-    # instead of three.
-    a = emb.select(
-        F.col("vec_id").alias("vec_a"), _emb().alias("ea"),
-        F.sqrt(_norm2(_emb())).alias("na"),
-    )
-    b = emb.select(
-        F.col("vec_id").alias("vec_b"), _emb().alias("eb"),
-        F.sqrt(_norm2(_emb())).alias("nb"),
-    )
-    sim = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+    # per-row norms (_normed): the O(n²) pair stage evaluates one O(d)
+    # aggregate (the dot) per pair instead of three
+    a = _normed(emb, "vec_a", "ea", "na")
+    b = _normed(emb, "vec_b", "eb", "nb")
+    sim = _pair_cosine()
     # The threshold filter goes INTO the join condition, AFTER the
     # cheap id inequality: a `.where` above the join gets pushed into
     # the NLJ condition BEFORE `vec_a < vec_b`, so every one of the n²
@@ -263,40 +267,6 @@ def hyperplane_bands(
     )
 
 
-def ann_candidates(
-    emb: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    n_bands: int = N_BANDS,
-) -> DataFrame:
-    """Scale path for multi-query ANN: explode both sides to
-    (band_idx, key) rows and equi-join — candidates shuffle on the
-    band key, never a cross join. Returns distinct (query, candidate)
-    id pairs; the caller re-ranks exactly."""
-    def _explode(df: DataFrame, id_alias: str) -> DataFrame:
-        banded = hyperplane_bands(df, vec_col, n_bands)
-        pairs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"), F.col(f"band_{b}").alias("key")
-                )
-                for b in range(n_bands)
-            ]
-        )
-        return banded.select(
-            F.col("vec_id").alias(id_alias), F.explode(pairs).alias("bk")
-        ).select(id_alias, "bk.band", "bk.key")
-
-    e = _explode(emb, "cand_id")
-    q = _explode(queries, "query_id")
-    return (
-        e.join(q, ["band", "key"])
-        .where(F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id")
-        .distinct()
-    )
-
-
 @REG.add(
     "q36_ann_lsh",
     None,
@@ -310,8 +280,6 @@ def q36_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     banded = hyperplane_bands(emb)
     qrow = banded.where(F.col("vec_id") == 0).collect()[0]
-    qlit = F.array(*[F.lit(float(x)).cast("double") for x in qrow["embedding"]])
-    qnorm = math.sqrt(sum(float(x) ** 2 for x in qrow["embedding"]))
     any_band = None
     for b in range(N_BANDS):
         hit = F.col(f"band_{b}") == F.lit(qrow[f"band_{b}"])
@@ -319,11 +287,8 @@ def q36_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         banded.where(any_band & (F.col("vec_id") != 0))
         .select(
-            "vec_id",
-            "label",
-            (
-                _dot(_emb(), qlit) / (F.sqrt(_norm2(_emb())) * F.lit(qnorm))
-            ).alias("cos_sim"),
+            "vec_id", "label",
+            _cosine_to(_emb(), qrow["embedding"]).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(10)
@@ -347,32 +312,31 @@ Q89_BANDS = 4
 Q89_BITS = 4
 
 
+def _sign_band_sql(b: int, bits: int, elem) -> str:
+    """Band ``b``'s `md5('1|0|...')` bucket over component sign bits as
+    SQL text; ``elem(i)`` renders 1-based component ``i`` (element_at
+    in Spark SQL, [] in the DuckDB oracles)."""
+    cases = ", ".join(
+        f"CASE WHEN {elem(b * bits + j + 1)} >= 0 THEN '1' ELSE '0' END"
+        for j in range(bits)
+    )
+    return f"md5(concat_ws('|', {cases}))"
+
+
 def _sign_band_exprs(
     n_bands: int = Q89_BANDS, bits: int = Q89_BITS
 ) -> list[str]:
-    """Per-band `md5('1|0|...')` over component sign bits; identical
-    text renders in Spark SQL and DuckDB (element_at / [] are both
-    1-based)."""
-    out = []
-    for b in range(n_bands):
-        cases = ", ".join(
-            "CASE WHEN element_at(embedding, "
-            f"{b * bits + j + 1}) >= 0 THEN '1' ELSE '0' END"
-            for j in range(bits)
-        )
-        out.append(f"md5(concat_ws('|', {cases}))")
-    return out
+    """Per-band Spark SQL bucket expressions (_sign_band_sql)."""
+    return [
+        _sign_band_sql(b, bits, lambda i: f"element_at(embedding, {i})")
+        for b in range(n_bands)
+    ]
 
 
 def _q89_oracle() -> str:
     bands = ",\n           ".join(
-        "md5(concat_ws('|', "
-        + ", ".join(
-            f"CASE WHEN embedding[{b * Q89_BITS + j + 1}] >= 0 "
-            "THEN '1' ELSE '0' END"
-            for j in range(Q89_BITS)
-        )
-        + f")) AS mband_{b}"
+        f"{_sign_band_sql(b, Q89_BITS, lambda i: f'embedding[{i}]')}"
+        f" AS mband_{b}"
         for b in range(Q89_BANDS)
     )
     collide = " OR ".join(
@@ -405,7 +369,7 @@ def _q89_oracle() -> str:
     "cosine re-rank (q34 arithmetic, verified bit-identical "
     "cross-engine) picks top-10. Banding is a pure projection "
     "(no shuffle); at scale the any-band gate is an equi-join on the "
-    "short (band, bucket) key via ann_candidates, never a cross join.",
+    "short (band, bucket) key, never a cross join.",
     tags=("similarity", "lsh"),
 )
 def q89_ann_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -418,10 +382,6 @@ def q89_ann_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     qrow = banded.where(F.col("vec_id") == 0).collect()[0]
-    qlit = F.array(
-        *[F.lit(float(x)).cast("double") for x in qrow["embedding"]]
-    )
-    qnorm = math.sqrt(sum(float(x) ** 2 for x in qrow["embedding"]))
     any_band = None
     for b in range(Q89_BANDS):
         hit = F.col(f"mband_{b}") == F.lit(qrow[f"mband_{b}"])
@@ -429,11 +389,8 @@ def q89_ann_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         banded.where(any_band & (F.col("vec_id") != 0))
         .select(
-            "vec_id",
-            "label",
-            (
-                _dot(_emb(), qlit) / (F.sqrt(_norm2(_emb())) * F.lit(qnorm))
-            ).alias("cos_sim"),
+            "vec_id", "label",
+            _cosine_to(_emb(), qrow["embedding"]).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(10)
@@ -444,33 +401,143 @@ Q92_BANDS = 6
 Q92_BITS = 4
 
 
-def _q92_oracle() -> str:
-    def band(b: int, alias: str) -> str:
-        return (
-            "md5(concat_ws('|', "
-            + ", ".join(
-                f"CASE WHEN {alias}.embedding[{b * Q92_BITS + j + 1}] >= 0 "
-                "THEN '1' ELSE '0' END"
-                for j in range(Q92_BITS)
-            )
-            + "))"
-        )
+def _band_explode(
+    emb: DataFrame,
+    n_bands: int = Q92_BANDS,
+    bits: int = Q92_BITS,
+    geometry: str = "sign",
+) -> DataFrame:
+    """(vec_id, band, bucket) rows — the one banding projection of the
+    embedding near-dup family: q52, q92 and neardup_pairs_scaled band
+    their corpus with it, and the band index's build, append, rebuild
+    and probe run it too, so no two sides can band differently.
 
-    collide = " OR ".join(
-        f"{band(b, 'a')} = {band(b, 'b')}" for b in range(Q92_BANDS)
+    geometry="sign": the fixed q92 axis-aligned sign-bit/md5 shape —
+    oracle-expressible, but n_bands*bits <= EMB_DIM and bucket
+    occupancy grows with the corpus. geometry="hyperplane": random-
+    hyperplane bands (hyperplane_bands) with arbitrary width — the
+    SCALE shape; size n_bands/bits from corpus stats
+    (neardup_scaled_bits/neardup_scaled_bands) to pin occupancy.
+    Bucket keys normalize to string so the index schema is
+    geometry-independent."""
+    if geometry == "hyperplane":
+        emb = hyperplane_bands(emb, n_bands=n_bands, bits_per_band=bits)
+        keys = [F.col(f"band_{b}").cast("string") for b in range(n_bands)]
+    elif geometry == "sign":
+        keys = [F.expr(e) for e in _sign_band_exprs(n_bands, bits)]
+    else:
+        raise ValueError(f"unknown band geometry: {geometry!r}")
+    pairs = F.array(
+        *[
+            F.struct(F.lit(b).alias("band"), k.alias("bucket"))
+            for b, k in enumerate(keys)
+        ]
     )
-    sim = (
-        "list_dot_product(CAST(a.embedding AS DOUBLE[]), "
-        "CAST(b.embedding AS DOUBLE[])) / "
-        "(sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), "
-        "CAST(a.embedding AS DOUBLE[]))) * "
-        "sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), "
-        "CAST(b.embedding AS DOUBLE[]))))"
+    return emb.select("vec_id", F.explode(pairs).alias("bb")).select(
+        "vec_id", "bb.band", "bb.bucket"
     )
+
+
+def _bucket_pairs(
+    exploded: DataFrame, id_col: str = "vec_id", a: str = "vec_a",
+    b: str = "vec_b",
+) -> DataFrame:
+    """Candidate (a, b) id pairs of a banded frame ((id, band, bucket)
+    rows): the (band, bucket) self equi-join — candidates shuffle on
+    the short key, never a cross join — with a < b, deduplicated over
+    BARE id pairs, so a pair colliding in several bands collapses
+    before the vectors (or word sets) re-join by id and the shuffle
+    carries (id, id) rows. Callers checkpoint ``exploded`` first: left
+    lazy, each join side re-derives the band projection over the
+    corpus (measured 8.5 -> 6.3 s at sf0.1 on neardup_pairs_scaled's
+    plane folds)."""
+    x = exploded.select("band", "bucket", F.col(id_col).alias(a))
+    y = exploded.select("band", "bucket", F.col(id_col).alias(b))
+    return (
+        x.join(y, ["band", "bucket"])
+        .where(F.col(a) < F.col(b))
+        .select(a, b)
+        .distinct()
+    )
+
+
+def _pair_cosine() -> Column:
+    """Exact cosine between two _normed sides, (ea, na) and (eb, nb)."""
+    return _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+
+
+def _cosine_verify(
+    cand: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    a: str = "vec_a",
+    b: str = "vec_b",
+    threshold: float | None = None,
+) -> DataFrame:
+    """(a, b, cos_sim) for candidate id pairs ``cand`` — the exact
+    verify of every LSH near-dup path (q52, q92, q100 and the band
+    index probe). The vectors join back by id from ``left``/``right``
+    ((vec_id, embedding) frames) with each norm computed once per row
+    (_normed); ``threshold`` None keeps every candidate.
+
+    The ``right`` join is LEFT: a candidate whose id has no vector
+    there cannot be verified, and dropping it silently would
+    under-report near-dups, so it raises at execution time. Only the
+    band-index probe can hit this (its index and ``corpus`` drift
+    apart); the self-join paths draw both ids from one frame."""
+    checked = F.when(
+        F.col("eb").isNull(),
+        F.raise_error(
+            F.concat(
+                F.lit(f"band-index/corpus drift: indexed {b} "),
+                F.col(b).cast("string"),
+                F.lit(
+                    " has no row in the corpus frame — grow `corpus`"
+                    " with every batch admitted via append_band_index"
+                ),
+            )
+        ).cast("double"),
+    ).otherwise(_pair_cosine())
+    out = (
+        cand.join(_normed(left, a, "ea", "na"), a)
+        .join(_normed(right, b, "eb", "nb"), b, "left")
+        .select(a, b, checked.alias("cos_sim"))
+    )
+    if threshold is not None:
+        out = out.where(F.col("cos_sim") > threshold)
+    return out
+
+
+def _sign_collide_sql(x: str = "a", y: str = "b") -> str:
+    """q92's any-band md5 sign-bit collision predicate between two
+    table aliases — one builder for the q92/q103/c21 oracle family."""
+    def band(b: int, alias: str) -> str:
+        return _sign_band_sql(b, Q92_BITS, lambda i: f"{alias}.embedding[{i}]")
+
+    return " OR ".join(
+        f"{band(b, x)} = {band(b, y)}" for b in range(Q92_BANDS)
+    )
+
+
+def _cosine_sql(x: str = "a", y: str = "b") -> str:
+    """The q34-proven bit-identical exact-cosine text between two
+    table aliases."""
+    return (
+        f"list_dot_product(CAST({x}.embedding AS DOUBLE[]), "
+        f"CAST({y}.embedding AS DOUBLE[])) / "
+        f"(sqrt(list_dot_product(CAST({x}.embedding AS DOUBLE[]), "
+        f"CAST({x}.embedding AS DOUBLE[]))) * "
+        f"sqrt(list_dot_product(CAST({y}.embedding AS DOUBLE[]), "
+        f"CAST({y}.embedding AS DOUBLE[]))))"
+    )
+
+
+def _q92_oracle() -> str:
+    sim = _cosine_sql("a", "b")
     return f"""
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {sim} AS cos_sim
     FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    WHERE ({collide}) AND {sim} > 0.45
+    WHERE ({_sign_collide_sql("a", "b")}) AND {sim} > 0.45
     """
 
 
@@ -492,57 +559,9 @@ def _q92_oracle() -> str:
 )
 def q92_embedding_neardup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    banded = emb.select(
-        "vec_id",
-        "embedding",
-        *[
-            F.expr(e).alias(f"mband_{b}")
-            for b, e in enumerate(
-                _sign_band_exprs(n_bands=Q92_BANDS, bits=Q92_BITS)
-            )
-        ],
-    )
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"), F.col(f"mband_{b}").alias("bucket")
-            )
-            for b in range(Q92_BANDS)
-        ]
-    )
-    exploded = banded.select(
-        "vec_id", F.explode(pairs).alias("bb")
-    ).select("vec_id", "bb.band", "bb.bucket")
-    # materialize the band rows once: both candidate-join sides derive
-    # from `exploded`, and left lazy each side re-runs the md5 band
-    # projection over the corpus (the neardup_pairs_scaled fix; its
-    # comment has the measured 8.5 → 6.3 s rationale)
-    exploded = exploded.localCheckpoint(eager=False)
-    a = exploded.select("band", "bucket", F.col("vec_id").alias("vec_a"))
-    b = exploded.select("band", "bucket", F.col("vec_id").alias("vec_b"))
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-    # sqrt-norms once per row, not per candidate pair (bit-identical:
-    # na*nb multiplies the same doubles the inline form did — see q35)
-    ea = emb.select(
-        F.col("vec_id").alias("vec_a"), _emb().alias("ea"),
-        F.sqrt(_norm2(_emb())).alias("na"),
-    )
-    eb = emb.select(
-        F.col("vec_id").alias("vec_b"), _emb().alias("eb"),
-        F.sqrt(_norm2(_emb())).alias("nb"),
-    )
-    sim = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-    return (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .select("vec_a", "vec_b", sim.alias("cos_sim"))
-        .where(F.col("cos_sim") > 0.45)
-    )
+    # lazy checkpoint: both candidate-join sides read the band rows
+    exploded = _band_explode(emb).localCheckpoint(eager=False)
+    return _cosine_verify(_bucket_pairs(exploded), emb, emb, threshold=0.45)
 
 
 @REG.add(
@@ -559,52 +578,10 @@ def q92_embedding_neardup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q52_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    n_bands, bits = 6, 4
-    banded = hyperplane_bands(emb, n_bands=n_bands, bits_per_band=bits)
-    pairs = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), F.col(f"band_{b}").alias("key"))
-            for b in range(n_bands)
-        ]
-    )
-    exploded = banded.select(
-        "vec_id", F.explode(pairs).alias("bk")
-    ).select("vec_id", "bk.band", "bk.key")
-    # materialize the band rows once: both candidate-join sides derive
-    # from `exploded`, and left lazy each side re-runs the 24 plane
-    # folds over the corpus (the neardup_pairs_scaled fix; its comment
-    # has the measured 8.5 → 6.3 s rationale)
-    exploded = exploded.localCheckpoint(eager=False)
-    a = exploded.select("band", "key", F.col("vec_id").alias("vec_a"))
-    b = exploded.select("band", "key", F.col("vec_id").alias("vec_b"))
-    # distinct over bare id pairs — a pair colliding in several bands
-    # dedups BEFORE the embedding arrays enter the plan, so the shuffle
-    # carries (long, long) rows, not 2x64 doubles per row. Vectors join
-    # back afterwards by id (AQE picks broadcast when the vector table
-    # is small; at scale it's a shuffle join keyed on the id).
-    cand = (
-        a.join(b, ["band", "key"])
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-    # sqrt-norms once per row, not per candidate pair (bit-identical:
-    # na*nb multiplies the same doubles the inline form did — see q35)
-    ea = emb.select(
-        F.col("vec_id").alias("vec_a"), _emb().alias("ea"),
-        F.sqrt(_norm2(_emb())).alias("na"),
-    )
-    eb = emb.select(
-        F.col("vec_id").alias("vec_b"), _emb().alias("eb"),
-        F.sqrt(_norm2(_emb())).alias("nb"),
-    )
-    sim = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-    return (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .select("vec_a", "vec_b", sim.alias("cos_sim"))
-        .where(F.col("cos_sim") > 0.45)
-    )
+    exploded = _band_explode(
+        emb, n_bands=6, bits=4, geometry="hyperplane"
+    ).localCheckpoint(eager=False)  # lazy: both join sides read it
+    return _cosine_verify(_bucket_pairs(exploded), emb, emb, threshold=0.45)
 
 
 # ------------------------------------------------------------------ IVF
@@ -693,19 +670,11 @@ def q53_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         sum((a - b) ** 2 for a, b in zip(qv, c)) for c in cents
     ]
     probes = sorted(range(len(cents)), key=lambda i: d2[i])[:4]
-    qlit = F.array(*[F.lit(x) for x in qv])
-    qn = math.sqrt(sum(x * x for x in qv))
     return (
         assigned.where(
             F.col("cell").isin(probes) & (F.col("vec_id") != 0)
         )
-        .select(
-            "vec_id",
-            "label",
-            (
-                _dot(_emb(), qlit) / (F.sqrt(_norm2(_emb())) * F.lit(qn))
-            ).alias("cos_sim"),
-        )
+        .select("vec_id", "label", _cosine_to(_emb(), qv).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(10)
     )
@@ -766,21 +735,11 @@ def _q93_oracle() -> str:
 )
 def q93_ivf_ann_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    cents = (
-        emb.where(F.col("vec_id") % 7 == 1)
-        .orderBy("vec_id")
-        .limit(16)
-        .select(
-            F.col("vec_id").alias("cid"), _emb().alias("c"),
-            F.sqrt(_norm2(_emb())).alias("cn"),
-        )
+    cents = _normed(
+        emb.where(F.col("vec_id") % 7 == 1).orderBy("vec_id").limit(16),
+        "cid", "c", "cn",
     )
-    # sqrt-norms once per row/centroid, not per (vector, centroid)
-    # pair (bit-identical: vn*cn multiplies the same doubles — q35)
-    e = emb.select(
-        "vec_id", "label", _emb().alias("v"),
-        F.sqrt(_norm2(_emb())).alias("vn"),
-    )
+    e = _normed(emb, "vec_id", "v", "vn", F.col("label"))
     s = _dot(F.col("v"), F.col("c")) / (F.col("vn") * F.col("cn"))
     scored = e.crossJoin(F.broadcast(cents)).select(
         "vec_id", "label", "v", "cid", s.alias("s")
@@ -808,16 +767,10 @@ def q93_ivf_ann_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         r["cid"] for r in sorted(qscores, key=lambda r: (-r["s"], r["cid"]))
     ][:4]
     qv = probe_vector(emb)  # pushed-filter point lookup, see the helper
-    qlit = F.array(*[F.lit(float(x)).cast("double") for x in qv])
-    qn = math.sqrt(sum(float(x) * float(x) for x in qv))
     return (
         cells.where(F.col("cell").isin(probes) & (F.col("vec_id") != 0))
         .select(
-            "vec_id",
-            "label",
-            (
-                _dot(F.col("v"), qlit) / (F.sqrt(_norm2(F.col("v"))) * F.lit(qn))
-            ).alias("cos_sim"),
+            "vec_id", "label", _cosine_to(F.col("v"), qv).alias("cos_sim")
         )
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(10)
@@ -959,8 +912,6 @@ def q66_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("documents", "embeddings"))
     docs, emb = t["documents"], t["embeddings"]
     qv = probe_vector(emb)  # pushed-filter point lookup, see the helper
-    qlit = F.array(*[F.lit(float(x)).cast("double") for x in qv])
-    qnorm = math.sqrt(sum(float(x) * float(x) for x in qv))
     terms = F.array(*[F.lit(w) for w in HYBRID_TERMS])
     kw = docs.select(
         "doc_id",
@@ -978,10 +929,7 @@ def q66_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         kw.join(emb, kw.doc_id == emb.vec_id)
         .select(
-            "doc_id", "kw_score",
-            (
-                _dot(_emb(), qlit) / (F.sqrt(_norm2(_emb())) * F.lit(qnorm))
-            ).alias("cos_sim"),
+            "doc_id", "kw_score", _cosine_to(_emb(), qv).alias("cos_sim")
         )
         .orderBy(
             F.col("kw_score").desc(), F.col("cos_sim").desc(), "doc_id"
@@ -1045,20 +993,10 @@ def q68_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("vec_id")
         .collect()
     ]
-    a = ivf_assign(emb, cents).select(
-        "vec_id", F.col("cell"), _emb().alias("v")
-    )
-    # sqrt-norms once per row, not per within-cell pair (bit-identical:
-    # na*nb multiplies the same doubles the inline form did — see q35)
-    left = a.select(
-        F.col("vec_id").alias("lo"), F.col("cell").alias("cl"),
-        F.col("v").alias("va"), F.sqrt(_norm2(F.col("v"))).alias("na"),
-    )
-    right = a.select(
-        F.col("vec_id").alias("hi"), F.col("cell").alias("cr"),
-        F.col("v").alias("vb"), F.sqrt(_norm2(F.col("v"))).alias("nb"),
-    )
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    a = ivf_assign(emb, cents).select("vec_id", "cell", "embedding")
+    left = _normed(a, "lo", "ea", "na", F.col("cell").alias("cl"))
+    right = _normed(a, "hi", "eb", "nb", F.col("cell").alias("cr"))
+    cos = _pair_cosine()
     # The tau filter goes INTO the join condition, AFTER the cheap id
     # inequality (same reorder as q35): pushed from a `.where` it lands
     # BEFORE `lo < hi`, making every ordered same-cell pair pay the
@@ -1285,20 +1223,11 @@ def _q99_oracle() -> str:
 )
 def q99_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    cents = (
-        emb.where(F.col("vec_id") % 11 == 3)
-        .orderBy("vec_id")
-        .limit(KM_K)
-        .select(
-            F.col("vec_id").alias("cid"), _emb().alias("c"),
-            F.sqrt(_norm2(_emb())).alias("cn"),
-        )
+    cents = _normed(
+        emb.where(F.col("vec_id") % 11 == 3).orderBy("vec_id").limit(KM_K),
+        "cid", "c", "cn",
     )
-    # sqrt-norms once per row/centroid, not per (vector, centroid)
-    # pair (bit-identical: vn*cn multiplies the same doubles — q35)
-    e = emb.select(
-        "vec_id", _emb().alias("v"), F.sqrt(_norm2(_emb())).alias("vn")
-    )
+    e = _normed(emb, "vec_id", "v", "vn")
     s = _dot(F.col("v"), F.col("c")) / (F.col("vn") * F.col("cn"))
     scored = e.crossJoin(F.broadcast(cents)).select(
         "vec_id", "v", "cid", s.alias("s")
@@ -1542,7 +1471,7 @@ def read_corpus_stats(
     "parameters); recall vs exact pairs on a planted near-dup corpus "
     "is gated in tests/test_text_dedup_similarity.py. Scale shape: "
     "banding is a scan-side projection (no UDF), candidates shuffle "
-    "on the (band, key) pair, pairs dedup as bare (long, long) rows "
+    "on the (band, bucket) pair, pairs dedup as bare (long, long) rows "
     "before vectors join back by id. The registry entry surfaces the "
     "TOP-20 colliding pairs by exact cosine (TakeOrdered, explicit id "
     "tiebreak) so the driver's rows-only record is non-empty on the "
@@ -1576,8 +1505,6 @@ def neardup_pairs_scaled(
     threshold: float | None = NEARDUP_SCALED_THRESHOLD,
     n_bands: int | None = None,
     target_bucket_rows: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     n_rows: int | None = None,
 ) -> DataFrame:
     """All (a, b, cos_sim) pairs above ``threshold`` (None = every
@@ -1594,52 +1521,16 @@ def neardup_pairs_scaled(
     bits = neardup_scaled_bits(n, target_bucket_rows)
     if n_bands is None:
         n_bands = neardup_scaled_bands(bits)
-    banded = hyperplane_bands(
-        emb, vec_col=vec_col, n_bands=n_bands, bits_per_band=bits
+    # the band rows are materialized once (lazily) for both join sides
+    # — also the 100 TB shape: the LSH index is built once and
+    # persisted, the pair join reads (id, band, bucket) rows, never the
+    # vectors
+    exploded = _band_explode(
+        emb, n_bands=n_bands, bits=bits, geometry="hyperplane"
+    ).localCheckpoint(eager=False)
+    return _cosine_verify(
+        _bucket_pairs(exploded), emb, emb, threshold=threshold
     )
-    pairs = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), F.col(f"band_{b}").alias("key"))
-            for b in range(n_bands)
-        ]
-    )
-    exploded = banded.select(
-        id_col, F.explode(pairs).alias("bk")
-    ).select(id_col, "bk.band", "bk.key")
-    # materialize the band index once (lazy): the self-join would
-    # otherwise evaluate the n_bands*bits plane folds on BOTH sides —
-    # measured 8.5 -> 6.3 s at sf0.1. This is also the 100 TB shape:
-    # the LSH index is built once and persisted, the pair join reads
-    # (id, band, key) rows, never the vectors.
-    exploded = exploded.localCheckpoint(eager=False)
-    a = exploded.select("band", "key", F.col(id_col).alias("vec_a"))
-    b = exploded.select("band", "key", F.col(id_col).alias("vec_b"))
-    cand = (
-        a.join(b, ["band", "key"])
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-    # sqrt-norms once per row, not per candidate pair (bit-identical:
-    # na*nb multiplies the same doubles the inline form did — q35)
-    varr = F.col(vec_col).cast("array<double>")
-    ea = emb.select(
-        F.col(id_col).alias("vec_a"), varr.alias("ea"),
-        F.sqrt(_norm2(varr)).alias("na"),
-    )
-    eb = emb.select(
-        F.col(id_col).alias("vec_b"), varr.alias("eb"),
-        F.sqrt(_norm2(varr)).alias("nb"),
-    )
-    sim = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-    out = (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .select("vec_a", "vec_b", sim.alias("cos_sim"))
-    )
-    if threshold is not None:
-        out = out.where(F.col("cos_sim") > threshold)
-    return out
 
 
 # ------------------------------------------------------------- IVF-PQ
@@ -2087,11 +1978,7 @@ def write_ivfpq_index(
     # complete index (a failed build can leave partial artifacts;
     # rebuild and compaction write into a fsutil.swap_dir stage, which
     # lands only when this returns).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        for fut in [pool.submit(w) for w in writes]:
-            fut.result()
+    run_concurrently(spark, writes)
     _write_ivfpq_meta(
         spark, path, spark.read.parquet(codes).count(), n_cells
     )
@@ -2139,14 +2026,9 @@ def ivfpq_index_search(
     n_cells=16 explicitly below the crossover."""
     fsutil.recover_swap(path)
     q = [float(x) for x in query_vec]
-    qarr = F.array(*[F.lit(x).cast("double") for x in q])
     cents = spark.read.parquet(f"{path}/centroids")
     qcs = cents.select(
-        "ccid",
-        (
-            _dot(qarr, F.col("c"))
-            / (F.sqrt(_norm2(qarr)) * F.sqrt(_norm2(F.col("c"))))
-        ).alias("cs"),
+        "ccid", _cosine_to(F.col("c"), q).alias("cs")
     ).collect()  # bounded artifact: n_cells centroid scores (16 for
     # the oracle geometry; ~sqrt(n) under ivfpq_scaled_cells — 32k
     # rows at a billion vectors, still a driver-side triviality)
@@ -2243,62 +2125,6 @@ def q102_ivfpq_index_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------- persisted LSH band index + ingest dedup
-
-
-def _band_explode(
-    emb: DataFrame,
-    n_bands: int = Q92_BANDS,
-    bits: int = Q92_BITS,
-    geometry: str = "sign",
-) -> DataFrame:
-    """(vec_id, band, bucket) rows — the scan-side projection both the
-    index builder and the ingest-batch prober run (one implementation
-    so the two sides can never band differently).
-
-    geometry="sign": the fixed q92 axis-aligned sign-bit/md5 shape —
-    oracle-expressible, but n_bands*bits <= EMB_DIM and bucket
-    occupancy grows with the corpus. geometry="hyperplane": random-
-    hyperplane bands (hyperplane_bands) with arbitrary width — the
-    SCALE shape; size n_bands/bits from corpus stats
-    (neardup_scaled_bits/neardup_scaled_bands) to pin occupancy.
-    Bucket keys normalize to string so the index schema is
-    geometry-independent."""
-    if geometry == "hyperplane":
-        banded = hyperplane_bands(emb, n_bands=n_bands, bits_per_band=bits)
-        pairs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.col(f"band_{b}").cast("string").alias("bucket"),
-                )
-                for b in range(n_bands)
-            ]
-        )
-        return banded.select(
-            "vec_id", F.explode(pairs).alias("bb")
-        ).select("vec_id", "bb.band", "bb.bucket")
-    if geometry != "sign":
-        raise ValueError(f"unknown band geometry: {geometry!r}")
-    banded = emb.select(
-        "vec_id",
-        *[
-            F.expr(e).alias(f"mband_{b}")
-            for b, e in enumerate(
-                _sign_band_exprs(n_bands=n_bands, bits=bits)
-            )
-        ],
-    )
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"), F.col(f"mband_{b}").alias("bucket")
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return banded.select("vec_id", F.explode(pairs).alias("bb")).select(
-        "vec_id", "bb.band", "bb.bucket"
-    )
 
 
 def write_band_index(
@@ -2695,70 +2521,8 @@ def incremental_neardup_pairs(
     cand = _band_candidates(
         spark, index_table, nbx, meta, "vec_new", "vec_old"
     )
-    # sqrt-norms once per row, not per candidate pair (bit-identical:
-    # na*nb multiplies the same doubles the inline form did — q35);
-    # nb is NULL for a missing corpus row, but that case raises below
-    ea = new_batch.select(
-        F.col("vec_id").alias("vec_new"), _emb().alias("ea"),
-        F.sqrt(_norm2(_emb())).alias("na"),
-    )
-    eb = corpus.select(
-        F.col("vec_id").alias("vec_old"), _emb().alias("eb"),
-        F.sqrt(_norm2(_emb())).alias("nb"),
-    )
-    sim = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-    checked = F.when(
-        F.col("eb").isNull(),
-        F.raise_error(
-            F.concat(
-                F.lit("band-index/corpus drift: indexed vec_old "),
-                F.col("vec_old").cast("string"),
-                F.lit(
-                    " has no row in the corpus frame — grow `corpus`"
-                    " with every batch admitted via append_band_index"
-                ),
-            )
-        ).cast("double"),
-    ).otherwise(sim)
-    out = (
-        cand.join(ea, "vec_new")
-        .join(eb, "vec_old", "left")
-        .select("vec_new", "vec_old", checked.alias("cos_sim"))
-    )
-    if threshold is not None:
-        out = out.where(F.col("cos_sim") > threshold)
-    return out
-
-
-def _sign_collide_sql(x: str = "a", y: str = "b") -> str:
-    """q92's any-band md5 sign-bit collision predicate between two
-    table aliases — one builder for the q92/q103/c21 oracle family."""
-    def band(b: int, alias: str) -> str:
-        return (
-            "md5(concat_ws('|', "
-            + ", ".join(
-                f"CASE WHEN {alias}.embedding[{b * Q92_BITS + j + 1}] >= 0 "
-                "THEN '1' ELSE '0' END"
-                for j in range(Q92_BITS)
-            )
-            + "))"
-        )
-
-    return " OR ".join(
-        f"{band(b, x)} = {band(b, y)}" for b in range(Q92_BANDS)
-    )
-
-
-def _cosine_sql(x: str = "a", y: str = "b") -> str:
-    """The q34-proven bit-identical exact-cosine text between two
-    table aliases."""
-    return (
-        f"list_dot_product(CAST({x}.embedding AS DOUBLE[]), "
-        f"CAST({y}.embedding AS DOUBLE[])) / "
-        f"(sqrt(list_dot_product(CAST({x}.embedding AS DOUBLE[]), "
-        f"CAST({x}.embedding AS DOUBLE[]))) * "
-        f"sqrt(list_dot_product(CAST({y}.embedding AS DOUBLE[]), "
-        f"CAST({y}.embedding AS DOUBLE[]))))"
+    return _cosine_verify(
+        cand, new_batch, corpus, "vec_new", "vec_old", threshold
     )
 
 
@@ -2853,14 +2617,17 @@ def append_ivfpq_delta(
     ivfpq_index_search over the merged table serves old + new vectors
     with the same partition-pruned plan.
 
-    BATCH-ID DISCIPLINE: a batch_id names ONE delta. A second append
-    under the same batch_id is taken for a replay of it and replaces
-    only the cells it touches, so a different delta — or the same
-    vec_id with a changed embedding that lands in another cell —
-    leaves the first one's rows beside it, and compaction keeps both
-    (they tie at the same gen). Stamp each delta with a strictly
-    increasing batch_id (c20's pattern: the stream's own micro-batch
-    id), the rule compact_band_index states for the band index.
+    BATCH-ID DISCIPLINE: a batch_id names ONE delta, and it is
+    enforced: a second append under a used batch_id must carry every
+    vec_id already at that gen (a replay does), or it raises
+    ValueError before writing anything — the overwrite would otherwise
+    drop the earlier delta's rows in every cell it touches. A replay
+    that changes embeddings still replaces only the cells it touches,
+    so a vec_id that moved cells keeps its old row beside the new one
+    and compaction keeps both (they tie at the same gen). Stamp each
+    delta with a strictly increasing batch_id (c20's pattern: the
+    stream's own micro-batch id), the rule compact_band_index states
+    for the band index.
 
     The growth statistic is appended BEFORE the codes land, as a
     (delta count, NULL) row, the order
@@ -2871,6 +2638,22 @@ def append_ivfpq_delta(
     empties meta, and the append never reads it."""
     _check_gen(batch_id, "append_ivfpq_delta")
     fsutil.recover_swap(path)  # never recreate codes/ beside a stage
+    # partition-pruned read of the ids already at this gen
+    lost = (
+        spark.read.parquet(f"{path}/codes")
+        .where(F.col("gen") == batch_id)
+        .select("vec_id")
+        .join(delta.select("vec_id"), "vec_id", "left_anti")
+        .limit(5)
+        .collect()
+    )
+    if lost:
+        raise ValueError(
+            f"append_ivfpq_delta: batch_id {batch_id} already names a "
+            "delta holding vec_ids this one lacks (e.g. "
+            f"{sorted(r['vec_id'] for r in lost)}); its overwrite would "
+            "drop them — append a different delta under a new batch_id"
+        )
     delta.agg(
         F.countDistinct("vec_id").cast("bigint").alias("n_rows"),
         F.lit(None).cast("int").alias("n_cells"),
@@ -2971,9 +2754,9 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> int:
 
     Append-only streams (c20's shape) never create duplicates, so for
     them compaction is purely the small-files/partition-count fold.
-    Two rows of one vec_id at the SAME gen (a batch_id reused for a
-    different delta, see append_ivfpq_delta's batch-id discipline)
-    both survive, and meta's exact n_rows counts both.
+    Two rows of one vec_id at the SAME gen (a replay that moved the
+    vector to another cell, see append_ivfpq_delta's batch-id
+    discipline) both survive, and meta's exact n_rows counts both.
 
     Rename-as-commit, so fenced to atomic-rename filesystems
     (file:/hdfs:) up front — on object storage use the catalog-based

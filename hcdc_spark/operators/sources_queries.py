@@ -12,13 +12,14 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hcdc_spark.catalog import load_tables
 from hcdc_spark.registry import Registry
+from hcdc_spark.session import run_concurrently
 
 REG = Registry()
 
@@ -238,8 +239,7 @@ def bucketed_join_frame(
     work = tempfile.mkdtemp(prefix="hcdc_bucketed_")
     names = ("hcdc_b_orders", "hcdc_b_lineitem")
 
-    def _write(spec) -> None:
-        name, df, key = spec
+    def _write(name: str, df: DataFrame, key: str) -> None:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         (
             df.write.bucketBy(n_buckets, key)
@@ -260,20 +260,14 @@ def bucketed_join_frame(
     # metastore serializes — and occasionally fails — concurrent DDL,
     # so serialize these writes if the session ever gains
     # catalogImplementation=hive.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        list(
-            pool.map(
-                _write,
-                (
-                    (names[0],
-                     t["orders"].select("o_orderkey", "o_orderpriority"),
-                     "o_orderkey"),
-                    (names[1],
-                     t["lineitem"].select("l_orderkey", "l_quantity"),
-                     "l_orderkey"),
-                ),
-            )
-        )
+    run_concurrently(spark, [
+        partial(_write, names[0],
+                t["orders"].select("o_orderkey", "o_orderpriority"),
+                "o_orderkey"),
+        partial(_write, names[1],
+                t["lineitem"].select("l_orderkey", "l_quantity"),
+                "l_orderkey"),
+    ])
     joined = (
         spark.table(names[0])
         .join(

@@ -47,6 +47,30 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int = 8):
         spark.conf.set(key, cur)
 
 
+def run_concurrently(
+    spark: SparkSession, calls, max_workers: int | None = None
+) -> list:
+    """Run independent zero-argument Spark calls from a driver thread
+    pool and return their results in call order (the first failure
+    raises). The scheduler interleaves the jobs' tasks, so a short job
+    runs beside a long one instead of queueing behind it.
+
+    Each call runs through ``pyspark.util.inheritable_thread_target``
+    with ``spark``: a pool thread is a fresh JVM thread that does not
+    inherit the caller's local properties or session tags, so without
+    it the jobs it submits lose the caller's job group, description and
+    scheduler pool, and ``statusTracker().getJobIdsForGroup`` misses
+    them."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    calls = [inheritable_thread_target(spark)(c) for c in calls]
+    with ThreadPoolExecutor(max_workers=max_workers or len(calls)) as pool:
+        futures = [pool.submit(c) for c in calls]
+        return [f.result() for f in futures]
+
+
 def _cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 

@@ -11,7 +11,8 @@ the same dataflow is ONE Structured Streaming query:
         ──► foreachBatch:
               • append file_state log + error dead-letter (T25)
               • materialize changed Finalized entities → staging
-                parquet + change_data pointers (T14-T17)
+                parquet + change_data pointers (T14-T17); a matched
+                file with no reader for its type is a dead-letter row
 
 Crash recovery is the checkpoint; replay idempotence is the T4 guard +
 latest-wins reads of every appended log (hcdc_spark.cdc.logs). With
@@ -64,6 +65,7 @@ def run_cdc_pipeline(
     from hcdc_spark import fsutil
     from hcdc_spark.cdc import logs
     from hcdc_spark.cdc.materialize import materialize
+    from hcdc_spark.functions.localframe import local_df
     from hcdc_spark.streaming.reconciler import (
         reconcile_stream,
         state_log_sink,
@@ -88,10 +90,16 @@ def run_cdc_pipeline(
     updates = reconcile_stream(events, deleted_ttl_ms=deleted_ttl_ms)
 
     def _materialize_batch(batch_df: DataFrame, batch_id: int) -> None:
-        materialize(
+        res = materialize(
             spark, batch_df, staging_dir, batch_tag=f"b{batch_id:010d}",
             target_format=target_format, registry_dir=registry_dir,
         )
+        if res.skipped:  # matched files with no reader: dead letter
+            local_df(
+                spark, [(batch_id, *e) for e in res.skipped],
+                "batch_id int, tx_id bigint, inode_id bigint, path string,"
+                " op string, error string",  # the <out>/errors columns
+            ).write.mode("append").parquet(os.path.join(out_dir, "errors"))
 
     sink = state_log_sink(
         out_dir, extra=None if staging_dir is None else _materialize_batch

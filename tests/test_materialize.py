@@ -220,6 +220,25 @@ def test_avro_gate(spark):
     assert M.avro_available(spark) is False
 
 
+def test_avro_gate_probes_once_per_application(spark, monkeypatch):
+    """The probe is a failing read analysis; every AVRO materialize
+    group, read_avro and write_table asks, so only the first call in
+    an application may run it."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    first = M.avro_available(spark)
+    reads = []
+    real_format = DataFrameReader.format
+
+    def counting_format(self, source):
+        reads.append(source)
+        return real_format(self, source)
+
+    monkeypatch.setattr(DataFrameReader, "format", counting_format)
+    assert M.avro_available(spark) is first
+    assert reads == []
+
+
 def test_bucket_per_domain_mapping(spark, tmp_path):
     # K4: a mapped domain routes to its own staging root; unmapped
     # domains fall back; the pointer table stays central.

@@ -25,7 +25,7 @@ RULES = [
 ]
 
 
-def _close_events(tx0, path, inode, size=1000):
+def _close_events(tx0, path, inode, size=1000, file_type="PARQUET"):
     """ADD_FILE + CLOSE pair for one file."""
     blk = {
         "block_id": inode * 10, "size": size, "block_size": 1 << 20,
@@ -39,7 +39,7 @@ def _close_events(tx0, path, inode, size=1000):
                     mode="New"),
         empty_event(tx_id=tx0 + 1, op="CLOSE", ts=1_700_000_000_000 + tx0 + 1,
                     namespace="ns1", path=path, inode_id=inode, length=size,
-                    file_type="PARQUET", blocks=[blk], mode="New"),
+                    file_type=file_type, blocks=[blk], mode="New"),
     ]
 
 
@@ -151,3 +151,34 @@ def test_pipeline_end_to_end_with_restart(spark, tmp_path, fake_hdfs):
     from hcdc_spark.cdc.materialize import latest_schemas
 
     assert latest_schemas(spark, sreg).count() == 2
+
+
+def test_matched_file_without_reader_reaches_dead_letter(
+    spark, tmp_path, fake_hdfs
+):
+    """A Finalized, entity-matched file whose type has no reader is not
+    staged, and it is not dropped without a word either: the batch's
+    materialize step appends one dead-letter row naming the type."""
+    root = fake_hdfs["root"]
+    src, out = str(tmp_path / "segments"), str(tmp_path / "out")
+    staging = str(tmp_path / "staging")
+    rules = _rules(root) + [
+        DomainFilter("sales", "notes", root + "/data/sales", r"note.*\.txt")
+    ]
+    note = f"{root}/data/sales/note_1.txt"
+    ev = _close_events(1, fake_hdfs["cust"], 101)
+    ev += _close_events(3, note, 104, file_type="UNKNOWN")
+    write_event_segment(spark, ev, src, "edits_0000001")
+    run_cdc_pipeline(
+        spark, src, out, str(tmp_path / "ckpt"), rules, staging,
+        available_now=True,
+    ).awaitTermination(180)
+
+    assert read_entity(spark, staging, "sales", "customers").count() == 2
+    ptr = change_data(spark, staging)
+    assert ptr.where(F.col("src_path") == note).count() == 0
+    dead = spark.read.parquet(os.path.join(out, "errors")).collect()
+    assert [
+        (r["batch_id"], r["tx_id"], r["inode_id"], r["path"]) for r in dead
+    ] == [(0, 4, 104, note)]
+    assert "UNKNOWN" in dead[0]["error"]

@@ -1107,24 +1107,36 @@ def test_compact_ivfpq_index_refuses_unorderable_batches(spark, sf_dir,
 def test_compact_ivfpq_index_same_gen_reappend_into_another_cell(
     spark, sf_dir, tmp_path
 ):
-    """A batch_id names one delta. Re-append vec_ids under the SAME
-    batch_id with changed embeddings and the dynamic partition
-    overwrite replaces only the cells the second append touches (the
-    first delta's other rows there go with them): a vec_id that moved
-    cells keeps both rows, compaction keeps both
-    (they tie at one gen) and meta's exact n_rows counts every row it
-    returns. The same update under a LATER batch_id folds each vec_id
-    back to one row."""
+    """A batch_id names one delta, and a second append under it must
+    carry every vec_id already there. A different delta (here part of
+    the first, with changed embeddings) is refused before anything is
+    written — its dynamic partition overwrite would drop the first
+    delta's rows in every cell it touches. A replay of ALL the ids
+    with changed embeddings goes through and replaces only the cells
+    it touches: a vec_id that moved to another cell keeps both rows,
+    compaction keeps both (they tie at one gen) and meta's exact
+    n_rows counts every row it returns. The same update under a LATER
+    batch_id folds each vec_id back to one row."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = emb.where(F.col("vec_id") % 10 != 7)
     delta = emb.where(F.col("vec_id") % 10 == 7)
-    upd = delta.where(F.col("vec_id") % 20 == 17).withColumn(
-        "embedding", F.reverse("embedding")
-    )
+    upd_all = delta.withColumn("embedding", F.reverse("embedding"))
+    upd = upd_all.where(F.col("vec_id") % 20 == 17)
     idx = str(tmp_path / "ivfpq")
     similarity.write_ivfpq_index(spark, base, idx)
     similarity.append_ivfpq_delta(spark, delta, idx, batch_id=1)
-    similarity.append_ivfpq_delta(spark, upd, idx, batch_id=1)
+
+    def snapshot():
+        codes = spark.read.parquet(f"{idx}/codes").collect()
+        return sorted(tuple(r) for r in codes), spark.read.parquet(
+            f"{idx}/meta"
+        ).count()
+
+    before = snapshot()
+    with pytest.raises(ValueError, match="batch_id 1"):
+        similarity.append_ivfpq_delta(spark, upd, idx, batch_id=1)
+    assert snapshot() == before
+    similarity.append_ivfpq_delta(spark, upd_all, idx, batch_id=1)
 
     def rows_per_id():
         codes = spark.read.parquet(f"{idx}/codes")
@@ -1135,18 +1147,41 @@ def test_compact_ivfpq_index_same_gen_reappend_into_another_cell(
         }
 
     moved = {i for i, n in rows_per_id().items() if n == 2}
-    assert moved, "no re-appended vec_id changed cell"
+    assert moved, "no re-appended vec_id kept a row in another cell"
     n = similarity.compact_ivfpq_index(spark, idx)
     after = rows_per_id()
     assert {i for i, c in after.items() if c == 2} == moved
     assert n == sum(after.values())
     assert similarity.read_ivfpq_meta(spark, idx)["n_rows"] == n
 
-    similarity.append_ivfpq_delta(spark, upd, idx, batch_id=2)
+    similarity.append_ivfpq_delta(spark, upd_all, idx, batch_id=2)
     n = similarity.compact_ivfpq_index(spark, idx)
     after = rows_per_id()
     assert set(after.values()) == {1}
     assert n == len(after)
+
+
+def test_write_ivfpq_index_artifact_jobs_keep_the_job_group(
+    spark, sf_dir, tmp_path
+):
+    """write_ivfpq_index submits its three artifact writes from a
+    thread pool. Every job of the build must count in the caller's
+    job group, so a job-group profile of it is complete: no job the
+    build runs may come back group-less."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    # job ids only grow: a group-less id above this one is a new job
+    # (the tracker forgets old jobs, so compare no older ids)
+    last = max(st.getJobIdsForGroup(None), default=-1)
+    sc.setJobGroup("ivfpq-build-jobs", "write_ivfpq_index")
+    try:
+        similarity.write_ivfpq_index(spark, emb, str(tmp_path / "ivfpq"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [j for j in st.getJobIdsForGroup(None) if j > last] == []
+    assert st.getJobIdsForGroup("ivfpq-build-jobs")
 
 
 def test_ivfpq_failed_statistic_write_keeps_index_usable(
