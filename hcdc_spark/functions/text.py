@@ -50,6 +50,14 @@ def count_in_set(col: Column | str, vocab: tuple[str, ...]) -> Column:
     ).cast("long")
 
 
+def quality_gate() -> Column:
+    """The ingest quality gate over ``text``: at least 5 words and at
+    least one stopword (q30's signals as integer predicates). Used by
+    q98, the crawl gates (c26, c30) and the crawl benches.
+    DuckDB: duck_quality_gate()"""
+    return (word_count("text") >= 5) & (count_in_set("text", STOPWORDS) >= 1)
+
+
 def sum_word_lengths(col: Column | str) -> Column:
     """DuckDB: list_sum(list_transform(words, w -> len(w)))"""
     return F.aggregate(
@@ -66,3 +74,9 @@ def duck_words(expr: str = "text") -> str:
 def duck_in_set(vocab: tuple[str, ...], words_expr: str) -> str:
     lst = " OR ".join(f"w = '{v}'" for v in vocab)
     return f"len(list_filter({words_expr}, w -> {lst}))"
+
+
+def duck_quality_gate() -> str:
+    """DuckDB rendering of quality_gate()."""
+    ws = duck_words("text")
+    return f"len({ws}) >= 5 AND {duck_in_set(STOPWORDS, ws)} >= 1"

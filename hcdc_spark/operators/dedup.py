@@ -32,6 +32,15 @@ _W = duck_words("text")
 _DW = f"list_distinct({_W})"
 
 
+def _jaccard_sql() -> str:
+    """Exact word-set Jaccard between table aliases ``x`` and ``y``
+    (each with a ``ws`` list) — the DuckDB verify of every word-set
+    near-dup oracle; bit-identical to the Spark size(array_intersect)
+    form."""
+    inter = "len(list_intersect(x.ws, y.ws))"
+    return f"CAST({inter} AS DOUBLE) / (len(x.ws) + len(y.ws) - {inter})"
+
+
 @REG.add(
     "q27_dedup_exact",
     """
@@ -166,10 +175,9 @@ def exact_jaccard_pairs(docs: DataFrame, threshold: float) -> DataFrame:
     WITH t AS (
       SELECT doc_id, lang, {_DW} AS ws FROM documents
     ), pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             CAST(len(list_intersect(a.ws, b.ws)) AS DOUBLE)
-               / (len(a.ws) + len(b.ws) - len(list_intersect(a.ws, b.ws))) AS jaccard
-      FROM t a JOIN t b ON a.lang = b.lang AND a.doc_id < b.doc_id
+      SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
+             {_jaccard_sql()} AS jaccard
+      FROM t x JOIN t y ON x.lang = y.lang AND x.doc_id < y.doc_id
     )
     SELECT doc_a, doc_b, jaccard
     FROM pairs WHERE jaccard >= 0.95
@@ -204,92 +212,55 @@ N_BANDS = 6  # rows per band = 12 → P(candidate) = 1-(1-J^12)^6
 # (1-(1-0.95^12)^6 = 0.99 vs 0.987 for 4x8). Signatures are a pure
 # projection, so 72 hashes instead of 32 costs per-rep CPU only.
 _PRIME = (1 << 31) - 1  # Mersenne 2^31-1: a*h stays < 2^62 (ANSI-safe)
+#: The exact-Jaccard bar of the MinHash family: q29's and q73's verify,
+#: the doc gates (incremental_doc_neardup, batch_self_neardup_keep_first)
+#: and their oracles. J >= t implies min(n)/max(n) >= t, so q29's
+#: size-ratio prefilter uses the same bound.
+MINHASH_JACCARD = 0.9
 
 
-def _minhash_parts_sql(n_hashes: int = N_HASHES) -> str:
-    """The 72 per-hash ``array_min(transform(hs, ...))`` SQL fragments
-    over a column named ``hs`` (words already folded to ``pmod(w, p)``).
-    Shared by the projection form below and q29's checkpoint-time
-    signature computation so the two can never drift."""
+def _minhash_parts_sql() -> str:
+    """The N_HASHES per-hash ``array_min(transform(hs, ...))`` SQL
+    fragments over a column named ``hs`` (words already folded to
+    ``pmod(w, p)``): h_i(w) = (a_i * (w mod p) + b_i) mod p over the
+    31-bit Mersenne prime, per-doc min — a PURE PROJECTION (no
+    explode, no groupBy, no shuffle). Built as ONE SQL string, not
+    N_HASHES py4j Column trees — with 72 hash functions the tree form
+    costs visible driver time per call."""
     import random
 
     rng = random.Random(0xC0FFEE)
     coeffs = [
         (rng.randrange(1, _PRIME), rng.randrange(0, _PRIME))
-        for _ in range(n_hashes)
+        for _ in range(N_HASHES)
     ]
-    # stage 1: hash words once; stage 2: n_hashes mins over `hs`
+    # stage 1: hash words once; stage 2: N_HASHES mins over `hs`
     return ", ".join(
         f"array_min(transform(hs, h -> pmod({a}L * h + {b}L, {_PRIME}L)))"
         for (a, b) in coeffs
     )
 
 
-def _signatures_from_hashed_ws(
-    ws_df: DataFrame, n_hashes: int = N_HASHES, keep_size: bool = False
-) -> DataFrame:
-    """(doc_id, ws array<long> of xxhash64 word hashes) → (doc_id, sig
-    array<long>): h_i(w) = (a_i * (w mod p) + b_i) mod p over the
-    31-bit Mersenne prime, per-doc min — computed as a PURE PROJECTION:
-
-        sig[i] = array_min(transform(ws, w -> (a_i*(w mod p)+b_i) mod p))
-
-    No explode, no groupBy, no shuffle — the signature never leaves the
-    partition its document sits in. The explode+32-min-agg formulation
-    this replaces shuffled every token and compiled a 32-aggregate
-    codegen class (~8s JIT on first run); at 100 TB the shuffle it
-    avoids is O(corpus tokens).
-
-    Built as ONE SQL string, not n_hashes py4j Column trees — with 72
-    hash functions the tree form costs visible driver time per call
-    (the round-1 lesson from hyperplane_bands/ivf_assign)."""
-    parts = _minhash_parts_sql(n_hashes)
-    staged = ws_df.select(
-        "doc_id",
-        F.expr(f"transform(ws, w -> pmod(w, {_PRIME}L))").alias("hs"),
-        F.size("ws").alias("n"),
-    )
-    cols = ["doc_id", F.expr(f"array({parts})").alias("sig")]
-    if keep_size:
-        cols.append(F.col("n"))
-    return staged.select(*cols)
-
-
-def lsh_candidate_pairs(
-    sig: DataFrame,
-    n_bands: int = N_BANDS,
-    size_ratio: float | None = None,
-    n_hashes: int = N_HASHES,
-    materialize_banded: bool = True,
-) -> DataFrame:
-    """Band the signatures and join within buckets → candidate pairs.
+def lsh_candidate_pairs(sig: DataFrame) -> DataFrame:
+    """q29's candidate generator: band (doc_id, sig, n) rows into
+    N_BANDS xxhash64 buckets and join within buckets → (doc_a, doc_b)
+    candidate pairs.
 
     Bucket key = xxhash64 of the band's slice (long, not md5 string —
-    shorter shuffle rows, no codec hop).
+    shorter shuffle rows, no codec hop). Pairs with min(n)/max(n) <
+    MINHASH_JACCARD are dropped *inside the bucket join*, before the
+    distinct and long before any word-set arrays move: Jaccard >= t
+    implies size ratio >= t, so with the verification threshold this
+    is a pure-win prefilter — at 100 TB it is the difference between
+    shipping arrays for every bucket collision and only for
+    size-compatible ones.
 
-    ``n_hashes`` MUST equal the width of the ``sig`` arrays actually
-    passed in: the band expressions index sig[0..n_hashes-1] literally,
-    and an out-of-range index silently evaluates to NULL (non-ANSI
-    array access) — with the old hardcoded global, signatures built
-    with a smaller n_hashes made every all-NULL band slice hash to one
-    shared bucket, turning the candidate set into an O(n^2) cross
-    product (review r4).
-
-    ``size_ratio``: if given, ``sig`` must carry an ``n`` column (set
-    size) and pairs with min(n)/max(n) < ratio are dropped *inside the
-    bucket join*, before the distinct and long before any word-set
-    arrays move. Jaccard >= t implies size ratio >= t, so with the
-    verification threshold this is a pure-win prefilter — at 100 TB it
-    is the difference between shipping arrays for every bucket
-    collision and only for size-compatible ones.
-    """
-    if n_hashes % n_bands:
-        raise ValueError(
-            f"n_hashes={n_hashes} not divisible by n_bands={n_bands}"
-        )
-    rows_per_band = n_hashes // n_bands
-    carry = ["doc_id", "n"] if size_ratio is not None else ["doc_id"]
-    # one SQL string, not n_bands py4j struct trees (see signature note)
+    ``sig`` is already materialized (q29 computes signatures inside the
+    collapse checkpoint), so the banded frame stays lazy: re-deriving 6
+    xxhash64 bucket keys from a checkpointed sig array is cheaper than
+    another blocking job."""
+    rows_per_band = N_HASHES // N_BANDS
+    # one SQL string, not N_BANDS py4j struct trees (see _minhash_parts_sql)
     bands_sql = ", ".join(
         "struct({bi} AS band, xxhash64({cols}) AS bucket)".format(
             bi=bi,
@@ -298,47 +269,33 @@ def lsh_candidate_pairs(
                 for j in range(rows_per_band)
             ),
         )
-        for bi in range(n_bands)
+        for bi in range(N_BANDS)
     )
-    # ``materialize_banded`` (default on): localCheckpoint the banded
-    # frame before the self-join. Left lazy, the a- and b-sides each
-    # re-derive the whole upstream subtree — for a caller whose ``sig``
-    # is a lazy 72-hash projection that means computing the signatures
-    # twice per query (measured 0.54 s doubled at sf0.1 before round
-    # 14). The banded rows are narrow (2 longs + int per band), same
-    # eager-once pattern as _collapse_verify_expand's grp. Callers
-    # whose ``sig`` is already materialized (q29 computes signatures
-    # inside the collapse checkpoint) pass False: re-deriving 6
-    # xxhash64 bucket keys from a checkpointed sig array is cheaper
-    # than another blocking job.
     banded = sig.select(
-        *carry,
-        F.expr(f"explode(array({bands_sql}))").alias("bb"),
-    ).select(*carry, "bb.band", "bb.bucket")
-    if materialize_banded:
-        banded = banded.localCheckpoint(eager=True)
-    ren_a = {"doc_id": "doc_a", "n": "n_a"}
-    ren_b = {"doc_id": "doc_b", "n": "n_b"}
+        "doc_id", "n", F.expr(f"explode(array({bands_sql}))").alias("bb"),
+    ).select("doc_id", "n", "bb.band", "bb.bucket")
     a = banded.select(
-        "band", "bucket", *[F.col(c).alias(ren_a[c]) for c in carry]
+        "band", "bucket", F.col("doc_id").alias("doc_a"),
+        F.col("n").alias("n_a"),
     )
     b = banded.select(
-        "band", "bucket", *[F.col(c).alias(ren_b[c]) for c in carry]
+        "band", "bucket", F.col("doc_id").alias("doc_b"),
+        F.col("n").alias("n_b"),
     )
-    joined = a.join(b, ["band", "bucket"]).where(
-        F.col("doc_a") < F.col("doc_b")
-    )
-    if size_ratio is not None:
-        joined = joined.where(
-            F.least("n_a", "n_b").cast("double")
-            / F.greatest("n_a", "n_b")
-            >= size_ratio
+    return (
+        a.join(b, ["band", "bucket"])
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .where(
+            F.least("n_a", "n_b").cast("double") / F.greatest("n_a", "n_b")
+            >= MINHASH_JACCARD
         )
-    return joined.select("doc_a", "doc_b").distinct()
+        .select("doc_a", "doc_b")
+        .distinct()
+    )
 
 
 def _collapse_verify_expand(
-    t: DataFrame, candidates_fn, threshold: float = 0.9, prep_fn=None
+    t: DataFrame, candidates_fn, prep_fn=None
 ) -> DataFrame:
     """Shared tail of the MinHash-LSH pipelines (q29 xxhash64 mode /
     q73 md5 mode) — only the candidate generator differs.
@@ -347,10 +304,11 @@ def _collapse_verify_expand(
     1. collapse identical word-sets to one representative (J=1 by
        definition; groupBy on the set — one shuffle);
     2. ``candidates_fn(reps)`` → (doc_a, doc_b) candidate rep pairs;
-    3. exact Jaccard verification at rep level (array_intersect —
-       element type agnostic: longs in q29, strings in q73). No sketch
-       prefilter: the intersect costs O(|ws|) per pair, about the same
-       as a signature-compare estimate, and skipping it drops a join.
+    3. exact Jaccard (>= MINHASH_JACCARD) verification at rep level
+       (array_intersect — element type agnostic: longs in q29, strings
+       in q73). No sketch prefilter: the intersect costs O(|ws|) per
+       pair, about the same as a signature-compare estimate, and
+       skipping it drops a join.
        Revisit if |ws| grows to 1000s of tokens per doc;
     4. expand back to member pairs (membership is doc-count scale).
 
@@ -398,7 +356,7 @@ def _collapse_verify_expand(
             F.col("shared").cast("double")
             / (F.size("ws_a") + F.size("ws_b") - F.col("shared")),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= MINHASH_JACCARD)
         .select(F.col("doc_a").alias("rep_a"), F.col("doc_b").alias("rep_b"),
                 "jaccard")
     )
@@ -458,8 +416,7 @@ def q29_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (~0.54 s of q29's 2.0 s at sf0.1). Computing it lazily inside the
     # candidate generator re-evaluates it on each side of the band
     # self-join, so it rides along in the one collapse checkpoint via
-    # prep_fn — computed exactly once per query (same signatures as
-    # _signatures_from_hashed_ws: shared _minhash_parts_sql).
+    # prep_fn — computed exactly once per query.
     def prep(g: DataFrame) -> DataFrame:
         staged = g.select(
             "*", F.expr(f"transform(ws, w -> pmod(w, {_PRIME}L))").alias("hs")
@@ -474,11 +431,7 @@ def q29_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _collapse_verify_expand(
         t,
-        lambda reps: lsh_candidate_pairs(
-            reps.select("doc_id", "sig", "n"),
-            size_ratio=0.9,
-            materialize_banded=False,
-        ),
+        lambda reps: lsh_candidate_pairs(reps.select("doc_id", "sig", "n")),
         prep_fn=prep,
     )
 
@@ -699,11 +652,9 @@ def q91_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE t AS (
       SELECT doc_id, lang, {_DW} AS ws FROM documents
     ), pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM t a JOIN t b ON a.lang = b.lang AND a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.ws, b.ws)) AS DOUBLE)
-              / (len(a.ws) + len(b.ws) - len(list_intersect(a.ws, b.ws)))
-            >= 0.95
+      SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
+      FROM t x JOIN t y ON x.lang = y.lang AND x.doc_id < y.doc_id
+      WHERE {_jaccard_sql()} >= 0.95
     ), edges AS (
       SELECT doc_a AS a, doc_b AS b FROM pairs
       UNION
@@ -864,21 +815,22 @@ Q73_HASHES = N_HASHES
 Q73_BANDS = N_BANDS
 
 
-def _md5_signature_sql(n_hashes: int) -> str:
+def _md5_signature_sql() -> str:
     """sig = array(min(md5('0:'||w)), min(md5('1:'||w)), ...) as ONE SQL
     string (the q29 lesson: n py4j Column trees cost visible driver
     time)."""
     parts = ", ".join(
         f"array_min(transform(ws, w -> md5(concat('{i}:', w))))"
-        for i in range(n_hashes)
+        for i in range(Q73_HASHES)
     )
     return f"array({parts})"
 
 
-def _md5_band_sql(n_bands: int, rows_per_band: int) -> str:
+def _md5_band_sql() -> str:
     """bands = array(struct(band, md5(sig[0]||'|'||...)), ...)."""
+    rows_per_band = Q73_HASHES // Q73_BANDS
     entries = []
-    for b in range(n_bands):
+    for b in range(Q73_BANDS):
         joined = ", ".join(
             f"sig[{b * rows_per_band + j}]" for j in range(rows_per_band)
         )
@@ -888,36 +840,78 @@ def _md5_band_sql(n_bands: int, rows_per_band: int) -> str:
     return f"array({', '.join(entries)})"
 
 
-@REG.add(
-    "q73_minhash_lsh_md5",
-    f"""
-    WITH t AS (
-      SELECT doc_id, {_DW} AS ws FROM documents
-      WHERE len({_DW}) > 0
-    ), tok AS (
+# ------------------------------------------- the MinHash oracle fragments
+# One DuckDB rendering per step of the word-set near-dup family; every
+# oracle (q73, q105 and the crawl gates c22/c26/c30-c33) composes its
+# text from these, so each stays an independent SQL formulation with
+# one spelling per step.
+
+
+def _minhash_bands_sql() -> str:
+    """The ``tok``, ``mh`` and ``bands`` CTEs: q73's md5 MinHash/LSH
+    banding of a CTE ``t`` (doc_id, ws) into (doc_id, band, bucket)
+    rows — min of md5('i:' || w) per hash, md5 of the '|'-joined band
+    slice per bucket (the DuckDB form of _doc_band_explode)."""
+    rows = Q73_HASHES // Q73_BANDS
+    return f"""tok AS (
       SELECT doc_id, unnest(ws) AS w FROM t
     ), mh AS (
       SELECT doc_id, i, MIN(md5(CAST(i AS VARCHAR) || ':' || w)) AS h
       FROM tok CROSS JOIN range({Q73_HASHES}) r(i)
       GROUP BY doc_id, i
     ), bands AS (
-      SELECT doc_id, i // {Q73_HASHES // Q73_BANDS} AS band,
+      SELECT doc_id, i // {rows} AS band,
              md5(string_agg(h, '|' ORDER BY i)) AS bucket
-      FROM mh GROUP BY doc_id, i // {Q73_HASHES // Q73_BANDS}
-    ), cand AS (
+      FROM mh GROUP BY doc_id, i // {rows}
+    )"""
+
+
+def _gate_sql(i: int, new_ids: str, old_ids: str) -> str:
+    """The corpus-gate CTEs ``cand_<i>`` and ``rejected_<i>``: docs of
+    the id query ``new_ids`` that share a band bucket with a doc of
+    ``old_ids`` and reach MINHASH_JACCARD against it (the DuckDB form
+    of incremental_doc_neardup). Needs ``t`` and _minhash_bands_sql."""
+    return f"""cand_{i} AS (
+      SELECT DISTINCT a.doc_id AS doc_new, o.doc_id AS doc_old
+      FROM bands a JOIN bands o
+        ON a.band = o.band AND a.bucket = o.bucket
+      WHERE a.doc_id IN ({new_ids})
+        AND o.doc_id IN ({old_ids})
+    ), rejected_{i} AS (
+      SELECT DISTINCT doc_new FROM cand_{i}
+      JOIN t x ON doc_new = x.doc_id
+      JOIN t y ON doc_old = y.doc_id
+      WHERE {_jaccard_sql()} >= {MINHASH_JACCARD}
+    )"""
+
+
+def _keep_first_sql(batch: str) -> str:
+    """The ids q105's keep-first rule rejects within the relation
+    ``batch`` (doc_id, ws): every doc reaching MINHASH_JACCARD with a
+    lower-id doc, over ALL pairs (the DuckDB form of
+    batch_self_neardup_keep_first — a hash match also certifies the
+    engine's banding recall)."""
+    return f"""
+      SELECT DISTINCT y.doc_id
+      FROM {batch} x JOIN {batch} y ON x.doc_id < y.doc_id
+      WHERE {_jaccard_sql()} >= {MINHASH_JACCARD}"""
+
+
+@REG.add(
+    "q73_minhash_lsh_md5",
+    f"""
+    WITH t AS (
+      SELECT doc_id, {_DW} AS ws FROM documents
+      WHERE len({_DW}) > 0
+    ), {_minhash_bands_sql()}, cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b
         ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ), sized AS (
-      SELECT doc_id, len(ws) AS n, ws FROM t
     )
-    SELECT doc_a, doc_b,
-           CAST(len(list_intersect(x.ws, y.ws)) AS DOUBLE)
-             / (x.n + y.n - len(list_intersect(x.ws, y.ws))) AS jaccard
-    FROM cand JOIN sized x ON doc_a = x.doc_id
-              JOIN sized y ON doc_b = y.doc_id
-    WHERE CAST(len(list_intersect(x.ws, y.ws)) AS DOUBLE)
-            / (x.n + y.n - len(list_intersect(x.ws, y.ws))) >= 0.9
+    SELECT doc_a, doc_b, {_jaccard_sql()} AS jaccard
+    FROM cand JOIN t x ON doc_a = x.doc_id
+              JOIN t y ON doc_b = y.doc_id
+    WHERE {_jaccard_sql()} >= {MINHASH_JACCARD}
     """,
     doc="MinHash(72) + LSH(6 bands x 12 rows) near-dup pairs with exact "
     "Jaccard >= 0.9, md5-hash mode — the oracle re-derives the FULL "
@@ -945,8 +939,8 @@ def q73_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         # no size-ratio prefilter here — the md5 string pipeline is the
         # oracle twin, and the prefilter is result-invariant anyway.
         # Eager checkpoint: left lazy, both self-join sides re-derive the
-        # signature projection (the q29 lesson — see
-        # lsh_candidate_pairs(materialize_banded=...)).
+        # 72-hash signature projection (measured 2x the signature cost
+        # in q29 before round 14).
         banded = _doc_band_explode(reps).localCheckpoint(eager=True)
         return _bucket_pairs(banded, "doc_id", "doc_a", "doc_b")
 
@@ -959,20 +953,16 @@ def q73_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _doc_band_explode(docs_t: DataFrame) -> DataFrame:
     """(doc_id, band, bucket) rows under q73's md5-MinHash geometry
     over a (doc_id, ws) frame — one implementation for q73's
-    representatives, the index builder, the admit path and the
-    ingest-batch prober, so no two sides can band differently. Empty
-    word-sets are excluded (q73's convention: their Jaccard is
-    undefined, so they carry no dedup evidence and are admitted
-    without probing)."""
-    rows_per_band = Q73_HASHES // Q73_BANDS
+    representatives, the index builder, the admit path, the
+    ingest-batch prober and the within-batch self-dedup, so no two
+    sides can band differently. Empty word-sets are excluded (q73's
+    convention: their Jaccard is undefined, so they carry no dedup
+    evidence and are admitted without probing)."""
     sig = docs_t.where(F.size("ws") > 0).select(
-        "doc_id", F.expr(_md5_signature_sql(Q73_HASHES)).alias("sig")
+        "doc_id", F.expr(_md5_signature_sql()).alias("sig")
     )
     return sig.select(
-        "doc_id",
-        F.expr(f"explode({_md5_band_sql(Q73_BANDS, rows_per_band)})").alias(
-            "bb"
-        ),
+        "doc_id", F.expr(f"explode({_md5_band_sql()})").alias("bb")
     ).select("doc_id", "bb.band", "bb.bucket")
 
 
@@ -1028,7 +1018,7 @@ def incremental_doc_neardup(
     new_t: DataFrame,
     index_table: str,
     corpus_t: DataFrame,
-    threshold: float = 0.9,
+    threshold: float = MINHASH_JACCARD,
 ) -> DataFrame:
     """Dedup-on-ingest for TEXT: (doc_new, doc_old, jaccard) pairs
     between a NEW batch and the already-indexed corpus with exact
@@ -1060,37 +1050,36 @@ def incremental_doc_neardup(
         spark, index_table, nbx, read_band_index_meta(spark, index_table),
         "doc_new", "doc_old",
     )
-    a = new_t.select(F.col("doc_id").alias("doc_new"),
-                     F.col("ws").alias("ws_a"))
-    b = corpus_t.select(F.col("doc_id").alias("doc_old"),
-                        F.col("ws").alias("ws_b"))
+    return _jaccard_verify(
+        cand, new_t, corpus_t, "doc_new", "doc_old", threshold
+    )
+
+
+def _jaccard_verify(
+    cand: DataFrame, left: DataFrame, right: DataFrame, a: str, b: str,
+    threshold: float,
+) -> DataFrame:
+    """(a, b, jaccard) for candidate id pairs ``cand`` whose exact
+    word-set Jaccard reaches ``threshold`` — the word-set family's side
+    of similarity._verify_join (the one LEFT join + drift check): the
+    word sets join back by id from the (doc_id, ws) frames ``left`` and
+    ``right``."""
+    from hcdc_spark.operators.similarity import _verify_join
+
     shared = F.size(F.array_intersect("ws_a", "ws_b"))
     jac = shared.cast("double") / (
         F.size("ws_a") + F.size("ws_b") - shared
     )
-    checked = F.when(
-        F.col("ws_b").isNull(),
-        F.raise_error(
-            F.concat(
-                F.lit("doc-band-index/corpus drift: indexed doc_old "),
-                F.col("doc_old").cast("string"),
-                F.lit(
-                    " has no row in the corpus frame — grow `corpus_t`"
-                    " with every batch admitted via append_doc_band_index"
-                ),
-            )
-        ).cast("double"),
-    ).otherwise(jac)
-    return (
-        cand.join(a, "doc_new")
-        .join(b, "doc_old", "left")
-        .select("doc_new", "doc_old", checked.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _verify_join(
+        cand,
+        left.select(F.col("doc_id").alias(a), F.col("ws").alias("ws_a")),
+        right.select(F.col("doc_id").alias(b), F.col("ws").alias("ws_b")),
+        a, b, jac, "jaccard", "append_doc_band_index",
+    ).where(F.col("jaccard") >= threshold)
 
 
 def batch_self_neardup_keep_first(
-    t_b: DataFrame, threshold: float = 0.9
+    t_b: DataFrame, threshold: float = MINHASH_JACCARD
 ) -> DataFrame:
     """Within-batch near-dup self-dedup for an ingest batch — the
     pre-gate step the corpus probes structurally cannot provide: the
@@ -1101,75 +1090,48 @@ def batch_self_neardup_keep_first(
     the batch first and the pair never co-admits.
 
     Input: (doc_id, ws, ...) rows; returns the SURVIVORS (all columns
-    kept). Rule: a doc is rejected iff it has exact word-set Jaccard
-    >= ``threshold`` with ANY lower-id doc in the same batch —
-    keep-first-by-doc_id as a MONOTONE rule: deterministic,
+    kept, ``ws`` sorted). Rule: a doc is rejected iff it has exact
+    word-set Jaccard >= ``threshold`` with ANY lower-id doc in the same
+    batch — keep-first-by-doc_id as a MONOTONE rule: deterministic,
     order-free, and resolved by one banded candidate join + one verify
     pass (no iteration). It differs from greedy chain resolution
     exactly when a doc's only lower match was itself rejected (1~2,
     2~3, 1≁3: greedy keeps 3, this rule rejects it) — the
     conservative direction for an ingest gate, and the SQL-expressible
-    one (a greedy chain is an iterated fixpoint).
+    one (a greedy chain is an iterated fixpoint). Empty word sets carry
+    no evidence (q73's convention) and are never rejected.
 
-    Plan shape: the batch bands only ITSELF (q73's md5 signature
-    pipeline — pure projections), candidates come from the
-    (band, bucket) self-join restricted to a.doc_id < b.doc_id, and
-    the exact-Jaccard verify joins the word sets back. Batch-sized
+    Plan shape: q73's pipeline on the batch alone — _doc_band_explode
+    bands it, similarity._bucket_pairs pairs it under
+    doc_keep < doc_dup, _jaccard_verify checks the pairs. Batch-sized
     everywhere: at 100 TB the batch is a micro-batch, so this is a
     per-trigger O(|batch| log |batch|)-ish step, never corpus-touching.
 
-    The batch is materialized ONCE with its 72-hash md5 signatures
-    (localCheckpoint): ``t_b`` is referenced by the banding chain, the
-    verify pass, and the final anti-join, and the band self-join
-    references its own input twice — left lazy, the tokenize upstream
-    and the md5 signature projection (72 md5 calls per word — the
-    single most expensive expression in the gate) are re-evaluated per
-    reference. Deterministic on batch content, so replay semantics and
-    oracle hashes are unchanged (round 14).
+    ONE eager checkpoint, of the band rows, evaluates the 72-hash md5
+    signatures (72 md5 calls per word — the single most expensive
+    expression in the gate) once per call; left lazy, each self-join
+    side would re-evaluate them. The sorted batch is lazily
+    checkpointed, so that same job materializes it too: the verify,
+    the anti-join and the caller's later reads of the returned frame
+    (_crawl_probe, _crawl_admit) scan it instead of re-running the
+    tokenize upstream. The sort pins the md5 operand order, exactly as
+    q73 does; signatures are permutation-invariant, and the result is
+    deterministic on batch content, so replay semantics and oracle
+    hashes are unchanged.
     """
-    rows_per_band = Q73_HASHES // Q73_BANDS
-    # q73's signature SQL names its input array `ws` — sort in place
-    # under the same name (signatures are permutation-invariant, the
-    # sort just pins the md5 operand order for determinism, exactly as
-    # q73 does). Carry every input column so survivors keep schema.
-    t_c = (
-        t_b.withColumn("ws", F.array_sort("ws"))
-        .withColumn("sig", F.expr(_md5_signature_sql(Q73_HASHES)))
-        .localCheckpoint(eager=True)
+    from hcdc_spark.operators.similarity import _bucket_pairs
+
+    t_c = t_b.withColumn("ws", F.array_sort("ws")).localCheckpoint(
+        eager=False
     )
-    banded = t_c.select(
-        "doc_id",
-        F.expr(
-            f"explode({_md5_band_sql(Q73_BANDS, rows_per_band)})"
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bucket"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_keep"),
-            F.col("b.doc_id").alias("doc_dup"),
-        )
-        .distinct()
-    )
-    w = t_c.select("doc_id", "ws")
-    x = w.select(F.col("doc_id").alias("doc_keep"),
-                 F.col("ws").alias("ws_a"))
-    y = w.select(F.col("doc_id").alias("doc_dup"),
-                 F.col("ws").alias("ws_b"))
-    shared = F.size(F.array_intersect("ws_a", "ws_b"))
-    jac = shared.cast("double") / (
-        F.size("ws_a") + F.size("ws_b") - shared
-    )
+    banded = _doc_band_explode(t_c).localCheckpoint(eager=True)
+    cand = _bucket_pairs(banded, "doc_id", "doc_keep", "doc_dup")
     rejected = (
-        cand.join(x, "doc_keep")
-        .join(y, "doc_dup")
-        .where(jac >= threshold)
+        _jaccard_verify(cand, t_c, t_c, "doc_keep", "doc_dup", threshold)
         .select(F.col("doc_dup").alias("doc_id"))
         .distinct()
     )
-    return t_c.drop("sig").join(rejected, "doc_id", "left_anti")
+    return t_c.join(rejected, "doc_id", "left_anti")
 
 
 # planted-copy offset: 1,000,000 (c30's convention), safely above any
@@ -1189,12 +1151,7 @@ _Q105_BATCH = f"""
     "q105_batch_self_dedup",
     f"""
     WITH batch AS ({_Q105_BATCH}
-    ), rejected AS (
-      SELECT DISTINCT b.doc_id
-      FROM batch a JOIN batch b ON a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.ws, b.ws)) AS DOUBLE)
-            / (len(a.ws) + len(b.ws)
-               - len(list_intersect(a.ws, b.ws))) >= 0.9
+    ), rejected AS ({_keep_first_sql("batch")}
     )
     SELECT doc_id, lang, len(ws) AS n_words FROM batch
     WHERE doc_id NOT IN (SELECT doc_id FROM rejected)
@@ -1232,7 +1189,7 @@ def q105_batch_self_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.size("ws") > 0)
     )
     return (
-        batch_self_neardup_keep_first(t_b, threshold=0.9)
+        batch_self_neardup_keep_first(t_b)
         .select(
             "doc_id", "lang", F.size("ws").cast("long").alias("n_words")
         )

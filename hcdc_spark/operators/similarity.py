@@ -466,6 +466,50 @@ def _pair_cosine() -> Column:
     return _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
 
 
+def _verify_join(
+    cand: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    a: str,
+    b: str,
+    pair: Column,
+    out: str,
+    append_fn: str,
+) -> DataFrame:
+    """(a, b, ``out``) for candidate id pairs ``cand`` — the exact
+    verify step of both near-dup families (_cosine_verify for
+    embeddings, dedup._jaccard_verify for word sets). ``left`` and
+    ``right`` are the two sides projected to (id, columns ``pair``
+    reads), keyed ``a`` and ``b``.
+
+    The ``right`` join is LEFT: a candidate whose id has no row there
+    cannot be verified, and dropping it silently would under-report
+    near-dups, so it raises at execution time (its first non-key
+    column is null exactly then). Only the index probes can hit this
+    — their index and the caller's corpus frame drift apart unless the
+    frame grows with every batch admitted via ``append_fn``; the
+    self-join paths draw both ids from one frame."""
+    present = next(c for c in right.columns if c != b)
+    checked = F.when(
+        F.col(present).isNull(),
+        F.raise_error(
+            F.concat(
+                F.lit(f"band-index/corpus drift: indexed {b} "),
+                F.col(b).cast("string"),
+                F.lit(
+                    " has no row in the corpus frame — grow it with"
+                    f" every batch admitted via {append_fn}"
+                ),
+            )
+        ).cast("double"),
+    ).otherwise(pair)
+    return (
+        cand.join(left, a)
+        .join(right, b, "left")
+        .select(a, b, checked.alias(out))
+    )
+
+
 def _cosine_verify(
     cand: DataFrame,
     left: DataFrame,
@@ -478,30 +522,11 @@ def _cosine_verify(
     verify of every LSH near-dup path (q52, q92, q100 and the band
     index probe). The vectors join back by id from ``left``/``right``
     ((vec_id, embedding) frames) with each norm computed once per row
-    (_normed); ``threshold`` None keeps every candidate.
-
-    The ``right`` join is LEFT: a candidate whose id has no vector
-    there cannot be verified, and dropping it silently would
-    under-report near-dups, so it raises at execution time. Only the
-    band-index probe can hit this (its index and ``corpus`` drift
-    apart); the self-join paths draw both ids from one frame."""
-    checked = F.when(
-        F.col("eb").isNull(),
-        F.raise_error(
-            F.concat(
-                F.lit(f"band-index/corpus drift: indexed {b} "),
-                F.col(b).cast("string"),
-                F.lit(
-                    " has no row in the corpus frame — grow `corpus`"
-                    " with every batch admitted via append_band_index"
-                ),
-            )
-        ).cast("double"),
-    ).otherwise(_pair_cosine())
-    out = (
-        cand.join(_normed(left, a, "ea", "na"), a)
-        .join(_normed(right, b, "eb", "nb"), b, "left")
-        .select(a, b, checked.alias("cos_sim"))
+    (_normed) through _verify_join's drift-checked join; ``threshold``
+    None keeps every candidate."""
+    out = _verify_join(
+        cand, _normed(left, a, "ea", "na"), _normed(right, b, "eb", "nb"),
+        a, b, _pair_cosine(), "cos_sim", "append_band_index",
     )
     if threshold is not None:
         out = out.where(F.col("cos_sim") > threshold)

@@ -949,42 +949,34 @@ def c21_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def _c22_oracle() -> str:
-    from hcdc_spark.operators.dedup import _DW, Q73_BANDS, Q73_HASHES
+#: the crawl gates' corpus/new split of the ``t`` CTE (c22, c26; c30 and
+#: c31 grow the corpus side per batch)
+_CORPUS_IDS = "SELECT doc_id FROM t WHERE doc_id % 10 <> 3"
+_NEW_IDS = "SELECT doc_id FROM t WHERE doc_id % 10 = 3"
 
-    rows = Q73_HASHES // Q73_BANDS
+
+def _corpus_chunks_sql() -> str:
+    """The corpus documents' distinct chunk hashes (h) — the DuckDB
+    form of the chunk index write_chunk_index builds (c26, c30)."""
+    from hcdc_spark.operators.text import _chunks_sql
+
+    corpus = "(SELECT * FROM documents WHERE doc_id % 10 <> 3)"
+    return f"""
+      SELECT DISTINCT md5(txt) AS h FROM ({_chunks_sql(corpus)})"""
+
+
+def _c22_oracle() -> str:
+    from hcdc_spark.operators.dedup import _DW, _gate_sql, _minhash_bands_sql
+
     return f"""
     WITH t AS (
       SELECT doc_id, {_DW} AS ws FROM documents
       WHERE len({_DW}) > 0
-    ), tok AS (
-      SELECT doc_id, unnest(ws) AS w FROM t
-    ), mh AS (
-      SELECT doc_id, i, MIN(md5(CAST(i AS VARCHAR) || ':' || w)) AS h
-      FROM tok CROSS JOIN range({Q73_HASHES}) r(i)
-      GROUP BY doc_id, i
-    ), bands AS (
-      SELECT doc_id, i // {rows} AS band,
-             md5(string_agg(h, '|' ORDER BY i)) AS bucket
-      FROM mh GROUP BY doc_id, i // {rows}
-    ), cand AS (
-      SELECT DISTINCT a.doc_id AS doc_new, b.doc_id AS doc_old
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.bucket = b.bucket
-      WHERE a.doc_id % 10 = 3 AND b.doc_id % 10 <> 3
-    ), sized AS (
-      SELECT doc_id, len(ws) AS n, ws FROM t
-    ), rejected AS (
-      SELECT DISTINCT doc_new FROM cand
-      JOIN sized x ON doc_new = x.doc_id
-      JOIN sized y ON doc_old = y.doc_id
-      WHERE CAST(len(list_intersect(x.ws, y.ws)) AS DOUBLE)
-            / (x.n + y.n - len(list_intersect(x.ws, y.ws))) >= 0.9
-    )
+    ), {_minhash_bands_sql()}, {_gate_sql(0, _NEW_IDS, _CORPUS_IDS)}
     SELECT t.doc_id, CAST(len(t.ws) AS BIGINT) AS n_words
     FROM t
     WHERE t.doc_id % 10 = 3
-      AND t.doc_id NOT IN (SELECT doc_new FROM rejected)
+      AND t.doc_id NOT IN (SELECT doc_new FROM rejected_0)
     ORDER BY t.doc_id
     """
 
@@ -1071,82 +1063,23 @@ def c22_stream_doc_ingest_dedup(
 
 
 def _c26_oracle() -> str:
-    from hcdc_spark.functions.text import STOPWORDS, duck_in_set
-    from hcdc_spark.operators.dedup import _DW, Q73_BANDS, Q73_HASHES
-    from hcdc_spark.operators.text import _W, DEDUP_CHUNK_WORDS
+    from hcdc_spark.functions.text import duck_quality_gate
+    from hcdc_spark.operators.dedup import _DW, _gate_sql, _minhash_bands_sql
+    from hcdc_spark.operators.text import _flag_vs_sql, _regroup_sql
 
-    rows = Q73_HASHES // Q73_BANDS
-    k = DEDUP_CHUNK_WORDS
     return f"""
     WITH t AS (
       SELECT doc_id, lang, text, {_DW} AS ws FROM documents
       WHERE len({_DW}) > 0
-    ), tok AS (
-      SELECT doc_id, unnest(ws) AS w FROM t
-    ), mh AS (
-      SELECT doc_id, i, MIN(md5(CAST(i AS VARCHAR) || ':' || w)) AS h
-      FROM tok CROSS JOIN range({Q73_HASHES}) r(i)
-      GROUP BY doc_id, i
-    ), bands AS (
-      SELECT doc_id, i // {rows} AS band,
-             md5(string_agg(h, '|' ORDER BY i)) AS bucket
-      FROM mh GROUP BY doc_id, i // {rows}
-    ), cand AS (
-      SELECT DISTINCT a.doc_id AS doc_new, b.doc_id AS doc_old
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.bucket = b.bucket
-      WHERE a.doc_id % 10 = 3 AND b.doc_id % 10 <> 3
-    ), sized AS (
-      SELECT doc_id, len(ws) AS n, ws FROM t
-    ), rejected AS (
-      SELECT DISTINCT doc_new FROM cand
-      JOIN sized x ON doc_new = x.doc_id
-      JOIN sized y ON doc_old = y.doc_id
-      WHERE CAST(len(list_intersect(x.ws, y.ws)) AS DOUBLE)
-            / (x.n + y.n - len(list_intersect(x.ws, y.ws))) >= 0.9
-    ), gated AS (
+    ), {_minhash_bands_sql()},
+    {_gate_sql(0, _NEW_IDS, _CORPUS_IDS)}, gated AS (
       SELECT doc_id, lang, text FROM t
       WHERE doc_id % 10 = 3
-        AND doc_id NOT IN (SELECT doc_new FROM rejected)
-        AND len({_W}) >= 5 AND {duck_in_set(STOPWORDS, _W)} >= 1
-    ), corpus_chunks AS (
-      SELECT DISTINCT md5(array_to_string(
-               w[idx * {k} + 1 : idx * {k} + {k}], ' ')) AS h
-      FROM (
-        SELECT string_split(text, ' ') AS w,
-               UNNEST(generate_series(
-                 0, CAST((len(string_split(text, ' ')) - 1) // {k}
-                         AS INT))) AS idx
-        FROM documents
-        WHERE doc_id % 10 <> 3 AND len(string_split(text, ' ')) > 0
-      )
-    ), idxed AS (
-      SELECT doc_id, lang,
-             UNNEST(generate_series(
-               0, CAST((len(w) - 1) // {k} AS INT))) AS idx,
-             w
-      FROM (SELECT doc_id, lang, string_split(text, ' ') AS w
-            FROM gated) WHERE len(w) > 0
-    ), chunks AS (
-      SELECT doc_id, lang, idx,
-             array_to_string(
-               w[idx * {k} + 1 : idx * {k} + {k}], ' ') AS txt
-      FROM idxed
-    ), flagged AS (
-      SELECT doc_id, lang, idx, txt,
-             md5(txt) NOT IN (SELECT h FROM corpus_chunks)
-             AND idx = MIN(idx) OVER (PARTITION BY doc_id, md5(txt))
-               AS keep
-      FROM chunks
-    ), rewritten AS (
-      SELECT doc_id, lang,
-             COUNT(*) AS n_chunks,
-             CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_kept,
-             COALESCE(string_agg(txt, ' ' ORDER BY idx)
-                        FILTER (WHERE keep), '') AS clean_text
-      FROM flagged
-      GROUP BY doc_id, lang
+        AND doc_id NOT IN (SELECT doc_new FROM rejected_0)
+        AND {duck_quality_gate()}
+    ), corpus_chunks AS ({_corpus_chunks_sql()}
+    ), flagged AS ({_flag_vs_sql("gated", "corpus_chunks")}
+    ), rewritten AS ({_regroup_sql("flagged")}
     )
     SELECT lang,
            COUNT(*) AS n_docs,
@@ -1199,12 +1132,7 @@ def c26_crawl_ingest_pipeline(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from hcdc_spark.catalog import table_path
-    from hcdc_spark.functions.text import (
-        STOPWORDS,
-        count_in_set,
-        distinct_words,
-        word_count,
-    )
+    from hcdc_spark.functions.text import distinct_words, quality_gate
     from hcdc_spark.operators import dedup as D
     from hcdc_spark.operators.text import (
         append_chunk_index,
@@ -1250,8 +1178,7 @@ def c26_crawl_ingest_pipeline(
                 .distinct()
             )
             surv = batch_df.join(hits, "doc_id", "left_anti").where(
-                (word_count("text") >= 5)
-                & (count_in_set("text", STOPWORDS) >= 1)
+                quality_gate()
             )
             _land(
                 chunk_dedup_rewrite_vs(surv, ref, carry=("lang",)),
@@ -1609,7 +1536,7 @@ def _c30_gate(spark: SparkSession, table: str, chunk_table: str,
     oracle."""
     from pyspark.errors import AnalysisException
 
-    from hcdc_spark.functions.text import STOPWORDS, count_in_set, word_count
+    from hcdc_spark.functions.text import quality_gate
     from hcdc_spark.operators.text import (
         append_chunk_index,
         chunk_dedup_rewrite_vs,
@@ -1621,10 +1548,7 @@ def _c30_gate(spark: SparkSession, table: str, chunk_table: str,
             spark, batch_df, batch_id, table, corpus_t, admitted_dir,
             rejected_dir, self_dedup,
         )
-        surv = surv.where(
-            (word_count("text") >= 5)
-            & (count_in_set("text", STOPWORDS) >= 1)
-        )
+        surv = surv.where(quality_gate())
         # replay safety: subtract the batch's OWN previously-landed
         # kept chunks from the rewrite reference (see docstring)
         ref = spark.table(chunk_table)
@@ -1680,134 +1604,27 @@ def _c30_oracle(self_dedup: bool = False) -> str:
     (c32) each batch CTE first applies q105's monotone keep-first rule
     over ALL within-batch pairs — docs it rejects never probe, never
     land, never admit — and batch 1 carries the same-batch plants."""
-    from hcdc_spark.functions.text import STOPWORDS, duck_in_set
-    from hcdc_spark.operators.dedup import _DW, Q73_BANDS, Q73_HASHES
-    from hcdc_spark.operators.text import _W, DEDUP_CHUNK_WORDS
+    from hcdc_spark.functions.text import duck_quality_gate
+    from hcdc_spark.operators.dedup import _gate_sql, _minhash_bands_sql
+    from hcdc_spark.operators.text import _flag_vs_sql, _regroup_sql
 
-    rows = Q73_HASHES // Q73_BANDS
-    k = DEDUP_CHUNK_WORDS
-    exact, share = _c30_plant_sqls()
-    selfp = f"""
-      UNION ALL
-      SELECT documents.doc_id + {_C32_SELF} AS doc_id, lang, text
-      FROM documents WHERE doc_id % 30 = 13 AND len({_DW}) > 0
-    """ if self_dedup else ""
-    self_case = (
-        f"WHEN doc_id >= {_C32_SELF} THEN 1\n                          "
-        if self_dedup else ""
-    )
-    head = f"""
-    WITH raw AS (
-      SELECT doc_id, lang, text FROM documents
-      UNION ALL {exact}
-      UNION ALL {share}{selfp}
-    ), t AS (
-      SELECT doc_id, lang, text, {_DW} AS ws FROM raw
-      WHERE len({_DW}) > 0
-    ), bat AS (
-      SELECT doc_id, CASE {self_case}WHEN doc_id >= {_C30_COPY} THEN 2
-                          WHEN doc_id % 30 = 3 THEN 0
-                          WHEN doc_id % 30 = 13 THEN 1
-                          ELSE 2 END AS bno
-      FROM t WHERE doc_id % 10 = 3
-    ), tok AS (
-      SELECT doc_id, unnest(ws) AS w FROM t
-    ), mh AS (
-      SELECT doc_id, i, MIN(md5(CAST(i AS VARCHAR) || ':' || w)) AS h
-      FROM tok CROSS JOIN range({Q73_HASHES}) r(i)
-      GROUP BY doc_id, i
-    ), bands AS (
-      SELECT doc_id, i // {rows} AS band,
-             md5(string_agg(h, '|' ORDER BY i)) AS bucket
-      FROM mh GROUP BY doc_id, i // {rows}
-    ), sized AS (
-      SELECT doc_id, len(ws) AS n, ws FROM t
-    ), ref_0 AS (
-      SELECT DISTINCT md5(array_to_string(
-               w[idx * {k} + 1 : idx * {k} + {k}], ' ')) AS h
-      FROM (
-        SELECT string_split(text, ' ') AS w,
-               UNNEST(generate_series(
-                 0, CAST((len(string_split(text, ' ')) - 1) // {k}
-                         AS INT))) AS idx
-        FROM documents
-        WHERE doc_id % 10 <> 3 AND len(string_split(text, ' ')) > 0
-      )
-    )"""
-    parts = [head]
-    old_ids = "SELECT doc_id FROM t WHERE doc_id % 10 <> 3"
+    head = _crawl_head_sql(_c30_plant_sqls(), self_dedup)
+    parts = [f"""{head}, {_minhash_bands_sql()},
+    ref_0 AS ({_corpus_chunks_sql()}
+    )"""]
+    old_ids = _CORPUS_IDS
     for i in range(3):
-        if self_dedup:
-            # q105's monotone keep-first rule over ALL within-batch
-            # pairs, applied BEFORE the corpus gate — a hash match
-            # therefore also certifies banding recall, exactly as in
-            # the q105 registry row
-            parts.append(f""", selfrej_{i} AS (
-      SELECT DISTINCT y.doc_id
-      FROM sized x JOIN bat bx ON x.doc_id = bx.doc_id
-      JOIN sized y ON x.doc_id < y.doc_id
-      JOIN bat bb ON y.doc_id = bb.doc_id
-      WHERE bx.bno = {i} AND bb.bno = {i}
-        AND CAST(len(list_intersect(x.ws, y.ws)) AS DOUBLE)
-            / (x.n + y.n - len(list_intersect(x.ws, y.ws))) >= 0.9
-    )""")
-            self_filter = (
-                f"\n        AND a.doc_id NOT IN "
-                f"(SELECT doc_id FROM selfrej_{i})"
-            )
-            self_gate = (
-                f"\n        AND t.doc_id NOT IN "
-                f"(SELECT doc_id FROM selfrej_{i})"
-            )
-        else:
-            self_filter = self_gate = ""
-        parts.append(f""", cand_{i} AS (
-      SELECT DISTINCT a.doc_id AS doc_new, o.doc_id AS doc_old
-      FROM bands a JOIN bands o
-        ON a.band = o.band AND a.bucket = o.bucket
-      WHERE a.doc_id IN (SELECT doc_id FROM bat WHERE bno = {i}){self_filter}
-        AND o.doc_id IN ({old_ids})
-    ), rejected_{i} AS (
-      SELECT DISTINCT doc_new FROM cand_{i}
-      JOIN sized x ON doc_new = x.doc_id
-      JOIN sized y ON doc_old = y.doc_id
-      WHERE CAST(len(list_intersect(x.ws, y.ws)) AS DOUBLE)
-            / (x.n + y.n - len(list_intersect(x.ws, y.ws))) >= 0.9
-    ), gated_{i} AS (
-      SELECT t.doc_id, t.lang, t.text
-      FROM t JOIN bat ON t.doc_id = bat.doc_id
-      WHERE bat.bno = {i}{self_gate}
-        AND t.doc_id NOT IN (SELECT doc_new FROM rejected_{i})
-        AND len({_W}) >= 5 AND {duck_in_set(STOPWORDS, _W)} >= 1
-    ), chunks_{i} AS (
-      SELECT doc_id, lang, idx,
-             array_to_string(
-               w[idx * {k} + 1 : idx * {k} + {k}], ' ') AS txt
-      FROM (
-        SELECT doc_id, lang, string_split(text, ' ') AS w,
-               UNNEST(generate_series(
-                 0, CAST((len(string_split(text, ' ')) - 1) // {k}
-                         AS INT))) AS idx
-        FROM gated_{i} WHERE len(string_split(text, ' ')) > 0
-      )
-    ), flagged_{i} AS (
-      SELECT doc_id, lang, idx, txt,
-             md5(txt) NOT IN (SELECT h FROM ref_{i})
-             AND idx = MIN(idx) OVER (PARTITION BY doc_id, md5(txt))
-               AS keep
-      FROM chunks_{i}
+        gate = _gate_sql(i, f"SELECT doc_id FROM new_{i}", old_ids)
+        parts.append(f""", {_batch_sql(i, self_dedup)}, {gate}, gated_{i} AS (
+      SELECT doc_id, lang, text FROM new_{i}
+      WHERE doc_id NOT IN (SELECT doc_new FROM rejected_{i})
+        AND {duck_quality_gate()}
+    ), flagged_{i} AS ({_flag_vs_sql(f"gated_{i}", f"ref_{i}")}
     ), ref_{i + 1} AS (
       SELECT h FROM ref_{i}
       UNION
       SELECT md5(txt) AS h FROM flagged_{i} WHERE keep
-    ), rewritten_{i} AS (
-      SELECT doc_id, lang,
-             COUNT(*) AS n_chunks,
-             CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_kept,
-             COALESCE(string_agg(txt, ' ' ORDER BY idx)
-                        FILTER (WHERE keep), '') AS clean_text
-      FROM flagged_{i} GROUP BY doc_id, lang
+    ), rewritten_{i} AS ({_regroup_sql(f"flagged_{i}")}
     )""")
         old_ids += f" UNION SELECT doc_id FROM gated_{i}"
     parts.append("""
@@ -1825,6 +1642,55 @@ def _c30_oracle(self_dedup: bool = False) -> str:
     ORDER BY batch, lang
     """)
     return "".join(parts)
+
+
+def _crawl_head_sql(plants: tuple[str, ...], self_dedup: bool) -> str:
+    """The opening CTEs of the ordered-crawl oracles (c30-c33): ``raw``
+    (documents plus the planted rows of ``plants`` and, with
+    ``self_dedup``, the same-batch copies of _c32_self_plants), ``t``
+    (its rows with a non-empty word set) and ``bat`` (each new doc's
+    batch number, as _write_c30_deltas splits them)."""
+    from hcdc_spark.operators.dedup import _DW
+
+    self_case = ""
+    if self_dedup:
+        plants += (f"""
+      SELECT documents.doc_id + {_C32_SELF} AS doc_id, lang, text
+      FROM documents WHERE doc_id % 30 = 13 AND len({_DW}) > 0
+    """,)
+        self_case = f"WHEN doc_id >= {_C32_SELF} THEN 1\n{' ' * 26}"
+    unions = "".join(f"\n      UNION ALL {p}" for p in plants)
+    return f"""
+    WITH raw AS (
+      SELECT doc_id, lang, text FROM documents{unions}
+    ), t AS (
+      SELECT doc_id, lang, text, {_DW} AS ws FROM raw
+      WHERE len({_DW}) > 0
+    ), bat AS (
+      SELECT doc_id, CASE {self_case}WHEN doc_id >= {_C30_COPY} THEN 2
+                          WHEN doc_id % 30 = 3 THEN 0
+                          WHEN doc_id % 30 = 13 THEN 1
+                          ELSE 2 END AS bno
+      FROM t WHERE doc_id % 10 = 3
+    )"""
+
+
+def _batch_sql(i: int, self_dedup: bool) -> str:
+    """Batch ``i``'s CTEs in the ordered-crawl oracles (c30-c33):
+    ``b_<i>`` its ``t`` rows, ``new_<i>`` the ones that reach the
+    corpus gate — with ``self_dedup``, minus q105's keep-first rejects
+    within the batch, applied BEFORE the gate as the engine does."""
+    from hcdc_spark.operators.dedup import _keep_first_sql
+
+    keep = (
+        f"\n      WHERE doc_id NOT IN ({_keep_first_sql(f'b_{i}')})"
+        if self_dedup else ""
+    )
+    return f"""b_{i} AS (
+      SELECT * FROM t WHERE doc_id IN (SELECT doc_id FROM bat WHERE bno = {i})
+    ), new_{i} AS (
+      SELECT * FROM b_{i}{keep}
+    )"""
 
 
 @REG.add(
@@ -2063,95 +1929,23 @@ def _c31_oracle(self_dedup: bool = False) -> str:
     CTE first applies q105's monotone keep-first rule — the two new
     round-13 verbs (takedown, self-dedup) proven in ONE gate, both
     firing in cycle 2."""
-    from hcdc_spark.operators.dedup import _DW, Q73_BANDS, Q73_HASHES
+    from hcdc_spark.operators.dedup import _gate_sql, _minhash_bands_sql
 
-    rows = Q73_HASHES // Q73_BANDS
-    selfp = f"""
-      UNION ALL
-      SELECT documents.doc_id + {_C32_SELF} AS doc_id, lang, text
-      FROM documents WHERE doc_id % 30 = 13 AND len({_DW}) > 0
-    """ if self_dedup else ""
-    self_case = (
-        f"WHEN doc_id >= {_C32_SELF} THEN 1\n                          "
-        if self_dedup else ""
-    )
-    head = f"""
-    WITH raw AS (
-      SELECT doc_id, lang, text FROM documents
-      UNION ALL
-      SELECT documents.doc_id + {_C30_COPY} AS doc_id, lang, text
-      FROM documents WHERE doc_id % 30 = 3 AND len({_DW}) > 0{selfp}
-    ), t AS (
-      SELECT doc_id, lang, {_DW} AS ws FROM raw
-      WHERE len({_DW}) > 0
-    ), bat AS (
-      SELECT doc_id, CASE {self_case}WHEN doc_id >= {_C30_COPY} THEN 2
-                          WHEN doc_id % 30 = 3 THEN 0
-                          WHEN doc_id % 30 = 13 THEN 1
-                          ELSE 2 END AS bno
-      FROM t WHERE doc_id % 10 = 3
-    ), del AS (
+    exact, _ = _c30_plant_sqls()
+    head = f"""{_crawl_head_sql((exact,), self_dedup)}, del AS (
       SELECT doc_id FROM t
       WHERE doc_id % 60 = 3 AND doc_id < {_C30_COPY}
-    ), tok AS (
-      SELECT doc_id, unnest(ws) AS w FROM t
-    ), mh AS (
-      SELECT doc_id, i, MIN(md5(CAST(i AS VARCHAR) || ':' || w)) AS h
-      FROM tok CROSS JOIN range({Q73_HASHES}) r(i)
-      GROUP BY doc_id, i
-    ), bands AS (
-      SELECT doc_id, i // {rows} AS band,
-             md5(string_agg(h, '|' ORDER BY i)) AS bucket
-      FROM mh GROUP BY doc_id, i // {rows}
-    ), sized AS (
-      SELECT doc_id, len(ws) AS n, ws FROM t
-    )"""
+    ), {_minhash_bands_sql()}"""
     parts = [head]
-    old_ids = "SELECT doc_id FROM t WHERE doc_id % 10 <> 3"
+    old_ids = _CORPUS_IDS
     for i in range(3):
         live = old_ids if i == 0 else (
             f"{old_ids} EXCEPT SELECT doc_id FROM del"
         )
-        if self_dedup:
-            # q105's monotone keep-first rule over ALL within-batch
-            # pairs BEFORE the corpus gate — same CTE shape as c32's
-            # oracle, so a hash match also certifies banding recall
-            parts.append(f""", selfrej_{i} AS (
-      SELECT DISTINCT y.doc_id
-      FROM sized x JOIN bat bx ON x.doc_id = bx.doc_id
-      JOIN sized y ON x.doc_id < y.doc_id
-      JOIN bat bb ON y.doc_id = bb.doc_id
-      WHERE bx.bno = {i} AND bb.bno = {i}
-        AND CAST(len(list_intersect(x.ws, y.ws)) AS DOUBLE)
-            / (x.n + y.n - len(list_intersect(x.ws, y.ws))) >= 0.9
-    )""")
-            self_filter = (
-                f"\n        AND a.doc_id NOT IN "
-                f"(SELECT doc_id FROM selfrej_{i})"
-            )
-            self_gate = (
-                f"\n        AND t.doc_id NOT IN "
-                f"(SELECT doc_id FROM selfrej_{i})"
-            )
-        else:
-            self_filter = self_gate = ""
-        parts.append(f""", cand_{i} AS (
-      SELECT DISTINCT a.doc_id AS doc_new, o.doc_id AS doc_old
-      FROM bands a JOIN bands o
-        ON a.band = o.band AND a.bucket = o.bucket
-      WHERE a.doc_id IN (SELECT doc_id FROM bat WHERE bno = {i}){self_filter}
-        AND o.doc_id IN ({live})
-    ), rejected_{i} AS (
-      SELECT DISTINCT doc_new FROM cand_{i}
-      JOIN sized x ON doc_new = x.doc_id
-      JOIN sized y ON doc_old = y.doc_id
-      WHERE CAST(len(list_intersect(x.ws, y.ws)) AS DOUBLE)
-            / (x.n + y.n - len(list_intersect(x.ws, y.ws))) >= 0.9
-    ), gated_{i} AS (
-      SELECT t.doc_id, t.lang, len(t.ws) AS n_words
-      FROM t JOIN bat ON t.doc_id = bat.doc_id
-      WHERE bat.bno = {i}{self_gate}
-        AND t.doc_id NOT IN (SELECT doc_new FROM rejected_{i})
+        gate = _gate_sql(i, f"SELECT doc_id FROM new_{i}", live)
+        parts.append(f""", {_batch_sql(i, self_dedup)}, {gate}, gated_{i} AS (
+      SELECT doc_id, lang, len(ws) AS n_words FROM new_{i}
+      WHERE doc_id NOT IN (SELECT doc_new FROM rejected_{i})
     )""")
         old_ids += f" UNION SELECT doc_id FROM gated_{i}"
     parts.append("""

@@ -19,7 +19,9 @@ from hcdc_spark.functions.text import (
     TOKEN_REGEX,
     count_in_set,
     duck_in_set,
+    duck_quality_gate,
     duck_words,
+    quality_gate,
     sum_word_lengths,
     word_count,
     words,
@@ -826,18 +828,67 @@ DEDUP_CHUNK_WORDS = 10
 CHUNK_ENC = 2_147_483_648
 
 
+def _chunks_sql(src: str) -> str:
+    """DuckDB form of _chunk_explode: one (doc_id, lang, idx, txt) row
+    per non-overlapping DEDUP_CHUNK_WORDS-word chunk of the relation
+    ``src`` (doc_id, lang, text) — raw single-space split, empty
+    tokens kept, docs with no words dropped."""
+    k = DEDUP_CHUNK_WORDS
+    return f"""
+        SELECT doc_id, lang, idx,
+               array_to_string(w[idx * {k} + 1 : idx * {k} + {k}], ' ')
+                 AS txt
+        FROM (
+          SELECT doc_id, lang, w,
+                 UNNEST(generate_series(
+                   0, CAST((len(w) - 1) // {k} AS INT))) AS idx
+          FROM (SELECT doc_id, lang, string_split(text, ' ') AS w
+                FROM {src})
+          WHERE len(w) > 0
+        )"""
+
+
+def _regroup_sql(flagged: str) -> str:
+    """DuckDB form of _regroup_kept: chunk rows of the relation
+    ``flagged`` (doc_id, lang, idx, txt, keep) → one row per document
+    with the kept chunks rejoined in idx order."""
+    return f"""
+      SELECT doc_id, lang,
+             COUNT(*) AS n_chunks,
+             CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_kept,
+             COALESCE(string_agg(txt, ' ' ORDER BY idx)
+                        FILTER (WHERE keep), '') AS clean_text
+      FROM {flagged}
+      GROUP BY doc_id, lang"""
+
+
+def _rewrite_sql(src: str) -> str:
+    """DuckDB form of chunk_dedup_rewrite over the relation ``src``
+    (doc_id, lang, text): the globally-first occurrence of each chunk
+    hash keeps its copy (MIN over the encoded (doc_id, idx) site)."""
+    enc = f"doc_id * {CHUNK_ENC} + idx"
+    return _regroup_sql(f"""(
+        SELECT doc_id, lang, idx, txt,
+               {enc} = MIN({enc}) OVER (PARTITION BY md5(txt)) AS keep
+        FROM ({_chunks_sql(src)}))""")
+
+
+def _flag_vs_sql(src: str, ref: str) -> str:
+    """DuckDB form of chunk_dedup_rewrite_vs's keep flag over the
+    relation ``src``: a chunk keeps iff its md5 is not in the hash
+    relation ``ref`` (column h) and it is the first copy in its doc."""
+    return f"""
+      SELECT doc_id, lang, idx, txt,
+             md5(txt) NOT IN (SELECT h FROM {ref})
+             AND idx = MIN(idx) OVER (PARTITION BY doc_id, md5(txt))
+               AS keep
+      FROM ({_chunks_sql(src)})"""
+
+
 @REG.add(
     "q90_chunk_dedup",
     f"""
-    WITH ws AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ), hashed AS (
-      SELECT doc_id,
-             UNNEST(generate_series(
-               0, CAST((len(w) - 1) // {DEDUP_CHUNK_WORDS} AS INT))) AS idx,
-             w
-      FROM ws WHERE len(w) > 0
-    )
     SELECT chunk_hash,
            COUNT(*) AS n_occ,
            COUNT(DISTINCT doc_id) AS n_docs,
@@ -846,12 +897,8 @@ CHUNK_ENC = 2_147_483_648
            CAST(MIN(doc_id * {CHUNK_ENC} + idx) % {CHUNK_ENC} AS BIGINT)
              AS first_idx
     FROM (
-      SELECT doc_id, idx,
-             md5(array_to_string(
-               w[idx * {DEDUP_CHUNK_WORDS} + 1 :
-                 idx * {DEDUP_CHUNK_WORDS} + {DEDUP_CHUNK_WORDS}], ' '))
-               AS chunk_hash
-      FROM hashed
+      SELECT doc_id, idx, md5(txt) AS chunk_hash
+      FROM ({_chunks_sql("documents")})
     )
     GROUP BY chunk_hash
     HAVING COUNT(*) >= 2
@@ -872,21 +919,9 @@ CHUNK_ENC = 2_147_483_648
     tags=("text", "dedup", "pipeline"),
 )
 def q90_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    k = DEDUP_CHUNK_WORDS
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    chunks = (
-        docs.select("doc_id", F.split(F.col("text"), " ").alias("w"))
-        .where(F.size("w") > 0)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, CAST((size(w)-1) div {k} AS "
-                    f"INT)), i -> md5(concat_ws(' ', slice(w, i*{k}+1, "
-                    f"{k}))))"
-                )
-            ).alias("idx", "chunk_hash"),
-        )
+    chunks = _chunk_explode(docs).select(
+        "doc_id", "idx", F.md5("txt").alias("chunk_hash")
     )
     pair = F.col("doc_id") * CHUNK_ENC + F.col("idx")
     return (
@@ -912,35 +947,8 @@ def q90_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @REG.add(
     "q94_chunk_dedup_rewrite",
     f"""
-    WITH ws AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ), idxed AS (
-      SELECT doc_id,
-             UNNEST(generate_series(
-               0, CAST((len(w) - 1) // {DEDUP_CHUNK_WORDS} AS INT))) AS idx,
-             w
-      FROM ws WHERE len(w) > 0
-    ), chunks AS (
-      SELECT doc_id, idx,
-             array_to_string(
-               w[idx * {DEDUP_CHUNK_WORDS} + 1 :
-                 idx * {DEDUP_CHUNK_WORDS} + {DEDUP_CHUNK_WORDS}], ' ')
-               AS txt,
-             doc_id * {CHUNK_ENC} + idx AS enc
-      FROM idxed
-    ), flagged AS (
-      SELECT doc_id, idx, txt,
-             enc = MIN(enc) OVER (PARTITION BY md5(txt)) AS keep
-      FROM chunks
-    )
-    SELECT doc_id,
-           COUNT(*) AS n_chunks,
-           CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_kept,
-           COALESCE(string_agg(txt, ' ' ORDER BY idx)
-                      FILTER (WHERE keep), '') AS clean_text
-    FROM flagged
-    GROUP BY doc_id
+    SELECT doc_id, n_chunks, n_kept, clean_text
+    FROM ({_rewrite_sql("documents")})
     """,
     doc="The REWRITE half of the C4/RefinedWeb repeated-span pass: "
     "where q90 ranks corpus-duplicated chunks, this pass actually "
@@ -976,11 +984,11 @@ def _chunk_explode(
     with_id: bool = True,
 ) -> DataFrame:
     """(text, ...) → one row per non-overlapping k-word chunk
-    (idx, txt) — THE chunk-identity expression, shared by the q94
-    corpus rewrite, the ingest-time rewrite and the chunk-index
-    builder so the three can never chunk differently (the _band_explode
-    discipline applied to chunking). Docs with no words are excluded
-    on every path."""
+    (idx, txt) — THE chunk-identity expression, shared by q90's chunk
+    hashes, the q94 corpus rewrite, the ingest-time rewrite and the
+    chunk-index builder so the four can never chunk differently (the
+    _band_explode discipline applied to chunking). Docs with no words
+    are excluded on every path."""
     cols = (["doc_id"] if with_id else []) + list(carry)
     return (
         docs.select(*cols, F.split(F.col("text"), " ").alias("w"))
@@ -1035,15 +1043,15 @@ def _regroup_kept(flagged: DataFrame, carry: tuple[str, ...]) -> DataFrame:
     )
 
 
-def corpus_chunk_hashes(docs: DataFrame, k: int = DEDUP_CHUNK_WORDS) -> DataFrame:
-    """The DISTINCT md5 keys of a corpus's non-overlapping k-word
-    chunks — the static reference set the ingest-time rewrite
-    (chunk_dedup_rewrite_vs) drops against. Built once per corpus
-    version; at 100 TB this is a persisted/bucketed artifact like the
-    band indexes (16 bytes per distinct chunk), here a frame the
-    caller may cache across micro-batches."""
+def corpus_chunk_hashes(docs: DataFrame) -> DataFrame:
+    """The DISTINCT md5 keys of a corpus's non-overlapping
+    DEDUP_CHUNK_WORDS-word chunks — the static reference set the
+    ingest-time rewrite (chunk_dedup_rewrite_vs) drops against. Built
+    once per corpus version; at 100 TB this is a persisted/bucketed
+    artifact like the band indexes (16 bytes per distinct chunk), here
+    a frame the caller may cache across micro-batches."""
     return (
-        _chunk_explode(docs, k, with_id=False)
+        _chunk_explode(docs, with_id=False)
         .select(F.md5("txt").alias("h"))
         .distinct()
     )
@@ -1055,7 +1063,6 @@ def write_chunk_index(
     table: str,
     path: str,
     n_buckets: int = 32,
-    k: int = DEDUP_CHUNK_WORDS,
 ) -> None:
     """Persist the corpus chunk-hash set as a table BUCKETED on the
     hash — the chunk-dedup analogue of the LSH band indexes: built
@@ -1086,7 +1093,7 @@ def write_chunk_index(
     row shape stays."""
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     (
-        corpus_chunk_hashes(docs, k)
+        corpus_chunk_hashes(docs)
         # cluster by the bucket-file id so each bucket file is written
         # by exactly one task (without this the bucketed writer emits
         # one file per input task x bucket — a small-files multiplier
@@ -1117,23 +1124,22 @@ def append_chunk_index(
     spark: SparkSession,
     docs: DataFrame,
     table: str,
-    k: int = DEDUP_CHUNK_WORDS,
 ) -> None:
     """Admit ingested documents' chunks into the persisted chunk index
     — the write half that closes the crawl loop for the chunk
     reference (the band indexes' append, applied here): pass the
     survivors' REWRITTEN text (clean_text — re-chunking a
     concatenation of kept chunks reproduces exactly the kept chunks,
-    since every kept chunk except a doc's final partial is exactly k
-    words), so the next cycle's rewrite drops chunks the corpus
-    ALREADY ingested. The reference must stay DISTINCT on ``h``
-    (chunk_dedup_rewrite_vs's left join fans out on duplicates), so
-    the batch's hashes are deduped within themselves
+    since every kept chunk except a doc's final partial is exactly
+    DEDUP_CHUNK_WORDS words), so the next cycle's rewrite drops chunks
+    the corpus ALREADY ingested. The reference must stay DISTINCT on
+    ``h`` (chunk_dedup_rewrite_vs's left join fans out on duplicates),
+    so the batch's hashes are deduped within themselves
     (corpus_chunk_hashes) and anti-joined against the table —
     bucket-aligned, only the small batch side shuffles — before the
     bucket-preserving insertInto. Idempotent by construction: a
     replayed admit finds all its hashes present and appends nothing."""
-    fresh = corpus_chunk_hashes(docs, k).join(
+    fresh = corpus_chunk_hashes(docs).join(
         spark.table(table), "h", "left_anti"
     )
     n_buckets = _table_num_buckets(spark, table)
@@ -1147,17 +1153,17 @@ def append_chunk_index(
 def chunk_dedup_rewrite_vs(
     docs: DataFrame,
     ref_hashes: DataFrame,
-    k: int = DEDUP_CHUNK_WORDS,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Ingest-time chunk-dedup REWRITE against a STATIC reference set:
     (doc_id, text) → (doc_id, n_chunks, n_kept, clean_text), dropping
-    every k-word chunk whose md5 occurs in ``ref_hashes`` (the
-    already-ingested corpus) and every repeat within the document
-    itself (keep the first occurrence by idx). Unlike q94's corpus-
-    global keep-first window, decisions depend ONLY on (document,
-    reference set) — so a streamed ingest is micro-batch-order-
-    INVARIANT and a static SQL oracle mirrors it exactly (c26). Plan
+    every DEDUP_CHUNK_WORDS-word chunk whose md5 occurs in
+    ``ref_hashes`` (the already-ingested corpus) and every repeat
+    within the document itself (keep the first occurrence by idx).
+    Unlike q94's corpus-global keep-first window, decisions depend
+    ONLY on (document, reference set) — so a streamed ingest is
+    micro-batch-order-INVARIANT and a static SQL oracle mirrors it
+    exactly (c26). Plan
     shape: one join on the 16-byte chunk hash against the reference
     (broadcastable when the corpus fits, else a shuffle on the hash),
     one narrow window within (doc_id, hash), one regroup per doc.
@@ -1166,7 +1172,7 @@ def chunk_dedup_rewrite_vs(
     would fan out the left join and inflate every per-doc count."""
     from pyspark.sql import Window
 
-    chunks = _chunk_explode(docs, k, carry).withColumn("h", F.md5("txt"))
+    chunks = _chunk_explode(docs, carry=carry).withColumn("h", F.md5("txt"))
     hit = ref_hashes.select(F.col("h"), F.lit(True).alias("__in_ref"))
     first_in_doc = F.col("idx") == F.min("idx").over(
         Window.partitionBy("doc_id", "h")
@@ -1339,42 +1345,14 @@ def bigram_dup_rate(docs: DataFrame) -> DataFrame:
     f"""
     WITH gated AS (
       SELECT doc_id, lang, text FROM documents
-      WHERE len({_W}) >= 5 AND {duck_in_set(STOPWORDS, _W)} >= 1
+      WHERE {duck_quality_gate()}
     ), surv AS (
       SELECT doc_id, lang, text FROM (
         SELECT doc_id, lang, text,
                doc_id = MIN(doc_id) OVER (PARTITION BY md5(text)) AS keep
         FROM gated)
       WHERE keep
-    ), ws AS (
-      SELECT doc_id, lang, string_split(text, ' ') AS w FROM surv
-    ), idxed AS (
-      SELECT doc_id, lang,
-             UNNEST(generate_series(
-               0, CAST((len(w) - 1) // {DEDUP_CHUNK_WORDS} AS INT))) AS idx,
-             w
-      FROM ws WHERE len(w) > 0
-    ), chunks AS (
-      SELECT doc_id, lang, idx,
-             array_to_string(
-               w[idx * {DEDUP_CHUNK_WORDS} + 1 :
-                 idx * {DEDUP_CHUNK_WORDS} + {DEDUP_CHUNK_WORDS}], ' ')
-               AS txt,
-             doc_id * {CHUNK_ENC} + idx AS enc
-      FROM idxed
-    ), flagged AS (
-      SELECT doc_id, lang, idx, txt,
-             enc = MIN(enc) OVER (PARTITION BY md5(txt)) AS keep
-      FROM chunks
-    ), rewritten AS (
-      SELECT doc_id, lang,
-             COUNT(*) AS n_chunks,
-             CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_kept,
-             COALESCE(string_agg(txt, ' ' ORDER BY idx)
-                        FILTER (WHERE keep), '') AS clean_text
-      FROM flagged
-      GROUP BY doc_id, lang
+    ), rewritten AS ({_rewrite_sql("surv")}
     )
     SELECT lang,
            COUNT(*) AS n_docs,
@@ -1408,11 +1386,7 @@ def q98_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    nw = word_count("text")
-    stop = count_in_set("text", STOPWORDS)
-    gated = docs.where((nw >= 5) & (stop >= 1)).select(
-        "doc_id", "lang", "text"
-    )
+    gated = docs.where(quality_gate()).select("doc_id", "lang", "text")
     keep = F.col("doc_id") == F.min("doc_id").over(
         Window.partitionBy(F.md5("text"))
     )

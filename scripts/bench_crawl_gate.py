@@ -36,12 +36,7 @@ def main() -> None:
                big: str(ROOT / ".benchdata" / big)}
     from pyspark.sql import functions as F
 
-    from hcdc_spark.functions.text import (
-        STOPWORDS,
-        count_in_set,
-        distinct_words,
-        word_count,
-    )
+    from hcdc_spark.functions.text import distinct_words, quality_gate
     from hcdc_spark.operators import dedup as D
     from hcdc_spark.operators.text import (
         chunk_dedup_rewrite_vs,
@@ -88,8 +83,7 @@ def main() -> None:
                     .distinct()
                 )
                 surv = batch_t.join(hits, "doc_id", "left_anti").where(
-                    (word_count("text") >= 5)
-                    & (count_in_set("text", STOPWORDS) >= 1)
+                    quality_gate()
                 )
                 landed = chunk_dedup_rewrite_vs(surv, ref).count()
                 return landed, batch_t.count() - landed

@@ -59,12 +59,7 @@ def main() -> None:
                big: str(ROOT / ".benchdata" / big)}
     from pyspark.sql import functions as F
 
-    from hcdc_spark.functions.text import (
-        STOPWORDS,
-        count_in_set,
-        distinct_words,
-        word_count,
-    )
+    from hcdc_spark.functions.text import distinct_words, quality_gate
     from hcdc_spark.operators import dedup as D
     from hcdc_spark.operators.similarity import delete_from_band_index
     from hcdc_spark.operators.streaming_queries import (
@@ -163,10 +158,7 @@ def main() -> None:
                         table, corpus_t, admitted_dir, rejected_dir,
                         self_dedup=False,
                     )
-                    surv = surv.where(
-                        (word_count("text") >= 5)
-                        & (count_in_set("text", STOPWORDS) >= 1)
-                    )
+                    surv = surv.where(quality_gate())
                     _land(
                         chunk_dedup_rewrite_vs(
                             surv.select("doc_id", "lang", "text"),

@@ -1313,7 +1313,11 @@ def test_corpus_stats_freshness_marker(spark, tmp_path):
 def test_incremental_neardup_drift_fails_loudly(spark, sf_dir, tmp_path):
     """Index/corpus drift (round-9 ADVICE): a candidate whose indexed
     vec_old is missing from the caller's corpus frame must raise, not
-    silently under-reject. Both modalities."""
+    silently under-reject. Both modalities share one drift-checked
+    verify join, so each arm also pins that the message names its own
+    family's append, and the doc arm that the check fires at the
+    gate's production threshold (0.9), not only when every candidate
+    passes."""
     from hcdc_spark.functions.text import distinct_words
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1325,10 +1329,12 @@ def test_incremental_neardup_drift_fails_loudly(spark, sf_dir, tmp_path):
                                     str(tmp_path / "bi"))
         # drop part of the indexed corpus from the verify frame
         drifted = corpus.where(F.col("vec_id") % 20 == 0)
-        with pytest.raises(Exception, match="drift"):
+        with pytest.raises(Exception, match="drift") as emb_err:
             similarity.incremental_neardup_pairs(
                 spark, batch, tbl, drifted, threshold=None
             ).collect()
+        assert "append_band_index" in str(emb_err.value)
+        assert "append_doc_band_index" not in str(emb_err.value)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
@@ -1347,6 +1353,13 @@ def test_incremental_neardup_drift_fails_loudly(spark, sf_dir, tmp_path):
             dedup.incremental_doc_neardup(
                 spark, batch_t, dtbl, drifted_t, threshold=0.0
             ).collect()
+        # the gate's own threshold: the check precedes the Jaccard
+        # filter, so a drifted pair raises even though it would fail it
+        with pytest.raises(Exception, match="drift") as doc_err:
+            dedup.incremental_doc_neardup(
+                spark, batch_t, dtbl, drifted_t
+            ).collect()
+        assert "append_doc_band_index" in str(doc_err.value)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {dtbl}")
 
