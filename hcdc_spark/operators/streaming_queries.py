@@ -196,6 +196,19 @@ def c29_continuous_ttl_reconcile(
                 poll(lambda: store_inodes(ckpt) == live_2, 120,
                      "segment-2 fold + eviction to converge")
             finally:
+                # stop right after the in-flight micro-batch commits:
+                # under ProcessingTimeTimeout the query runs no-data
+                # batches back to back, so it is never idle, and a
+                # stop that lands inside the foreachBatch sink
+                # interrupts its write (InterruptedException, then a
+                # StackOverflowError in the stream thread). Right after
+                # a commit the thread is in the next batch's offset and
+                # planning steps, where an interrupt ends it cleanly.
+                done = (q.lastProgress or {}).get("batchId")
+                t0 = time.time()
+                while (q.isActive and time.time() - t0 < 30
+                       and (q.lastProgress or {}).get("batchId") == done):
+                    time.sleep(0.005)
                 q.stop()
             res = (
                 latest_state(spark, out)
